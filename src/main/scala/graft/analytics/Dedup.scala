@@ -92,7 +92,8 @@ object Dedup {
     * test-corpus delta is an upper bound for a real Heaps corpus whose
     * rare distinctive content does not recur). The df-independent
     * MinHash-LSH leg ([[minhashLshPairs]]) recovers 70.6% of the sf3h
-    * lost pairs (163/231, tools.CapRecallProbe — the remainder sit on the
+    * lost pairs (163/231, SCALING.md § "Round 17: Heaps-vocabulary
+    * certification" — the remainder sit on the
     * banding S-curve near the 0.6 threshold), so the union-of-legs loss
     * is 0.81% at sf3h and 0.00% at sf1h (DEDUPSCALE5_r17). Callers with
     * corpora whose true duplicates genuinely share only hot shingles can
@@ -308,7 +309,8 @@ object Dedup {
     * have populations growing ∝ corpus, so their pair mass is quadratic: at
     * sf3, buckets over this cap carried 52% of the candidate mass while
     * verified pairs stayed linear (96% of candidates were false —
-    * DEDUPSCALE5_r15.md / graft.analytics.DedupBytesProbe). No oracle
+    * DEDUPSCALE5_r15.md / SCALING.md § "Dedup-tier scale variance,
+    * DECIDED"). No oracle
     * corpus reaches it (max population 13 at sf0.1). */
   private[analytics] val BandBucketCap = 64
 

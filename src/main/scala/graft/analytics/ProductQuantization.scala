@@ -54,7 +54,8 @@ object ProductQuantization {
     * bounded sample and encoding the full corpus under it makes the
     * capacities constants and the encode joins linear — measured exponent
     * 0.79, 11× faster at sf3, recall 0.63 raw / 0.84 rescored@5, above the
-    * 0.4/0.7 floors (tools.SampledTrainProbe). 5000 keeps every oracle and
+    * 0.4/0.7 floors (SCALING.md § "Measured remediation: bounded-sample
+    * training"). 5000 keeps every oracle and
     * bench corpus (≤2000 vectors) on the bit-identical full-train path;
     * at real scale raise it per corpus (10⁵–10⁶ is the production range —
     * train cost is O(target²) FIXED, encode and serve stay linear). */

@@ -500,7 +500,8 @@ object SearchIndex {
     * of the `buckets` token-hash directories, the r14 any-tombstone rule
     * made even a small forget batch rewrite nearly the whole postings
     * store; with the threshold, bytes-rewritten tracks the tombstoned
-    * share (tools.Bm25CompactScale measures it). `minShare = 0` forces the
+    * share (measured in SCALING.md § "BM25 compact rewrites ∝ tombstoned
+    * share"). `minShare = 0` forces the
     * full rewrite — the RE-ADMISSION path: tombstones are cleared only
     * when every tombstoned posting is physically gone, so when any bucket
     * is skipped the WHOLE tombstone set is retained (monotone for lock-free

@@ -119,62 +119,38 @@ object GraftFunctions {
     new ExpressionInfo(classOf[ArrayDotProduct].getName, "graft_array_dot"),
     (children: Seq[Expression]) => ArrayDotProduct(children(0), children(1)))
 
-  /** Idempotent per-session registration (temp function namespace). */
+  /** Idempotent per-session registration (temp function namespace): a
+    * name the session's registry already holds is left as it is, so the
+    * per-query `register` calls neither rebuild the registry entries nor log
+    * a "replaced a previously registered function" warning each time. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_array_dot", exprs => ArrayDotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_shingles",
-      exprs => WordShingles(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(s"shingle size must be an int literal, got $other")
-      }),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fingerprint", exprs => PolyFingerprint(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_signature",
-      exprs => MinhashSignatureExpr(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
-      }),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash60(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_process_statement", exprs => ProcessStatementExpr(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk",
-      exprs => TopKByScore(exprs(0), exprs(1), exprs(2) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
-      }),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_card_redact", exprs => CardRedact(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow",
-      exprs => WinnowFingerprintsExpr(exprs(0),
-        exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
-        },
-        exprs(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"w must be an int literal, got $other")
-        }),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_quality", exprs => QualityScore(exprs(0),
-        graft.analytics.TextAnalysis.StopwordsEn), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      exprs => BloomMightContainLong(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_langid", exprs => StopwordLangId(exprs(0),
+    val registry = spark.sessionState.functionRegistry
+    def intLit(e: Expression, what: String): Int = e match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
+    }
+    val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+      "graft_array_dot" -> (exprs => ArrayDotProduct(exprs(0), exprs(1))),
+      "graft_word_shingles" -> (exprs => WordShingles(exprs(0), intLit(exprs(1), "shingle size"))),
+      "graft_fingerprint" -> (exprs => PolyFingerprint(exprs(0))),
+      "graft_minhash_signature" -> (exprs => MinhashSignatureExpr(exprs(0), intLit(exprs(1), "k"))),
+      "graft_simhash" -> (exprs => SimHash60(exprs(0))),
+      "graft_process_statement" -> (exprs => ProcessStatementExpr(exprs(0))),
+      "graft_topk" -> (exprs => TopKByScore(exprs(0), exprs(1), intLit(exprs(2), "k"))),
+      "graft_card_redact" -> (exprs => CardRedact(exprs(0))),
+      "graft_winnow" -> (exprs =>
+        WinnowFingerprintsExpr(exprs(0), intLit(exprs(1), "k"), intLit(exprs(2), "w"))),
+      "graft_quality" -> (exprs => QualityScore(exprs(0),
+        graft.analytics.TextAnalysis.StopwordsEn)),
+      "graft_bloom_contains" -> (exprs => BloomMightContainLong(exprs(0), exprs(1))),
+      "graft_langid" -> (exprs => StopwordLangId(exprs(0),
         graft.analytics.TextAnalysis.StopwordsEn,
         graft.analytics.TextAnalysis.StopwordsEs,
-        graft.analytics.TextAnalysis.StopwordsDe), "scala_udf")
+        graft.analytics.TextAnalysis.StopwordsDe)))
+    builders.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 
   def fingerprintFast(text: Column): Column = call_function("graft_fingerprint", text)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Auto-engagement for the [[ChunkedWindows]] skew mitigation (VERDICT r9
   * directive #6): the crossover was MEASURED in round 9
-  * (`tools.SkewReport`, SCALING.md "Measured crossover") — the chunked
+  * (SCALING.md § "Relational layer", "Measured crossover") — the chunked
   * form wins exactly when the hottest key's row count exceeds a few ×
   * (rows / cores), loses below (its boundary stages cost more than the
   * skew they remove: parity at ~5× a core's share, 1.9–3.7× wins at

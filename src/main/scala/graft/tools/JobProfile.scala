@@ -71,7 +71,7 @@ object JobProfile {
       jobs.clear(); stageToJob.clear(); starts.clear(); order.clear()
       val wall = runOnce(name)
       // async listener bus: spin until the job table is stable (the
-      // ProbeMetrics.quiesce discipline — listenerBus is private[spark])
+      // Bench shuffle-counter discipline — listenerBus is private[spark])
       var lastDone = -1
       var spins = 0
       def doneCount = {

@@ -250,7 +250,8 @@ class CorpusOpsSpec extends SparkSpec {
       "on a corpus whose only hot buckets are true dup clusters, capped == exact")
     // and the candidate EXPANSION is bounded: a hot bucket of mixed
     // non-dups (same band slice by construction impossible to plant via
-    // text, so this is asserted at scale by DedupBytesProbe / SCALING.md)
+    // text, so this is measured at scale in SCALING.md § "Dedup-tier
+    // scale variance, DECIDED")
   }
 
   test("bm25TopDocs: dotted query terms resolve; duplicate terms are rejected") {

@@ -47,4 +47,20 @@ class VectorExpressionsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("k >= 1"), e.getMessage)
   }
+
+  test("register is idempotent: a second call leaves the registry entries as they are") {
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    val simhash = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_simhash")
+    assert(!registry.functionExists(simhash))
+    GraftFunctions.register(session)
+    // each registration stores a fresh ExpressionInfo, so identity shows
+    // whether the second call replaced the entry
+    val first = registry.lookupFunction(simhash)
+    assert(first.isDefined)
+    GraftFunctions.register(session)
+    assert(registry.lookupFunction(simhash).exists(_ eq first.get),
+      "the second register must not replace the graft_simhash entry")
+    assert(session.sql("select graft_simhash('a b c') is not null").head().getBoolean(0))
+  }
 }

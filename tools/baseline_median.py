@@ -1,7 +1,6 @@
 #!/usr/bin/env python3
 """Assemble a BENCH_LOCAL_r{N}.json regression baseline (per-query MEDIAN
-of quiet closing runs) from full-map bench artifacts — the generalized
-successor of baseline_r12.py (which this supersedes for r14+).
+of quiet closing runs) from full-map bench artifacts.
 
 Usage: baseline_median.py "<method note>" run1.json run2.json [run3.json ...]
        > BENCH_LOCAL_rN.json
@@ -11,8 +10,8 @@ run must not silently fall out of the regression baseline — ADVICE r12).
 Since r16 the runs carry per-query shuffle-write bytes ("shuffle_write");
 their medians are folded into the baseline too — the bytes side of the
 bytes-aware regression gate (VERDICT r15 #2).
-Pair with tools/baseline_swap.py to regenerate the Bench.baselinePrev and
-Bench.baselineShuffle maps.
+graft.Bench reads the committed BENCH_LOCAL_r<N>.json with the largest N
+directly, so re-recording the gate needs no Scala edit.
 """
 import sys, json, statistics
 

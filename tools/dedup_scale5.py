@@ -81,8 +81,8 @@ for q in queries:
                    if q in r[0] and q not in r[1]]
         if missing:
             sys.exit(f"FATAL: leg {leg} pass(es) {missing} ran {q} but "
-                     f"recorded no shuffle_write entry — rerun with "
-                     f"SPARK_GRAFT_SHUFFLE=1 or drop the broken pass file")
+                     f"recorded no shuffle_write entry — rerun that "
+                     f"pass or drop the broken pass file")
         sb = sorted(r[1][q] for r in data[leg] if q in r[0])
         if sb and sb[-1] > 0:
             bmed[(q, leg)] = statistics.median(sb)

@@ -4,8 +4,8 @@
 # whose sf3 wall-times spread 30-80% — indistinguishable from host drift.
 # This protocol runs the five dedup-tier queries as MEDIAN-OF-5 fresh-JVM
 # passes per leg (sf0.1 / sf1 / sf3) in a quiet window, with PER-QUERY
-# SHUFFLE WRITE BYTES recorded alongside wall-time (SPARK_GRAFT_SHUFFLE=1,
-# graft.Bench listener): if shuffle bytes are flat across passes while
+# SHUFFLE WRITE BYTES recorded alongside wall-time (graft.Bench always
+# records them): if shuffle bytes are flat across passes while
 # wall-time spreads, the spread is host drift; if bytes grow, the
 # superlinearity is real and the operator is named.
 #
@@ -29,7 +29,6 @@ for leg in "sf0.1:/root/testdata/sf0.1" "sf1:/root/repo/data/sf1" "sf3:/root/rep
     SPARK_GRAFT_JARS="$JAR" \
     SPARK_GRAFT_CPUS=16 \
     SPARK_GRAFT_NO_RERUN=1 \
-    SPARK_GRAFT_SHUFFLE=1 \
     SPARK_GRAFT_BENCH_OUT="$OUT/${name}_p${p}.json" \
     java -cp "/opt/spark/jars/*:$JAR" graft.Bench $SUBSET > "$OUT/${name}_p${p}.log" 2>&1
     tail -1 "$OUT/${name}_p${p}.log"

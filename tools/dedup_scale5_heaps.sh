@@ -29,7 +29,6 @@ for leg in "sf0.1:/root/testdata/sf0.1" "sf1:/root/repo/data/sf1h" "sf3:/root/re
     SPARK_GRAFT_JARS="$JAR" \
     SPARK_GRAFT_CPUS=16 \
     SPARK_GRAFT_NO_RERUN=1 \
-    SPARK_GRAFT_SHUFFLE=1 \
     SPARK_GRAFT_BENCH_OUT="$OUT/${name}_p${p}.json" \
     java -cp "/opt/spark/jars/*:$JAR" graft.Bench $SUBSET > "$OUT/${name}_p${p}.log" 2>&1
     tail -1 "$OUT/${name}_p${p}.log"
