@@ -29,48 +29,14 @@ import org.apache.spark.util.sketch.BloomFilter
   * [[Dedup.decontaminate]] against the full registry. */
 object BloomIndex {
 
-  /** Atomic binary replace — write the full payload to a `.tmp` twin, then
-    * delete-and-rename into place (the [[IndexMeta.write]] pattern, r16
-    * review sweep: the previous truncate-then-write raced lock-free
+  /** `bloom.bin` and `meta.json` are replaced whole ([[IndexMeta.writeBytes]],
+    * r16 review sweep: a truncate-then-write raced lock-free
     * [[screenPredicate]]/[[decontaminate]] readers — a reader catching the
     * truncation window got a torn `BloomFilter.readFrom` stream, or worse a
     * partial bit array whose false answers are treated as proof of clean). */
-  private def hadoopWrite(spark: SparkSession, path: String, bytes: Array[Byte]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val t = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(t, true)
-    try out.write(bytes) finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(t, p))
-      throw new IllegalStateException(s"bloom index swap: cannot move $t into place")
-  }
-
-  /** Read with the [[IndexMeta.readText]] fallback chain: live → `.tmp`
-    * (a writer mid-swap or crashed there holds the complete payload in the
-    * twin) → live again (the swap's rename landed between the probes).
-    * FileNotFound inside a probe counts as a miss, not an error. */
-  private def hadoopRead(spark: SparkSession, path: String): Array[Byte] = {
-    def read1(p: org.apache.hadoop.fs.Path): Option[Array[Byte]] = {
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else
-        try {
-          val in = fs.open(p)
-          try {
-            val bos = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](64 * 1024)
-            var n = in.read(buf)
-            while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-            Some(bos.toByteArray)
-          } finally in.close()
-        } catch { case _: java.io.FileNotFoundException => None }
-    }
-    val live = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    read1(live).orElse(read1(tmp)).orElse(read1(live)).getOrElse(
+  private def readFile(spark: SparkSession, path: String): Array[Byte] =
+    IndexMeta.readBytes(spark, path).getOrElse(
       throw new IllegalStateException(s"bloom index: $path is missing"))
-  }
 
   private def probeShingles(probes: DataFrame, n: Int,
                             textCol: String): DataFrame = {
@@ -96,15 +62,15 @@ object BloomIndex {
     IndexLock.withLock(spark, dir) {
       val sh = probeShingles(probes, n, textCol).localCheckpoint(true)
       val items = expectedItems.getOrElse(4L * math.max(sh.count(), 1L))
-      hadoopWrite(spark, s"$dir/bloom.bin", buildFilter(sh, items, fpp))
-      hadoopWrite(spark, s"$dir/meta.json",
+      IndexMeta.writeBytes(spark, s"$dir/bloom.bin", buildFilter(sh, items, fpp))
+      IndexMeta.writeBytes(spark, s"$dir/meta.json",
         s"""{"expectedItems":$items,"fpp":$fpp,"n":$n}""".getBytes("UTF-8"))
       sh.write.mode("overwrite").parquet(s"$dir/shingles")
     }
   }
 
   private def meta(spark: SparkSession, dir: String): (Long, Double, Int) = {
-    val txt = new String(hadoopRead(spark, s"$dir/meta.json"), "UTF-8")
+    val txt = new String(readFile(spark, s"$dir/meta.json"), "UTF-8")
     def field(k: String): String =
       txt.split(s""""$k":""")(1).takeWhile(c => c != ',' && c != '}')
     (field("expectedItems").toLong, field("fpp").toDouble, field("n").toInt)
@@ -125,11 +91,11 @@ object BloomIndex {
       val delta = BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(buildFilter(sh, items, fpp)))
       val merged = BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(hadoopRead(spark, s"$dir/bloom.bin")))
+        new java.io.ByteArrayInputStream(readFile(spark, s"$dir/bloom.bin")))
       merged.mergeInPlace(delta)
       val bos = new java.io.ByteArrayOutputStream()
       merged.writeTo(bos)
-      hadoopWrite(spark, s"$dir/bloom.bin", bos.toByteArray)
+      IndexMeta.writeBytes(spark, s"$dir/bloom.bin", bos.toByteArray)
       sh.write.mode("append").parquet(s"$dir/shingles")
     }
   }
@@ -143,7 +109,7 @@ object BloomIndex {
   def screenPredicate(spark: SparkSession, dir: String,
                       textCol: String = "text"): org.apache.spark.sql.Column = {
     val (_, _, n) = meta(spark, dir)
-    val bytes = hadoopRead(spark, s"$dir/bloom.bin")
+    val bytes = readFile(spark, s"$dir/bloom.bin")
     exists(Dedup.shingles(col(textCol), n),
       s => graft.functions.GraftFunctions.bloomContains(xxhash64(s), bytes))
   }
@@ -157,7 +123,7 @@ object BloomIndex {
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val (_, _, n) = meta(spark, dir)
-    val bytes = hadoopRead(spark, s"$dir/bloom.bin")
+    val bytes = readFile(spark, s"$dir/bloom.bin")
     val stored = spark.read.parquet(s"$dir/shingles")
     val contaminated = docs
       .select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("shingle"))

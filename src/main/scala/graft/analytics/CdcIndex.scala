@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** PERSISTED chunk-hash index: the content-defined-chunking twin of
   * [[DedupIndex]] — build once over corpus history, screen every arriving
@@ -56,42 +57,29 @@ object CdcIndex {
     * (text, w, modulus), so an [[append]] or [[screenDelta]] under
     * different values produces different chunk hashes and silently misses
     * every duplicate. Recorded at build, validated on every later
-    * operation; meta-less pre-r15 indexes trust the caller (their
-    * historical contract). `buckets` is recorded for cross-version safety
-    * (the partition rule must match what is on disk). */
+    * operation; an index without the record fails loudly ([[IndexMeta]]).
+    * `buckets` is recorded for cross-version safety (the partition rule
+    * must match what is on disk). */
   private def writeMeta(spark: SparkSession, dir: String, w: Int, modulus: Int): Unit =
     IndexMeta.write(spark, dir,
       s"""{"layout":1,"w":$w,"modulus":$modulus,"buckets":$Buckets}""")
 
-  private def checkGeometry(spark: SparkSession, dir: String, w: Int, modulus: Int): Unit =
-    IndexMeta.readText(spark, dir).foreach { txt =>
-      def field(k: String): Long = IndexMeta.long(txt, k).getOrElse(
-        throw new IllegalStateException(s"CDC index meta at $dir is unreadable: $txt"))
-      if (field("w") != w || field("modulus") != modulus || field("buckets") != Buckets)
-        throw new IllegalStateException(
-          s"CDC index at $dir was built with w=${field("w")} modulus=${field("modulus")} " +
-            s"buckets=${field("buckets")}; caller asked for w=$w modulus=$modulus " +
-            s"buckets=$Buckets - mismatched chunking cannot compose; pass the build " +
-            "parameters or rebuild the index")
-    }
-
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def path(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  /** The stored chunk frame, or an empty (doc_id, chunk_hash, bucket)
-    * frame when the store dir is absent (fresh index, or an all-forgotten
-    * compact deleted it — the readers' empty contract). */
-  private def readChunks(spark: SparkSession, dir: String): DataFrame = {
-    val root = path(s"$dir/chunks")
-    if (!fs(spark, root).exists(root)) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("chunk_hash", LongType), StructField("bucket", LongType))))
-    } else spark.read.parquet(s"$dir/chunks")
+  private def checkGeometry(spark: SparkSession, dir: String, w: Int, modulus: Int): Unit = {
+    val txt = IndexMeta.required(spark, dir, "CdcIndex.build")
+    def field(k: String): Long = IndexMeta.field(txt, k, dir)
+    if (field("w") != w || field("modulus") != modulus || field("buckets") != Buckets)
+      throw new IllegalStateException(
+        s"CDC index at $dir was built with w=${field("w")} modulus=${field("modulus")} " +
+          s"buckets=${field("buckets")}; caller asked for w=$w modulus=$modulus " +
+          s"buckets=$Buckets - mismatched chunking cannot compose; pass the build " +
+          "parameters or rebuild the index")
   }
+
+  private[analytics] val ChunksSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("chunk_hash", LongType), StructField("bucket", IntegerType)))
+
+  private def readChunks(spark: SparkSession, dir: String): DataFrame =
+    IndexMeta.readStore(spark, s"$dir/chunks", ChunksSchema)
 
   private def hashes(docs: DataFrame, w: Int, modulus: Int,
                      idCol: String, textCol: String): DataFrame =
@@ -104,29 +92,17 @@ object CdcIndex {
   def build(docs: DataFrame, dir: String, w: Int = 4, modulus: Int = 16,
             idCol: String = "doc_id", textCol: String = "text"): Unit =
     IndexLock.withLock(docs.sparkSession, dir) {
-      hashes(docs, w, modulus, idCol, textCol)
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/chunks")
+      IndexMeta.writeStore(hashes(docs, w, modulus, idCol, textCol), s"$dir/chunks",
+        "overwrite", Seq("bucket"))
       writeMeta(docs.sparkSession, dir, w, modulus)
-      // a REBUILD resets the index completely: stale tombstones from a
-      // pre-rebuild [[forget]] must not keep suppressing the fresh corpus
-      val tp = path(s"$dir/tombstones")
-      fs(docs.sparkSession, tp).delete(tp, true): Unit
+      IndexMeta.clearTombstones(docs.sparkSession, dir)
     }
 
   private def appendUnlocked(delta: DataFrame, dir: String, w: Int, modulus: Int,
                              idCol: String, textCol: String): Unit = {
     checkGeometry(delta.sparkSession, dir, w, modulus)
-    val hadMeta = IndexMeta.readText(delta.sparkSession, dir).isDefined
-    hashes(delta, w, modulus, idCol, textCol)
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$dir/chunks")
-    // first mutating touch of a legacy meta-less index: pin the caller's
-    // geometry (the chunks just written compose only under it) so every
-    // later operation stops trusting caller parameters — the same
-    // first-touch rule as SearchIndex.append / DedupIndex.appendUnlocked;
-    // without it this index alone would keep the silent-miss hazard open
-    if (!hadMeta) writeMeta(delta.sparkSession, dir, w, modulus)
+    IndexMeta.writeStore(hashes(delta, w, modulus, idCol, textCol), s"$dir/chunks",
+      "append", Seq("bucket"))
   }
 
   /** Append a shard's chunk hashes (blind — screen first via
@@ -141,62 +117,32 @@ object CdcIndex {
   /** Delete history docs from the screening set without rewriting the
     * store: their ids join a tombstone set whose rows [[screenDelta]]
     * anti-joins out of the reachable hash set — O(|ids|) delete, space
-    * reclaimed lazily by [[compact]] (the family contract). Requires a
-    * store with the doc attribution column (pre-r13 stores must be
-    * rebuilt — fail-fast check). */
+    * reclaimed lazily by [[compact]] (the family contract). */
   def forget(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String = "doc_id"): Unit =
     IndexLock.withLock(spark, dir) {
-      if (!readChunks(spark, dir).columns.contains("doc_id"))
-        throw new IllegalStateException(s"CDC index at $dir has no doc attribution " +
-          "(built before right-to-be-forgotten support); rebuild it with CdcIndex.build")
-      ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-        .write.mode("append").parquet(s"$dir/tombstones")
+      IndexMeta.required(spark, dir, "CdcIndex.build"): Unit
+      IndexMeta.forget(dir, IndexMeta.idFrame(ids, idCol, "doc_id"))
     }
 
   /** Rewrite ONLY the buckets containing tombstoned docs' rows and clear
-    * the tombstone set (partition-scoped — see [[PqIndex.compact]]).
-    * Screens before and after return identical verdicts (CdcIndexSpec). */
+    * the tombstone set ([[IndexMeta.rewritePartitions]]). Chunk buckets
+    * are a function of content, not of the id, so the affected set comes
+    * from a semi-join of the tombstones against the store. Screens before
+    * and after return identical verdicts (CdcIndexSpec). */
   def compact(spark: SparkSession, dir: String): Unit =
     IndexLock.withLock(spark, dir) {
-      tombstones(spark, dir).foreach { tomb =>
-        val t = broadcast(tomb)
-        val root = path(s"$dir/chunks")
-        val f = fs(spark, root)
+      IndexMeta.required(spark, dir, "CdcIndex.build"): Unit
+      IndexMeta.tombstones(spark, dir).foreach { tomb =>
         val affected = readChunks(spark, dir)
-          .join(t, Seq("doc_id"), "left_semi")
+          .join(broadcast(tomb), Seq("doc_id"), "left_semi")
           .select(col("bucket").cast("long")).distinct()
-          .collect().map(_.getLong(0))
-        if (affected.nonEmpty) {
-          val surv = readChunks(spark, dir)
-            .filter(col("bucket").isin(affected.toSeq: _*))
-            .join(t, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true) // affected buckets only
-          val survB = surv.select(col("bucket").cast("long")).distinct()
-            .collect().map(_.getLong(0)).toSet
-          if (survB.nonEmpty)
-            surv.repartition(col("bucket"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("bucket").parquet(s"$dir/chunks")
-          affected.filterNot(survB).foreach(b =>
-            f.delete(path(s"$dir/chunks/bucket=$b"), true): Unit)
-          // all-emptied edge: a partitioned dir with zero partitions fails
-          // schema inference AND a zero-row placeholder part would corrupt
-          // partition discovery for later appends — delete the dir; the
-          // readers treat a missing store as empty ([[readChunks]])
-          val anyLeft = f.listStatus(root).exists(_.getPath.getName.startsWith("bucket="))
-          if (!anyLeft) f.delete(root, true): Unit
-        }
-        val p = path(s"$dir/tombstones")
-        fs(spark, p).delete(p, true): Unit
+          .collect().map(_.getLong(0)).toSeq
+        IndexMeta.rewritePartitions(readChunks(spark, dir), s"$dir/chunks", Seq("bucket"),
+          "bucket", affected, tomb, "doc_id")
+        IndexMeta.clearTombstones(spark, dir)
       }
     }
-
-  private def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = path(s"$dir/tombstones")
-    if (fs(spark, p).exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
 
   /** Screen-then-admit ingest — the decision layer that makes shards
     * COMPOSE: every delta doc gets a [[screenDelta]] verdict against the
@@ -229,11 +175,9 @@ object CdcIndex {
                   maxDupPerMille: Int = 500, w: Int = 4, modulus: Int = 16,
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     checkGeometry(spark, dir, w, modulus)
-    val hist0 = readChunks(spark, dir)
-    // tombstoned docs' rows leave the reachable set ([[forget]]); lock-free
-    // by the same monotone argument as the twins
-    val hist = tombstones(spark, dir)
-      .fold(hist0)(t => hist0.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    // tombstoned docs' rows leave the reachable set ([[forget]]; lock-free
+    // — see [[IndexMeta.tombstones]])
+    val hist = IndexMeta.live(spark, dir, readChunks(spark, dir), "doc_id")
       .select(col("chunk_hash"))
     // the chunk stream feeds both the total and the hit count — materialize
     // once (the multi-reference rule)

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** PERSISTED near-dup index: build once over corpus history, dedup every
   * arriving shard against it incrementally — the growing-corpus production
@@ -38,9 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupIndex {
 
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Doc-hash sub-partitioning of the stored layout (r13, VERDICT r12 #2):
     * `bands/` is partitioned by (band, dbucket) and `shingles/` by dbucket,
     * where dbucket = pmod(xxhash64(doc_id), docBuckets) — a pure function
@@ -56,21 +54,11 @@ object DedupIndex {
     * (CompactionSpec asserts it).
     *
     * The bucket rule is a pure function of the id only at CONSTANT width,
-    * so since r15 the width is a property of the BUILD, persisted in
-    * `_graft_meta.json` and read back by every later operation (VERDICT
-    * r14 #1 / ADVICE r14: the r14 sys-prop was process-global — a JVM
-    * started with a different `-Dgraft.dedupindex.docbuckets` silently
-    * mis-bucketed forget/compact scoping on an existing index). The
-    * sys-prop remains ONLY as the build-time default (the layout A/B
-    * knob); absent, the width follows [[IndexMeta.bucketPolicy]] over the
-    * corpus size. Pre-r15 meta-less indexes fall back to the sys-prop/16
-    * (their build-time behavior). */
-  private def buildDocBuckets(nDocs: Long): Int =
-    sys.props.get("graft.dedupindex.docbuckets").map(_.toInt)
-      .getOrElse(IndexMeta.bucketPolicy(nDocs))
-
-  private def legacyDocBuckets: Int =
-    sys.props.get("graft.dedupindex.docbuckets").map(_.toInt).getOrElse(16)
+    * so the width is a property of the BUILD: [[IndexMeta.bucketPolicy]]
+    * over the corpus size, persisted in `_graft_meta.json` and read back by
+    * every later operation (r15, VERDICT r14 #1). */
+  private def dbucketOf(c: org.apache.spark.sql.Column, docBuckets: Int): org.apache.spark.sql.Column =
+    pmod(xxhash64(c), lit(docBuckets)).cast("int")
 
   /** The stored banding/layout record: MinHash banding geometry (an append
     * or probe under different bands/rowsPerBand/ngram would write or
@@ -81,78 +69,45 @@ object DedupIndex {
     IndexMeta.write(spark, dir, s"""{"layout":1,"docBuckets":${m.docBuckets},""" +
       s""""bands":${m.bands},"rowsPerBand":${m.rowsPerBand},"ngram":${m.ngram}}""")
 
-  private def readMeta(spark: SparkSession, dir: String): Option[Meta] =
-    IndexMeta.readText(spark, dir).map { txt =>
-      def field(k: String): Int = IndexMeta.long(txt, k).getOrElse(
-        throw new IllegalStateException(s"dedup index meta at $dir is unreadable: $txt")).toInt
-      Meta(field("docBuckets"), field("bands"), field("rowsPerBand"), field("ngram"))
-    }
+  private def readMeta(spark: SparkSession, dir: String): Meta = {
+    val txt = IndexMeta.required(spark, dir, "DedupIndex.build")
+    def field(k: String): Int = IndexMeta.field(txt, k, dir).toInt
+    Meta(field("docBuckets"), field("bands"), field("rowsPerBand"), field("ngram"))
+  }
 
   /** Fail-fast geometry check for every post-build operation: a mismatched
     * banding geometry would compose incompatible minhash rows (appends) or
     * probe with foreign buckets (dedupDelta) — silently missing pairs.
-    * Returns the stored doc-hash width. Meta-less pre-r15 indexes trust
-    * the caller (their historical contract). */
+    * Returns the stored doc-hash width. */
   private def checkGeometry(spark: SparkSession, dir: String,
-                            bands: Int, rowsPerBand: Int, n: Int): Int =
-    readMeta(spark, dir) match {
-      case Some(m) =>
-        if (m.bands != bands || m.rowsPerBand != rowsPerBand || m.ngram != n)
-          throw new IllegalStateException(
-            s"dedup index at $dir was built with bands=${m.bands} rowsPerBand=" +
-              s"${m.rowsPerBand} ngram=${m.ngram}; caller asked for bands=$bands " +
-              s"rowsPerBand=$rowsPerBand ngram=$n - mismatched banding cannot compose; " +
-              "pass the build geometry or rebuild the index")
-        m.docBuckets
-      case None => legacyDocBuckets
-    }
-
-  private def withDbucket(df: DataFrame, docBuckets: Int): DataFrame =
-    df.withColumn("dbucket", pmod(xxhash64(col("doc_id")), lit(docBuckets)).cast("int"))
-
-  /** Driver-side twin of [[withDbucket]]'s bucket rule for a tombstone id
-    * set: the affected buckets are a pure function of the ids (at the
-    * stored width). */
-  private def bucketsOf(tomb: DataFrame, docBuckets: Int): Array[Int] =
-    tomb.select(pmod(xxhash64(col("doc_id")), lit(docBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0))
-
-  /** Marker left by an all-tombstoned [[compact]]: overwriting bands
-    * (partitioned) and shingles with ZERO rows writes no part files, so
-    * later reads would fail schema inference — the empty state is recorded
-    * explicitly and [[readBands]]/[[readShingles]] reconstruct the empty
-    * frames from the literal schemas. The next append clears it. */
-  private def emptyMarker(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/_graft_empty")
-
-  private def emptyFrame(spark: SparkSession,
-                         schema: org.apache.spark.sql.types.StructType): DataFrame =
-    // plain attributes from an explicit schema, not foldable literals (a
-    // constant-foldable column would evaluate at planning time — see
-    // PqIndex.readCodes)
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  private def readBands(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    if (fs(spark, emptyMarker(dir)).exists(emptyMarker(dir)))
-      emptyFrame(spark, StructType(Seq(StructField("doc_id", LongType),
-        StructField("band", IntegerType), StructField("bucket", StringType),
-        StructField("dbucket", IntegerType))))
-    else spark.read.parquet(s"$dir/bands")
+                            bands: Int, rowsPerBand: Int, n: Int): Int = {
+    val m = readMeta(spark, dir)
+    if (m.bands != bands || m.rowsPerBand != rowsPerBand || m.ngram != n)
+      throw new IllegalStateException(
+        s"dedup index at $dir was built with bands=${m.bands} rowsPerBand=" +
+          s"${m.rowsPerBand} ngram=${m.ngram}; caller asked for bands=$bands " +
+          s"rowsPerBand=$rowsPerBand ngram=$n - mismatched banding cannot compose; " +
+          "pass the build geometry or rebuild the index")
+    m.docBuckets
   }
 
-  private def readShingles(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    if (fs(spark, emptyMarker(dir)).exists(emptyMarker(dir)))
-      emptyFrame(spark, StructType(Seq(StructField("doc_id", LongType),
-        StructField("sh", ArrayType(StringType)),
-        StructField("dbucket", IntegerType))))
-    else spark.read.parquet(s"$dir/shingles")
-  }
+  private[analytics] val BandsSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("bucket", StringType), StructField("band", IntegerType),
+    StructField("dbucket", IntegerType)))
+
+  private[analytics] val ShinglesSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("sh", ArrayType(StringType)), StructField("dbucket", IntegerType)))
+
+  private def readBands(spark: SparkSession, dir: String): DataFrame =
+    IndexMeta.readStore(spark, s"$dir/bands", BandsSchema)
+
+  private def readShingles(spark: SparkSession, dir: String): DataFrame =
+    IndexMeta.readStore(spark, s"$dir/shingles", ShinglesSchema)
 
   /** Build and write the index from corpus history; the doc-hash width
-    * (sys-prop default, else [[IndexMeta.bucketPolicy]] over the corpus
-    * size) and the banding geometry are recorded in `_graft_meta.json` and
-    * validated by every later operation (r15). */
+    * ([[IndexMeta.bucketPolicy]] over the corpus size) and the banding
+    * geometry are recorded in `_graft_meta.json` and validated by every
+    * later operation (r15). */
   def build(docs: DataFrame, dir: String,
             bands: Int = 4, rowsPerBand: Int = 4, n: Int = 3,
             idCol: String = "doc_id", textCol: String = "text"): Unit =
@@ -160,10 +115,7 @@ object DedupIndex {
       val db = writeIndex(docs, dir, bands, rowsPerBand, n, idCol, textCol,
         "overwrite", docBuckets0 = 0)
       writeMeta(docs.sparkSession, dir, Meta(db, bands, rowsPerBand, n))
-      // a REBUILD resets the index completely: stale tombstones from a
-      // pre-rebuild [[forget]] must not keep suppressing the fresh corpus
-      val tp = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-      fs(docs.sparkSession, tp).delete(tp, true): Unit
+      IndexMeta.clearTombstones(docs.sparkSession, dir)
     }
 
   /** Append a shard to the index (no dedup — compose with [[dedupDelta]]
@@ -183,24 +135,15 @@ object DedupIndex {
   private def appendUnlocked(delta: DataFrame, dir: String,
                              bands: Int, rowsPerBand: Int, n: Int,
                              idCol: String, textCol: String): Unit = {
-    val spark = delta.sparkSession
-    val hadMeta = readMeta(spark, dir).nonEmpty
-    val db = checkGeometry(spark, dir, bands, rowsPerBand, n)
+    val db = checkGeometry(delta.sparkSession, dir, bands, rowsPerBand, n)
     writeIndex(delta, dir, bands, rowsPerBand, n, idCol, textCol, "append",
       docBuckets0 = db): Unit
-    // first r15 touch of a legacy index: pin its (caller-trusted) layout so
-    // later operations stop depending on a process-global sys-prop
-    if (!hadMeta) writeMeta(spark, dir, Meta(db, bands, rowsPerBand, n))
   }
 
   /** Shared write body of [[build]]/[[appendUnlocked]]: shingle once, write
     * bands partitioned by (band, dbucket) and shingles by dbucket.
     * `docBuckets0 > 0` pins the width (appends); `0` derives it from the
-    * corpus (build — see [[buildDocBuckets]]). Returns the width used. The
-    * empty marker is cleared only AFTER the data is readable: readers give
-    * the marker precedence, so a lock-free reader racing this write
-    * degrades to a safe stale-empty view instead of hitting a window with
-    * neither marker nor parquet (ADVICE r12). */
+    * corpus (build — [[IndexMeta.bucketPolicy]]). Returns the width used. */
   private def writeIndex(docs: DataFrame, dir: String,
                          bands: Int, rowsPerBand: Int, n: Int,
                          idCol: String, textCol: String, mode: String,
@@ -208,27 +151,21 @@ object DedupIndex {
     val withSh = Dedup.shingleFrame(docs, n, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // count() materializes the cache on BOTH paths (the append path used to
-    // leave it cold until the first write), doubles as the emptiness probe
-    // below, and sizes the width on the build path
+    // leave it cold until the first write) and sizes the width on the build
+    // path
     val shRows = withSh.count()
     val docBuckets =
-      if (docBuckets0 > 0) docBuckets0 else buildDocBuckets(shRows)
+      if (docBuckets0 > 0) docBuckets0 else IndexMeta.bucketPolicy(shRows)
     // bands and shingles are independent writes over the one cached shingle
     // frame — overlap the two job+commit latencies (r18, guide §2.6)
     Par.run(
-      () => withDbucket(Dedup.minhashBanded(withSh, bands, rowsPerBand), docBuckets)
-        .repartition(col("band"), col("dbucket"))
-        .write.mode(mode).partitionBy("band", "dbucket").parquet(s"$dir/bands"),
-      () => withDbucket(withSh, docBuckets)
-        .repartition(col("dbucket"))
-        .write.mode(mode).partitionBy("dbucket").parquet(s"$dir/shingles"))
-    // an all-blank frame writes no partition files — keep the marker then
-    // (clearing it over a still-empty store would break later reads)
-    val wroteRows = shRows > 0
+      () => IndexMeta.writeStore(
+        Dedup.minhashBanded(withSh, bands, rowsPerBand)
+          .withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets)),
+        s"$dir/bands", mode, Seq("band", "dbucket")),
+      () => IndexMeta.writeStore(withSh.withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets)),
+        s"$dir/shingles", mode, Seq("dbucket")))
     withSh.unpersist()
-    val mp = emptyMarker(dir)
-    val mf = fs(docs.sparkSession, mp)
-    if (wroteRows && mf.exists(mp)) mf.delete(mp, false): Unit // real files return
     docBuckets
   }
 
@@ -302,8 +239,8 @@ object DedupIndex {
   def forget(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String = "doc_id"): Unit =
     IndexLock.withLock(spark, dir) {
-      ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-        .write.mode("append").parquet(s"$dir/tombstones")
+      readMeta(spark, dir): Unit
+      IndexMeta.forget(dir, IndexMeta.idFrame(ids, idCol, "doc_id"))
     }
 
   /** Rewrite ONLY the doc-hash partitions that contain tombstoned docs and
@@ -311,97 +248,23 @@ object DedupIndex {
     * identical pairs (CompactionSpec).
     *
     * Partition-scoped (r13, VERDICT r12 #2): the affected dbuckets are a
-    * PURE FUNCTION of the tombstone ids (no index scan at all — cheaper
-    * than [[PqIndex.compact]]'s semi-join, which must map ids to lists);
-    * only those buckets' survivors are materialized (bounded
-    * `localCheckpoint`s) and dynamically overwritten; buckets whose every
-    * doc was forgotten have their directories deleted. Untouched partition
-    * files stay byte-identical. All-tombstoned edge: the empty marker is
-    * created BEFORE the data directories are removed (readers give the
-    * marker precedence — the worst race exposure is a safe stale-empty
-    * view; ADVICE r12 ordering fix). */
+    * PURE FUNCTION of the tombstone ids at the stored width (no index scan
+    * at all — cheaper than [[PqIndex.compact]]'s sidecar join, which must
+    * map ids to lists); only those buckets are rewritten
+    * ([[IndexMeta.rewritePartitions]]). */
   def compact(spark: SparkSession, dir: String): Unit =
     IndexLock.withLock(spark, dir) {
-      tombstones(spark, dir).foreach { tomb =>
-        val t = broadcast(tomb)
-        // the stored width (r15): a sys-prop changed since build must not
-        // mis-scope the rewrite
-        val db = readMeta(spark, dir).map(_.docBuckets).getOrElse(legacyDocBuckets)
-        val tb = bucketsOf(tomb, db)
-        val bandsPath = new org.apache.hadoop.fs.Path(s"$dir/bands")
-        val shinPath = new org.apache.hadoop.fs.Path(s"$dir/shingles")
-        val f = fs(spark, bandsPath)
-        if (tb.nonEmpty && f.exists(bandsPath)) {
-          val bandsSurv = readBands(spark, dir)
-            .filter(col("dbucket").isin(tb.toSeq: _*))
-            .join(t, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true) // affected buckets only
-          val shinSurv = readShingles(spark, dir)
-            .filter(col("dbucket").isin(tb.toSeq: _*))
-            .join(t, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
-          // partitions that keep rows are dynamically overwritten; the rest
-          // of the affected set is deleted outright
-          val survBandParts = bandsSurv.select("band", "dbucket").distinct()
-            .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-          val survShinParts = shinSurv.select("dbucket").distinct()
-            .collect().map(_.getInt(0)).toSet
-          if (survBandParts.nonEmpty)
-            bandsSurv.repartition(col("band"), col("dbucket"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("band", "dbucket").parquet(s"$dir/bands")
-          if (survShinParts.nonEmpty)
-            shinSurv.repartition(col("dbucket"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("dbucket").parquet(s"$dir/shingles")
-          // existing affected dirs with no surviving rows
-          def subdirs(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-            if (f.exists(p)) f.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
-            else Seq.empty
-          val emptiedBands = for {
-            bandDir <- subdirs(bandsPath) if bandDir.getName.startsWith("band=")
-            dbDir <- subdirs(bandDir) if dbDir.getName.startsWith("dbucket=")
-            band = bandDir.getName.stripPrefix("band=").toInt
-            db = dbDir.getName.stripPrefix("dbucket=").toInt
-            if tb.contains(db) && !survBandParts((band, db))
-          } yield dbDir
-          val emptiedShin = for {
-            dbDir <- subdirs(shinPath) if dbDir.getName.startsWith("dbucket=")
-            db = dbDir.getName.stripPrefix("dbucket=").toInt
-            if tb.contains(db) && !survShinParts(db)
-          } yield dbDir
-          val untouchedRemain = subdirs(bandsPath)
-            .filter(_.getName.startsWith("band="))
-            .flatMap(subdirs)
-            .exists(d => d.getName.startsWith("dbucket=") &&
-              !tb.contains(d.getName.stripPrefix("dbucket=").toInt))
-          val becomesEmpty = survBandParts.isEmpty && !untouchedRemain
-          if (becomesEmpty)
-            fs(spark, emptyMarker(dir)).create(emptyMarker(dir), true).close()
-          (emptiedBands ++ emptiedShin).foreach(p => f.delete(p, true): Unit)
-          if (becomesEmpty) {
-            f.delete(bandsPath, true)
-            fs(spark, shinPath).delete(shinPath, true): Unit
-          }
-        }
-        val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-        fs(spark, p).delete(p, true): Unit
+      val db = readMeta(spark, dir).docBuckets
+      IndexMeta.tombstones(spark, dir).foreach { tomb =>
+        val tb = tomb.select(dbucketOf(col("doc_id"), db).as("b"))
+          .distinct().collect().map(_.getInt(0)).toSeq
+        IndexMeta.rewritePartitions(readBands(spark, dir), s"$dir/bands",
+          Seq("band", "dbucket"), "dbucket", tb, tomb, "doc_id")
+        IndexMeta.rewritePartitions(readShingles(spark, dir), s"$dir/shingles",
+          Seq("dbucket"), "dbucket", tb, tomb, "doc_id")
+        IndexMeta.clearTombstones(spark, dir)
       }
     }
-
-  /** The tombstone id set, if any forgets happened since the last
-    * [[compact]] — None on the common path (no footer read). Read
-    * LOCK-FREE by [[dedupDelta]] deliberately (probes must not block on
-    * writers); the race exposure is monotone — a concurrent [[forget]] can
-    * surface a prefix of the new tombstones, never resurrect a forgotten
-    * doc (same argument as [[PqIndex.tombstones]]). */
-  private def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Some(spark.read.parquet(p.toString)) else None
-  }
 
   /** Near-dup pairs TOUCHING the delta: delta-vs-history (via the stored
     * band index) plus delta-internal, both exact-Jaccard verified. History
@@ -425,11 +288,9 @@ object DedupIndex {
     val dSh = Dedup.shingleFrame(delta, n, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dBand = Dedup.minhashBanded(dSh, bands, rowsPerBand)
-    val iBand0 = readBands(spark, dir)
-      .select(col("doc_id"), col("band"), col("bucket"))
     // tombstoned history docs ([[forget]]) never reach the probe join
-    val iBand = tombstones(spark, dir)
-      .fold(iBand0)(t => iBand0.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    val iBand = IndexMeta.live(spark, dir,
+      readBands(spark, dir).select(col("doc_id"), col("band"), col("bucket")), "doc_id")
     val cross = iBand.as("x").join(dBand.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") =!= col("y.doc_id"))

@@ -3,15 +3,15 @@ package graft.analytics
 import org.apache.spark.sql.SparkSession
 
 /** Single-writer contract for the persisted indexes ([[PqIndex]],
-  * [[SearchIndex]], [[DedupIndex]], [[BloomIndex]]).
+  * [[SearchIndex]], [[DedupIndex]], [[CdcIndex]], [[BloomIndex]]).
   *
   * Why: every index mutation is MULTI-FILE (codes + centroids, postings +
-  * df + stats, bands + shingles, bloom.bin + shingles), and two writers
-  * interleaving those writes can leave a silently-torn index — e.g. two
-  * racing [[BloomIndex.append]]s both read the same base `bloom.bin`, each
-  * ORs in only its own delta, and the second write DROPS the first's bits
-  * while both shingle appends land: the filter now under-screens with no
-  * error anywhere. Real ingest pipelines retry, so the race is not
+  * df + stats, bands + shingles, chunks + meta, bloom.bin + shingles), and
+  * two writers interleaving those writes can leave a silently-torn index —
+  * e.g. two racing [[BloomIndex.append]]s both read the same base
+  * `bloom.bin`, each ORs in only its own delta, and the second write DROPS
+  * the first's bits while both shingle appends land: the filter now
+  * under-screens with no error anywhere. Real ingest pipelines retry, so the race is not
   * hypothetical; the contract is that a concurrent mutation FAILS LOUDLY
   * instead of corrupting.
   *

@@ -1,83 +1,114 @@
 package graft.analytics
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** Tiny shared read/write layer for the persisted-index family's
-  * `_graft_meta.json` layout records (r15, VERDICT r14 #1).
+/** The persisted-index family's one store module ([[SearchIndex]],
+  * [[DedupIndex]], [[PqIndex]], [[CdcIndex]]; [[BloomIndex]] for its small
+  * files). Every index keeps the same storage protocol, and this is its
+  * only copy:
   *
-  * The hazard this closes: every store in the family ([[SearchIndex]],
-  * [[DedupIndex]], [[PqIndex]]) derives its partition directories from a
-  * hash-bucket rule whose WIDTH is a build-time constant — `hash % buckets`.
-  * Probes and RTBF paths recompute that rule driver-side to build literal
-  * partition filters, so a caller (or a JVM-wide sys-prop) supplying a
-  * different width against an existing index prunes to the WRONG
-  * directories and silently returns incomplete rows. The fix is the same
-  * record/validate pattern [[PqIndex]] has used for its PQ geometry since
-  * r11: the build records its layout constants here, every later operation
-  * reads them back, and an explicit caller value that disagrees FAILS FAST
-  * instead of mis-pruning. Indexes written before this metadata existed
-  * fall back to the caller/default value (documented per index).
+  *   - the `_graft_meta.json` LAYOUT RECORD (r15, VERDICT r14 #1). Every
+  *     store derives its partition directories from a hash-bucket rule
+  *     whose WIDTH is a build-time constant — `hash % buckets` — and probes
+  *     recompute that rule driver-side into literal partition filters, so
+  *     a different width against an existing index would prune to the
+  *     WRONG directories and silently return incomplete rows. The build
+  *     records its layout constants here after its data, every later
+  *     operation reads them back ([[required]]), and an explicit caller value
+  *     that disagrees FAILS FAST. An index without the record fails loudly
+  *     and must be rebuilt: it was written before the record existed, or
+  *     its first build never finished. A rebuild that crashed after its data
+  *     writes keeps serving under its prior record;
+  *   - atomic small files ([[writeBytes]]/[[readBytes]]): the meta and
+  *     [[BloomIndex]]'s filter are replaced whole, never truncated under a
+  *     lock-free reader;
+  *   - delete-fast TOMBSTONES ([[forget]], [[tombstones]], [[live]],
+  *     [[clearTombstones]]): right-to-be-forgotten appends ids, readers
+  *     anti-join them out, compaction reclaims the space later;
+  *   - partition-scoped compaction ([[rewritePartitions]]) and the EMPTY
+  *     STORE state ([[readStore]]): a partitioned store whose every
+  *     partition was compacted away holds a `_graft_empty` marker instead
+  *     of an unreadable partition-less directory.
   *
-  * The format is a single flat JSON object, small enough that a regex
-  * field-reader is simpler and dependency-free (same choice as
-  * [[PqIndex]]'s private meta since r11). */
+  * The meta format is a single flat JSON object, small enough that a regex
+  * field-reader is simpler and dependency-free. */
 private[analytics] object IndexMeta {
 
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
+  def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def metaPath(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/_graft_meta.json")
+  // ---------------- atomic small files ----------------
 
-  private def tmpPath(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/_graft_meta.json.tmp")
-
-  /** Replace the meta file with the given pre-rendered JSON object —
-    * atomically for lock-free readers. A plain create(overwrite=true)
-    * truncates first, so a reader racing a meta REWRITE (every
-    * [[PqIndex]] append refreshes drift fields; first-touch pins rewrite
-    * legacy indexes) could see an empty or partial object and either crash
-    * or, worse, fall back to the legacy default width and silently
-    * mis-prune. Instead: write the full object to a `.tmp` twin, then
-    * delete-and-rename into place. [[readText]] covers the between-renames
-    * window by falling back to the complete `.tmp`. */
-  def write(spark: SparkSession, dir: String, json: String): Unit = {
-    val p = metaPath(dir)
-    val t = tmpPath(dir)
+  /** Replace a small file with `bytes` — atomically for lock-free readers.
+    * A plain create(overwrite=true) truncates first, so a reader racing a
+    * REWRITE (every [[PqIndex]] append refreshes drift fields; every
+    * [[BloomIndex.append]] ORs bits into `bloom.bin`) could see an empty
+    * or partial payload: a crash, a silently mis-pruned probe, or a bloom
+    * filter whose false answers are taken as proof of clean. Instead:
+    * write the full payload to a `.tmp` twin, then delete-and-rename into
+    * place. [[readBytes]] covers the between-renames window by falling
+    * back to the complete `.tmp`. */
+  def writeBytes(spark: SparkSession, file: String, bytes: Array[Byte]): Unit = {
+    val p = new Path(file)
+    val t = new Path(file + ".tmp")
     val f = fs(spark, p)
     val out = f.create(t, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    try out.write(bytes) finally out.close()
     f.delete(p, false)
     if (!f.rename(t, p))
-      throw new IllegalStateException(s"index meta swap: cannot move $t into place")
+      throw new IllegalStateException(s"small-file swap: cannot move $t into place")
   }
 
-  /** Read the meta object. Prefers the live file; a missing live file with
-    * a `.tmp` twin present means a writer is mid-swap (or crashed there) —
-    * the twin holds the complete object, so read it rather than reporting
-    * "no meta" (which downstream means LEGACY layout, a silently different
-    * bucket rule). One final re-read of the live path closes the race where
-    * the swap's rename lands between the two probes. */
-  def readText(spark: SparkSession, dir: String): Option[String] = {
-    def read1(p: org.apache.hadoop.fs.Path): Option[String] = {
+  /** Read a [[writeBytes]] file. Prefers the live file; a missing live
+    * file with a `.tmp` twin present means a writer is mid-swap (or crashed
+    * there) — the twin holds the complete payload. One final re-read of the
+    * live path closes the race where the swap's rename lands between the
+    * two probes. None only when neither exists. */
+  def readBytes(spark: SparkSession, file: String): Option[Array[Byte]] = {
+    def read1(p: Path): Option[Array[Byte]] = {
       val f = fs(spark, p)
-      // exists() then open() is a TOCTOU against write()'s delete/rename
+      // exists() then open() is a TOCTOU against writeBytes' delete/rename
       // (ADVICE r15): the file can vanish between the probe and the open —
       // treat that exactly like exists()=false so the orElse chain falls
-      // through to the path the swap moved the object to.
+      // through to the path the swap moved the payload to.
       if (!f.exists(p)) None
       else
         try {
           val in = f.open(p)
-          Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close())
+          Some(try in.readAllBytes() finally in.close())
         } catch { case _: java.io.FileNotFoundException => None }
     }
-    read1(metaPath(dir)).orElse(read1(tmpPath(dir))).orElse(read1(metaPath(dir)))
+    val live = new Path(file)
+    read1(live).orElse(read1(new Path(file + ".tmp"))).orElse(read1(live))
   }
+
+  // ---------------- the layout record ----------------
+
+  private def metaFile(dir: String) = s"$dir/_graft_meta.json"
+
+  def write(spark: SparkSession, dir: String, json: String): Unit =
+    writeBytes(spark, metaFile(dir), json.getBytes("UTF-8"))
+
+  def readText(spark: SparkSession, dir: String): Option[String] =
+    readBytes(spark, metaFile(dir)).map(new String(_, "UTF-8"))
+
+  /** The layout record every operation on an index starts from — the one
+    * meta rule: no record, no service. */
+  def required(spark: SparkSession, dir: String, builder: String): String =
+    readText(spark, dir).getOrElse(throw new IllegalStateException(
+      s"index at $dir has no _graft_meta.json (written before layout records " +
+        s"existed, or its build did not finish); rebuild it with $builder"))
 
   def long(txt: String, k: String): Option[Long] =
     s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
 
-  def flag(txt: String, k: String): Boolean =
-    s""""$k":true""".r.findFirstIn(txt).isDefined
+  /** A required numeric field of a [[required]] record. */
+  def field(txt: String, k: String, dir: String): Long =
+    long(txt, k).getOrElse(throw new IllegalStateException(
+      s"index meta at $dir has no \"$k\" field: $txt - rebuild the index"))
 
   /** Doc/vec-hash bucket width by corpus size (r15, VERDICT r14 #4): the
     * 16-bucket constants of r13/r14 bound RTBF pruning at min(|ids|,16)/16
@@ -105,4 +136,128 @@ private[analytics] object IndexMeta {
     * mutators read it back ([[SearchIndex.resolveBuckets]] fail-fast). */
   def tokenBucketPolicy(postingsRows: Long): Int =
     math.min(4096L, math.max(64L, (postingsRows + (1L << 20) - 1) >> 20)).toInt
+
+  // ---------------- tombstones ----------------
+
+  def tombstoneRoot(dir: String): String = s"$dir/tombstones"
+
+  /** `ids` as a distinct long tombstone frame keyed `key`. */
+  def idFrame(ids: DataFrame, idCol: String, key: String): DataFrame =
+    ids.select(col(idCol).cast("long").as(key)).distinct()
+
+  /** Append an [[idFrame]] to the tombstone set: an O(|ids|) delete that
+    * touches no store. Re-appending a forgotten id needs a compact first
+    * (the tombstone would keep suppressing it). */
+  def forget(dir: String, ids: DataFrame): Unit =
+    ids.write.mode("append").parquet(tombstoneRoot(dir))
+
+  /** The tombstone id set, if any forgets happened since the last compact
+    * — None on the common path, so untombstoned indexes pay nothing (not
+    * even a parquet footer read).
+    *
+    * Read LOCK-FREE by the query paths, deliberately: queries must not
+    * block on writers. The exposure is bounded and MONOTONE — a read
+    * concurrent with an in-flight forget can observe a prefix of the new
+    * tombstones (some ids already excluded, the rest excluded on the next
+    * read), never a resurrection; a compact mutates stores only under the
+    * lock and only after materializing the affected partitions' survivors,
+    * and clears tombstones last, so a lock-free reader racing it sees
+    * either (old rows + tombstones) or (new rows + tombstones) or (new
+    * rows, none) — all three return the same survivor rows. */
+  def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val p = new Path(tombstoneRoot(dir))
+    if (fs(spark, p).exists(p)) Some(spark.read.parquet(p.toString)) else None
+  }
+
+  /** `rows` minus the tombstoned ones (broadcast anti-join on `key` — the
+    * tombstone set is ids only). */
+  def live(spark: SparkSession, dir: String, rows: DataFrame, key: String): DataFrame =
+    tombstones(spark, dir).fold(rows)(t => rows.join(broadcast(t), Seq(key), "left_anti"))
+
+  /** Drop the tombstone set: after a compact has reclaimed every
+    * tombstoned row, and on a REBUILD (stale tombstones from a pre-rebuild
+    * forget must not keep suppressing the fresh corpus). */
+  def clearTombstones(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(tombstoneRoot(dir))
+    fs(spark, p).delete(p, true): Unit
+  }
+
+  // ---------------- partitioned stores ----------------
+
+  private def emptyMarker(root: String) = new Path(s"$root/_graft_empty")
+
+  /** The stored frame under `root`, or the empty frame of `schema` when
+    * the store holds the empty marker. Readers check the marker FIRST:
+    * [[rewritePartitions]] writes it before the last partition directory
+    * goes and [[writeStore]] clears it only after new data has landed, so
+    * a lock-free reader racing either sees a safe stale-empty view, never
+    * a window with neither marker nor parquet (ADVICE r12 ordering). The
+    * empty frame is built from plain attributes of an explicit schema, not
+    * foldable literals (a foldable empty array would constant-fold an
+    * element access at planning time and throw under ANSI indexing). */
+  def readStore(spark: SparkSession, root: String, schema: StructType): DataFrame =
+    if (fs(spark, emptyMarker(root)).exists(emptyMarker(root)))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.parquet(root)
+
+  /** Partition directories under `root`, nested `partCols`-deep, as
+    * relative `a=1/b=2` names (none when `root` is absent). */
+  private def partitionDirs(f: FileSystem, root: Path, partCols: Seq[String]): Seq[String] =
+    partCols.foldLeft(Seq("")) { (prefixes, c) =>
+      prefixes.flatMap { pre =>
+        val d = if (pre.isEmpty) root else new Path(root, pre)
+        if (!f.exists(d)) Seq.empty
+        else f.listStatus(d).toSeq.map(_.getPath.getName)
+          .filter(_.startsWith(s"$c="))
+          .map(n => if (pre.isEmpty) n else s"$pre/$n")
+      }
+    }
+
+  /** Write `rows` into the store at `root`, one task per partition value
+    * (each partition lands as one file instead of tasks × partitions small
+    * files), sorted by `sortCols` inside each partition when given. A
+    * pending empty marker is cleared once the written data has landed —
+    * and only if a partition directory now exists, since an all-empty
+    * frame writes none and the store is still empty. */
+  def writeStore(rows: DataFrame, root: String, mode: String, partCols: Seq[String],
+                 sortCols: Seq[String] = Nil, dynamic: Boolean = false): Unit = {
+    val byPart = rows.repartition(partCols.map(col): _*)
+    val w = (if (sortCols.isEmpty) byPart
+             else byPart.sortWithinPartitions((partCols ++ sortCols).map(col): _*)).write.mode(mode)
+    (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
+      .partitionBy(partCols: _*).parquet(root)
+    val f = fs(rows.sparkSession, emptyMarker(root))
+    if (f.exists(emptyMarker(root)) && partitionDirs(f, new Path(root), partCols.take(1)).nonEmpty)
+      f.delete(emptyMarker(root), false): Unit
+  }
+
+  /** Partition-scoped compaction of one store: drop the rows of `stored`
+    * whose `key` is in `drop`, touching ONLY the partitions whose `scopeCol`
+    * value is in `scope`. Their survivors are materialized (a bounded
+    * `localCheckpoint`, not the whole store — it also decouples the write
+    * from the files it replaces) and dynamically overwritten in place;
+    * every other partition's files stay byte-identical. Scoped partition
+    * directories left without survivors are found by LISTING and deleted;
+    * when they are the last ones, the empty marker is written first. */
+  def rewritePartitions(stored: DataFrame, root: String, partCols: Seq[String],
+                        scopeCol: String, scope: Seq[Any], drop: DataFrame, key: String,
+                        sortCols: Seq[String] = Nil): Unit =
+    if (scope.nonEmpty) {
+      val spark = stored.sparkSession
+      val surv = stored.filter(col(scopeCol).isin(scope: _*))
+        .join(broadcast(drop), Seq(key), "left_anti")
+        .localCheckpoint(true)
+      val kept = surv.select(partCols.map(col): _*).distinct().collect()
+        .map(r => partCols.indices.map(i => s"${partCols(i)}=${r.get(i)}").mkString("/"))
+        .toSet
+      if (kept.nonEmpty) writeStore(surv, root, "overwrite", partCols, sortCols, dynamic = true)
+      val rootPath = new Path(root)
+      val f = fs(spark, rootPath)
+      val listed = partitionDirs(f, rootPath, partCols)
+      val inScope = scope.map(v => s"$scopeCol=$v").toSet
+      val emptied = listed.filter(d => !kept(d) && d.split('/').exists(inScope))
+      if (emptied.nonEmpty && emptied.size == listed.size)
+        f.create(emptyMarker(root), true).close()
+      emptied.foreach(d => f.delete(new Path(rootPath, d), true): Unit)
+    }
 }

@@ -11,11 +11,15 @@ package graft.analytics
   *
   * Semantics: runs every task, propagates the FIRST failure (after all
   * tasks have finished — no store is left half-written by a sibling's
-  * cancellation), preserves nothing about ordering. Callers must pass only
-  * tasks that are mutually independent AND read already-materialized (or
-  * concurrently-computable) inputs; tasks writing the same directory are
-  * NOT independent. Job descriptions are thread-local in Spark, so each
-  * task's jobs label correctly in the UI. */
+  * cancellation), preserves nothing about ordering. An interrupt of the
+  * calling thread is deferred the same way: the caller keeps waiting for
+  * every task, then rethrows the `InterruptedException` with its interrupt
+  * flag restored — returning early would let [[IndexLock.withLock]]
+  * release the index lock while sibling writes still run. Callers must
+  * pass only tasks that are mutually independent AND read
+  * already-materialized (or concurrently-computable) inputs; tasks writing
+  * the same directory are NOT independent. Job descriptions are
+  * thread-local in Spark, so each task's jobs label correctly in the UI. */
 private[graft] object Par {
   def run(tasks: (() => Unit)*): Unit = {
     if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
@@ -24,14 +28,20 @@ private[graft] object Par {
       val fs = tasks.map(t => pool.submit(new java.util.concurrent.Callable[Unit] {
         override def call(): Unit = t()
       }))
+      var interrupt: Option[InterruptedException] = None
       var firstFailure: Option[Throwable] = None
       fs.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstFailure.isEmpty) firstFailure = Some(e.getCause)
-        }
+        var done = false
+        while (!done)
+          try { f.get(); done = true }
+          catch {
+            case e: InterruptedException => if (interrupt.isEmpty) interrupt = Some(e)
+            case e: java.util.concurrent.ExecutionException =>
+              if (firstFailure.isEmpty) firstFailure = Some(e.getCause)
+              done = true
+          }
       }
+      interrupt.foreach { e => Thread.currentThread().interrupt(); throw e }
       firstFailure.foreach(throw _)
     } finally pool.shutdown()
   }

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.GraftFunctions
 
 /** PERSISTED IVF-PQ index: build once, query many — the production ANN
@@ -23,7 +24,7 @@ import graft.functions.GraftFunctions
   *     reads only the tombstoned ids' buckets of this tiny store instead
   *     of scanning two columns of the whole codes store (the measured
   *     1.3–1.7 s discovery floor of r13 — VERDICT r13 #3). Queries never
-  *     read it; indexes without it (pre-r14) fall back to the codes scan.
+  *     read it.
   *
   * At 100 TB this is the structure that makes ANN serving viable: the
   * coarse centroids and codebooks are broadcast-sized, the codes are ~32×
@@ -46,26 +47,13 @@ object PqIndex {
     * [[query]]/[[append]] validate before touching the codes. */
   private val LayoutVersion = 2
 
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-
-  /** Historical vec-hash width of the `vlists/` sidecar (pre-r15 indexes;
-    * r15 builds choose by corpus size — [[IndexMeta.bucketPolicy]], VERDICT
-    * r14 #4 — and record the width in `_graft_meta.json`, read back by
-    * every later operation). The width bounds the share of the sidecar a
-    * [[compact]] discovery reads (same role as `SearchIndex`'s
-    * docBuckets). */
-  private[analytics] val DefaultVBuckets = 16
-
+  /** The `vlists/` sidecar's vec-hash width: chosen by corpus size at
+    * build ([[IndexMeta.bucketPolicy]], r15 — VERDICT r14 #4), recorded in
+    * `_graft_meta.json` and read back by every later operation. The width
+    * bounds the share of the sidecar a [[compact]] discovery reads (same
+    * role as `SearchIndex`'s docBuckets). */
   private def vbucketOf(c: org.apache.spark.sql.Column, vbuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(c), lit(vbuckets)).cast("int")
-
-  private def hasPartitions(spark: SparkSession, root: org.apache.hadoop.fs.Path,
-                            prefix: String): Boolean = {
-    val f = fs(spark, root)
-    f.exists(root) && f.listStatus(root).exists(_.getPath.getName.startsWith(prefix))
-  }
 
   private def writeMeta(spark: SparkSession, dir: String, m: Int, subDim: Int,
                         trained: String = "full",
@@ -75,8 +63,7 @@ object PqIndex {
                         driftBaseMicro: Option[Long] = None,
                         driftCalibMicro: Option[Long] = None,
                         driftLastMicro: Option[Long] = None,
-                        vbuckets: Int = 0,
-                        vlistsComplete: Boolean = false): Unit = {
+                        vbuckets: Int = 0): Unit = {
     val driftFields = ccosP5Micro
       .map(v => s""","ccos_p5_micro":$v,"drift_appended":$driftAppended,""" +
         s""""drift_outliers":$driftOutliers""")
@@ -84,12 +71,7 @@ object PqIndex {
       driftBaseMicro.map(v => s""","drift_base_micro":$v""").getOrElse("") +
       driftCalibMicro.map(v => s""","drift_calib_micro":$v""").getOrElse("") +
       driftLastMicro.map(v => s""","drift_last_micro":$v""").getOrElse("")
-    // vlists completeness (r15, ADVICE r14): recorded ONLY when the sidecar
-    // is known to cover the WHOLE index — a pre-r15 index append()ed later
-    // has a partial sidecar, and compact discovery trusting it would miss
-    // pre-existing tombstoned ids and resurrect forgotten vectors
-    val layoutFields = (if (vbuckets > 0) s""","vbuckets":$vbuckets""" else "") +
-      (if (vlistsComplete) s""","vlists":true""" else "")
+    val layoutFields = if (vbuckets > 0) s""","vbuckets":$vbuckets""" else ""
     // IndexMeta.write swaps atomically: every append REWRITES this file
     // (drift fields), and a lock-free query racing a truncate-then-write
     // could have read a partial object (ADVICE r15-review)
@@ -97,22 +79,8 @@ object PqIndex {
       s""""trained":"$trained"$driftFields$layoutFields}""")
   }
 
-  /** The stored vlists width (pre-r15 meta carries none → the historical
-    * 16) and completeness flag. */
-  private def vlistsMeta(spark: SparkSession, dir: String): (Int, Boolean) =
-    readMetaText(spark, dir) match {
-      case None => (DefaultVBuckets, false)
-      case Some(txt) => (metaLong(txt, "vbuckets").map(_.toInt).getOrElse(DefaultVBuckets),
-        IndexMeta.flag(txt, "vlists"))
-    }
-
-  // meta I/O is the shared family layer ([[IndexMeta]]) — one read/write
-  // implementation, one atomic-swap discipline, no parallel copy to drift
-  private def readMetaText(spark: SparkSession, dir: String): Option[String] =
-    IndexMeta.readText(spark, dir)
-
-  private def metaLong(txt: String, k: String): Option[Long] =
-    IndexMeta.long(txt, k)
+  private def vbucketsOf(spark: SparkSession, dir: String): Int =
+    IndexMeta.field(IndexMeta.required(spark, dir, "PqIndex.build"), "vbuckets", dir).toInt
 
   /** The recorded training mode ("full" / "sampled" / "explicit") of a
     * stored index — observability for the default-policy branch (PqIndexSpec
@@ -121,7 +89,7 @@ object PqIndex {
     * (the only mode that existed; ADVICE r13: a missing file must not
     * throw from an observability probe). */
   def trainedMode(spark: SparkSession, dir: String): String =
-    readMetaText(spark, dir)
+    IndexMeta.readText(spark, dir)
       .flatMap(t => """"trained":"(\w+)"""".r.findFirstMatchIn(t).map(_.group(1)))
       .getOrElse("full")
 
@@ -169,14 +137,14 @@ object PqIndex {
   /** Read the [[DriftStats]] recorded in `_graft_meta.json`; all-zero for
     * indexes predating the drift signal. */
   def driftStats(spark: SparkSession, dir: String): DriftStats =
-    readMetaText(spark, dir) match {
+    IndexMeta.readText(spark, dir) match {
       case None => DriftStats(None, 0L, 0L)
-      case Some(txt) => DriftStats(metaLong(txt, "ccos_p5_micro"),
-        metaLong(txt, "drift_appended").getOrElse(0L),
-        metaLong(txt, "drift_outliers").getOrElse(0L),
-        metaLong(txt, "drift_base_micro"),
-        metaLong(txt, "drift_calib_micro"),
-        metaLong(txt, "drift_last_micro"))
+      case Some(txt) => DriftStats(IndexMeta.long(txt, "ccos_p5_micro"),
+        IndexMeta.long(txt, "drift_appended").getOrElse(0L),
+        IndexMeta.long(txt, "drift_outliers").getOrElse(0L),
+        IndexMeta.long(txt, "drift_base_micro"),
+        IndexMeta.long(txt, "drift_calib_micro"),
+        IndexMeta.long(txt, "drift_last_micro"))
     }
 
   /** Actionable rebuild signal (r15, VERDICT r14 #6): true when the LATEST
@@ -207,16 +175,12 @@ object PqIndex {
   }
 
   /** Fail-fast geometry check (see [[LayoutVersion]]): a missing meta file
-    * means the index predates layout metadata — rebuild; a mismatch means
-    * the caller's (m, subDim) is not what the codes were packed under. */
+    * fails loudly ([[IndexMeta.required]]); a mismatch means the caller's
+    * (m, subDim) is not what the codes were packed under. */
   private def checkMeta(spark: SparkSession, dir: String, m: Int, subDim: Int,
                         builder: String = "PqIndex.build"): Unit = {
-    val txt = readMetaText(spark, dir).getOrElse(
-      throw new IllegalStateException(s"PQ index at $dir has no _graft_meta.json " +
-        s"(built before the packed-codes layout); rebuild it with $builder"))
-    def field(k: String): Long =
-      metaLong(txt, k).getOrElse(throw new IllegalStateException(
-        s"PQ index meta at $dir is unreadable: $txt"))
+    val txt = IndexMeta.required(spark, dir, builder)
+    def field(k: String): Long = IndexMeta.field(txt, k, dir)
     if (field("layout") != LayoutVersion || field("m") != m || field("subDim") != subDim)
       throw new IllegalStateException(
         s"PQ index at $dir was built as layout=${field("layout")} m=${field("m")} " +
@@ -235,24 +199,17 @@ object PqIndex {
                                       m: Int, subDim: Int): Unit =
     checkMeta(spark, dir, m, subDim, builder = "ProductQuantization.adcBuild")
 
-  /** Marker left by an all-tombstoned [[compact]]: a partitioned overwrite
-    * of ZERO rows writes no part files (nothing to infer a schema from), so
-    * the empty state is recorded explicitly and [[readCodes]] reconstructs
-    * the empty frame from the literal schema. The next [[writeCodes]]
-    * (append or rebuild) clears it. */
-  private def emptyMarker(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/_graft_empty")
+  private[analytics] val CodesSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("pcodes", ArrayType(LongType)), StructField("centroid_id", IntegerType)))
+
+  private[analytics] val VlistsSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("centroid_id", LongType), StructField("vbucket", IntegerType)))
 
   private def readCodes(spark: SparkSession, dir: String): DataFrame =
-    if (fs(spark, emptyMarker(dir)).exists(emptyMarker(dir))) {
-      // plain attributes from an explicit schema, NOT literal expressions:
-      // a foldable empty pcodes literal would constant-fold pcodes(0) at
-      // planning time and throw under ANSI array indexing
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("vec_id", LongType),
-          StructField("pcodes", ArrayType(LongType)),
-          StructField("centroid_id", LongType))))
-    } else spark.read.parquet(s"$dir/codes")
+    IndexMeta.readStore(spark, s"$dir/codes", CodesSchema)
+
+  private def readVlists(spark: SparkSession, dir: String): DataFrame =
+    IndexMeta.readStore(spark, s"$dir/vlists", VlistsSchema)
 
   /** Coarse-list assignment of a quantized frame under a (cid, m, nm)
     * centroid table — the same rule at build time and when the centroids
@@ -311,22 +268,13 @@ object PqIndex {
     //     [[compact]] discovers affected lists from the tombstoned ids'
     //     buckets alone (O(|ids|), not O(index)).
     Par.run(
-      () => ProductQuantization.packCodes(codes)
+      () => IndexMeta.writeStore(ProductQuantization.packCodes(codes)
         .join(assigned.select("vec_id", "centroid_id"), "vec_id")
-        .select(col("vec_id"), col("pcodes"), col("centroid_id"))
-        .repartition(col("centroid_id"))
-        .write.mode(mode).partitionBy("centroid_id").parquet(s"$dir/codes"),
-      () => assigned.select(col("vec_id"), col("centroid_id"))
-        .withColumn("vbucket", vbucketOf(col("vec_id"), vbuckets))
-        .repartition(col("vbucket"))
-        .write.mode(mode).partitionBy("vbucket").parquet(s"$dir/vlists"))
-    // clear the empty marker only AFTER the replacement data is readable:
-    // readCodes gives the marker precedence, so a lock-free reader racing
-    // this write degrades to a safe stale-empty view instead of hitting a
-    // window with neither marker nor parquet (ADVICE r12 ordering fix)
-    val mp = emptyMarker(dir)
-    val mf = fs(codes.sparkSession, mp)
-    if (mf.exists(mp)) mf.delete(mp, false): Unit
+        .select(col("vec_id"), col("pcodes"), col("centroid_id")),
+        s"$dir/codes", mode, Seq("centroid_id")),
+      () => IndexMeta.writeStore(assigned.select(col("vec_id"), col("centroid_id"))
+        .withColumn("vbucket", vbucketOf(col("vec_id"), vbuckets)),
+        s"$dir/vlists", mode, Seq("vbucket")))
     assigned
   }
 
@@ -409,11 +357,8 @@ object PqIndex {
     writeMeta(emb.sparkSession, dir, m, subDim,
       trained = if (trainOn.nonEmpty) "explicit"
                 else if (subsetTrain) "sampled" else "full",
-      ccosP5Micro = p5Micro, driftBaseMicro = baseMicro,
-      vbuckets = vbuckets, vlistsComplete = true)
-    // a REBUILD resets the index completely: stale tombstones from a
-    // pre-rebuild [[forget]] must not keep suppressing the fresh corpus
-    clearTombstones(emb.sparkSession, dir)
+      ccosP5Micro = p5Micro, driftBaseMicro = baseMicro, vbuckets = vbuckets)
+    IndexMeta.clearTombstones(emb.sparkSession, dir)
     assignedP.unpersist()
     subs.unpersist(); cents1.unpersist(); codesTrain.unpersist()
     if (subsetTrain) quantizedTrain.unpersist()
@@ -447,10 +392,8 @@ object PqIndex {
     val codes = ProductQuantization.assignToBooks(
       ProductQuantization.subSlices(quantized, m, subDim), books, m)
     // append under the STORED sidecar width (the bucket rule is a pure
-    // function of the id only at constant width); completeness is
-    // inherited — appending keeps a complete sidecar complete, and can
-    // never make a partial one whole (ADVICE r14)
-    val (vbuckets, vlistsComplete) = vlistsMeta(spark, dir)
+    // function of the id only at constant width)
+    val vbuckets = vbucketsOf(spark, dir)
     val assignedP = writeCodes(codes, assigned, dir, "append", vbuckets)
     val prior = driftStats(spark, dir)
     prior.trainCcosP5Micro.foreach { p5 =>
@@ -468,7 +411,7 @@ object PqIndex {
         driftBaseMicro = prior.baselineMicro,
         driftCalibMicro = prior.calibMicro.orElse(fracMicro),
         driftLastMicro = fracMicro.orElse(prior.lastMicro),
-        vbuckets = vbuckets, vlistsComplete = vlistsComplete)
+        vbuckets = vbuckets)
     }
     assignedP.unpersist()
     quantized.unpersist(): Unit
@@ -490,8 +433,8 @@ object PqIndex {
   def forget(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String = "vec_id"): Unit =
     IndexLock.withLock(spark, dir) {
-      ids.select(col(idCol).cast("long").as("vec_id")).distinct()
-        .write.mode("append").parquet(s"$dir/tombstones")
+      vbucketsOf(spark, dir): Unit
+      IndexMeta.forget(dir, IndexMeta.idFrame(ids, idCol, "vec_id"))
     }
 
   /** Rewrite ONLY the inverted lists that contain tombstoned vectors and
@@ -499,129 +442,34 @@ object PqIndex {
     * identical rows (CompactionSpec); compaction only reclaims space and
     * restores [[append]]-ability for forgotten ids.
     *
-    * Partition-scoped (r13, VERDICT r12 #2): the affected lists come from
-    * a column-pruned semi-join of the tombstone ids against the codes
-    * (vec_id + the partition column — no pcodes bytes read); only those
-    * lists' survivors are materialized (a bounded `localCheckpoint`, not
-    * the whole index) and dynamically overwritten in place; lists whose
-    * every vector was forgotten have their directories deleted. At 100 TB
-    * one forgotten vector rewrites ONE list, not the index — compact cost
-    * is proportional to the tombstoned-list share (measured at sf1 in
-    * SCALING.md r13). Untouched list files stay byte-identical
-    * (CompactionSpec asserts it).
-    *
-    * All-tombstoned edge: the empty marker is created BEFORE the data
-    * directories are removed (readers give the marker precedence, so the
-    * worst race exposure is a safe stale-empty view — never a window with
-    * neither marker nor readable parquet; ADVICE r12 ordering fix). */
+    * Partition-scoped (r13, VERDICT r12 #2; [[IndexMeta.rewritePartitions]]):
+    * the affected lists come from the `vlists/` sidecar — only the
+    * tombstoned ids' vbuckets are read (r14, O(|ids|), not O(index)) — and
+    * only those lists are rewritten. At 100 TB one forgotten vector
+    * rewrites ONE list, not the index — compact cost is proportional to the
+    * tombstoned-list share (measured at sf1 in SCALING.md r13). The sidecar
+    * drops the tombstoned ids from THEIR vbuckets the same way. */
   def compact(spark: SparkSession, dir: String): Unit =
     IndexLock.withLock(spark, dir) {
-      tombstones(spark, dir).foreach { tomb =>
-        val t = broadcast(tomb)
-        val codesPath = new org.apache.hadoop.fs.Path(s"$dir/codes")
-        val f = fs(spark, codesPath)
-        val vlRoot = new org.apache.hadoop.fs.Path(s"$dir/vlists")
-        // sidecar discovery is trusted ONLY when the meta certifies the
-        // sidecar covers the whole index (r15, ADVICE r14): an r14 append
-        // onto a pre-r14 index leaves vlists/ holding only the appended
-        // vectors — discovering from it would miss pre-existing tombstoned
-        // ids, never rewrite their codes, and still clear the tombstones:
-        // forgotten vectors would RESURRECT in query results
-        val (vbWidth, vlComplete) = vlistsMeta(spark, dir)
-        // candidate sidecar buckets — a pure function of the tombstoned ids
-        val vb = tomb.select(vbucketOf(col("vec_id"), vbWidth).as("b"))
+      val vbuckets = vbucketsOf(spark, dir)
+      IndexMeta.tombstones(spark, dir).foreach { tomb =>
+        val vb = tomb.select(vbucketOf(col("vec_id"), vbuckets).as("b"))
           .distinct().collect().map(_.getInt(0)).toSeq
-        val useSidecar = vlComplete && hasPartitions(spark, vlRoot, "vbucket=")
-        val affected: Array[Long] =
-          if (useSidecar) {
-            // sidecar discovery (r14): read |ids|/vbuckets of the tiny
-            // id→list store instead of two columns of the whole codes dir
-            if (vb.isEmpty) Array.empty
-            else spark.read.parquet(vlRoot.toString)
-              .filter(col("vbucket").isin(vb: _*))
-              .join(t, Seq("vec_id"), "left_semi")
-              .select(col("centroid_id").cast("long")).distinct()
-              .collect().map(_.getLong(0))
-          } else if (!f.exists(codesPath)) Array.empty
-          else readCodes(spark, dir) // sidecar absent or not known-complete
-            .join(t, Seq("vec_id"), "left_semi")
-            .select(col("centroid_id").cast("long")).distinct()
-            .collect().map(_.getLong(0))
+        val affected = readVlists(spark, dir)
+          .filter(col("vbucket").isin(vb: _*))
+          .join(broadcast(tomb), Seq("vec_id"), "left_semi")
+          .select(col("centroid_id").cast("long")).distinct()
+          .collect().map(_.getLong(0)).toSeq
+        // skipped when the ids weren't in the index at all
         if (affected.nonEmpty) {
-          val survivors = readCodes(spark, dir)
-            .filter(col("centroid_id").isin(affected.toSeq: _*))
-            .join(t, Seq("vec_id"), "left_anti")
-            .localCheckpoint(true) // affected lists only — bounded by the tombstoned share
-          val surviving = survivors.select(col("centroid_id").cast("long")).distinct()
-            .collect().map(_.getLong(0)).toSet
-          val emptied = affected.filterNot(surviving)
-          val allLists = f.listStatus(codesPath).map(_.getPath.getName)
-            .filter(_.startsWith("centroid_id=")).toSet
-          if (surviving.nonEmpty) {
-            // dynamic partition overwrite: replaces exactly the partitions
-            // present in the written data, leaves every other list file
-            // untouched (byte-identical)
-            survivors.repartition(col("centroid_id"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("centroid_id").parquet(s"$dir/codes")
-          }
-          val emptiedNames = emptied.map(cid => s"centroid_id=$cid").toSet
-          val becomesEmpty = surviving.isEmpty && allLists.subsetOf(emptiedNames)
-          if (becomesEmpty)
-            fs(spark, emptyMarker(dir)).create(emptyMarker(dir), true).close()
-          emptiedNames.foreach { name =>
-            f.delete(new org.apache.hadoop.fs.Path(s"$dir/codes/$name"), true): Unit
-          }
-          if (becomesEmpty) f.delete(codesPath, true): Unit
+          IndexMeta.rewritePartitions(readCodes(spark, dir), s"$dir/codes",
+            Seq("centroid_id"), "centroid_id", affected, tomb, "vec_id")
+          IndexMeta.rewritePartitions(readVlists(spark, dir), s"$dir/vlists",
+            Seq("vbucket"), "vbucket", vb, tomb, "vec_id")
         }
-        // keep the sidecar in sync: drop the tombstoned ids from THEIR
-        // vbuckets only (same partition-scoped shape as the codes rewrite;
-        // skipped when the ids weren't in the index at all)
-        if (affected.nonEmpty && vb.nonEmpty && hasPartitions(spark, vlRoot, "vbucket=")) {
-          val vSurv = spark.read.parquet(vlRoot.toString)
-            .filter(col("vbucket").isin(vb: _*))
-            .join(t, Seq("vec_id"), "left_anti")
-            .localCheckpoint(true)
-          val survVb = vSurv.select(col("vbucket").cast("int")).distinct()
-            .collect().map(_.getInt(0)).toSet
-          if (survVb.nonEmpty)
-            vSurv.repartition(col("vbucket"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("vbucket").parquet(vlRoot.toString)
-          val vf = fs(spark, vlRoot)
-          vb.filterNot(survVb).foreach(b =>
-            vf.delete(new org.apache.hadoop.fs.Path(s"$dir/vlists/vbucket=$b"), true): Unit)
-        }
-        val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-        fs(spark, p).delete(p, true): Unit
+        IndexMeta.clearTombstones(spark, dir)
       }
     }
-
-  private def clearTombstones(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    fs(spark, p).delete(p, true): Unit
-  }
-
-  /** The tombstone id set, if any forgets happened since the last
-    * [[compact]] — None on the common path, so untombstoned indexes pay
-    * nothing (not even a parquet footer read).
-    *
-    * Read LOCK-FREE by the query paths, deliberately: queries must not
-    * block on writers. The exposure is bounded and MONOTONE — a read
-    * concurrent with an in-flight [[forget]] can observe a prefix of the
-    * new tombstones (some ids already excluded, the rest excluded on the
-    * next read), never a resurrection; [[compact]] mutates codes only
-    * under the lock and only after materializing the affected lists' survivors, and clears
-    * tombstones last, so a lock-free reader racing a compact sees either
-    * (old codes + tombstones) or (new codes + tombstones) or (new codes,
-    * none) — all three return the same survivor rows. */
-  private def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Some(spark.read.parquet(p.toString)) else None
-  }
 
   /** Query the stored index: probe `nprobe` lists per query, ADC-score the
     * survivors from the stored codes, rank top-k. The probed list ids are
@@ -710,10 +558,8 @@ object PqIndex {
     // (query, candidate) — see [[ProductQuantization.rankPacked]].
     // Tombstoned vectors ([[forget]]) are anti-joined out of the candidate
     // stream BEFORE ranking, so ranks fill with survivors.
-    val cand0 = probes.join(codes, "centroid_id")
-      .filter(col("vec_id") =!= col("query_id"))
-    val cand = tombstones(spark, dir)
-      .fold(cand0)(t => cand0.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    val cand = IndexMeta.live(spark, dir,
+      probes.join(codes, "centroid_id").filter(col("vec_id") =!= col("query_id")), "vec_id")
     cand.join(broadcast(ProductQuantization.packDt(dt, m)), "query_id")
   }
 }

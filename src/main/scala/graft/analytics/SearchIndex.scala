@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** PERSISTED BM25 search index: build once, query many — the retrieval
   * member of the build-once family ([[PqIndex]] for ANN, [[DedupIndex]]
@@ -30,21 +31,16 @@ import org.apache.spark.sql.functions._
   *     (the one O(index) RTBF left in the family after r13 — VERDICT r13
   *     #1). Queries never read it.
   *   - `_graft_meta.json` (r15, VERDICT r14 #1) — the LAYOUT RECORD:
-  *     `buckets` (token-hash width of postings/), `docBuckets` (doc-hash
-  *     width of census/ + forward/, chosen by [[IndexMeta.bucketPolicy]]
-  *     from corpus size at build — VERDICT r14 #4), and `forward` (true iff
-  *     the forward store covers the WHOLE index, not just post-r14
-  *     appends). Probes recompute the bucket rules driver-side, so these
-  *     constants are properties of the BUILD: a caller passing a different
-  *     `buckets` would statically prune to the wrong directories and
-  *     silently miss postings — every later operation therefore reads the
-  *     stored values and FAILS FAST on an explicit mismatch (the
-  *     [[PqIndex]] `checkMeta` pattern). Indexes written before r15 carry
-  *     no meta: the caller value (or the historical defaults 64/16) is
-  *     trusted once, and the forward store is treated as NOT known-complete
-  *     (ADVICE r14: an r14 append onto a pre-r14 index leaves forward/
-  *     holding only the appended docs — deriving df deltas from it would
-  *     silently leave df inflated forever).
+  *     `buckets` (token-hash width of postings/, chosen by
+  *     [[IndexMeta.tokenBucketPolicy]]) and `docBuckets` (doc-hash width of
+  *     census/ + forward/, chosen by [[IndexMeta.bucketPolicy]] from corpus
+  *     size at build — VERDICT r14 #4). Probes recompute the bucket rules
+  *     driver-side, so these constants are properties of the BUILD: a
+  *     caller passing a different `buckets` would statically prune to the
+  *     wrong directories and silently miss postings — every later operation
+  *     therefore reads the stored values and FAILS FAST on an explicit
+  *     mismatch, and an index without the record fails loudly
+  *     ([[IndexMeta]]).
   *
   * A query probes only its terms' buckets: the term list is hashed
   * DRIVER-side ([[Dedup.hash60Local]], bit-identical to the stored
@@ -76,115 +72,62 @@ import org.apache.spark.sql.functions._
   * IS `bm25_search`'s SQL). */
 object SearchIndex {
 
-  /** Historical token-hash width — the value used when neither the caller
-    * nor a stored meta supplies one (pre-r15 indexes). */
-  private[analytics] val DefaultBuckets = 64
-
-  /** Historical census/forward doc-hash width (pre-r15 indexes; r15 builds
-    * choose by corpus size — [[IndexMeta.bucketPolicy]]). */
-  private[analytics] val DefaultDocBuckets = 16
-
   /** The recorded layout of a stored index — see the scaladoc above. */
-  private final case class Meta(buckets: Int, docBuckets: Int, forwardComplete: Boolean)
-
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private final case class Meta(buckets: Int, docBuckets: Int)
 
   private def path(s: String) = new org.apache.hadoop.fs.Path(s)
 
   private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit =
     IndexMeta.write(spark, dir, s"""{"layout":1,"buckets":${m.buckets},""" +
-      s""""docBuckets":${m.docBuckets},"forward":${m.forwardComplete}}""")
+      s""""docBuckets":${m.docBuckets}}""")
 
-  /** Marker held for the duration of [[build]]'s data writes: since r16
-    * the token width is DERIVED from the corpus (no longer a constant), so
-    * a crash after the partitioned writes but before the meta lands would
-    * leave data laid out at a non-default width that the meta-less legacy
-    * fallback (64) would silently mis-prune. With the marker, that state
-    * is an explicit error instead; true pre-r15 legacy indexes have
-    * neither meta nor marker and keep their documented fallback. */
-  private def buildingMarker(dir: String) = path(s"$dir/_graft_building")
-
-  private def readMeta(spark: SparkSession, dir: String): Option[Meta] = {
-    val meta = IndexMeta.readText(spark, dir).map { txt =>
-      def field(k: String): Int = IndexMeta.long(txt, k).getOrElse(
-        throw new IllegalStateException(s"BM25 index meta at $dir is unreadable: $txt")).toInt
-      Meta(field("buckets"), field("docBuckets"), IndexMeta.flag(txt, "forward"))
-    }
-    if (meta.isEmpty && fs(spark, buildingMarker(dir)).exists(buildingMarker(dir)))
-      throw new IllegalStateException(
-        s"BM25 index at $dir has a _graft_building marker but no layout meta: a build " +
-          "crashed between its data writes and the meta write, so the on-disk bucket " +
-          "widths are unknown (they are corpus-derived since r16) and the legacy-width " +
-          "fallback would silently mis-prune. Rebuild with SearchIndex.build.")
-    meta
+  private def readMeta(spark: SparkSession, dir: String): Meta = {
+    val txt = IndexMeta.required(spark, dir, "SearchIndex.build")
+    Meta(IndexMeta.field(txt, "buckets", dir).toInt, IndexMeta.field(txt, "docBuckets", dir).toInt)
   }
 
   /** Fail-fast width resolution (r15, VERDICT r14 #1): the stored value
     * wins; an EXPLICIT caller value that disagrees throws — it would prune
     * the probe to the wrong partition directories and silently drop
-    * postings. `caller <= 0` means "use the stored width" (the new default
-    * on every read/mutate path). Meta-less pre-r15 indexes trust the
-    * caller, falling back to the historical default. */
-  private def resolveBuckets(meta: Option[Meta], caller: Int, dir: String): Int =
-    meta match {
-      case Some(m) =>
-        if (caller > 0 && caller != m.buckets)
-          throw new IllegalStateException(
-            s"BM25 index at $dir was built with buckets=${m.buckets}; caller asked for " +
-              s"buckets=$caller - a mismatched width prunes probes to the wrong partition " +
-              "directories. Pass the build value or omit the parameter.")
-        m.buckets
-      case None => if (caller > 0) caller else DefaultBuckets
-    }
+    * postings. `caller <= 0` means "use the stored width" (the default on
+    * every read/mutate path). */
+  private def resolveBuckets(m: Meta, caller: Int, dir: String): Int = {
+    if (caller > 0 && caller != m.buckets)
+      throw new IllegalStateException(
+        s"BM25 index at $dir was built with buckets=${m.buckets}; caller asked for " +
+          s"buckets=$caller - a mismatched width prunes probes to the wrong partition " +
+          "directories. Pass the build value or omit the parameter.")
+    m.buckets
+  }
 
-  /** Marker left when [[compact]] empties every postings bucket while docs
-    * (blank ones) remain: a dir with zero partitions fails schema
-    * inference, so the empty state is explicit (same pattern as the
-    * twins). Underscore-prefixed → invisible to parquet file listing. */
-  private def emptyMarker(dir: String) = path(s"$dir/postings/_graft_empty")
+  private[analytics] val PostingsSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("dl", LongType), StructField("token", StringType),
+    StructField("tf", LongType), StructField("bucket", IntegerType)))
+
+  private[analytics] val CensusSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("dl", LongType), StructField("dbucket", IntegerType)))
+
+  private[analytics] val ForwardSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("token", StringType), StructField("tf", LongType),
+    StructField("dbucket", IntegerType)))
 
   private def readPostings(spark: SparkSession, dir: String): DataFrame =
-    if (fs(spark, emptyMarker(dir)).exists(emptyMarker(dir))) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType), StructField("dl", LongType),
-          StructField("token", StringType), StructField("tf", LongType),
-          StructField("bucket", IntegerType))))
-    } else spark.read.parquet(s"$dir/postings")
+    IndexMeta.readStore(spark, s"$dir/postings", PostingsSchema)
 
-  /** The forward store as a frame, EMPTY-safe: an all-forgotten [[compact]]
-    * can remove every dbucket partition (blank docs keep census rows but
-    * have no forward rows), and a partition-less dir fails schema
-    * inference. */
+  private def readCensus(spark: SparkSession, dir: String): DataFrame =
+    IndexMeta.readStore(spark, s"$dir/census", CensusSchema)
+
   private def readForward(spark: SparkSession, dir: String): DataFrame =
-    if (hasPartitions(spark, path(s"$dir/forward"), "dbucket="))
-      spark.read.parquet(s"$dir/forward")
-    else {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType), StructField("token", StringType),
-          StructField("tf", LongType), StructField("dbucket", IntegerType))))
-    }
-
-  private def tombstoneIds(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = path(s"$dir/tombstones")
-    if (fs(spark, p).exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** True iff `root` exists AND holds at least one `prefix`-named partition
-    * directory. An all-forgotten [[compact]] can legitimately empty every
-    * partition of census/forward while the roots remain — reading a
-    * partition-less parquet dir fails schema inference, so readers must
-    * treat that state as EMPTY, not read it (ADVICE r13). */
-  private def hasPartitions(spark: SparkSession, root: org.apache.hadoop.fs.Path,
-                            prefix: String): Boolean = {
-    val f = fs(spark, root)
-    f.exists(root) && f.listStatus(root).exists(_.getPath.getName.startsWith(prefix))
-  }
+    IndexMeta.readStore(spark, s"$dir/forward", ForwardSchema)
 
   private def dbucketOf(c: org.apache.spark.sql.Column, docBuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(c), lit(docBuckets)).cast("int")
+
+  /** The distinct doc-buckets of an id frame — a pure function of the ids,
+    * pushed as a literal partition filter on census and forward. */
+  private def dbucketsOf(ids: DataFrame, docBuckets: Int): Seq[Int] =
+    ids.select(dbucketOf(col("doc_id"), docBuckets).as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
 
   // ---------------- df/stats merge-on-read stores ----------------
 
@@ -195,7 +138,7 @@ object SearchIndex {
     * fold used could expose a missing/partial dir (ADVICE r14). */
   private def readSumStore(spark: SparkSession, dir: String, sub: String): DataFrame = {
     val root = path(s"$dir/$sub")
-    if (fs(spark, root).exists(root)) spark.read.parquet(root.toString)
+    if (IndexMeta.fs(spark, root).exists(root)) spark.read.parquet(root.toString)
     else spark.read.parquet(s"$dir/$sub.__fold_old")
   }
 
@@ -212,7 +155,7 @@ object SearchIndex {
     val root = path(s"$dir/$sub")
     val tmp = path(s"$dir/$sub.__fold_tmp")
     val old = path(s"$dir/$sub.__fold_old")
-    val f = fs(spark, root)
+    val f = IndexMeta.fs(spark, root)
     f.delete(tmp, true); f.delete(old, true)
     folded.write.parquet(tmp.toString)
     if (!f.rename(root, old))
@@ -232,11 +175,17 @@ object SearchIndex {
       val root = path(s"$dir/$sub")
       val old = path(s"$dir/$sub.__fold_old")
       val tmp = path(s"$dir/$sub.__fold_tmp")
-      val f = fs(spark, root)
+      val f = IndexMeta.fs(spark, root)
       if (!f.exists(root) && f.exists(old)) { f.rename(old, root): Unit }
       else if (f.exists(old)) { f.delete(old, true): Unit }
       f.delete(tmp, true): Unit
     }
+
+  /** Sort order of the postings rows inside each token bucket: the probe
+    * prunes to |terms| bucket directories but still row-filters `token IN
+    * (...)` inside a bucket, and token-sorted files let parquet's row-group
+    * and page min-max stats prune there too. */
+  private val PostingsOrder = Seq("token", "doc_id")
 
   /** Write one index generation. `buckets0 > 0` / `docBuckets0 > 0` pin the
     * token and census/forward widths (appends MUST reuse the stored widths —
@@ -309,7 +258,7 @@ object SearchIndex {
     // width-policy counts — so they run CONCURRENTLY from driver threads
     // (r18, guide §2.6): five serial job+commit latencies collapse to the
     // slowest one. Per-store notes:
-    //   - postings are sorted by token INSIDE each bucket (r13, VERDICT
+    //   - postings are sorted by [[PostingsOrder]] INSIDE each bucket (r13, VERDICT
     //     r12 #4): the probe prunes to |terms| bucket directories, but
     //     inside a bucket it still row-filters `token IN (...)` — with
     //     token-sorted files the parquet row-group/page min-max stats
@@ -322,28 +271,19 @@ object SearchIndex {
     //     tombstoned ids' dbuckets from here, never the postings (which
     //     are laid out in token order and would cost a full pass).
     Par.run(
-      () => postings.repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket"), col("token"), col("doc_id"))
-        .write.mode(mode).partitionBy("bucket").parquet(s"$dir/postings"),
+      () => IndexMeta.writeStore(postings, s"$dir/postings", mode, Seq("bucket"),
+        sortCols = PostingsOrder),
       () => postings.groupBy("token").agg(count(lit(1)).as("df"))
         .write.mode(mode).parquet(s"$dir/df"),
-      () => postings
+      () => IndexMeta.writeStore(postings
         .select(col("doc_id"), col("token"), col("tf"))
-        .withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets))
-        .repartition(col("dbucket"))
-        .write.mode(mode).partitionBy("dbucket").parquet(s"$dir/forward"),
-      () => census0.withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets))
-        .repartition(col("dbucket"))
-        .write.mode(mode).partitionBy("dbucket").parquet(s"$dir/census"),
+        .withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets)),
+        s"$dir/forward", mode, Seq("dbucket")),
+      () => IndexMeta.writeStore(census0.withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets)),
+        s"$dir/census", mode, Seq("dbucket")),
       () => census0.agg(count(lit(1)).as("n"), sum(col("dl")).as("dl_sum"))
         .write.mode(mode).parquet(s"$dir/stats"))
-    // clear the all-buckets-emptied marker only AFTER real postings exist
-    // (reader-safe ordering, same as the twins)
-    val wrotePostings = !postings.isEmpty
     census0.unpersist(); base.unpersist()
-    val mp = emptyMarker(dir)
-    val mf = fs(docs.sparkSession, mp)
-    if (wrotePostings && mf.exists(mp)) mf.delete(mp, false): Unit
     (buckets, docBuckets)
   }
 
@@ -361,21 +301,9 @@ object SearchIndex {
       val spark = docs.sparkSession
       require(buckets >= 0, s"buckets must be non-negative, got $buckets")
       repairFoldSwap(spark, dir)
-      // marker BEFORE the data, cleared AFTER the meta (r16 self-review):
-      // the widths are corpus-derived now, so a crash between the data
-      // writes and the meta must read as an explicit rebuild-me error —
-      // not fall back to the legacy constant and silently mis-prune
-      // (readMeta throws on marker-without-meta)
-      val bm = buildingMarker(dir)
-      fs(spark, bm).create(bm, true).close()
       val (b, db) = writeIndex(docs, dir, buckets, docBuckets, "overwrite", idCol, textCol)
-      writeMeta(spark, dir, Meta(b, db, forwardComplete = true))
-      fs(spark, bm).delete(bm, false): Unit
-      // a REBUILD resets the index completely (the overwrite already
-      // replaced df/stats wholesale, negative parts included): stale
-      // tombstones must not keep suppressing the fresh corpus
-      val tp = path(s"$dir/tombstones")
-      fs(docs.sparkSession, tp).delete(tp, true): Unit
+      writeMeta(spark, dir, Meta(b, db))
+      IndexMeta.clearTombstones(spark, dir)
     }
 
   /** Append a shard: its postings, df increments, census rows, and stats
@@ -385,10 +313,8 @@ object SearchIndex {
     * stale, so after any append sequence a query is EXACTLY a one-shot
     * build of the union (SearchIndexSpec proves it against
     * [[Search.bm25TopDocs]]). The layout widths come from the stored meta
-    * (an explicit mismatching `buckets` throws — VERDICT r14 #1); appending
-    * to a pre-r15 meta-less index pins the caller/default widths in a new
-    * meta with `forward` marked NOT complete (the pre-append docs have no
-    * forward rows — ADVICE r14). Tombstoned ids in the delta are DROPPED
+    * (an explicit mismatching `buckets` throws — VERDICT r14 #1). Tombstoned
+    * ids in the delta are DROPPED
     * (not suppressed-but-counted — see the body comment); compact first to
     * re-admit a forgotten id. */
   def append(delta: DataFrame, dir: String, buckets: Int = 0,
@@ -398,20 +324,15 @@ object SearchIndex {
       repairFoldSwap(spark, dir)
       val meta = readMeta(spark, dir)
       val b = resolveBuckets(meta, buckets, dir)
-      val db = meta.map(_.docBuckets).getOrElse(DefaultDocBuckets)
       // a TOMBSTONED id in the delta is dropped, not written: unlike the
       // twins (where suppressed rows are harmless), its postings would be
       // anti-joined away while its df/n/dl_sum additions skewed every
       // other doc's score — the only stats-exact append semantics is to
       // ignore it until [[compact]] (the documented re-admission contract)
-      val cleaned = tombstoneIds(spark, dir).fold(delta)(t =>
+      val cleaned = IndexMeta.tombstones(spark, dir).fold(delta)(t =>
         delta.join(broadcast(t.withColumnRenamed("doc_id", "__tomb_id")),
           delta(idCol).cast("long") === col("__tomb_id"), "left_anti"))
-      writeIndex(cleaned, dir, b, db, "append", idCol, textCol): Unit
-      // first r15 touch of a legacy index: record the layout so later
-      // operations stop trusting caller parameters; forward/ now covers
-      // only this append's docs, so it is NOT complete
-      if (meta.isEmpty) writeMeta(spark, dir, Meta(b, db, forwardComplete = false))
+      writeIndex(cleaned, dir, b, meta.docBuckets, "append", idCol, textCol): Unit
     }
 
   /** Delete docs from the index without rewriting it. Appends (a) the ids
@@ -426,10 +347,7 @@ object SearchIndex {
     * deltas (forward) statically prune to |ids|-many of the stored
     * docBuckets directories — the postings store is never touched
     * (SearchIndexSpec proves a forget succeeds with postings/ physically
-    * absent). The forward store is trusted only when the stored meta marks
-    * it COMPLETE (r15, ADVICE r14): a pre-r15 index — even one whose
-    * forward/ exists — falls back to one column-pruned postings pass, so a
-    * partial forward can never leave df silently inflated. Ids already
+    * absent). Ids already
     * tombstoned or absent from the index are ignored (no
     * double-subtraction). Re-appending a forgotten id requires a full
     * [[compact]] first (the tombstone would keep suppressing its
@@ -438,43 +356,24 @@ object SearchIndex {
              idCol: String = "doc_id"): Unit =
     IndexLock.withLock(spark, dir) {
       repairFoldSwap(spark, dir)
-      val meta = readMeta(spark, dir)
-      val docBuckets = meta.map(_.docBuckets).getOrElse(DefaultDocBuckets)
-      val censusRoot = path(s"$dir/census")
-      if (!fs(spark, censusRoot).exists(censusRoot))
-        throw new IllegalStateException(s"BM25 index at $dir has no census/ " +
-          "(built before right-to-be-forgotten support); rebuild it with SearchIndex.build")
-      // a census root whose every dbucket was emptied by an all-forgotten
-      // compact is an EMPTY index: nothing can be present, and reading the
-      // partition-less dir would fail schema inference (ADVICE r13)
-      if (hasPartitions(spark, censusRoot, "dbucket=")) {
-      val cand0 = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      val cand = tombstoneIds(spark, dir)
-        .fold(cand0)(t => cand0.join(broadcast(t), Seq("doc_id"), "left_anti"))
+      val docBuckets = readMeta(spark, dir).docBuckets
+      val cand = IndexMeta.live(spark, dir, IndexMeta.idFrame(ids, idCol, "doc_id"), "doc_id")
         .localCheckpoint(true) // |ids|-bounded; read 3× below
       // the candidate doc-buckets — a pure function of the REQUESTED ids
-      // (a superset of the present ones), collected driver-side and pushed
-      // as literal partition filters on census and forward
-      val cb = cand.select(dbucketOf(col("doc_id"), docBuckets).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val present =
-        if (cb.isEmpty) cand // empty frame with a doc_id column
-        else spark.read.parquet(s"$dir/census")
-          .filter(col("dbucket").isin(cb: _*))
-          .join(broadcast(cand), Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), col("dl"))
-          .localCheckpoint(true) // |ids|-bounded
+      // (a superset of the present ones), pushed as literal partition
+      // filters on census and forward
+      val cb = dbucketsOf(cand, docBuckets)
+      val present = readCensus(spark, dir)
+        .filter(col("dbucket").isin(cb: _*))
+        .join(broadcast(cand), Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("dl"))
+        .localCheckpoint(true) // |ids|-bounded
       if (!present.isEmpty) {
         // ids FIRST: a lock-free reader between these appends sees the
         // docs already excluded with momentarily stale-high df — monotone
         // (a forgotten doc never reappears); the reverse order could rank
         // a forgotten doc under already-lowered stats
-        present.select("doc_id").write.mode("append").parquet(s"$dir/tombstones")
-        val contributions =
-          if (meta.exists(_.forwardComplete))
-            readForward(spark, dir).filter(col("dbucket").isin(cb: _*))
-          else // forward absent or not known-complete: one column-pruned pass
-            readPostings(spark, dir)
+        IndexMeta.forget(dir, present.select("doc_id"))
         // the two NEGATIVE-delta parts are independent writes off the
         // checkpointed `present` frame — overlapped (r18, guide §2.6).
         // The load-bearing ordering is ids-BEFORE-deltas (above); between
@@ -482,13 +381,12 @@ object SearchIndex {
         // with the same exposure class as the old serial order (tombstoned
         // docs already excluded, some statistics momentarily stale-high).
         Par.run(
-          () => contributions
+          () => readForward(spark, dir).filter(col("dbucket").isin(cb: _*))
             .join(broadcast(present.select("doc_id")), Seq("doc_id"), "left_semi")
             .groupBy("token").agg((count(lit(1)) * -1L).as("df"))
             .write.mode("append").parquet(s"$dir/df"),
           () => present.agg((count(lit(1)) * -1L).as("n"), (sum(col("dl")) * -1L).as("dl_sum"))
             .write.mode("append").parquet(s"$dir/stats"))
-      }
       }
     }
 
@@ -511,8 +409,7 @@ object SearchIndex {
     * Docs whose every postings bucket WAS rewritten (plus blank docs) have
     * their census/forward rows reclaimed immediately; retained docs keep
     * theirs — a later compact's O(|ids|) discovery reads the affected
-    * buckets from the forward store ([[Meta.forwardComplete]] indexes; the
-    * pre-r15 fallback is one column-pruned postings pass).
+    * buckets from the forward store.
     *
     * The df/stats merge-on-read parts (one set per build/append, one
     * NEGATIVE set per forget) are FOLDED to their sums while we're here
@@ -526,12 +423,9 @@ object SearchIndex {
   def compact(spark: SparkSession, dir: String, minShare: Double = 0.1): Unit =
     IndexLock.withLock(spark, dir) {
       repairFoldSwap(spark, dir)
-      tombstoneIds(spark, dir).foreach { tomb =>
-        val meta = readMeta(spark, dir)
-        val docBuckets = meta.map(_.docBuckets).getOrElse(DefaultDocBuckets)
+      val meta = readMeta(spark, dir)
+      IndexMeta.tombstones(spark, dir).foreach { tomb =>
         val t = broadcast(tomb)
-        val postRoot = path(s"$dir/postings")
-        val f = fs(spark, postRoot)
         // A prior PARTIAL compact (some buckets rewritten, some skipped)
         // already purged the retained docs' rows from the rewritten
         // buckets, but their forward rows are kept (they drive the NEXT
@@ -546,44 +440,33 @@ object SearchIndex {
         // forward-derived O(|ids|); after a partial one, the residual rows
         // are re-derived exactly from the candidate buckets themselves
         // (partition-pruned, doc_id column only).
-        val partialMarker = path(s"$dir/tombstones/_graft_partial")
+        val partialMarker = path(IndexMeta.tombstoneRoot(dir) + "/_graft_partial")
+        val f = IndexMeta.fs(spark, partialMarker)
         val hadPartial = f.exists(partialMarker)
-        // (bucket, doc_id) of every tombstoned POSTINGS row. O(|ids|) when
-        // the forward store is known-complete: the ids' dbuckets are a pure
-        // function of the ids and the token-bucket rule is recomputed from
-        // the stored width; pre-r15 indexes pay one column-pruned postings
-        // pass (bucket + doc_id only).
-        val cb = tomb.select(dbucketOf(col("doc_id"), docBuckets).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val tombRows: DataFrame = meta match {
-          case Some(m) if m.forwardComplete =>
-            val base =
-              if (cb.isEmpty) readForward(spark, dir).limit(0)
-              else readForward(spark, dir).filter(col("dbucket").isin(cb: _*))
-            val derived = base.join(t, Seq("doc_id"), "left_semi")
-              .select((Dedup.hash60(col("token")) % m.buckets).as("bucket"), col("doc_id"))
-            if (!hadPartial) derived
-            else {
-              val candB = derived.select("bucket").distinct()
-                .collect().map(_.getLong(0)).toSeq
-              if (candB.isEmpty) derived
-              else readPostings(spark, dir)
-                .filter(col("bucket").isin(candB: _*))
-                .join(t, Seq("doc_id"), "left_semi")
-                .select(col("bucket").cast("long").as("bucket"), col("doc_id"))
-            }
-          case _ =>
-            readPostings(spark, dir)
+        // (bucket, doc_id) of every tombstoned POSTINGS row, O(|ids|): the
+        // ids' dbuckets are a pure function of the ids and the token-bucket
+        // rule is recomputed from the stored width
+        val derived = readForward(spark, dir)
+          .filter(col("dbucket").isin(dbucketsOf(tomb, meta.docBuckets): _*))
+          .join(t, Seq("doc_id"), "left_semi")
+          .select((Dedup.hash60(col("token")) % meta.buckets).as("bucket"), col("doc_id"))
+        val tombRows: DataFrame =
+          if (!hadPartial) derived
+          else {
+            val candB = derived.select("bucket").distinct()
+              .collect().map(_.getLong(0)).toSeq
+            if (candB.isEmpty) derived
+            else readPostings(spark, dir)
+              .filter(col("bucket").isin(candB: _*))
               .join(t, Seq("doc_id"), "left_semi")
               .select(col("bucket").cast("long").as("bucket"), col("doc_id"))
-        }
+          }
         val perBucket = tombRows.groupBy("bucket")
           .agg(count(lit(1)).as("tomb_rows"))
           .localCheckpoint(true) // ≤ buckets rows
         val affected = perBucket.select("bucket")
           .collect().map(_.getLong(0)).toSet
         var skipped = Set.empty[Long]
-        var rewrote = false
         if (affected.nonEmpty) {
           val rewrite: Set[Long] =
             if (minShare <= 0d) affected
@@ -603,36 +486,16 @@ object SearchIndex {
                 .select("bucket").collect().map(_.getLong(0)).toSet
             }
           skipped = affected -- rewrite
-          rewrote = rewrite.nonEmpty
           // marker BEFORE the postings rewrite (ADVICE r15): a crash
           // between the rewrite and a trailing marker write would leave
           // stale forward rows unflagged — re-opening the churn/strand
           // hazard the marker exists to close. A premature marker (crash
           // before the rewrite lands) only costs the next compact one
           // conservative postings-derived discovery pass.
-          if (rewrote && skipped.nonEmpty && !hadPartial)
-            fs(spark, partialMarker).create(partialMarker, true).close()
-          if (rewrite.nonEmpty) {
-            val surv = readPostings(spark, dir)
-              .filter(col("bucket").isin(rewrite.toSeq: _*))
-              .join(t, Seq("doc_id"), "left_anti")
-              .localCheckpoint(true) // rewritten buckets only
-            val survB = surv.select(col("bucket").cast("long")).distinct()
-              .collect().map(_.getLong(0)).toSet
-            if (survB.nonEmpty)
-              surv.repartition(col("bucket"))
-                .sortWithinPartitions(col("bucket"), col("token"), col("doc_id"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket").parquet(s"$dir/postings")
-            val emptied = rewrite.filterNot(survB).map(b => s"bucket=$b")
-            val allBuckets = f.listStatus(postRoot).map(_.getPath.getName)
-              .filter(_.startsWith("bucket=")).toSet
-            val becomesEmpty = survB.isEmpty && allBuckets.subsetOf(emptied)
-            if (becomesEmpty) // marker BEFORE data removal (reader-safe)
-              fs(spark, emptyMarker(dir)).create(emptyMarker(dir), true).close()
-            emptied.foreach(name => f.delete(path(s"$dir/postings/$name"), true): Unit)
-          }
+          if (rewrite.nonEmpty && skipped.nonEmpty && !hadPartial)
+            f.create(partialMarker, true).close()
+          IndexMeta.rewritePartitions(readPostings(spark, dir), s"$dir/postings",
+            Seq("bucket"), "bucket", rewrite.toSeq, tomb, "doc_id", sortCols = PostingsOrder)
         }
         // docs fully reclaimed from the postings (no row left in a skipped
         // bucket) release their census/forward rows; retained docs keep
@@ -648,38 +511,21 @@ object SearchIndex {
           .fold(tomb)(r => tomb.join(broadcast(r), Seq("doc_id"), "left_anti"))
           .localCheckpoint(true) // |ids|-bounded
         if (!cleared.isEmpty) {
-          val cbCleared = cleared.select(dbucketOf(col("doc_id"), docBuckets).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSeq
           // census + forward share the dbucket rule, so one candidate set
           // scopes both; buckets holding NO cleared rows (e.g. ids cleared
           // by an earlier partial compact, still tombstoned) are left
           // byte-identical instead of rewritten-in-place
-          def compactDocBucketed(root: String): Unit =
-            if (cbCleared.nonEmpty && hasPartitions(spark, path(root), "dbucket=")) {
-              val scoped = spark.read.parquet(root)
-                .filter(col("dbucket").isin(cbCleared: _*))
-              val hitCb = scoped
-                .join(broadcast(cleared), Seq("doc_id"), "left_semi")
-                .select(col("dbucket").cast("int")).distinct()
-                .collect().map(_.getInt(0)).toSeq
-              if (hitCb.nonEmpty) {
-                val surv = scoped.filter(col("dbucket").isin(hitCb: _*))
-                  .join(broadcast(cleared), Seq("doc_id"), "left_anti")
-                  .localCheckpoint(true)
-                val survCb = surv.select(col("dbucket").cast("int")).distinct()
-                  .collect().map(_.getInt(0)).toSet
-                if (survCb.nonEmpty)
-                  surv.repartition(col("dbucket"))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("dbucket").parquet(root)
-                val fr = fs(spark, path(root))
-                hitCb.filterNot(survCb).foreach(b =>
-                  fr.delete(path(s"$root/dbucket=$b"), true): Unit)
-              }
-            }
-          compactDocBucketed(s"$dir/census")
-          compactDocBucketed(s"$dir/forward")
+          val cbCleared = dbucketsOf(cleared, meta.docBuckets)
+          def compactDocBucketed(stored: DataFrame, root: String): Unit = {
+            val hitCb = stored.filter(col("dbucket").isin(cbCleared: _*))
+              .join(broadcast(cleared), Seq("doc_id"), "left_semi")
+              .select(col("dbucket").cast("int")).distinct()
+              .collect().map(_.getInt(0)).toSeq
+            IndexMeta.rewritePartitions(stored, root, Seq("dbucket"), "dbucket", hitCb,
+              cleared, "doc_id")
+          }
+          compactDocBucketed(readCensus(spark, dir), s"$dir/census")
+          compactDocBucketed(readForward(spark, dir), s"$dir/forward")
         }
         // fold the merge-on-read df/stats parts to their exact sums (the
         // same sums every query computes on read — bit-identical results,
@@ -701,10 +547,7 @@ object SearchIndex {
         // anything has already left the marker (written BEFORE the rewrite,
         // ADVICE r15) telling the next compact its forward rows are stale
         // for the rewritten buckets (see tombRows above).
-        if (skipped.isEmpty) {
-          val p = path(s"$dir/tombstones")
-          fs(spark, p).delete(p, true): Unit
-        }
+        if (skipped.isEmpty) IndexMeta.clearTombstones(spark, dir)
       }
     }
 
@@ -725,7 +568,6 @@ object SearchIndex {
     val n = st.getAs[Long]("n")
     if (n <= 0L) {
       // every doc forgotten: nothing can rank (avgdl is undefined)
-      import org.apache.spark.sql.types._
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField("doc_id", LongType), StructField("dl", LongType)) ++
           queryTerms.map(t => StructField(s"tf_$t", LongType)) :+
@@ -737,12 +579,10 @@ object SearchIndex {
       .groupBy("token").agg(sum(col("df")).as("df"))
       .collect().map(r => r.getAs[String]("token") -> r.getAs[Long]("df")).toMap
     val probed = queryTerms.map(t => Dedup.hash60Local(t) % bk).distinct
-    val post0 = readPostings(spark, dir)
-      .filter(col("bucket").isin(probed: _*) && col("token").isin(queryTerms: _*))
     // forgotten docs' rows never reach the pivot (their df/n/dl_sum
     // contributions are already subtracted by the negative parts)
-    val post = tombstoneIds(spark, dir)
-      .fold(post0)(t => post0.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    val post = IndexMeta.live(spark, dir, readPostings(spark, dir)
+      .filter(col("bucket").isin(probed: _*) && col("token").isin(queryTerms: _*)), "doc_id")
     val tfCols = queryTerms.map(t =>
       coalesce(max(when(col("token") === t, col("tf"))), lit(0L)).as(s"tf_$t"))
     val pivoted = post.groupBy("doc_id", "dl").agg(tfCols.head, tfCols.tail: _*)
@@ -759,27 +599,6 @@ object SearchIndex {
       .select((Seq(col("doc_id"), col("dl")) ++
         queryTerms.map(t => col(s"tf_$t")) ++ Seq(col("score"))): _*)
   }
-
-  /** The layout widths a more-like-this call runs under: the stored meta
-    * (failing fast on an explicit `buckets` mismatch), requiring a
-    * known-complete forward store — seed vocabularies come from forward/,
-    * and a partial one would silently produce wrong recommendations. A
-    * pre-r15 meta-less index is trusted iff its forward store exists (an
-    * r14 build wrote it complete; an r15 append would have pinned a meta
-    * saying otherwise). */
-  private def mltMeta(spark: SparkSession, dir: String, buckets: Int): (Int, Int) =
-    readMeta(spark, dir) match {
-      case Some(m) =>
-        if (!m.forwardComplete)
-          throw new IllegalStateException(s"BM25 index at $dir has an incomplete forward " +
-            "store (appended onto a pre-r15 index); rebuild it before serving more-like-this")
-        (resolveBuckets(Some(m), buckets, dir), m.docBuckets)
-      case None =>
-        if (!hasPartitions(spark, path(s"$dir/forward"), "dbucket="))
-          throw new IllegalStateException(s"BM25 index at $dir has no forward store; " +
-            "rebuild it with SearchIndex.build before serving more-like-this")
-        (if (buckets > 0) buckets else DefaultBuckets, DefaultDocBuckets)
-    }
 
   /** More-like-this retrieval from the stored index (r14) — the serving
     * use of the `forward/` store beyond RTBF: take a SEED document's top
@@ -814,8 +633,9 @@ object SearchIndex {
                    topTerms: Int = 10, buckets: Int = 0,
                    k1: Double = 1.2, b: Double = 0.75,
                    maxDfShare: Double = 0.9): DataFrame = {
-    val (bk, docBuckets) = mltMeta(spark, dir, buckets)
-    val tombs = tombstoneIds(spark, dir)
+    val meta = readMeta(spark, dir)
+    val bk = resolveBuckets(meta, buckets, dir)
+    val tombs = IndexMeta.tombstones(spark, dir)
     tombs.foreach { t =>
       if (!t.filter(col("doc_id") === docId).isEmpty)
         throw new IllegalArgumentException(s"doc $docId at $dir is forgotten: " +
@@ -829,7 +649,7 @@ object SearchIndex {
     val maxDf = math.floor(maxDfShare * n).toLong
     // the seed's dbucket is a pure function of its id — one tiny job
     val db = spark.range(1)
-      .select(dbucketOf(lit(docId), docBuckets)).head().getInt(0)
+      .select(dbucketOf(lit(docId), meta.docBuckets)).head().getInt(0)
     val seed = readForward(spark, dir)
       .filter(col("dbucket") === db && col("doc_id") === docId)
       .select(col("token"), col("tf"))
@@ -858,10 +678,8 @@ object SearchIndex {
       .groupBy("token").agg(sum(col("df")).as("df"))
       .collect().map(r => r.getAs[String]("token") -> r.getAs[Long]("df")).toMap
     val probed = terms.map(t => Dedup.hash60Local(t) % bk).distinct
-    val post0 = readPostings(spark, dir)
-      .filter(col("bucket").isin(probed: _*) && col("token").isin(terms: _*))
-    val post = tombs
-      .fold(post0)(t => post0.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    val post = IndexMeta.live(spark, dir, readPostings(spark, dir)
+      .filter(col("bucket").isin(probed: _*) && col("token").isin(terms: _*)), "doc_id")
     // per-(doc, term) contribution in micro-units: BIGINT, so the per-doc
     // sum is order-free and exact in both engines
     val idfByTerm = typedLit(dfMap.map { case (t, df) =>
@@ -905,14 +723,14 @@ object SearchIndex {
                         topTerms: Int = 10, seedCol: String = "doc_id",
                         k1: Double = 1.2, b: Double = 0.75,
                         maxDfShare: Double = 0.9): DataFrame = {
-    val (_, docBuckets) = mltMeta(spark, dir, buckets = 0)
+    val docBuckets = readMeta(spark, dir).docBuckets
     val st = readSumStore(spark, dir, "stats")
       .agg(sum(col("n")).as("n"), sum(col("dl_sum")).as("dl_sum")).head()
     val n = st.getAs[Long]("n")
     require(n > 0, s"BM25 index at $dir is empty")
     val avgdl = st.getAs[Long]("dl_sum").toDouble / n
     val maxDf = math.floor(maxDfShare * n).toLong
-    val tombs = tombstoneIds(spark, dir)
+    val tombs = IndexMeta.tombstones(spark, dir)
     val seedIds0 = seeds.select(col(seedCol).cast("long").as("seed_id")).distinct()
     // forgotten seeds drop out of the precompute entirely (their forward
     // rows may still be on disk until compact — they must not seed)
@@ -920,8 +738,7 @@ object SearchIndex {
       col("seed_id") === col("doc_id"), "left_anti").select("seed_id"))
     // candidate forward buckets: a pure function of the seed ids, ≤
     // docBuckets ints — a corpus-wide seed set legitimately reads them all
-    val cb = seedIds.select(dbucketOf(col("seed_id"), docBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val cb = dbucketsOf(seedIds.select(col("seed_id").as("doc_id")), docBuckets)
     require(cb.nonEmpty, "seed set is empty (or every seed is forgotten)")
     val seedTf = readForward(spark, dir)
       .filter(col("dbucket").isin(cb: _*))
@@ -949,10 +766,8 @@ object SearchIndex {
       .withColumn("rn", row_number().over(wTerm))
       .filter(col("rn") <= topTerms)
       .select(col("seed_id"), col("token"), col("idf_micro"))
-    val post0 = readPostings(spark, dir)
-      .select(col("doc_id"), col("dl"), col("token"), col("tf"))
-    val post = tombs
-      .fold(post0)(t => post0.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    val post = IndexMeta.live(spark, dir, readPostings(spark, dir)
+      .select(col("doc_id"), col("dl"), col("token"), col("tf")), "doc_id")
     val tf = col("tf").cast("double")
     val sMicro = round(
       (col("idf_micro").cast("double") / 1e6) *

@@ -69,7 +69,7 @@ object CentroidTable {
         org.apache.spark.sql.functions.col(mCol),
         org.apache.spark.sql.functions.col(nmCol).cast("double"))
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+      .map(r => centroid(r, 0, cidCol, mCol, nmCol))
       .sortBy(_._1)
     CentroidTable(rows.map(_._1), rows.map(_._2), rows.map(_._3))
   }
@@ -83,11 +83,29 @@ object CentroidTable {
         org.apache.spark.sql.functions.col("m"),
         org.apache.spark.sql.functions.col("nm").cast("double"))
       .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray, r.getDouble(3)))
+      .map(r => r.getInt(0) -> centroid(r, 1, "cid", "m", "nm"))
     rows.groupBy(_._1).map { case (sub, g) =>
-      val s = g.sortBy(_._2)
-      sub -> CentroidTable(s.map(_._2), s.map(_._3), s.map(_._4))
+      val s = g.map(_._2).sortBy(_._1)
+      sub -> CentroidTable(s.map(_._1), s.map(_._2), s.map(_._3))
     }
+  }
+
+  /** One (cid, m, nm) centroid from `r` starting at column `at`. A
+    * degenerate centroid (a null cid, nm, m or m element) fails loudly,
+    * naming the column and the cid: it would otherwise crash the driver
+    * with a bare NPE, or — for a null element — silently score as 0.0. */
+  private def centroid(r: org.apache.spark.sql.Row, at: Int, cidCol: String,
+                       mCol: String, nmCol: String): (Long, Array[Double], Double) = {
+    if (r.isNullAt(at))
+      throw new IllegalArgumentException(s"centroid table: null $cidCol")
+    val cid = r.getLong(at)
+    def fail(what: String) =
+      throw new IllegalArgumentException(s"centroid table: null $what at $cidCol=$cid")
+    if (r.isNullAt(at + 1)) fail(mCol)
+    val m = r.getSeq[java.lang.Double](at + 1)
+    if (m.contains(null)) fail(s"$mCol element")
+    if (r.isNullAt(at + 2)) fail(nmCol)
+    (cid, m.map(_.doubleValue).toArray, r.getDouble(at + 2))
   }
 
   /** Spark's `round(d, 6)` double semantics exactly (RoundBase): NaN and

@@ -249,24 +249,28 @@ class CdcIndexSpec extends SparkSpec {
     assert(CdcIndex.screenDelta(spark, dir, delta, w = 4, modulus = 16).count() == 3)
   }
 
-  test("append onto a meta-less legacy index pins the caller geometry") {
+  test("a meta-less index fails loudly on every entry point and says to rebuild") {
     val shared = (0 until 120).map(i => s"p$i").mkString(" ")
-    val dir = tmp("cdcidx-pin")
+    val dir = tmp("cdcidx-nometa")
     CdcIndex.build(Seq((1L, shared)).toDF("doc_id", "text"), dir,
       w = 8, modulus = 32)
-    // simulate a pre-r15 index: no layout meta on disk
+    // an index without its layout record (written before records existed,
+    // or a build that never finished): no entry point may guess the
+    // chunking geometry from its caller
     assert(new java.io.File(s"$dir/_graft_meta.json").delete())
-    CdcIndex.append(Seq((2L, shared + " extra")).toDF("doc_id", "text"), dir,
-      w = 8, modulus = 32)
-    // the first mutating touch pinned the caller's geometry — without it,
-    // the CDC index alone would keep trusting caller parameters and a
-    // default-geometry screen would silently miss every duplicate
-    val meta = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/_graft_meta.json")), "UTF-8")
-    assert(meta.contains("\"w\":8") && meta.contains("\"modulus\":32"), meta)
-    val e = intercept[IllegalStateException] {
-      CdcIndex.screenDelta(spark, dir, Seq((3L, shared)).toDF("doc_id", "text"))
+    val delta = Seq((2L, shared + " extra")).toDF("doc_id", "text")
+    def failsLoudly(op: => Any): Unit = {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage.contains("rebuild"), e.getMessage)
     }
-    assert(e.getMessage.contains("w=8"))
+    failsLoudly(CdcIndex.append(delta, dir, w = 8, modulus = 32))
+    failsLoudly(CdcIndex.screenDelta(spark, dir, delta, w = 8, modulus = 32))
+    failsLoudly(CdcIndex.ingest(spark, dir, delta, w = 8, modulus = 32))
+    failsLoudly(CdcIndex.forget(spark, dir, Seq(1L).toDF("doc_id")))
+    failsLoudly(CdcIndex.compact(spark, dir))
+    // a rebuild restores service under the recorded geometry
+    CdcIndex.build(Seq((1L, shared)).toDF("doc_id", "text"), dir, w = 8, modulus = 32)
+    assert(CdcIndex.screenDelta(spark, dir, delta, w = 8, modulus = 32)
+      .head().getAs[Long]("dup_permille") > 0L)
   }
 }

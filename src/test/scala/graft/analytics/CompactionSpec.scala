@@ -314,9 +314,9 @@ class CompactionSpec extends SparkSpec {
     assert(pairSet(DedupIndex.dedupDelta(spark, idx, delta, minJaccard = 0.5)) == beforePairs)
   }
 
-  test("DedupIndex: the persisted layout survives a sys-prop change (r15, ADVICE r14)") {
+  test("DedupIndex: forget, compact and append run at the stored doc-hash width") {
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-    val idx = Files.createTempDirectory("dedup-meta-prop").toString
+    val idx = Files.createTempDirectory("dedup-meta-width").toString
     DedupIndex.build(docs, idx) // records docBuckets=16 + banding in meta
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$idx/_graft_meta.json")), "UTF-8")
@@ -325,34 +325,25 @@ class CompactionSpec extends SparkSpec {
     val delta = docs.filter(col("doc_id") =!= victim)
       .limit(20).select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
     import spark.implicits._
-    val prop = "graft.dedupindex.docbuckets"
-    val old = sys.props.get(prop)
-    try {
-      // a JVM restarted with a different width must NOT mis-scope the
-      // forget/compact partition pruning on the existing index
-      sys.props(prop) = "8"
-      DedupIndex.forget(spark, idx, Seq(victim).toDF("doc_id"))
-      DedupIndex.compact(spark, idx)
-      val left = spark.read.parquet(s"$idx/shingles").select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      assert(!left.contains(victim),
-        "compact under a changed sys-prop must still find the victim's true bucket")
-      // the probe still composes (appends under the stored width)
-      DedupIndex.append(delta, idx)
-      assert(pairSet(DedupIndex.dedupDelta(spark, idx,
-        docs.filter(col("doc_id") === victim)
-          .select(lit(5555555L).as("doc_id"), col("text")),
-        minJaccard = 0.9)).nonEmpty,
-        "appended twin content must still probe against the stored bands")
-      // the on-disk second level keeps the BUILD width, not the sys-prop
-      val widths = new java.io.File(s"$idx/shingles").listFiles()
-        .filter(_.getName.startsWith("dbucket="))
-        .map(_.getName.stripPrefix("dbucket=").toInt)
-      assert(widths.forall(_ < 16) && widths.length > 8,
-        s"appends must keep the stored 16-wide layout, saw ${widths.sorted.toSeq}")
-    } finally {
-      old match { case Some(v) => sys.props(prop) = v; case None => sys.props -= prop }
-    }
+    // forget/compact partition pruning runs at the stored width
+    DedupIndex.forget(spark, idx, Seq(victim).toDF("doc_id"))
+    DedupIndex.compact(spark, idx)
+    val left = spark.read.parquet(s"$idx/shingles").select("doc_id")
+      .collect().map(_.getLong(0)).toSet
+    assert(!left.contains(victim), "compact must find the victim's true bucket")
+    // the probe still composes (appends under the stored width)
+    DedupIndex.append(delta, idx)
+    assert(pairSet(DedupIndex.dedupDelta(spark, idx,
+      docs.filter(col("doc_id") === victim)
+        .select(lit(5555555L).as("doc_id"), col("text")),
+      minJaccard = 0.9)).nonEmpty,
+      "appended twin content must still probe against the stored bands")
+    // the on-disk second level keeps the BUILD width
+    val widths = new java.io.File(s"$idx/shingles").listFiles()
+      .filter(_.getName.startsWith("dbucket="))
+      .map(_.getName.stripPrefix("dbucket=").toInt)
+    assert(widths.forall(_ < 16) && widths.length > 8,
+      s"appends must keep the stored 16-wide layout, saw ${widths.sorted.toSeq}")
   }
 
   test("DedupIndex: a mismatched banding geometry fails fast instead of missing pairs") {

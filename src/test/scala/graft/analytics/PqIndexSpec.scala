@@ -240,43 +240,46 @@ class PqIndexSpec extends SparkSpec {
     assert(!left.contains(victim) && left.size == emb.count() - 1)
   }
 
-  test("legacy partial sidecar is never trusted: compact falls back and RTBF holds (ADVICE r14)") {
+  test("a pre-r15 or missing meta fails loudly instead of trusting a partial sidecar") {
     graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val mid = emb.agg(max("vec_id")).head().getLong(0) / 2
-    val dir = Files.createTempDirectory("pq-legacy-vl").toString
+    val dir = Files.createTempDirectory("pq-nometa").toString
     PqIndex.build(emb.filter(col("vec_id") <= mid), dir)
-    // simulate a pre-r14 index: no vlists/ dir, meta without the r15
-    // completeness fields (drift fields kept — they predate r15)
+    val victim = emb.agg(min("vec_id")).head().getLong(0)
+    import spark.implicits._
+    def failsLoudly(op: => Any): Unit = {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage.contains("rebuild"), e.getMessage)
+    }
+    // a pre-r15 meta records no sidecar width: the vlists/ sidecar cannot
+    // be trusted to cover the index (an append onto a pre-r14 index leaves
+    // it partial, and discovery from it would resurrect forgotten
+    // vectors), so every sidecar-dependent entry point refuses the index
     val metaFile = java.nio.file.Paths.get(s"$dir/_graft_meta.json")
-    val stripped = new String(java.nio.file.Files.readAllBytes(metaFile), "UTF-8")
-      .replaceAll(""","vbuckets":\d+""", "").replace(""","vlists":true""", "")
+    val full = java.nio.file.Files.readAllBytes(metaFile)
+    val stripped = new String(full, "UTF-8").replaceAll(""","vbuckets":\d+""", "")
     java.nio.file.Files.write(metaFile, stripped.getBytes("UTF-8"))
     // the out-of-band edit invalidates the local FS's checksum sidecar
     new java.io.File(s"$dir/._graft_meta.json.crc").delete()
-    def rmrf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(): Unit
-    }
-    rmrf(new java.io.File(s"$dir/vlists"))
-    // forget a PRE-APPEND id, then append with current code: the append
-    // recreates a vlists/ that covers ONLY the delta
-    val victim = emb.agg(min("vec_id")).head().getLong(0)
-    import spark.implicits._
+    failsLoudly(PqIndex.forget(spark, dir, Seq(victim).toDF("vec_id")))
+    failsLoudly(PqIndex.append(emb.filter(col("vec_id") > mid), dir))
+    failsLoudly(PqIndex.compact(spark, dir))
+    assert(!new java.io.File(s"$dir/tombstones").exists())
+    // no meta at all: the query path refuses too
+    assert(metaFile.toFile.delete())
+    failsLoudly(PqIndex.forget(spark, dir, Seq(victim).toDF("vec_id")))
+    failsLoudly(PqIndex.append(emb.filter(col("vec_id") > mid), dir))
+    failsLoudly(PqIndex.compact(spark, dir))
+    failsLoudly(PqIndex.query(spark, dir, emb.filter(col("vec_id") === victim), k = 10))
+    // a rebuild restores the whole lifecycle, RTBF included
+    PqIndex.build(emb.filter(col("vec_id") <= mid), dir)
     PqIndex.forget(spark, dir, Seq(victim).toDF("vec_id"))
     PqIndex.append(emb.filter(col("vec_id") > mid), dir)
-    assert(new java.io.File(s"$dir/vlists").isDirectory, "append recreates a partial sidecar")
-    val meta = new String(java.nio.file.Files.readAllBytes(metaFile), "UTF-8")
-    assert(!meta.contains("\"vlists\":true"),
-      s"an append must not mark a partial sidecar complete: $meta")
-    // compact must DISCOVER the victim via the codes-scan fallback — a
-    // sidecar-trusting discovery would miss it, clear the tombstone, and
-    // resurrect the forgotten vector
     PqIndex.compact(spark, dir)
     val left = spark.read.parquet(s"$dir/codes").select("vec_id")
       .collect().map(_.getLong(0)).toSet
-    assert(!left.contains(victim),
-      "compact must physically remove a pre-append tombstoned id (RTBF)")
-    assert(!new java.io.File(s"$dir/tombstones").exists())
+    assert(!left.contains(victim), "compact must physically remove a tombstoned id (RTBF)")
     val res = PqIndex.query(spark, dir, emb.filter(col("vec_id") === victim), k = 10)
       .collect().map(_.getAs[Long]("vec_id")).toSet
     assert(!res.contains(victim), "a forgotten vector must never reappear post-compact")
@@ -289,7 +292,7 @@ class PqIndexSpec extends SparkSpec {
     PqIndex.build(emb, dir)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/_graft_meta.json")), "UTF-8")
-    assert(meta.contains("\"vbuckets\":16") && meta.contains("\"vlists\":true"), meta)
+    assert(meta.contains("\"vbuckets\":16"), meta)
     assert(meta.contains("\"drift_base_micro\":"), meta)
   }
 

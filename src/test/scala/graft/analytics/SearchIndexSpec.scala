@@ -346,40 +346,33 @@ class SearchIndexSpec extends SparkSpec {
     assert(rows(SearchIndex.query(spark, dir, terms, k = 20)) == want2)
   }
 
-  test("append onto a meta-less legacy index: forget falls back to postings, df stays exact") {
-    // simulate a pre-r15 index WITHOUT a forward store (r13 layout): the
-    // fix under test (ADVICE r14) is that after an append creates a PARTIAL
-    // forward/, forget must NOT trust it for df deltas — a forward-derived
-    // delta would skip the pre-append docs' tokens and leave df inflated
+  test("a meta-less index fails loudly on every entry point and says to rebuild") {
+    // an index without its layout record (written before records existed,
+    // or a build that never finished) has no known token or doc-hash
+    // width: every entry point must refuse it instead of guessing one
     val docs = graft.Tables(spark, sf("sf0.01")).documents
     val hi = docs.agg(max("doc_id")).head().getLong(0)
-    val dir = Files.createTempDirectory("searchidx-legacy").toString
+    val dir = Files.createTempDirectory("searchidx-nometa").toString
     SearchIndex.build(docs.filter(col("doc_id") <= hi / 2), dir)
     assert(new java.io.File(s"$dir/_graft_meta.json").delete())
-    def rmrf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(): Unit
-    }
-    rmrf(new java.io.File(s"$dir/forward"))
-    SearchIndex.append(docs.filter(col("doc_id") > hi / 2), dir)
-    // the append pinned a meta that marks forward NOT complete
-    val meta = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/_graft_meta.json")), "UTF-8")
-    assert(meta.contains("\"forward\":false"), meta)
-    // forget a PRE-APPEND doc (it has no forward rows): df must still be
-    // exact — the postings-pass fallback
     val victim = docs.agg(min("doc_id")).head().getLong(0)
-    import spark.implicits._
-    SearchIndex.forget(spark, dir, Seq(victim).toDF("doc_id"))
     val terms = Seq("data", "fast", "query")
-    val oneShot = Search.bm25TopDocs(docs.filter(col("doc_id") =!= victim), terms, k = 20)
-    val want = rows(oneShot); oneShot.unpersist(): Unit
-    assert(rows(SearchIndex.query(spark, dir, terms, k = 20)) == want,
-      "a partial forward store must never be trusted for df deltas")
-    // and more-like-this refuses the incomplete forward outright
-    val e = intercept[IllegalStateException] {
-      SearchIndex.moreLikeThis(spark, dir, hi, k = 5)
+    import spark.implicits._
+    def failsLoudly(op: => Any): Unit = {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage.contains("rebuild"), e.getMessage)
     }
-    assert(e.getMessage.contains("incomplete forward"))
+    failsLoudly(SearchIndex.append(docs.filter(col("doc_id") > hi / 2), dir))
+    failsLoudly(SearchIndex.forget(spark, dir, Seq(victim).toDF("doc_id")))
+    failsLoudly(SearchIndex.compact(spark, dir))
+    failsLoudly(SearchIndex.query(spark, dir, terms, k = 20))
+    failsLoudly(SearchIndex.moreLikeThis(spark, dir, victim, k = 5))
+    failsLoudly(SearchIndex.moreLikeThisBatch(spark, dir, Seq(victim).toDF("doc_id"), k = 5))
+    // a rebuild restores service
+    SearchIndex.build(docs, dir)
+    val oneShot = Search.bm25TopDocs(docs, terms, k = 20)
+    val want = rows(oneShot); oneShot.unpersist(): Unit
+    assert(rows(SearchIndex.query(spark, dir, terms, k = 20)) == want)
   }
 
   test("moreLikeThis refuses a forgotten seed; the batch form drops it") {
@@ -490,62 +483,57 @@ class SearchIndexSpec extends SparkSpec {
   }
 
   test("a build crashed before its meta write fails loudly instead of mis-pruning at the legacy width") {
-    // since r16 the token width is corpus-derived, so a meta-less index
-    // WITH the in-progress marker means the on-disk widths are unknown —
-    // the legacy-64 fallback would silently probe the wrong directories
+    // the widths are corpus-derived, so a fresh build whose data landed but
+    // whose meta did not (the meta is written after the data) has unknown
+    // widths: reads must fail loudly rather than probe a guessed width
     val docs = graft.Tables(spark, sf("sf0.01")).documents.limit(60).localCheckpoint(true)
     val dir = Files.createTempDirectory("searchidx-crashbuild").toString
     SearchIndex.build(docs, dir)
-    // simulate the crash window: marker present, meta gone
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$dir/_graft_building"))
+    // simulate the crash window: data present, meta never written
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/_graft_meta.json"))
     val e = intercept[IllegalStateException] {
       SearchIndex.query(spark, dir, Seq("data"), k = 5)
     }
-    assert(e.getMessage.contains("Rebuild"))
-    // a fresh build repairs the state (marker cleared, meta back)
+    assert(e.getMessage.contains("rebuild"))
+    // a fresh build repairs the state (meta back)
     SearchIndex.build(docs, dir)
-    assert(!new java.io.File(s"$dir/_graft_building").exists())
+    assert(new java.io.File(s"$dir/_graft_meta.json").isFile)
     assert(rows(SearchIndex.query(spark, dir, Seq("data"), k = 5)).nonEmpty)
   }
 
-  test("building marker beside a PRIOR build's meta does not throw — meta wins") {
-    // the other half of the crash window (VERDICT r16 #3): a marker left
-    // by a crashed REbuild over a healthy index coexists with the prior
-    // build's meta. readMeta only escalates marker-WITHOUT-meta (widths
-    // unknown); with meta present the stored widths are authoritative and
-    // serving must continue.
+  test("a crashed rebuild beside a PRIOR build's meta: a prior meta keeps serving") {
+    // the other half of the crash window (VERDICT r16 #3): a rebuild that
+    // dies over a healthy index leaves the prior build's meta in place,
+    // and serving continues from it
     val docs = graft.Tables(spark, sf("sf0.01")).documents.limit(60).localCheckpoint(true)
-    val dir = Files.createTempDirectory("searchidx-markermeta").toString
+    val dir = Files.createTempDirectory("searchidx-priormeta").toString
     SearchIndex.build(docs, dir)
     val want = rows(SearchIndex.query(spark, dir, Seq("data"), k = 5))
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$dir/_graft_building"))
+    intercept[Exception] {
+      SearchIndex.build(docs, dir, idCol = "no_such_column")
+    }: Unit
+    assert(new java.io.File(s"$dir/_graft_meta.json").isFile)
     assert(rows(SearchIndex.query(spark, dir, Seq("data"), k = 5)) == want,
-      "marker + meta present must serve from the stored meta, not throw")
-    // and the next successful build clears the stale marker
-    SearchIndex.build(docs, dir)
-    assert(!new java.io.File(s"$dir/_graft_building").exists())
+      "a prior meta must keep serving, not throw")
   }
 
-  test("a FAILED build leaves the marker on disk — the explicit-error contract") {
-    // the marker's whole point: any build that dies between marker
-    // creation and the meta write must leave the marker behind so the
-    // next reader gets the explicit rebuild-me error instead of the
-    // silent legacy-width fallback
+  test("a FAILED fresh build leaves no meta: reads fail until a rebuild") {
+    // a build that dies before its meta write leaves no layout record, so
+    // the next reader gets the explicit rebuild-me error instead of a
+    // guessed width
     val docs = graft.Tables(spark, sf("sf0.01")).documents.limit(60).localCheckpoint(true)
     val dir = Files.createTempDirectory("searchidx-failedbuild").toString
     intercept[Exception] {
       SearchIndex.build(docs, dir, idCol = "no_such_column")
     }: Unit
-    assert(new java.io.File(s"$dir/_graft_building").exists(),
-      "failed build must leave the in-progress marker")
+    assert(!new java.io.File(s"$dir/_graft_meta.json").exists(),
+      "failed build must leave no layout record")
     val e = intercept[IllegalStateException] {
       SearchIndex.query(spark, dir, Seq("data"), k = 5)
     }
-    assert(e.getMessage.contains("Rebuild"))
-    // recovery path: a clean rebuild clears the marker and serves
+    assert(e.getMessage.contains("rebuild"))
+    // recovery path: a clean rebuild serves
     SearchIndex.build(docs, dir)
-    assert(!new java.io.File(s"$dir/_graft_building").exists())
     assert(rows(SearchIndex.query(spark, dir, Seq("data"), k = 5)).nonEmpty)
   }
 
@@ -598,6 +586,9 @@ class SearchIndexSpec extends SparkSpec {
         .sortWithinPartitions(col("bucket"), xxhash64(col("token"), col("doc_id")))
         .write.partitionBy("bucket").parquet(s"$unsorted/postings")
       spark.read.parquet(s"$sorted/df").write.parquet(s"$unsorted/df")
+      // the twin carries the sorted index's layout record (same widths)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sorted/_graft_meta.json"),
+        java.nio.file.Paths.get(s"$unsorted/_graft_meta.json"))
       spark.read.parquet(s"$sorted/stats").write.parquet(s"$unsorted/stats")
 
       val terms = Seq("data", "fast", "query")
