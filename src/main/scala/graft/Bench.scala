@@ -4,8 +4,8 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
+import graft.obs.Trace
 
 object Bench {
 
@@ -103,8 +103,8 @@ object Bench {
     * `queries` map) and shuffle-write byte medians (`shuffle_write`) of
     * quiet sf0.1 closing runs, as folded by tools/baseline_median.py. The
     * index-lifecycle queries (sim_pqindex_*, bm25_index_*, *_forget, ...)
-    * time a FULL lifecycle per run; `index_split` separates build from
-    * serve. */
+    * time a FULL lifecycle per run; `index_split` separates the build phase
+    * from the serve. */
   final case class Baseline(wall: Map[String, Double], shuffle: Map[String, Long])
 
   private val BaselineFile = """BENCH_LOCAL_r(\d+)\.json""".r
@@ -134,24 +134,43 @@ object Bench {
       entries("shuffle_write").map { case (k, v) => k -> v.asLong })
   }
 
-  /** Shuffle-write bytes of every task that ends from construction on.
-    * [[snapshot]] waits for the async listener bus to drain (value stable
-    * across 100 ms polls, at most 30) before reading — reading right after
-    * an action would race events still in flight. */
-  private final class ShuffleCounter(sc: SparkContext) {
-    private val acc = new AtomicLong
-    sc.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          acc.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
-    })
-    def snapshot(): Long = {
-      var last = -1L
-      var spins = 0
-      while (acc.get() != last && spins < 30) {
-        last = acc.get(); Thread.sleep(100); spins += 1
+  /** Spark work summed over every job and task that ended: job count,
+    * executor run time, shuffle read/write bytes and spill (memory + disk
+    * bytes). Differences of two snapshots are one query's `job_stats`. */
+  private final case class JobStats(jobs: Long, taskMs: Long, shuffleRead: Long,
+                                    shuffleWrite: Long, spill: Long) {
+    def -(o: JobStats): JobStats = JobStats(jobs - o.jobs, taskMs - o.taskMs,
+      shuffleRead - o.shuffleRead, shuffleWrite - o.shuffleWrite, spill - o.spill)
+    def json: String = s"""{"jobs":$jobs,"task_ms":$taskMs,"shuffle_read":$shuffleRead,""" +
+      s""""shuffle_write":$shuffleWrite,"spill":$spill}"""
+  }
+
+  /** The one job-stats listener: totals of every job and task that ends
+    * from construction on. [[snapshot]] waits for the async listener bus to
+    * drain (totals stable across 100 ms polls, at most 30) before reading —
+    * reading right after an action would race events still in flight. */
+  private final class JobStatsListener(sc: SparkContext) extends SparkListener {
+    private val jobs, taskMs, shuffleRead, shuffleWrite, spill = new AtomicLong
+    sc.addSparkListener(this)
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.incrementAndGet(): Unit
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      val m = t.taskMetrics
+      if (m != null) {
+        taskMs.addAndGet(m.executorRunTime)
+        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled): Unit
       }
-      acc.get()
+    }
+    private def totals = JobStats(jobs.get, taskMs.get, shuffleRead.get,
+      shuffleWrite.get, spill.get)
+    def snapshot(): JobStats = {
+      var last: JobStats = null
+      var spins = 0
+      while (totals != last && spins < 30) {
+        last = totals; Thread.sleep(100); spins += 1
+      }
+      totals
     }
   }
 
@@ -166,19 +185,11 @@ object Bench {
     // need this repo's classes shipped: SPARK_GRAFT_JARS=<path to
     // `sbt package` jar>.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
+    val builder0 = Tables.session(cpus.toInt).master(master)
     val builder1 = sys.env.get("SPARK_GRAFT_JARS")
       .fold(builder0)(j => builder0.config("spark.jars", j))
     val spark = sys.env.get("SPARK_GRAFT_EXEC_MEM")
       .fold(builder1)(m => builder1.config("spark.executor.memory", m))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // UTC pin: Tables.events reinterprets NTZ wall-clock as session-TZ
-      // instant; without this, epoch math would drift on a non-UTC host.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -190,16 +201,16 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    // Per-query shuffle-write bytes — ALWAYS recorded since r16 (VERDICT
-    // r15 #2): the regression gate needs them to split wall flags into
+    // Per-query job stats — ALWAYS recorded. Their shuffle-write bytes
+    // (VERDICT r15 #2) let the regression gate split wall flags into
     // Regressed vs DriftSuspect, so every bench run (driver rounds and
     // BENCH_LOCAL baseline recordings alike) carries a bytes map. Bytes
     // are a property of the PLAN: flat bytes + moved wall = host drift;
     // moved bytes = the plan itself did more work. The listener quiesce
     // runs BETWEEN queries (outside the timed window), one snapshot per
     // boundary, so recording does not perturb the gated timings.
-    val shuffleCounter = new ShuffleCounter(spark.sparkContext)
-    val shuffleByQuery = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val listener = new JobStatsListener(spark.sparkContext)
+    val statsByQuery = scala.collection.mutable.LinkedHashMap.empty[String, JobStats]
 
     // one untimed warmup: JVM/codegen/parquet-footer caches
     try run("o3_count_range") catch { case _: Throwable => () }
@@ -209,26 +220,35 @@ object Bench {
       if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     var failed = List.empty[String]
-    /** One timed run: (seconds, succeeded). */
+    /** One timed run as phase `name`, so its jobs carry the query name as
+      * their description: (seconds, succeeded). */
     def timeOnce(name: String): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok =
-        try { run(name); true } catch {
+        try { Trace.phase(name)(run(name)); true } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             false
         }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
-    var prevSnap = shuffleCounter.snapshot()
+    var prevSnap = listener.snapshot()
     val firstPass = names.map { name =>
       val (t, ok) = timeOnce(name)
       if (!ok) failed ::= name
-      val snap = shuffleCounter.snapshot()
-      shuffleByQuery(name) = snap - prevSnap
+      val snap = listener.snapshot()
+      statsByQuery(name) = snap - prevSnap
       prevSnap = snap
       name -> t
     }
+    // Build/serve split of the index-lifecycle queries (VERDICT r10 #6),
+    // from the gated pass itself: a query that runs a `build` phase reports
+    // it, and the rest of its wall is the serve. Additive info —
+    // deliberately NOT part of `value`.
+    val indexSplit = for {
+      (name, t) <- firstPass.sortBy(_._1) if !failed.contains(name)
+      build <- Trace.wall(s"$name/build")
+    } yield name -> ((build, t - build))
     // The baseline (and thus the rerun/regression protocol) is only
     // meaningful on the sf0.1 recording box; scale probes at other SFs set
     // this to skip re-measurement — there every heavy query trips the
@@ -240,7 +260,7 @@ object Bench {
       * kinds — a real regression reproduces, drift usually doesn't. */
     def flagOf(k: String, v: Double): Flag =
       if (noRerun) Flag.Clean
-      else classify(v, base.wall.get(k), shuffleByQuery.get(k),
+      else classify(v, base.wall.get(k), statsByQuery.get(k).map(_.shuffleWrite),
         base.shuffle.get(k), bimodalShuffle.getOrElse(k, Nil))
     def regressed(k: String, v: Double): Boolean = flagOf(k, v) != Flag.Clean
     // Re-measure any flagged outlier up to TWICE and keep the min: a
@@ -288,38 +308,18 @@ object Bench {
       case (k, v) if flagOf(k, v) == Flag.DriftSuspect => ratioEntry(k, v)
     }.mkString("{", ",", "}")
     def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", v)
-    // Build/serve split for the index-lifecycle queries (VERDICT r10 #6):
-    // their `results` rows above time the full lifecycle and remain the
-    // regression-gated truth; this extra pass separates build (train +
-    // partitioned index write) from serve (the pruned probe), so a future
-    // regression on one of these rows localizes immediately. Additive
-    // info — deliberately NOT part of `value`.
-    val indexSplit = graft.queries.AnalyticsQueries.indexLifecycles.toSeq
-      .filter { case (name, _) => names.contains(name) } // skip on dev subsets
-      .sortBy(_._1).flatMap { case (name, mk) =>
-        try {
-          val (build, serve) = mk(spark, sfDir)
-          val t0 = System.nanoTime(); build()
-          val tb = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          serve().write.format("noop").mode("overwrite").save()
-          val ts = (System.nanoTime() - t1) / 1e9
-          Some(name -> ((tb, ts)))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] index_split $name FAILED: ${e.getMessage}")
-          None
-        }
-      }
     val splitJson = indexSplit.map { case (k, (b, s)) =>
       "\"" + k + "\":{\"build\":" + f3(b) + ",\"serve\":" + f3(s) + "}"
     }.mkString("{", ",", "}")
-    val shuffleJson = shuffleByQuery.map { case (k, v) => "\"" + k + "\":" + v }
+    val shuffleJson = statsByQuery.map { case (k, v) => "\"" + k + "\":" + v.shuffleWrite }
+      .mkString("{", ",", "}")
+    val statsJson = statsByQuery.map { case (k, v) => "\"" + k + "\":" + v.json }
       .mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""failed":$failedJson,"reran":$reranJson,"regressions_vs_prev":$regressions,""" +
       s""""drift_suspect":$driftSuspects,""" +
       s""""regression_notes":{},"index_split":$splitJson,"shuffle_write":$shuffleJson,""" +
-      s""""sf":"$sfDir"}"""
+      s""""job_stats":$statsJson,"sf":"$sfDir"}"""
     // The FULL per-query map (~4 KB for 180 queries) goes to a FILE, never
     // to stdout: the harness that records BENCH_r{N}.json keeps only the
     // LAST 2000 chars of stdout and json-parses what it finds there, so a

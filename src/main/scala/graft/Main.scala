@@ -31,13 +31,8 @@ object Main {
   private def jdbcPassword: String = sys.env.getOrElse("GRAFT_JDBC_PASSWORD", "")
 
   private def session(): SparkSession = {
-    val s = SparkSession.builder()
+    val s = Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     functions.GraftFunctions.register(s)
     s

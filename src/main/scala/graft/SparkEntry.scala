@@ -763,7 +763,8 @@ object SparkEntry {
         |FROM dau JOIN wau USING (day) ORDER BY day""".stripMargin,
     "agg_approx_pct" ->
       """SELECT l_returnflag,
-        |  round(quantile_cont(l_extendedprice, 0.5), 2) AS p50_exact,
+        |  floor(quantile_cont(round(l_extendedprice * 100)::BIGINT, 0.5) + 0.5)
+        |    / 100.0::DOUBLE AS p50_exact,
         |  TRUE AS p50_within_tol
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
     "asof_native" -> (anonCte +

@@ -31,7 +31,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     *  - TIMESTAMP µs, isAdjustedToUTC=false → TimestampNTZType. Spark forbids
     *    `CAST(TIMESTAMP_NTZ AS BIGINT)`, so NTZ must not leak downstream; we
     *    reinterpret the wall-clock value as UTC instant. Every entry point
-    *    pins `spark.sql.session.timeZone=UTC`, so the cast is a pure type-tag
+    *    pins `spark.sql.session.timeZone=UTC` ([[Tables.session]]), so the cast is a pure type-tag
     *    change (no value shift) — FormatMatrixSpec asserts all three
     *    encodings yield byte-identical epoch math.
     *  - TIMESTAMP µs UTC-adjusted → TimestampType already; passthrough. */
@@ -56,4 +56,18 @@ final case class Tables(spark: SparkSession, dir: String) {
   }
   def documents: DataFrame  = t("documents")
   def embeddings: DataFrame = t("embeddings")
+}
+
+object Tables {
+  /** The engine-wide session recipe every entry point builds from: a UTC
+    * session time zone and `nanosAsLong` (the [[Tables.events]] loader
+    * depends on both), AQE on, UI off, and one shuffle partition per cpu.
+    * Callers add the master and anything of their own. */
+  def session(cpus: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
 }

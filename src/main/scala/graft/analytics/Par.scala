@@ -19,7 +19,9 @@ package graft.analytics
   * pass only tasks that are mutually independent AND read
   * already-materialized (or concurrently-computable) inputs; tasks writing
   * the same directory are NOT independent. Job descriptions are
-  * thread-local in Spark, so each task's jobs label correctly in the UI. */
+  * thread-local in Spark, and the pool threads are created per call, so
+  * they inherit the caller's: each task's jobs carry the caller's
+  * [[graft.obs.Trace.phase]] label (TraceSpec). */
 private[graft] object Par {
   def run(tasks: (() => Unit)*): Unit = {
     if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }

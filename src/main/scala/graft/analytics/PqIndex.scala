@@ -177,9 +177,8 @@ object PqIndex {
   /** Fail-fast geometry check (see [[LayoutVersion]]): a missing meta file
     * fails loudly ([[IndexMeta.required]]); a mismatch means the caller's
     * (m, subDim) is not what the codes were packed under. */
-  private def checkMeta(spark: SparkSession, dir: String, m: Int, subDim: Int,
-                        builder: String = "PqIndex.build"): Unit = {
-    val txt = IndexMeta.required(spark, dir, builder)
+  private def checkMeta(spark: SparkSession, dir: String, m: Int, subDim: Int): Unit = {
+    val txt = IndexMeta.required(spark, dir, "PqIndex.build")
     def field(k: String): Long = IndexMeta.field(txt, k, dir)
     if (field("layout") != LayoutVersion || field("m") != m || field("subDim") != subDim)
       throw new IllegalStateException(
@@ -187,17 +186,6 @@ object PqIndex {
           s"subDim=${field("subDim")}; caller asked for layout=$LayoutVersion m=$m " +
           s"subDim=$subDim - rebuild the index or pass its build geometry")
   }
-
-  /** Geometry metadata for [[ProductQuantization.adcBuild]] dirs — the same
-    * record/validate pair the partitioned index uses (a mismatched (m,
-    * subDim) against packed pcodes silently reads wrong slots; ADVICE r12). */
-  private[analytics] def writeAdcMeta(spark: SparkSession, dir: String,
-                                      m: Int, subDim: Int, trained: String): Unit =
-    writeMeta(spark, dir, m, subDim, trained)
-
-  private[analytics] def checkAdcMeta(spark: SparkSession, dir: String,
-                                      m: Int, subDim: Int): Unit =
-    checkMeta(spark, dir, m, subDim, builder = "ProductQuantization.adcBuild")
 
   private[analytics] val CodesSchema = StructType(Seq(StructField("vec_id", LongType),
     StructField("pcodes", ArrayType(LongType)), StructField("centroid_id", IntegerType)))

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
@@ -161,7 +161,7 @@ object ProductQuantization {
     * aggregate (the measured majority of every PQ build profile). Scores,
     * tie-breaks, null/ragged-vector handling, and the inner join's
     * dropped-sub semantics are replicated exactly (see the expression's
-    * scaladoc); results are bit-identical (AdcServeSpec/PqIndexSpec parity
+    * scaladoc); results are bit-identical (PqIndexSpec parity
     * + the full oracle gate). */
   private[analytics] def assignToBooks(subs: DataFrame, cents: DataFrame,
                                        m: Int): DataFrame =
@@ -333,64 +333,6 @@ object ProductQuantization {
       .join(broadcast(cents1), "sub")
       .select(col("vec_id").as("query_id"), col("sub"), col("cid"),
         (col("nq") + col("nm") - lit(2.0) * dot(col("sqd"), col("m"))).as("d2"))
-  }
-
-  /** Persist the flat-ADC serving state: trained subspace codebooks plus
-    * the PACKED corpus codes — the build half of [[adcTopK]], split out so
-    * the train+encode cost (one-time, amortized over queries) and the
-    * serve cost (what repeats in production) are separately measurable
-    * (`index_split` in Bench, VERDICT r11 #4). [[adcServe]] over this
-    * state returns BIT-IDENTICAL rows to a one-shot [[adcTopK]] of the
-    * same corpus (AdcServeSpec): the codebooks are the same training
-    * output, the codes the same assignment, and the scoring the same
-    * fixed `+` chain. */
-  def adcBuild(emb: DataFrame, dir: String,
-               m: Int = 32, subDim: Int = 2, centroidStep: Int = 40,
-               idCol: String = "vec_id", vecCol: String = "embedding",
-               trainOn: Option[DataFrame] = None, fullTrain: Boolean = false,
-               trainSampleTarget: Long = TrainSampleTarget): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val quantized = emb
-      .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
-      .persist(lvl)
-    val quantizedTrain = resolveTrain(quantized, trainOn, fullTrain, trainSampleTarget,
-      idCol, vecCol)
-    val subsetTrain = !(quantizedTrain eq quantized)
-    val (subs, cents1, codesTrain) = trainAndCodesQ(quantizedTrain, m, subDim, centroidStep)
-    cents1.write.mode("overwrite").parquet(s"$dir/codebooks")
-    val codes =
-      if (!subsetTrain) codesTrain
-      else assignToBooks(subSlices(quantized, m, subDim), cents1, m)
-    packCodes(codes).write.mode("overwrite").parquet(s"$dir/codes")
-    // the (m, subDim) geometry is a property of the packed codes — record
-    // it so adcServe fails fast on a mismatch instead of silently reading
-    // wrong pcodes slots (same hazard _graft_meta.json closes for PqIndex)
-    PqIndex.writeAdcMeta(emb.sparkSession, dir, m, subDim,
-      trained = if (trainOn.nonEmpty) "explicit"
-                else if (subsetTrain) "sampled" else "full")
-    subs.unpersist(); cents1.unpersist(); codesTrain.unpersist()
-    if (subsetTrain) quantizedTrain.unpersist()
-    quantized.unpersist(): Unit
-  }
-
-  /** Serve flat-ADC top-k from [[adcBuild]] state: the query-side distance
-    * tables come from one broadcast-sized join against the stored
-    * codebooks, the corpus contributes its stored packed codes only —
-    * nothing is retrained, no raw vector is read. */
-  def adcServe(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
-               m: Int = 32, subDim: Int = 2,
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(spark)
-    PqIndex.checkAdcMeta(spark, dir, m, subDim)
-    val books = broadcast(spark.read.parquet(s"$dir/codebooks"))
-    val qsubs = subSlices(queries.select(col(idCol).as("vec_id"),
-      Clustering.quantize(col(vecCol)).as("qi")), m, subDim)
-    // same arithmetic and evaluation order as [[dtForQueries]]
-    val dt = qsubs.join(books, "sub")
-      .select(col("vec_id").as("query_id"), col("sub"), col("cid"),
-        (col("nq") + col("nm") - lit(2.0) * dot(col("sqd"), col("m"))).as("d2"))
-    rankPacked(
-      spark.read.parquet(s"$dir/codes").crossJoin(broadcast(packDt(dt, m))), m, k)
   }
 
   /** Pack per-(vec, subspace) code rows to one row per vector:

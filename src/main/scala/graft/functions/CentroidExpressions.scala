@@ -16,7 +16,8 @@ import org.apache.spark.sql.types._
   * aggregate — materializes |corpus| × |centroids| rows through codegen and
   * a partial aggregate just to pick each row's best centroid. That is the
   * measured majority of every index-build profile (sim_pqindex_*,
-  * sim_ivfpq_topk, embed_* — r18 JobProfile). Since the centroid table is
+  * sim_ivfpq_topk, embed_* — r18 per-job profiles,
+  * evidence/OPTIMIZATION_r18.md). Since the centroid table is
   * the BROADCAST side by construction (k rows, the model state of the
   * training loop), the argmin/argmax is a pure per-row function of the
   * vector: these expressions evaluate it in one tight primitive loop per

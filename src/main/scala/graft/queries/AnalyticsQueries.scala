@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.analytics.{Clustering, Dedup, Multimodal, PqIndex, ProductQuantization, Quantization, Sampling, Search, Similarity, TextAnalysis}
 import graft.functions.GraftFunctions
+import graft.obs.Trace
 
 /** Driver-facing entry points for the training-data-pipeline operators
   * (dedup / similarity / text analysis / multimodal). Each returns a
@@ -19,7 +20,13 @@ object AnalyticsQueries {
     * returned DataFrames read the index lazily at the caller's action.
     * ONE statically-registered hook drains a queue of paths (r16 review
     * sweep: a hook-per-call leaked one live Thread + closure per index
-    * build for the JVM's lifetime — ~12 per bench iteration). */
+    * build for the JVM's lifetime — ~12 per bench iteration).
+    *
+    * The index-lifecycle queries that serve from a fresh build
+    * (`sim_pqindex_topk`, `sim_pqindex_rescored`, `bm25_index_search`,
+    * `bm25_mlt`, `bm25_mlt_batch`, `dedup_cdc_admit`) run that build as
+    * [[Trace.phase]] "build"; Bench's `index_split` reports it against the
+    * rest of the run (the serve). */
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
@@ -556,7 +563,7 @@ object AnalyticsQueries {
     * probe only the query terms' hash-bucket partitions. */
   def bm25IndexSearch(spark: SparkSession, dir: String): DataFrame = {
     val idx = scratchIndexDir("searchindex")
-    graft.analytics.SearchIndex.build(Tables(spark, dir).documents, idx)
+    Trace.phase("build")(graft.analytics.SearchIndex.build(Tables(spark, dir).documents, idx))
     graft.analytics.SearchIndex.query(spark, idx,
       queryTerms = Seq("data", "fast", "query"), k = 20)
   }
@@ -584,7 +591,7 @@ object AnalyticsQueries {
     * [[graft.analytics.SearchIndex.moreLikeThis]]. */
   def bm25Mlt(spark: SparkSession, dir: String): DataFrame = {
     val idx = scratchIndexDir("searchindex-mlt")
-    graft.analytics.SearchIndex.build(Tables(spark, dir).documents, idx)
+    Trace.phase("build")(graft.analytics.SearchIndex.build(Tables(spark, dir).documents, idx))
     graft.analytics.SearchIndex.moreLikeThis(spark, idx, docId = 1L, k = 20,
       topTerms = 10)
   }
@@ -595,7 +602,7 @@ object AnalyticsQueries {
   def bm25MltBatch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val idx = scratchIndexDir("searchindex-mltb")
-    graft.analytics.SearchIndex.build(Tables(spark, dir).documents, idx)
+    Trace.phase("build")(graft.analytics.SearchIndex.build(Tables(spark, dir).documents, idx))
     graft.analytics.SearchIndex.moreLikeThisBatch(spark, idx,
       Seq(1L, 2L, 3L).toDF("doc_id"), k = 20, topTerms = 10)
   }
@@ -861,10 +868,13 @@ object AnalyticsQueries {
     * that oracle SQL. */
   def simPqIndexTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir).embeddings
-    val nprobe = graft.analytics.ProductQuantization.scaledNprobe(
-      graft.analytics.ProductQuantization.autoTrainN(emb.count()))
     val idx = scratchIndexDir("pqindex")
-    PqIndex.build(emb, idx)
+    val nprobe = Trace.phase("build") {
+      val nprobe = graft.analytics.ProductQuantization.scaledNprobe(
+        graft.analytics.ProductQuantization.autoTrainN(emb.count()))
+      PqIndex.build(emb, idx)
+      nprobe
+    }
     PqIndex.query(spark, idx, emb.filter(col("vec_id") < 5), k = 5, nprobe = nprobe)
       .orderBy(col("query_id"), col("rank"))
   }
@@ -874,12 +884,14 @@ object AnalyticsQueries {
     * recall lift over raw ADC is measured (tools.Recall / SCALING.md). */
   def simPqIndexRescored(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir).embeddings
-    val n = emb.count()
-    val nprobe = graft.analytics.ProductQuantization.scaledNprobe(
-      graft.analytics.ProductQuantization.autoTrainN(n))
-    val depth = graft.analytics.ProductQuantization.scaledDepth(n)
     val idx = scratchIndexDir("pqindex-rs")
-    PqIndex.build(emb, idx)
+    val (nprobe, depth) = Trace.phase("build") {
+      val n = emb.count()
+      val nprobe = graft.analytics.ProductQuantization.scaledNprobe(
+        graft.analytics.ProductQuantization.autoTrainN(n))
+      PqIndex.build(emb, idx)
+      (nprobe, graft.analytics.ProductQuantization.scaledDepth(n))
+    }
     PqIndex.queryRescored(spark, idx, emb.filter(col("vec_id") < 5), emb,
         k = 5, depth = depth, nprobe = nprobe)
       .orderBy(col("query_id"), col("rank"))
@@ -1374,9 +1386,12 @@ object AnalyticsQueries {
     * [[graft.analytics.CdcIndex]]. */
   def dedupCdcAdmit(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
     val idx = scratchIndexDir("cdcindex")
-    graft.analytics.CdcIndex.build(docs.filter(col("doc_id") <= mid), idx)
+    val mid = Trace.phase("build") {
+      val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+      graft.analytics.CdcIndex.build(docs.filter(col("doc_id") <= mid), idx)
+      mid
+    }
     graft.analytics.CdcIndex
       .screenDelta(spark, idx, docs.filter(col("doc_id") > mid))
       .orderBy(col("doc_id"))
@@ -1400,90 +1415,6 @@ object AnalyticsQueries {
       .screenDelta(spark, idx, docs.filter(col("doc_id") > mid))
       .orderBy(col("doc_id"))
   }
-
-  /** Build/serve split of the four index-lifecycle benchmarks (VERDICT r10
-    * #6): the oracled `queries` entries above time a FULL lifecycle
-    * (param derivation + build + partitioned write + probe) as one number,
-    * which makes them dominate the suite and hides WHERE a regression
-    * lives. Each entry returns (build, serve) thunks over a fresh scratch
-    * dir: `build` runs everything up to and including the index write;
-    * `serve` returns the probe frame (the caller materializes it). Bench
-    * times both and emits `index_split` alongside the lifecycle metric —
-    * the lifecycle rows stay the regression-gated truth; the split
-    * localizes build vs serve. Serving cost is what repeats in production
-    * (the build amortizes over queries). */
-  def indexLifecycles: Map[String, (SparkSession, String) => (() => Unit, () => DataFrame)] = Map(
-    "sim_pqindex_topk" -> ((spark: SparkSession, dir: String) => {
-      val emb = Tables(spark, dir).embeddings
-      val idx = scratchIndexDir("pqindex-split")
-      var nprobe = 0
-      (() => {
-        nprobe = graft.analytics.ProductQuantization.scaledNprobe(
-          graft.analytics.ProductQuantization.autoTrainN(emb.count()))
-        PqIndex.build(emb, idx)
-      },
-       () => PqIndex.query(spark, idx, emb.filter(col("vec_id") < 5), k = 5,
-         nprobe = nprobe).orderBy(col("query_id"), col("rank")))
-    }),
-    "sim_pqindex_rescored" -> ((spark: SparkSession, dir: String) => {
-      val emb = Tables(spark, dir).embeddings
-      val idx = scratchIndexDir("pqindex-rs-split")
-      var nprobe = 0
-      var depth = 0
-      (() => {
-        val n = emb.count()
-        nprobe = graft.analytics.ProductQuantization.scaledNprobe(
-          graft.analytics.ProductQuantization.autoTrainN(n))
-        depth = graft.analytics.ProductQuantization.scaledDepth(n)
-        PqIndex.build(emb, idx)
-      },
-       () => PqIndex.queryRescored(spark, idx, emb.filter(col("vec_id") < 5), emb,
-         k = 5, depth = depth, nprobe = nprobe).orderBy(col("query_id"), col("rank")))
-    }),
-    "bm25_index_search" -> ((spark: SparkSession, dir: String) => {
-      val idx = scratchIndexDir("searchindex-split")
-      (() => graft.analytics.SearchIndex.build(Tables(spark, dir).documents, idx),
-       () => graft.analytics.SearchIndex.query(spark, idx,
-         queryTerms = Seq("data", "fast", "query"), k = 20))
-    }),
-    "sim_pq_adc" -> ((spark: SparkSession, dir: String) => {
-      val emb = Tables(spark, dir).embeddings
-      val idx = scratchIndexDir("adc-split")
-      (() => ProductQuantization.adcBuild(emb, idx),
-       () => ProductQuantization.adcServe(spark, idx, emb.filter(col("vec_id") < 5), k = 5)
-         .orderBy(col("query_id"), col("rank")))
-    }),
-    "dedup_cdc_admit" -> ((spark: SparkSession, dir: String) => {
-      val docs = Tables(spark, dir).documents
-      val idx = scratchIndexDir("cdcindex-split")
-      var mid = 0L
-      (() => {
-        mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-        graft.analytics.CdcIndex.build(docs.filter(col("doc_id") <= mid), idx)
-      },
-       () => graft.analytics.CdcIndex
-         .screenDelta(spark, idx, docs.filter(col("doc_id") > mid))
-         .orderBy(col("doc_id")))
-    }),
-    // r15 (VERDICT r14 #7): the bm25_mlt/bm25_mlt_batch regression rows
-    // time a full lifecycle dominated by the in-query index build — the
-    // split makes a SERVE-leg regression visible instead of drowned in
-    // build noise
-    "bm25_mlt" -> ((spark: SparkSession, dir: String) => {
-      val idx = scratchIndexDir("searchindex-mlt-split")
-      (() => graft.analytics.SearchIndex.build(Tables(spark, dir).documents, idx),
-       () => graft.analytics.SearchIndex.moreLikeThis(spark, idx, docId = 1L,
-         k = 20, topTerms = 10))
-    }),
-    "bm25_mlt_batch" -> ((spark: SparkSession, dir: String) => {
-      val idx = scratchIndexDir("searchindex-mltb-split")
-      (() => graft.analytics.SearchIndex.build(Tables(spark, dir).documents, idx),
-       () => {
-         import spark.implicits._
-         graft.analytics.SearchIndex.moreLikeThisBatch(spark, idx,
-           Seq(1L, 2L, 3L).toDF("doc_id"), k = 20, topTerms = 10)
-       })
-    }))
 
   /** Fill-in-the-middle packing transform (50% rate, sha-derived cuts) —
     * see [[Sampling.fimTransform]]. */

@@ -851,12 +851,18 @@ object Relational {
   /** Verified approx percentile (the q7 scale path, oracle-checked the
     * agg_approx way): exact median hash-matches the oracle, and the
     * in-engine tolerance booleans assert the sketch lands within 1% —
-    * a drifting sketch flips the row red. */
+    * a drifting sketch flips the row red. The exact median is taken over
+    * whole cents, where the interpolated middle is a whole or half cent
+    * that a double holds exactly; it rounds half up in cents and converts
+    * to currency with one division, as in the oracle. Rounding the double
+    * median itself to 2 places splits the engines on a half cent (DuckDB
+    * and Spark round 52724.244999999995 differently). */
   def aggApproxPct(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    val cents = round($"l_extendedprice" * 100).cast("long")
     Tables(spark, dir).lineitem
       .groupBy($"l_returnflag")
-      .agg(round(percentile($"l_extendedprice", lit(0.5)), 2).as("p50_exact"),
+      .agg((floor(percentile(cents, lit(0.5)) + 0.5) / 100.0).as("p50_exact"),
         approx_percentile($"l_extendedprice", lit(0.5), lit(10000)).as("a50"))
       .select($"l_returnflag", $"p50_exact",
         (abs($"a50" - $"p50_exact") <= $"p50_exact" * 0.01).as("p50_within_tol"))

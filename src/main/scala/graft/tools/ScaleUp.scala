@@ -66,14 +66,8 @@ object ScaleUp {
     val replicas = if (args.length > 1) args(1).toInt else 10
     val inDir    = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val docMode  = if (args.length > 3) args(3) else "unique"
-    val cpus     = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus     = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.Tables.session(cpus).master(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, inDir, outDir, replicas, docMode)
     spark.stop()
