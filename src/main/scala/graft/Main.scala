@@ -30,13 +30,10 @@ object Main {
   private def jdbcUser: String = sys.env.getOrElse("GRAFT_JDBC_USER", "default")
   private def jdbcPassword: String = sys.env.getOrElse("GRAFT_JDBC_PASSWORD", "")
 
-  private def session(): SparkSession = {
-    val s = Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+  private def session(): SparkSession =
+    Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .appName("graft")
       .getOrCreate()
-    functions.GraftFunctions.register(s)
-    s
-  }
 
   private def sinkFor(cfg: AppConfig, t: TenantConfig): BatchSink =
     if (jdbcMode)

@@ -78,7 +78,6 @@ object SparkEntry {
   /** O10 — the escape chain over adversarial inputs: two backslash runs of
     * varying parity, embedded single quotes, and wrapping double quotes. */
   private def o10Escape(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // sorted at the source — see o4o5Extract's r17 note
     EventStatements.extracted(Tables(spark, dir).events.orderBy(col("event_id")))
       .withColumn("raw",
@@ -91,7 +90,6 @@ object SparkEntry {
   /** O14 — sink VALUES-tuple formatting (`src/main.rs:864-867`), minus the
     * server-side `now()` column which is non-deterministic by design. */
   private def o14FormatValues(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // sorted at the source — see o4o5Extract's r17 note
     EventStatements.statements(Tables(spark, dir).events.orderBy(col("event_id")))
       .withColumn("insert_values",

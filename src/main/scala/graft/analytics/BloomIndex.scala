@@ -40,7 +40,6 @@ object BloomIndex {
 
   private def probeShingles(probes: DataFrame, n: Int,
                             textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(probes.sparkSession)
     probes.select(explode(Dedup.shingles(col(textCol), n)).as("shingle")).distinct()
   }
 
@@ -121,7 +120,6 @@ object BloomIndex {
     * against the full registry. */
   def decontaminate(spark: SparkSession, dir: String, docs: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val (_, _, n) = meta(spark, dir)
     val bytes = readFile(spark, s"$dir/bloom.bin")
     val stored = spark.read.parquet(s"$dir/shingles")

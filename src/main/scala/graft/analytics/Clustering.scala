@@ -398,7 +398,6 @@ object Clustering {
   def semdedupKeepers(emb: DataFrame, centroidStep: Int, rounds: Int = 2,
                       minCos: Double = 0.4,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val v = kmeansAssignments(emb, centroidStep, rounds, idCol, vecCol)
     val a = v.select(col("vec_id").as("id_a"), col("cid"),
       col("qd").as("qda"), col("nq").as("nqa"))

@@ -34,8 +34,7 @@ object Dedup {
     * (< n tokens) get an empty shingle set. Backed by the compiled
     * [[graft.functions.WordShingles]] expression (the equivalent
     * transform/sequence HOF formulation pays interpreted per-gram dispatch —
-    * ~25 s for 5000 docs at sf0.1, measured); callers' sessions are
-    * registered by every DataFrame-level entry point here. */
+    * ~25 s for 5000 docs at sf0.1, measured). */
   def shingles(text: Column, n: Int = 3): Column =
     graft.functions.GraftFunctions.wordShingles(text, n)
 
@@ -115,7 +114,6 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, minJaccard: Double, n: Int = 3,
                         maxDf: Option[Int] = None,
                         idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val withSh = docs.select(col(idCol).as("doc_id"), shingles(col(textCol), n).as("sh"))
     val inverted0 = withSh.select(col("doc_id"), explode(col("sh")).as("shingle"))
     val sizes = withSh.select(col("doc_id"), size(col("sh")).as("nsh"))
@@ -244,7 +242,6 @@ object Dedup {
   def ngramContainmentPairs(docs: DataFrame, minContainment: Double, n: Int = 3,
                             maxDf: Option[Int] = None,
                             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val withSh = docs.select(col(idCol).as("doc_id"), shingles(col(textCol), n).as("sh"))
     def cont(inter: Column, nA: Column, nB: Column): Column =
       round(inter / least(nA, nB), 4)
@@ -361,7 +358,6 @@ object Dedup {
   private[analytics] def shingleFrame(docs: DataFrame, n: Int = 3,
                                       idCol: String = "doc_id",
                                       textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"), shingles(col(textCol), n).as("sh"))
       .filter(size(col("sh")) > 0)
   }
@@ -371,7 +367,6 @@ object Dedup {
     * build, or a delta — band buckets are a pure function of the text. */
   private[analytics] def minhashBanded(withSh: DataFrame, bands: Int,
                                        rowsPerBand: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(withSh.sparkSession)
     val k = bands * rowsPerBand
     withSh
       .withColumn("sig", graft.functions.GraftFunctions.minhashSigFast(col("sh"), k))
@@ -404,7 +399,6 @@ object Dedup {
     * corpus streams, nothing corpus-sized shuffles. */
   def decontaminate(docs: DataFrame, probes: DataFrame, n: Int = 3,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val probeSh = probes.select(explode(shingles(col(textCol), n)).as("shingle")).distinct()
     val contaminated = docs
       .select(col(idCol), explode(shingles(col(textCol), n)).as("shingle"))
@@ -439,7 +433,6 @@ object Dedup {
   def decontaminateBloom(docs: DataFrame, probes: DataFrame, n: Int = 3,
                          fpp: Double = 0.01,
                          idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val probeSh = probes.select(explode(shingles(col(textCol), n)).as("shingle"))
       .distinct()
       .localCheckpoint(true) // one tokenize: feeds the build AND the verify
@@ -750,7 +743,6 @@ object Dedup {
   def simhashPairs(docs: DataFrame, maxHamming: Int, bands: Int = 6,
                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(maxHamming < bands, "banding needs maxHamming < bands (pigeonhole guarantee)")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sig = docs.select(col(idCol).as("doc_id"),
       graft.functions.GraftFunctions.simhashFast(col(textCol)).as("sig"))
     val banded = sig.select(col("doc_id"), col("sig"),
@@ -862,7 +854,6 @@ object Dedup {
   def winnowDupPairs(docs: DataFrame, k: Int = 3, w: Int = 4,
                      minShared: Long = 2, maxDf: Option[Long] = None,
                      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // fingerprint ONCE (r17): the (doc, fp) frame feeds the df aggregate,
     // the semi-join probe side, and both self-join sides — unpersisted,
     // each branch re-ran the winnowing (k-gram hashes + window minima)
@@ -1036,7 +1027,6 @@ object Dedup {
   def splitLeakageReport(docs: DataFrame, n: Int = 8,
                          trainPerMille: Int = 800, valPerMille: Int = 100,
                          textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val withSplit = Sampling.splitAssign(docs, idCol, trainPerMille, valPerMille)
     val ds = withSplit
       .select(col("split"), col(idCol).as("doc_id"),

@@ -291,7 +291,6 @@ object PqIndex {
             trainOn: Option[DataFrame] = None, fullTrain: Boolean = false,
             trainSampleTarget: Long = ProductQuantization.TrainSampleTarget): Unit =
     IndexLock.withLock(emb.sparkSession, dir) {
-    GraftFunctions.register(emb.sparkSession)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val quantized = emb
       .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
@@ -370,7 +369,6 @@ object PqIndex {
     val spark = delta.sparkSession
     IndexLock.withLock(spark, dir) {
     checkMeta(spark, dir, m, subDim)
-    GraftFunctions.register(spark)
     val quantized = delta
       .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -510,7 +508,6 @@ object PqIndex {
                         nprobe: Int, m: Int, subDim: Int,
                         idCol: String, vecCol: String): DataFrame = {
     checkMeta(spark, dir, m, subDim)
-    GraftFunctions.register(spark)
     val cent = broadcast(spark.read.parquet(s"$dir/coarse")
       .select(col("cid").as("centroid_id"), col("m").as("cm"), col("nm").as("cnm")))
     val q = queries.select(col(idCol).as("query_id"),

@@ -22,7 +22,7 @@ import graft.functions.GraftFunctions
   * IVF-PQ: coarse lists prune, PQ scores the survivors.
   *
   * Default geometry m=32 × subDim=2 (round 11): the measured recall curve
-  * (tools.RecallCurve, SCALING.md r11) showed the old 8×8 split's raw ADC
+  * (SCALING.md § "Round 11: the PQ recall curve") showed the old 8×8 split's raw ADC
   * recall@5 plateaus ~0.20 regardless of nprobe or codebook size — the
   * quantization error of 8-dim cells exceeds neighbor gaps on this
   * corpus — while 16×4 reaches ~0.37–0.45 and 32×2 crosses the 0.5 bar
@@ -429,7 +429,6 @@ object ProductQuantization {
                 idCol: String = "vec_id", vecCol: String = "embedding",
                 trainOn: Option[DataFrame] = None, fullTrain: Boolean = false,
                 trainSampleTarget: Long = TrainSampleTarget): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Quantize the corpus ONCE: coarse training, list assignment, and the
     // subspace-PQ training all read this cached frame — at 100 TB the

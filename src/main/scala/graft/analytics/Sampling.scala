@@ -439,7 +439,6 @@ object Sampling {
     val cap = math.max(minKeep, total * shareNum / shareDen)
     val w = Window.partitionBy(col("source"))
       .orderBy(col("qmicro").desc, col("doc_id"))
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col(srcCol).as("source"), col(idCol).as("doc_id"),
         graft.functions.GraftFunctions.qualityFast(col(textCol)).as("quality"))
@@ -502,7 +501,6 @@ object Sampling {
     * histogram-sized arithmetic (≤ ~70 buckets), so tuning a 100 TB gate
     * costs one scan total, not one per candidate threshold. */
   def thresholdSweep(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val scored = docs.select(
       round(graft.functions.GraftFunctions.qualityFast(col(textCol)) * 10000)
         .cast("long").as("q_micro"))

@@ -397,7 +397,6 @@ object Search {
         s"dims=$dims exceeds the 2^17 guard - shard the weight table instead " +
         "(see the model-bounded collect contract in the scaladoc)")
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val labels = docs.select(col(idCol).as("doc_id"),
       when(graft.functions.GraftFunctions.langIdFast(col(textCol)) === "en", 1L)
         .otherwise(-1L).as("y"))
@@ -444,7 +443,6 @@ object Search {
     * the corpus. */
   private def perScoreCounts(docs: DataFrame, weights: DataFrame, dims: Int,
                              textCol: String, idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val scored = linearClassifierScore(docs, weights, dims, textCol, idCol)
     val labels = docs.select(col(idCol).as("doc_id"),
       (graft.functions.GraftFunctions.langIdFast(col(textCol)) === "en").as("__pos"))

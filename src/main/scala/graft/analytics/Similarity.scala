@@ -46,7 +46,6 @@ object Similarity {
     * hoisting it cannot change results. */
   private[analytics] def withNorm(emb: DataFrame, idCol: String, vecCol: String,
                                   idAs: String, vAs: String, nAs: String): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     emb.select(col(idCol).as(idAs), col(vecCol).cast("array<double>").as(vAs))
       .withColumn(nAs, norm(col(vAs)))
   }
@@ -176,7 +175,6 @@ object Similarity {
               idCol: String = "vec_id", vecCol: String = "embedding",
               trainOn: Option[DataFrame] = None, fullTrain: Boolean = false,
               trainSampleTarget: Long = ProductQuantization.TrainSampleTarget): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // Coarse training is BOUNDED by default above TrainSampleTarget (see
     // ProductQuantization.TrainSampleTarget — the same n × (n/centroidStep)
     // assignment quadratic as the PQ family, same measured fix): train the
@@ -267,7 +265,6 @@ object Similarity {
   def lshBucketPairsBanded(emb: DataFrame, minCos: Double, reps: Int = 3,
                            planes: Int = 4, dims: Int = 64,
                            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     // normalize ONCE (r17): `e` feeds the bucket index and both verify
     // sides — unpersisted, each branch re-ran the scan + norm pass. The
     // result is eagerly materialized before the cache is released.

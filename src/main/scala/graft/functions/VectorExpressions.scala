@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for the embedding hot path.
@@ -97,13 +97,15 @@ case class ArrayDotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for graft's native expressions — both as a
-  * [[org.apache.spark.sql.SparkSessionExtensions]] injector (configure
-  * `spark.sql.extensions=graft.functions.GraftExtensions`) and as a runtime
-  * helper for sessions created without the extension. */
+/** [[org.apache.spark.sql.SparkSessionExtensions]] injector (configure
+  * `spark.sql.extensions=graft.functions.GraftExtensions`): the SQL names of
+  * [[GraftFunctions.sqlFunctions]], the range-join rewrite and the as-of join
+  * strategy. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.arrayDotDescriptor)
+    GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(getClass.getName, name), builder))
+    }
     // auto-bucket pure point-in-interval inequality joins (kills the
     // nested-loop plan; see graft.plans.RangeJoinRewrite)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite())
@@ -113,60 +115,76 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   }
 }
 
+/** Column APIs for graft's native expressions. Each builds its Catalyst
+  * expression directly, so it works on any session; the SQL names in
+  * [[sqlFunctions]] are for SQL text only. */
 object GraftFunctions {
-  private[graft] val arrayDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_array_dot"),
-    new ExpressionInfo(classOf[ArrayDotProduct].getName, "graft_array_dot"),
-    (children: Seq[Expression]) => ArrayDotProduct(children(0), children(1)))
+  private def expr(c: Column): Expression = GraftBridge.expression(c)
+  private def column(e: Expression): Column = GraftBridge.column(e)
 
-  /** Idempotent per-session registration (temp function namespace): a
-    * name the session's registry already holds is left as it is, so the
-    * per-query `register` calls neither rebuild the registry entries nor log
-    * a "replaced a previously registered function" warning each time. */
+  private def intLit(e: Expression, what: String): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
+  }
+
+  /** SQL name → builder of every native expression, the one table behind
+    * [[register]] and [[GraftExtensions]]. */
+  private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_array_dot" -> (exprs => ArrayDotProduct(exprs(0), exprs(1))),
+    "graft_word_shingles" -> (exprs => WordShingles(exprs(0), intLit(exprs(1), "shingle size"))),
+    "graft_fingerprint" -> (exprs => PolyFingerprint(exprs(0))),
+    "graft_minhash_signature" -> (exprs => MinhashSignatureExpr(exprs(0), intLit(exprs(1), "k"))),
+    "graft_simhash" -> (exprs => SimHash60(exprs(0))),
+    "graft_process_statement" -> (exprs => ProcessStatementExpr(exprs(0))),
+    "graft_topk" -> (exprs => TopKByScore(exprs(0), exprs(1), intLit(exprs(2), "k"))),
+    "graft_card_redact" -> (exprs => CardRedact(exprs(0))),
+    "graft_winnow" -> (exprs =>
+      WinnowFingerprintsExpr(exprs(0), intLit(exprs(1), "k"), intLit(exprs(2), "w"))),
+    "graft_quality" -> (exprs => quality(exprs(0))),
+    "graft_bloom_contains" -> (exprs => BloomMightContainLong(exprs(0), exprs(1))),
+    "graft_langid" -> (exprs => langId(exprs(0))))
+
+  private def quality(text: Expression) = QualityScore(text, graft.analytics.TextAnalysis.StopwordsEn)
+  private def langId(text: Expression) = StopwordLangId(text,
+    graft.analytics.TextAnalysis.StopwordsEn,
+    graft.analytics.TextAnalysis.StopwordsEs,
+    graft.analytics.TextAnalysis.StopwordsDe)
+
+  /** Registers the [[sqlFunctions]] names on `spark` for SQL text (temp
+    * function namespace). Idempotent: a name the session's registry already
+    * holds is left as it is, so a repeated call neither rebuilds the entries
+    * nor logs a "replaced a previously registered function" warning. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    def intLit(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
-    }
-    val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-      "graft_array_dot" -> (exprs => ArrayDotProduct(exprs(0), exprs(1))),
-      "graft_word_shingles" -> (exprs => WordShingles(exprs(0), intLit(exprs(1), "shingle size"))),
-      "graft_fingerprint" -> (exprs => PolyFingerprint(exprs(0))),
-      "graft_minhash_signature" -> (exprs => MinhashSignatureExpr(exprs(0), intLit(exprs(1), "k"))),
-      "graft_simhash" -> (exprs => SimHash60(exprs(0))),
-      "graft_process_statement" -> (exprs => ProcessStatementExpr(exprs(0))),
-      "graft_topk" -> (exprs => TopKByScore(exprs(0), exprs(1), intLit(exprs(2), "k"))),
-      "graft_card_redact" -> (exprs => CardRedact(exprs(0))),
-      "graft_winnow" -> (exprs =>
-        WinnowFingerprintsExpr(exprs(0), intLit(exprs(1), "k"), intLit(exprs(2), "w"))),
-      "graft_quality" -> (exprs => QualityScore(exprs(0),
-        graft.analytics.TextAnalysis.StopwordsEn)),
-      "graft_bloom_contains" -> (exprs => BloomMightContainLong(exprs(0), exprs(1))),
-      "graft_langid" -> (exprs => StopwordLangId(exprs(0),
-        graft.analytics.TextAnalysis.StopwordsEn,
-        graft.analytics.TextAnalysis.StopwordsEs,
-        graft.analytics.TextAnalysis.StopwordsDe)))
-    builders.foreach { case (name, builder) =>
+    sqlFunctions.foreach { case (name, builder) =>
       if (!registry.functionExists(FunctionIdentifier(name)))
         registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
   }
 
-  def fingerprintFast(text: Column): Column = call_function("graft_fingerprint", text)
+  def fingerprintFast(text: Column): Column = column(PolyFingerprint(expr(text)))
+  def minhashSigFast(sh: Column, k: Int): Column = column(MinhashSignatureExpr(expr(sh), k))
+  def simhashFast(text: Column): Column = column(SimHash60(expr(text)))
+  def processStatementFast(s: Column): Column = column(ProcessStatementExpr(expr(s)))
+  def langIdFast(text: Column): Column = column(langId(expr(text)))
+  def qualityFast(text: Column): Column = column(quality(expr(text)))
+  def cardRedactFast(text: Column): Column = column(CardRedact(expr(text)))
 
-  def minhashSigFast(sh: Column, k: Int): Column =
-    call_function("graft_minhash_signature", sh, org.apache.spark.sql.functions.lit(k))
-  def simhashFast(text: Column): Column = call_function("graft_simhash", text)
-  def processStatementFast(s: Column): Column = call_function("graft_process_statement", s)
-  def langIdFast(text: Column): Column = call_function("graft_langid", text)
-  def qualityFast(text: Column): Column = call_function("graft_quality", text)
-  /** Bloom membership probe. The filter bytes travel as a BROADCAST, not a
-    * plan literal (r16): a literal is embedded in every serialized task
-    * binary — at registry scale (≈1.2 GB of bits for 1B shingles at 1% fpp)
-    * that is a multi-GB plan tree re-shipped per task; the broadcast ships
-    * once per executor. The SQL-registered `graft_bloom_contains` literal
-    * form remains for SQL text, where a broadcast cannot appear. */
+  /** Column API for the native dot product. */
+  def arrayDot(a: Column, b: Column): Column = column(ArrayDotProduct(expr(a), expr(b)))
+
+  /** Bounded-heap top-k aggregate: returns array<struct<score,id>> of the k
+    * best rows by (score desc, id asc). */
+  def topKByScore(score: Column, id: Column, k: Int): Column =
+    column(TopKByScore(expr(score), expr(id), k).toAggregateExpression())
+
+  /** Column API for native word shingles. */
+  def wordShingles(text: Column, n: Int): Column = column(WordShingles(expr(text), n))
+
+  /** Column API for winnowing fingerprints. */
+  def winnowFast(text: Column, k: Int, w: Int): Column =
+    column(WinnowFingerprintsExpr(expr(text), k, w))
+
   /** Broadcast cache for [[bloomContains]] (ADVICE r16; r17 review): a
     * fresh `sc.broadcast` per call accumulates broadcast blocks across a
     * long-lived session (streaming ingest probes the same registry filter
@@ -204,6 +222,12 @@ object GraftFunctions {
   private[graft] def bloomCacheSize: Int =
     bloomBcastCache.synchronized(bloomBcastCache.size())
 
+  /** Bloom membership probe. The filter bytes travel as a BROADCAST, not a
+    * plan literal (r16): a literal is embedded in every serialized task
+    * binary — at registry scale (≈1.2 GB of bits for 1B shingles at 1% fpp)
+    * that is a multi-GB plan tree re-shipped per task; the broadcast ships
+    * once per executor. The SQL name `graft_bloom_contains` keeps the
+    * literal form for SQL text, where a broadcast cannot appear. */
   def bloomContains(probe: Column, bloomBytes: Array[Byte]): Column = {
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
     val bc = bloomBcastCache.synchronized {
@@ -215,26 +239,6 @@ object GraftFunctions {
           fresh
       }
     }
-    org.apache.spark.sql.graft.GraftBridge.column(
-      BloomMightContainBcast(
-        org.apache.spark.sql.graft.GraftBridge.expression(probe), bc))
+    column(BloomMightContainBcast(expr(probe), bc))
   }
-  def cardRedactFast(text: Column): Column = call_function("graft_card_redact", text)
-
-  /** Column API for the native dot product (requires [[register]]). */
-  def arrayDot(a: Column, b: Column): Column = call_function("graft_array_dot", a, b)
-
-  /** Bounded-heap top-k aggregate (requires [[register]]): returns
-    * array<struct<score,id>> of the k best rows by (score desc, id asc). */
-  def topKByScore(score: Column, id: Column, k: Int): Column =
-    call_function("graft_topk", score, id, org.apache.spark.sql.functions.lit(k))
-
-  /** Column API for native word shingles (requires [[register]]). */
-  def wordShingles(text: Column, n: Int): Column =
-    call_function("graft_word_shingles", text, org.apache.spark.sql.functions.lit(n))
-
-  /** Column API for winnowing fingerprints (requires [[register]]). */
-  def winnowFast(text: Column, k: Int, w: Int): Column =
-    call_function("graft_winnow", text,
-      org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(w))
 }

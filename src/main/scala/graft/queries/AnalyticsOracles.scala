@@ -100,7 +100,7 @@ object AnalyticsOracles {
 
   /** PQ code geometry mirrored from analytics.ProductQuantization's
     * defaults: round 11 moved 8×8 → 32×2 after the measured recall curve
-    * (tools.RecallCurve, SCALING.md r11) showed raw ADC recall@5 is
+    * (SCALING.md § "Round 11: the PQ recall curve") showed raw ADC recall@5 is
     * quantization-limited at 8×8 (~0.20, flat in nprobe/codebook size)
     * and crosses the 0.5 bar only with finer subspaces (32×2: 0.58–0.68
     * at sf0.1). Everything downstream (slices, pivot width, + chain) is
@@ -240,6 +240,14 @@ object AnalyticsOracles {
        |    SELECT cid, list(s::DOUBLE / n ORDER BY i) AS m
        |    FROM ks2 JOIN kn2 USING (cid) GROUP BY cid, n))
        |""".stripMargin
+
+  /** Probe width and rescore depth as the ANN queries derive them from the
+    * corpus size, `ProductQuantization.scaledNprobe(autoTrainN(n))` and
+    * `scaledDepth(n)` (6 and 20 on the 500-vector corpora). */
+  private val nprobeSql =
+    s"(SELECT (greatest(1, least(count(*), ${graft.analytics.ProductQuantization.TrainSampleTarget}) // 25)" +
+      " * 300 + 999) // 1000 FROM embeddings)"
+  private val depthSql = "(SELECT greatest(20, count(*) // 25) FROM embeddings)"
 
   /** Coarse cosine of a quantized vector against a trained mean — the exact
     * parenthesization of `Similarity.coarseCos`. */
@@ -1088,7 +1096,7 @@ object AnalyticsOracles {
          |probes AS (
          |  SELECT query_id, centroid_id FROM (
          |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY ccos DESC, centroid_id) AS rn FROM qscore)
-         |  WHERE rn <= 6),
+         |  WHERE rn <= $nprobeSql),
          |cand AS (
          |  SELECT p.query_id, a.vec_id FROM probes p JOIN assigned a USING (centroid_id)
          |  WHERE a.vec_id <> p.query_id),
@@ -1984,7 +1992,7 @@ object AnalyticsOracles {
          |probes AS (
          |  SELECT query_id, centroid_id FROM (
          |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY ccos DESC, centroid_id) AS rn FROM qscore)
-         |  WHERE rn <= 6),
+         |  WHERE rn <= $nprobeSql),
          |scored AS (
          |  SELECT p.query_id, a.vec_id, ${cosSql("qe.v", "ae.v")} AS cos
          |  FROM probes p JOIN assigned a USING (centroid_id)
@@ -2724,8 +2732,8 @@ object AnalyticsOracles {
     // querying a freshly built PQ index returns bit-identical rows to the
     // one-shot operator, so the index query shares its oracle verbatim
     ("sim_pqindex_topk" -> base("sim_ivfpq_topk")) +
-    // two-stage serving: the ivfpq oracle's ADC ranking truncated at depth
-    // 20 per query, then re-scored by EXACT cosine over the raw vectors —
+    // two-stage serving: the ivfpq oracle's ADC ranking truncated at the
+    // rescore depth per query, then re-scored by EXACT cosine over the raw vectors —
     // derived from the base oracle so the candidate leg stays bit-identical
     ("sim_pqindex_rescored" -> derive(base("sim_ivfpq_topk"),
       """SELECT query_id, rank, vec_id, round(adc)::BIGINT AS adc FROM (
@@ -2737,7 +2745,7 @@ object AnalyticsOracles {
          |  SELECT query_id, vec_id FROM (
          |    SELECT query_id, vec_id,
          |      row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS rn FROM tt)
-         |  WHERE rn <= 20),
+         |  WHERE rn <= $depthSql),
          |re AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |resc AS (
          |  SELECT c.query_id, c.vec_id, ${cosSql("qe.v", "ce.v")} AS cos

@@ -53,14 +53,12 @@ object AnalyticsQueries {
       .orderBy(col("doc_id"))
 
   def textLangId(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables(spark, dir).documents
       .select(col("doc_id"), col("lang"), GraftFunctions.langIdFast(col("text")).as("lang_pred"))
       .orderBy(col("doc_id"))
   }
 
   def textQuality(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables(spark, dir).documents
       .select(col("doc_id"),
         round(TextAnalysis.punctRatio(col("text")), 4).as("punct_ratio"),
@@ -69,7 +67,6 @@ object AnalyticsQueries {
   }
 
   def textFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables(spark, dir).documents
       .select(col("doc_id"), GraftFunctions.fingerprintFast(col("text")).as("fp"))
       .orderBy(col("doc_id"))
@@ -167,7 +164,6 @@ object AnalyticsQueries {
   }
 
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables(spark, dir).documents
       .select(col("doc_id"), GraftFunctions.simhashFast(col("text")).as("simhash"))
       .orderBy(col("doc_id"))
@@ -210,7 +206,6 @@ object AnalyticsQueries {
   /** Quality-aware keepers: per near-dup component keep the highest-quality
     * doc (tie → lowest id) — the keeper policy a production pipeline wants. */
   def dedupQualityKeepers(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, dir).documents
     val pairs = Dedup.ngramJaccardPairs(docs, minJaccard = 0.6,
       maxDf = Some(Dedup.dfCapFor(docs.count())))
@@ -295,7 +290,6 @@ object AnalyticsQueries {
     * every source is over quota and sheds its lowest-quality fifth);
     * best-quality docs win inside an over-quota source. */
   def curateDomainCap(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Sampling.domainCap(Tables(spark, dir).documents)
       .orderBy(col("source"), col("src_rank"))
   }
@@ -303,7 +297,6 @@ object AnalyticsQueries {
   /** Two-round Lloyd k-means over the embedding corpus (deterministic
     * id-step seeding, integer-exact quantized arithmetic). */
   def embedKmeans(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Clustering.kmeansStats(Tables(spark, dir).embeddings, centroidStep = 40, rounds = 2)
       .orderBy(col("centroid_id"))
   }
@@ -311,7 +304,6 @@ object AnalyticsQueries {
   /** Embedding-space outlier gate: squared distance to the recomputed own-
     * cluster mean, flagged beyond 4× the cluster's mean d². */
   def embedOutliers(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Clustering.clusterOutliers(Tables(spark, dir).embeddings, centroidStep = 40, rounds = 2)
       .orderBy(col("vec_id"))
   }
@@ -380,7 +372,6 @@ object AnalyticsQueries {
 
   /** Quality-weighted sample: keep probability = the doc's quality score. */
   def sampleWeighted(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val scored = Tables(spark, dir).documents
       .withColumn("quality", GraftFunctions.qualityFast(col("text")))
     Sampling.weightedSample(scored, col("quality"), "doc_id")
@@ -416,7 +407,6 @@ object AnalyticsQueries {
     * branches (pair generation, the anti-join's left side, the output
     * projection), so the scan + scoring subtree runs once, not per branch. */
   def curateKept(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val scored = Tables(spark, dir).documents
       .select(col("doc_id"), col("text"),
         GraftFunctions.langIdFast(col("text")).as("lang_pred"),
@@ -511,7 +501,6 @@ object AnalyticsQueries {
     * engines derive the pair arithmetically from doc_id, so the oracle
     * knows exactly which substring disappears. */
   def textCardRedact(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val base = lpad(((col("doc_id") * 37) % 1000000000L).cast("string"), 15, "0")
     val ds = transform(split(reverse(base), ""), x => x.cast("int"))
     val mapped = transform(ds, (d, i) =>
@@ -643,7 +632,6 @@ object AnalyticsQueries {
 
   /** Topic labels for the embedding k-means clusters (top-3 TF-ICF terms). */
   def clusterTopics(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val t = Tables(spark, dir)
     Clustering.clusterTopics(t.embeddings, t.documents, centroidStep = 40, rounds = 2, topK = 3)
   }
@@ -702,7 +690,6 @@ object AnalyticsQueries {
     * cheap release gate: two corpus scans, no joins wider than a broadcast
     * 1-row total. */
   def corpusDatasheet(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, dir).documents
     val scored = docs.select(col("doc_id"), col("lang"), col("text"),
         Sampling.strictTokenCount(col("text")).cast("long").as("n_tok"),
@@ -769,7 +756,6 @@ object AnalyticsQueries {
     * exactly once and the checkpointed frames are narrow (ids + a few
     * longs), never the document text. */
   def pipelineAdmit(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, dir).documents
     val capped = Sampling.domainCap(docs)
       .select(col("doc_id"), col("source"), col("src_rank"))
@@ -814,13 +800,11 @@ object AnalyticsQueries {
       .orderBy(col("id"))
 
   def embedPq(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     ProductQuantization.pqCodes(Tables(spark, dir).embeddings)
       .orderBy(col("vec_id"), col("sub"))
   }
 
   def simPqAdc(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val emb = Tables(spark, dir).embeddings
     val res = ProductQuantization.adcTopK(emb, emb.filter(col("vec_id") < 5), k = 5)
     // caller-must-unpersist contract (see semdedupKeepers)
@@ -881,7 +865,8 @@ object AnalyticsQueries {
 
   /** Two-stage IVF-PQ serving: ADC prunes + ranks inside the probed lists,
     * the top-20 survivors per query are re-scored by exact cosine. The
-    * recall lift over raw ADC is measured (tools.Recall / SCALING.md). */
+    * recall lift over raw ADC is measured in SCALING.md § "ANN recall@10 vs
+    * the nprobe knob at sf0.1". */
   def simPqIndexRescored(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir).embeddings
     val idx = scratchIndexDir("pqindex-rs")
@@ -931,7 +916,6 @@ object AnalyticsQueries {
     * 0.4 cosine threshold as [[embedNearDup]], so the drop set is the
     * co-clustered subset of the exact all-pairs answer). */
   def semdedupKeepers(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val res = Clustering.semdedupKeepers(Tables(spark, dir).embeddings,
         centroidStep = 40, rounds = 2, minCos = 0.4)
     // honor the operator's caller-must-unpersist contract: hand back a
@@ -984,7 +968,6 @@ object AnalyticsQueries {
     * [[packWindows]], ordering within shard partitions only (no global
     * sort). The score rides the output as the ordering witness. */
   def packCurriculumQ(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, dir).documents
       .withColumn("q_micro",
         round(GraftFunctions.qualityFast(col("text")) * 10000).cast("long"))
@@ -1019,7 +1002,6 @@ object AnalyticsQueries {
     * deterministic. Near-dup dedup is demonstrated separately in
     * `pipeline_curate`; this chain is the mix-and-pack half. */
   def pipelinePack(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, dir).documents
     val scored = docs
       .select(col("doc_id"), col("text"),
@@ -1063,7 +1045,6 @@ object AnalyticsQueries {
     * and packing is per-shard prefix sums. Every corpus-sized exchange is
     * on hash keys; nothing quadratic, nothing driver-sized. */
   def pipelineFull(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, dir).documents
     val clean = Dedup.decontaminate(
       docs.filter(col("doc_id") >= 5), docs.filter(col("doc_id") < 5))
@@ -1106,7 +1087,6 @@ object AnalyticsQueries {
     * before the walk). Output: every kept doc with its quality and the
     * threshold it cleared, integer-deterministic end to end. */
   def textQualityCalibrated(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, dir).documents
     val scored = docs.select(col("doc_id"),
         GraftFunctions.qualityFast(col("text")).as("quality"))
@@ -1130,7 +1110,6 @@ object AnalyticsQueries {
     * doc-keyed ratio aggregate; the shuffle keys are shingle strings and
     * doc ids, nothing quadratic. */
   def textNovelty(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val exp = Tables(spark, dir).documents
       .select(col("doc_id"), explode(Dedup.shingles(col("text"))).as("s"))
     val dfc = exp.groupBy(col("s")).agg(count(lit(1)).as("df"))
@@ -1217,7 +1196,6 @@ object AnalyticsQueries {
     * k=3-token grams, window w=4 — any ≥6-token verbatim overlap between
     * two documents is guaranteed to share a fingerprint. */
   def textWinnow(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables(spark, dir).documents
       .select(col("doc_id"),
         explode(TextAnalysis.winnowFingerprints(col("text"), k = 3, w = 4)).as("fp"))
@@ -1478,7 +1456,6 @@ object AnalyticsQueries {
     * [[Clustering.clusterPrototypes]] (drop the closest 1/5 per
     * cluster). */
   def embedPrototypes(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Clustering.clusterPrototypes(Tables(spark, dir).embeddings,
         centroidStep = 40, rounds = 2)
       .orderBy(col("vec_id"))

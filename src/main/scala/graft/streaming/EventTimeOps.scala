@@ -135,7 +135,6 @@ object EventTimeOps {
                            (implicit spark: SparkSession): Dataset[DupPair] = {
     require(maxHamming < bands, "banding needs maxHamming < bands (pigeonhole guarantee)")
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val banded = docs
       .select(col("doc_id"),
         graft.functions.GraftFunctions.simhashFast(col("text")).as("sig"))
@@ -642,7 +641,6 @@ object EventTimeOps {
                      spanTokens: Int = 2)
                     (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rows = docs.select(col("source"), col("doc_id"), col("text"),
         round(graft.functions.GraftFunctions.qualityFast(col("text")) * 10000)
           .cast("long").as("qmicro")).as[AdmitIn]

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming metrics surface (SURVEY §7.2 M5): per-micro-batch throughput
@@ -11,21 +9,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *
   * The reference's equivalents are its `info!`/`warn!` tracing lines and the
   * throughput measurement feeding O16; here every batch's numbers flow
-  * through one listener that both logs and retains a bounded in-memory tail
-  * (for tests / health endpoints).
+  * through one listener that logs them.
   */
-final class MetricsListener(keep: Int = 256) extends StreamingQueryListener {
-
-  final case class BatchMetrics(queryName: String, batchId: Long, numInputRows: Long,
-                                processedRowsPerSecond: Double, observed: Map[String, String])
-
-  private val tail = new ConcurrentLinkedQueue[BatchMetrics]()
-
-  def recent: Seq[BatchMetrics] = {
-    val b = Seq.newBuilder[BatchMetrics]
-    tail.forEach(m => b += m)
-    b.result()
-  }
+final class MetricsListener extends StreamingQueryListener {
 
   override def onQueryStarted(event: StreamingQueryListener.QueryStartedEvent): Unit =
     System.err.println(s"[graft-metrics] query ${event.name} started (${event.id})")
@@ -43,12 +29,8 @@ final class MetricsListener(keep: Int = 256) extends StreamingQueryListener {
         b.result()
       }
     }
-    val m = BatchMetrics(String.valueOf(p.name), p.batchId, p.numInputRows,
-      p.processedRowsPerSecond, observed)
-    tail.add(m): Unit
-    while (tail.size() > keep) { tail.poll(): Unit }
-    System.err.println(s"[graft-metrics] batch=${m.batchId} rows=${m.numInputRows} " +
-      f"rate=${m.processedRowsPerSecond}%.1f/s observed=${m.observed}")
+    System.err.println(s"[graft-metrics] batch=${p.batchId} rows=${p.numInputRows} " +
+      f"rate=${p.processedRowsPerSecond}%.1f/s observed=$observed")
   }
 
   override def onQueryTerminated(event: StreamingQueryListener.QueryTerminatedEvent): Unit =

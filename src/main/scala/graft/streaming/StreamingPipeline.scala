@@ -13,9 +13,11 @@ import graft.sinks.BatchSink
   * Reference mapping:
   *   - micro-batch trigger: flush on `size >= N || elapsed >= 5 s`
   *     (`/root/reference/src/main.rs:405-407`) → `Trigger.ProcessingTime(5s)`
-  *     plus the source's rows-per-trigger cap (O15); the adaptive batch
-  *     sizing loop (O16, `src/main.rs:192-233`) is subsumed by AQE +
-  *     per-trigger admission control and intentionally not reimplemented.
+  *     plus the source's rows-per-trigger cap (O15).
+  *   - adaptive batch sizing (O16, `src/main.rs:192-233`): `Main.live`
+  *     feeds each tenant query's measured throughput into a
+  *     [[BatchSizeManager]] through an [[AdmissionListener]], and reads its
+  *     suggested cap into the source's admission option at every (re)start.
   *   - per-batch insert retry ×5 with doubling backoff from 1000 ms (O17,
   *     consts `src/main.rs:40-41`).
   *   - retry exhaustion → DLQ (O18), replayed on a 60 s cadence (O19).

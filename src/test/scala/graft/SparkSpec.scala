@@ -20,7 +20,6 @@ object SparkSpec {
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
     s
   }
 }

@@ -219,7 +219,6 @@ class AnalyticsSpec extends SparkSpec {
     // the near points (~0.01) stay far under it.
     val rows = (0L to 8L).map(i => (i, Seq(0.001 * i, 0.0))) :+ (9L, Seq(1.0, 0.0))
     val emb = rows.toDF("vec_id", "embedding")
-    graft.functions.GraftFunctions.register(spark)
     val out = Clustering.clusterOutliers(emb, centroidStep = 40, rounds = 2)
     val flagged = out.filter(col("is_outlier")).select("vec_id")
       .collect().map(_.getLong(0)).toSet
@@ -284,7 +283,6 @@ class AnalyticsSpec extends SparkSpec {
 
   test("compiled expressions agree with their declarative HOF twins on the corpus") {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val docs = graft.Tables(spark, sf("sf0.001")).documents
     val fpDiff = docs.select(
       TextAnalysis.fingerprint(col("text")).as("hof"),

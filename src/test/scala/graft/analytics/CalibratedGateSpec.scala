@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class CalibratedGateSpec extends SparkSpec {
 
   test("calibrated p25 threshold under-approximates the exact percentile; kept fraction ~75%") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables(spark, sf("sf0.01")).documents
     val scored = docs.select(col("doc_id"),
         graft.functions.GraftFunctions.qualityFast(col("text")).as("quality"))

@@ -144,7 +144,6 @@ class CorpusOpsSpec extends SparkSpec {
     // the trained model must beat the all-zero model on its own labels:
     // score the corpus with the trained weights and check that accuracy on
     // the training labels is well above the majority-class baseline
-    graft.functions.GraftFunctions.register(spark)
     val scored = Search.linearClassifierScore(docs, w)
       .join(docs.select(col("doc_id"),
         when(graft.functions.GraftFunctions.langIdFast(col("text")) === "en", 1)

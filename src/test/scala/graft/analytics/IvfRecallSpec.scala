@@ -18,7 +18,6 @@ class IvfRecallSpec extends SparkSpec {
     * baseline the trained quantizer is judged against. */
   private def everyNthIvfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                               centroidStep: Int, nprobe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val c = corpus.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nv", Similarity.norm(col("v")))
     val cent = corpus.filter(col("vec_id") % centroidStep === 0)

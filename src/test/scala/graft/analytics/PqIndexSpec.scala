@@ -28,7 +28,6 @@ class PqIndexSpec extends SparkSpec {
       r.getAs[Long]("vec_id"), r.getAs[Long]("adc"))).toSet
 
   test("stored-index query returns bit-identical rows to the one-shot operator") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val dir = Files.createTempDirectory("pqidx").toString
     PqIndex.build(emb, dir)
@@ -42,7 +41,6 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("append encodes under the stored quantizer: equals a one-shot build of the union trained on history") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val mid = emb.agg(max("vec_id")).head().getLong(0) / 2
     val h1 = emb.filter(col("vec_id") <= mid)
@@ -66,7 +64,6 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("probing is partition pruning: a query reads only its probed lists") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val dir = Files.createTempDirectory("pqidx2").toString
     PqIndex.build(emb, dir)
@@ -93,7 +90,6 @@ class PqIndexSpec extends SparkSpec {
   // ------------------------- bounded-sample training default (r13) -------
 
   test("default build at or below the sample target full-trains bit-identically") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings // 500 vecs < target
     val defDir = Files.createTempDirectory("pq-deftrain").toString
     val fullDir = Files.createTempDirectory("pq-fulltrain").toString
@@ -109,7 +105,6 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("default build above the sample target engages bounded training with constant capacities") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings // 500 vecs
     val target = 100L
     val dir = Files.createTempDirectory("pq-sampled").toString
@@ -160,7 +155,6 @@ class PqIndexSpec extends SparkSpec {
   // ------------------------- drift signal (r14, VERDICT r13 #8) ----------
 
   test("append updates the drift signal: same-distribution appends stay low, shifted ones spike") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val mid = emb.agg(max("vec_id")).head().getLong(0) / 2
     val h1 = emb.filter(col("vec_id") <= mid)
@@ -201,7 +195,6 @@ class PqIndexSpec extends SparkSpec {
   // ------------------------- id→list sidecar (r14, VERDICT r13 #3) -------
 
   test("vlists sidecar exists, tracks appends, and compact keeps it in sync partition-scoped") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val dir = Files.createTempDirectory("pq-vlists").toString
     PqIndex.build(emb, dir)
@@ -241,7 +234,6 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("a pre-r15 or missing meta fails loudly instead of trusting a partial sidecar") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val mid = emb.agg(max("vec_id")).head().getLong(0) / 2
     val dir = Files.createTempDirectory("pq-nometa").toString
@@ -286,7 +278,6 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("r15 meta records the sidecar layout; a fresh build's compact uses it") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val dir = Files.createTempDirectory("pq-meta-vl").toString
     PqIndex.build(emb, dir)
@@ -297,7 +288,6 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("driftAdvisory: false on same-distribution appends, true after a shifted one") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val mid = emb.agg(max("vec_id")).head().getLong(0) / 2
     val dir = Files.createTempDirectory("pq-advisory").toString
@@ -319,7 +309,6 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("one-shot ivfPqTopK follows the same training policy as the stored index") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val queries = emb.filter(col("vec_id") < 3)
     val target = 100L

@@ -49,7 +49,6 @@ class Round10PackSpec extends SparkSpec {
     // bucket representative (the bucket's lower bound), counting docs by
     // rep >= thr equals counting by raw q_micro >= thr — the sweep's
     // histogram-only counts are not approximations at its own thresholds
-    graft.functions.GraftFunctions.register(spark)
     val scored = docs.select(
       round(graft.functions.GraftFunctions.qualityFast(col("text")) * 10000)
         .cast("long").as("q"))

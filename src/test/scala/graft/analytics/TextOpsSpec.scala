@@ -30,7 +30,6 @@ class TextOpsSpec extends SparkSpec {
 
   test("cardRedact: Luhn-valid 16-digit runs only; phones, ids, and longer runs survive") {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val rows = Seq(
       "pay 4539578763621486 now",         // Luhn-valid 16 digits
       "ref 4539578763621487 now",         // same digits, bad check digit

@@ -99,8 +99,10 @@ class BloomExpressionsSpec extends SparkSpec {
   }
 
   test("probe type checking rejects a non-literal bloom argument") {
-    import spark.implicits._
-    GraftFunctions.register(spark)
+    // SQL name: register on a session of its own, not the shared one
+    val session = spark.newSession()
+    GraftFunctions.register(session)
+    import session.implicits._
     val df = Seq((1L, Array[Byte](1, 2, 3))).toDF("h", "blob")
     // a per-row (non-foldable) filter blob can't be deserialized once per
     // executor — the expression refuses it at analysis time

@@ -14,7 +14,6 @@ class VectorExpressionsSpec extends SparkSpec {
     expr(s"aggregate(zip_with($a, $b, (x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)")
 
   test("graft_array_dot matches the HOF twin on values, length mismatch, and null elements") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq[java.lang.Double](1.0, 2.0, 3.0), Seq[java.lang.Double](4.0, 5.0, 6.0)),
@@ -39,8 +38,10 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("graft_minhash_signature rejects k < 1 instead of emitting empty signatures") {
-    graft.functions.GraftFunctions.register(spark)
-    import spark.implicits._
+    // SQL text: register on a session of its own, not the shared one
+    val session = spark.newSession()
+    GraftFunctions.register(session)
+    import session.implicits._
     val df = Seq(Tuple1(Seq("a b c", "b c d"))).toDF("sh")
     val e = intercept[Exception] {
       df.select(expr("graft_minhash_signature(sh, 0)")).collect()

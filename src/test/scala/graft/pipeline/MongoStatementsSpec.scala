@@ -41,4 +41,36 @@ class MongoStatementsSpec extends SparkSpec {
     val out = MongoStatements.statements(docs, "s", "t")
     assert(Set("id", "ts", "hashed_id", "statement").subsetOf(out.columns.toSet))
   }
+
+  test("backfill's production path: Mongo docs through runTransformed, routed by a parquet dimension") {
+    import graft.sinks.ParquetSink
+    import graft.streaming.Dlq
+    import graft.streaming.StreamingPipeline.{RetryPolicy, SinkTables}
+    def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+    val tables = SinkTables("tenant_x", "db", "statements", "statements_opt_out")
+    val policy = RetryPolicy(maxRetries = 2, initialDelayMs = 1)
+    val statements = MongoStatements.statements(docs, "salt", "tenant_x")
+    // the opt-out dimension as Main.backfill reads it: a parquet dir of hashed_id
+    val dimDir = tmp("optout") + "/dim"
+    statements.filter(col("id").endsWith("7e")).select("hashed_id").write.parquet(dimDir)
+    val dim = () => spark.read.parquet(dimDir).select("hashed_id")
+
+    val (sinkDir, dlqDir) = (tmp("sink"), tmp("dlq"))
+    val res = BackfillJob.runTransformed(statements, "2024-04-25T00:00", "2024-04-26T00:00",
+      new ParquetSink(sinkDir), tables, new Dlq(spark, dlqDir), dim, policy)
+    assert(res.written + res.deadLettered == 2) // the two valid docs; "@broken" never arrives
+    assert(res.skipped == 0)
+    def ids(table: String) =
+      spark.read.parquet(s"$sinkDir/db.$table").select("id").collect().map(_.getString(0)).toSet
+    assert(ids("statements") == Set("662f9a1b4c8d2e001a3b5c7d"))
+    assert(ids("statements_opt_out") == Set("662f9a1b4c8d2e001a3b5c7e"))
+
+    val (sink2, dlq2) = (tmp("sink"), tmp("dlq"))
+    intercept[IllegalArgumentException] {
+      BackfillJob.runTransformed(statements, "2024-04-26T00:00", "2024-04-25T00:00",
+        new ParquetSink(sink2), tables, new Dlq(spark, dlq2), dim, policy)
+    }
+    assert(new java.io.File(sink2).list().isEmpty && new java.io.File(dlq2).list().isEmpty,
+      "a reversed range must be rejected before anything is written")
+  }
 }

@@ -70,7 +70,6 @@ class StatementTransformsSpec extends SparkSpec {
 
   test("compiled processStatement agrees with the regex chain on vectors and fuzz") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(42)
     val alphabet = "ab\\'\" "
     val fuzz = Seq.fill(500)(Seq.fill(rnd.nextInt(24))(alphabet(rnd.nextInt(alphabet.length))).mkString)

@@ -78,7 +78,6 @@ class Round4PlanSpec extends SparkSpec {
   }
 
   test("PQ assignment is a compiled projection: no join, no shuffle of the corpus for it") {
-    graft.functions.GraftFunctions.register(spark)
     val df = graft.analytics.ProductQuantization
       .pqCodes(graft.Tables(spark, d).embeddings)
     assert(df.collect().nonEmpty)

@@ -28,7 +28,6 @@ class AdmitParitySpec extends SparkSpec {
   test("streamingAdmit == pipelineAdmit verdict-for-verdict on a rank-ordered replay") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val (srcDir, outDirA, outDirR, ckpt) = (tmp("src"), tmp("adm"), tmp("rej"), tmp("ckpt"))
-    graft.functions.GraftFunctions.register(spark)
     val dir = sf("sf0.01")
     val docs = graft.Tables(spark, dir).documents.persist()
 

@@ -50,6 +50,48 @@ class StreamingSpec extends SparkSpec {
     ev.unpersist()
   }
 
+  test("two tenants under one TenantRunner: rows land once on their route; stopAll stops both (O21/O24)") {
+    val sinkDir = tmp("sink")
+    val sink = new ParquetSink(sinkDir)
+    val runner = new TenantRunner(spark, restartDelayMs = 120000)
+    val tenants = Seq("tenant_a" -> 0L, "tenant_b" -> 150L).map { case (tenant, lo) =>
+      val (srcDir, ckpt) = (tmp("src"), tmp("ckpt"))
+      val ev = eventsSlice(lo, lo + 150).persist()
+      ev.write.parquet(s"$srcDir/drop1")
+      val schema = spark.read.parquet(s"$srcDir/drop1").schema
+      val tenantTables = SinkTables(tenant, tenant, "statements", "statements_opt_out")
+      val dlq = new Dlq(spark, tmp("dlq"))
+      val dim = EventStatements.optOutHashes(ev)
+      runner.run(tenant) { () =>
+        StreamingPipeline.start(Sources.fileStream(spark, s"$srcDir/drop*", schema),
+          () => dim, sink, tenantTables, dlq, ckpt, fastRetry, Trigger.ProcessingTime("200 milliseconds"))
+      }
+      (ev, tenantTables, dlq)
+    }
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (runner.activeQueries.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+    val queries = runner.activeQueries
+    assert(queries.keySet == Set("tenant_a", "tenant_b"))
+    queries.values.foreach(_.processAllAvailable())
+
+    tenants.foreach { case (ev, t, dlq) =>
+      val landed = Seq(t.main -> "main", t.optOut -> "opt_out")
+        .filter { case (table, _) => new java.io.File(s"$sinkDir/${t.db}.$table").exists() }
+        .map { case (table, route) =>
+          spark.read.parquet(s"$sinkDir/${t.db}.$table").select(col("id"), lit(route).as("route"))
+        }.reduce(_ unionByName _)
+      val expected = EventStatements.routed(ev).select(col("id"), col("route"))
+      assert(expected.count() > 0)
+      // multiset equality: every expected row exactly once, nothing else
+      assert(landed.exceptAll(expected).isEmpty && expected.exceptAll(landed).isEmpty,
+        s"${t.tenant}: sink rows differ from EventStatements.routed")
+      assert(dlq.pending().isEmpty)
+      ev.unpersist()
+    }
+    runner.stopAll()
+    assert(queries.values.forall(!_.isActive), "stopAll must leave no tenant query running")
+  }
+
   test("retry exhaustion dead-letters the batch; replay drains it (O17/O18/O19)") {
     val (sinkDir, dlqDir) = (tmp("sink"), tmp("dlq"))
     val dlq = new Dlq(spark, dlqDir)

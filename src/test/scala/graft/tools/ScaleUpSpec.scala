@@ -43,7 +43,6 @@ class ScaleUpSpec extends SparkSpec {
   }
 
   test("cross-replica documents fall below every near-dup threshold") {
-    graft.functions.GraftFunctions.register(spark)
     val sh = t("documents")
       .select((col("doc_id") % 1000000000L).as("base_id"),
         expr("doc_id div 1000000000").as("rep"),

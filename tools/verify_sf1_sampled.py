@@ -310,7 +310,7 @@ def topk_checks(name, exact_scores, floor, k=5):
     return recall
 
 # Floors raised in round 11 with the PQ 32x2 geometry (VERDICT r10 #4):
-# tools.RecallCurve measured raw ADC recall@5 = 0.62 (sf1) / 0.58-0.62
+# the recall curve (SCALING.md § "Round 11: the PQ recall curve") measured raw ADC recall@5 = 0.62 (sf1) / 0.58-0.62
 # (sf0.1) at default share, and rescored = 0.88 at every depth (coverage-
 # bound once ADC ranks well). The old floors (0.2 raw / 0.5 rescored)
 # dated from the 8x8 geometry whose raw margin was one bad tie from red.
