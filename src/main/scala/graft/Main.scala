@@ -98,26 +98,20 @@ object Main {
 
       // O16 admission loop: per-tenant manager fed by measured micro-batch
       // throughput (AdmissionListener keyed on the query name). The
-      // suggested cap is read inside mkQuery at every (re)start and probed
-      // against the source's admission options (Sources.admissionOption):
-      // the Mongo v10 connector as shipped exposes no per-trigger row cap,
-      // so the suggestion reaches operations via the start log — but a
-      // deployment whose connector DOES support one registers it via
-      // spark.graft.admission.option.mongodb and the cap lands without a
-      // code change (OpsSpec proves both probe outcomes; the file-stream
-      // analog threads it into maxFilesPerTrigger — StreamingSpec).
+      // suggested cap is read inside mkQuery at every (re)start and logged:
+      // the Mongo v10 connector exposes no per-trigger row cap to apply it
+      // to (the file-stream analog takes it as maxFilesPerTrigger —
+      // StreamingSpec).
       val admission = graft.streaming.BatchSizeManager.live(cfg.batchSize)
       spark.streams.addListener(new graft.streaming.AdmissionListener(admission, t.name))
 
       // recoverCheckpoint: on a resume-token-expired failure (code 280) the
       // checkpoint is cleared and the stream restarts from now (O24 recovery)
       runner.run(t.name, recoverCheckpoint = Some(s"$ckptBase/${t.name}")) { () =>
-        val cap = admission.suggest // applied when the source-build probe finds a cap option
-        val landed = Sources.admissionOption(spark, "mongodb")
-          .map(o => s"applied as $o").getOrElse("logged only (no v10 cap option)")
-        System.err.println(s"[graft] tenant ${t.name}: starting with admission cap $cap ($landed)")
+        System.err.println(s"[graft] tenant ${t.name}: starting with admission cap " +
+          s"${admission.suggest} (logged only (no v10 cap option))")
         StreamingPipeline.start(
-          Sources.mongoChangeStream(spark, t, admissionCap = Some(cap)),
+          Sources.mongoChangeStream(spark, t),
           dim, sink, tablesFor(t), dlq, s"$ckptBase/${t.name}",
           transform = MongoStatements.statements(_, cfg.encryptionSalt, t.name),
           queryName = Some(t.name))

@@ -27,6 +27,9 @@ import graft.functions.{CentroidTable, GraftFunctions}
   *
   * Seeding is deterministic: vectors with `id % centroidStep == 0` are the
   * initial centroids (same convention as [[Similarity.ivfTopK]]).
+  *
+  * Cache lifetime: the [[Search]] rule — each public operator releases its
+  * own caches and returns an eager, lineage-free `localCheckpoint`.
   */
 object Clustering {
 
@@ -109,11 +112,11 @@ object Clustering {
     * `rounds − 1` centroid recomputations between them.
     *
     * The result is persisted (MEMORY_AND_DISK) and MATERIALIZED before the
-    * corpus-sized intermediate caches are released — the caller must
-    * `unpersist()` it when done (same iterative-algorithm cache-lifetime
-    * pattern as connectedComponentKeepers). */
-  def kmeansAssignments(emb: DataFrame, centroidStep: Int, rounds: Int = 2,
-                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    * corpus-sized intermediate cache is released; each caller in this
+    * module releases it once its own result is checkpointed. */
+  private[analytics] def kmeansAssignments(emb: DataFrame, centroidStep: Int,
+                                           rounds: Int = 2, idCol: String = "vec_id",
+                                           vecCol: String = "embedding"): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // ONE cached scoring frame carrying qi alongside (qd, nq) — the r18
@@ -182,11 +185,9 @@ object Clustering {
     * centroids don't track the data distribution, so inverted lists are
     * unbalanced and nprobe misses grow with skew).
     *
-    * The returned frame is k-row-small and comes back as an EAGER,
-    * lineage-free localCheckpoint: callers broadcast it into assignment /
-    * probe scoring without re-running the corpus-sized training passes, and
-    * there is no session-lifetime cache to release (checkpoint blocks are
-    * GC-cleaned by the ContextCleaner). */
+    * The returned frame is k-row-small: callers broadcast it into
+    * assignment / probe scoring without re-running the corpus-sized
+    * training passes. */
   def trainedCentroids(emb: DataFrame, centroidStep: Int, rounds: Int = 3,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -230,15 +231,13 @@ object Clustering {
     * id, and the (exact-arithmetic) mean of the first quantized component. */
   def kmeansStats(emb: DataFrame, centroidStep: Int, rounds: Int = 2,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val asg = kmeansAssignments(emb, centroidStep, rounds, idCol, vecCol)
     val out = asg
       .groupBy(col("cid").as("centroid_id"))
       .agg(count(lit(1)).as("n_members"),
         min(col("vec_id")).as("min_member"),
         round(sum(element_at(col("qi"), 1)).cast("double") / count(lit(1)), 4).as("mean_q0"))
-      .persist(lvl)
-    out.count(): Unit // only the k-row result stays persisted
+      .localCheckpoint(true)
     asg.unpersist()
     out
   }
@@ -261,7 +260,7 @@ object Clustering {
     * Shape at 100 TB: the corpus makes ONE narrow pass against two
     * broadcast k-row tables (recomputed means, per-cluster distance
     * stats); the only corpus-sized exchanges are the Lloyd rounds
-    * themselves. Returned eagerly checkpointed; no caller-visible cache.
+    * themselves.
     *
     * Output: (vec_id, cid, d2, is_outlier). */
   /** Squared distance of every member to its FINAL cluster's recomputed
@@ -390,11 +389,7 @@ object Clustering {
     *
     * Determinism: cosines use the integer-quantized vectors (exact-int dot
     * products in doubles) rounded at the comparison boundary, so the
-    * keep/drop decision is bit-identical cross-engine.
-    *
-    * Returns a PERSISTED corpus-scale frame, materialized before the
-    * assignment cache is released — the CALLER MUST `unpersist()` it when
-    * done (same lifetime contract as [[kmeansAssignments]]). */
+    * keep/drop decision is bit-identical cross-engine. */
   def semdedupKeepers(emb: DataFrame, centroidStep: Int, rounds: Int = 2,
                       minCos: Double = 0.4,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -410,11 +405,8 @@ object Clustering {
       .select(col("id_b")).distinct()
     val out = v.join(dropped, col("vec_id") === col("id_b"), "left_anti")
       .select(col("vec_id"), col("cid"))
-    // materialize before releasing the assignment cache (out reads v twice)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val res = out.persist(lvl)
-    res.count(): Unit
+      .localCheckpoint(true) // before releasing the assignment cache (out reads v twice)
     v.unpersist()
-    res
+    out
   }
 }

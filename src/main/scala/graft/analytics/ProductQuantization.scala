@@ -41,6 +41,9 @@ import graft.functions.GraftFunctions
   *
   * Seeding mirrors [[Clustering.kmeansStats]]: vectors with
   * `vec_id % centroidStep == 0` seed every subspace's codebook.
+  *
+  * Cache lifetime: the [[Search]] rule — each public operator releases its
+  * training caches and returns an eager, lineage-free `localCheckpoint`.
   */
 object ProductQuantization {
 
@@ -120,10 +123,9 @@ object ProductQuantization {
                centroidStep: Int = 40,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val (subs, cents1, codes) = trainAndCodes(emb, m, subDim, centroidStep, idCol, vecCol)
-    // codes is materialized; release the training-side caches (the result
-    // itself stays persisted — same lifetime pattern as kmeansStats)
-    subs.unpersist(); cents1.unpersist()
-    codes
+    val out = codes.localCheckpoint(true)
+    subs.unpersist(); cents1.unpersist(); codes.unpersist()
+    out
   }
 
   /** Shared training pipeline: subspace frame, trained codebooks
@@ -257,12 +259,7 @@ object ProductQuantization {
     * not |vecs| × m × |queries| (round 11: the 32×2 geometry made the
     * row-per-subspace shape carry 32 rows per candidate through the old
     * conditional-aggregate pivot; packing removes the pivot exchange and
-    * the m-fold row blowup while producing bit-identical sums).
-    *
-    * Returns a PERSISTED frame (tiny: ≤ |queries|×k rows), materialized
-    * before the training caches are released — the caller's action reads
-    * the cached result instead of re-running the whole subspace Lloyd
-    * with its caches gone (same lifetime contract as [[pqAssign]]). */
+    * the m-fold row blowup while producing bit-identical sums). */
   def adcTopK(emb: DataFrame, queries: DataFrame, k: Int,
               m: Int = 32, subDim: Int = 2, centroidStep: Int = 40,
               idCol: String = "vec_id", vecCol: String = "embedding",
@@ -282,8 +279,7 @@ object ProductQuantization {
     val pairs = packCodes(codes)
       .crossJoin(broadcast(packDt(
         dtForQueries(quantized, queries, cents1, m, subDim, idCol), m)))
-    val out = rankPacked(pairs, m, k).persist(lvl)
-    out.count(): Unit
+    val out = rankPacked(pairs, m, k).localCheckpoint(true)
     subs.unpersist(); cents1.unpersist(); codesTrain.unpersist()
     if (subsetTrain) quantizedTrain.unpersist()
     quantized.unpersist()
@@ -489,11 +485,8 @@ object ProductQuantization {
     val pairs = cand.join(packCodes(codes), "vec_id")
       .join(broadcast(packDt(
         dtForQueries(quantized, queries, cents1, m, subDim, idCol), m)), "query_id")
-    // persist-then-materialize before releasing training caches — see
-    // [[adcTopK]]; the returned frame is ≤ |queries|×k rows
-    val out = rankPacked(pairs, m, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count(): Unit
+    // materialize the result before releasing the training caches
+    val out = rankPacked(pairs, m, k).localCheckpoint(true)
     subs.unpersist(); cents1.unpersist(); codesTrain.unpersist()
     if (sampledTrain || trainOn.nonEmpty) quantizedTrain.unpersist()
     quantized.unpersist()

@@ -17,6 +17,14 @@ import org.apache.spark.sql.functions._
   * A 1-ulp `ln` difference can only flip the quantized value when the
   * product lands within ~1e-9 of a .5 boundary — vanishing, and confined
   * to a single df value if it ever happens.
+  *
+  * Cache lifetime (the rule every `graft.analytics` operator follows): an
+  * operator releases the intermediate caches it makes before it returns,
+  * and a result whose lineage must not re-run comes back as an eager
+  * `localCheckpoint` — materialized, lineage-free, with no CacheManager
+  * entry (`storageLevel` is NONE). A caller has nothing to unpersist; the
+  * checkpoint blocks are freed by the ContextCleaner once the frame is
+  * unreachable.
   */
 object Search {
 
@@ -65,9 +73,7 @@ object Search {
     * broadcast back as literals; ranking is a global top-k =
     * TakeOrderedAndProject. The tokenized per-doc counters are PERSISTED
     * across the stats action and the scoring scan, so the corpus parquet is
-    * read (and tokenized) exactly ONCE; the returned frame is the persisted
-    * ≤k-row ranking (the [[ProductQuantization.adcTopK]] lifetime
-    * contract). */
+    * read (and tokenized) exactly ONCE. */
   def bm25TopDocs(docs: DataFrame, queryTerms: Seq[String], k: Int,
                   k1: Double = 1.2, b: Double = 0.75,
                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
@@ -115,8 +121,7 @@ object Search {
       .limit(k)
       .select((Seq(col("doc_id"), col("dl")) ++
         queryTerms.map(tfCol) ++ Seq(col("score"))): _*)
-      .persist(lvl)
-    out.count(): Unit // scoring scan reads the cached counters, not parquet
+      .localCheckpoint(true) // scoring scan reads the cached counters, not parquet
     perDoc.unpersist()
     out
   }
@@ -142,10 +147,8 @@ object Search {
     * corpus-sized shuffle is the final doc_id aggregation. The corpus is
     * read and TOKENIZED exactly once: a (doc_id, tokens) frame is persisted
     * and materialized up front, and bigrams, heads, and the vocabulary all
-    * derive from the cached arrays (the [[bm25TopDocs]] lifetime pattern;
-    * the returned per-doc frame comes back persisted and materialized, and
-    * the token cache is released before return). Documents with fewer than
-    * two tokens have no bigrams and no score (absent rows, not NULL — same
+    * derive from the cached arrays. Documents with fewer than two tokens
+    * have no bigrams and no score (absent rows, not NULL — same
     * construction in the oracle). */
   def bigramSurprisal(docs: DataFrame, textCol: String = "text",
                       idCol: String = "doc_id"): DataFrame = {
@@ -170,8 +173,7 @@ object Search {
       .select(col("doc_id"), col("n_bigrams"),
         round(col("sum_micro").cast("double") / col("n_bigrams") / 1e6, 4)
           .as("avg_surprisal"))
-      .persist(lvl)
-    out.count(): Unit // score from the token cache, then release it
+      .localCheckpoint(true) // score from the token cache, then release it
     toks.unpersist()
     out
   }
@@ -242,8 +244,7 @@ object Search {
       .select(col("doc_id"), col("n_bigrams"),
         round(col("sum_micro").cast("double") / col("n_bigrams") / 1e6, 4)
           .as("avg_kn_surprisal"))
-      .persist(lvl)
-    out.count(): Unit // score from the token cache, then release it
+      .localCheckpoint(true) // score from the token cache, then release it
     toks.unpersist()
     out
   }
@@ -327,8 +328,7 @@ object Search {
       .select(col("doc_id"), col("n_bigrams"), col("n_unseen"),
         round(col("sum_micro").cast("double") / col("n_bigrams") / 1e6, 4)
           .as("avg_kn_surprisal"))
-      .persist(lvl)
-    out.count(): Unit // score from the token cache, then release it
+      .localCheckpoint(true) // score from the token cache, then release it
     toks.unpersist()
     out
   }
@@ -567,8 +567,7 @@ object Search {
           * 1e6).cast("long").as("pmi_micro"))
       .orderBy(col("pmi_micro").desc, col("w1"), col("w2"))
       .limit(k)
-      .persist(lvl)
-    out.count(): Unit
+      .localCheckpoint(true)
     toks.unpersist()
     out
   }
@@ -662,8 +661,7 @@ object Search {
         sum(col("cnt") * col("lam_micro")).as("logw_micro"))
       .select(col("doc_id"), col("n_bigrams"), col("logw_micro"),
         (col("logw_micro") > 0).cast("int").as("keep"))
-      .persist(lvl)
-    out.count(): Unit // score from the cached features, then release them
+      .localCheckpoint(true) // score from the cached features, then release them
     feat.unpersist()
     out
   }

@@ -423,8 +423,7 @@ object AnalyticsQueries {
     val kept = curateKept(spark, dir)
     val pairs = Dedup.ngramJaccardPairs(kept.select(col("doc_id"), col("text")),
       minJaccard = 0.6, maxDf = Some(Dedup.dfCapFor(docs.count())))
-    // caller-must-unpersist contract on curateKept's cache (see
-    // semdedupKeepers): materialize the small result, release the corpus cache
+    // materialize the small result, then release curateKept's corpus cache
     val out = Dedup.keepAfterNearDup(kept, pairs)
       .select(col("doc_id"), col("lang_pred"), col("quality"))
       .orderBy(col("doc_id"))
@@ -539,14 +538,9 @@ object AnalyticsQueries {
       .orderBy(col("doc_id"), col("rank"))
   }
 
-  def bm25Search(spark: SparkSession, dir: String): DataFrame = {
-    val res = Search.bm25TopDocs(Tables(spark, dir).documents,
+  def bm25Search(spark: SparkSession, dir: String): DataFrame =
+    Search.bm25TopDocs(Tables(spark, dir).documents,
       queryTerms = Seq("data", "fast", "query"), k = 20)
-    // caller-must-unpersist contract (see semdedupKeepers)
-    val out = res.localCheckpoint(true)
-    res.unpersist()
-    out
-  }
 
   /** Same ranking served from the persisted inverted index: build once,
     * probe only the query terms' hash-bucket partitions. */
@@ -611,20 +605,12 @@ object AnalyticsQueries {
     val sparse = bm.select(col("doc_id").as("id"),
       row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy(col("score").desc, col("doc_id"))).as("rank"))
-    val res = Search.hybridRrf(dense, sparse, kConst = 60, topN = 20)
-    val out = res.localCheckpoint(true)
-    bm.unpersist()
-    out
+    Search.hybridRrf(dense, sparse, kConst = 60, topN = 20)
   }
 
   /** PMI collocations over the corpus (min bigram count 5, top 50). */
-  def textCollocations(spark: SparkSession, dir: String): DataFrame = {
-    val res = Search.collocations(Tables(spark, dir).documents, minCount = 5, k = 50)
-    // caller-must-unpersist contract (see semdedupKeepers)
-    val out = res.localCheckpoint(true)
-    res.unpersist()
-    out
-  }
+  def textCollocations(spark: SparkSession, dir: String): DataFrame =
+    Search.collocations(Tables(spark, dir).documents, minCount = 5, k = 50)
 
   /** BPE merge training over the corpus word-frequency table (4 merges). */
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =
@@ -783,13 +769,9 @@ object AnalyticsQueries {
 
   /** DSIR importance weights over the documents corpus, target = the
     * language gate's 'en' slice. */
-  def dsirWeights(spark: SparkSession, dir: String): DataFrame = {
-    val res = Search.dsirLogWeights(Tables(spark, dir).documents, dims = 64)
-    // caller-must-unpersist contract (see semdedupKeepers)
-    val out = res.orderBy(col("doc_id")).localCheckpoint(true)
-    res.unpersist()
-    out
-  }
+  def dsirWeights(spark: SparkSession, dir: String): DataFrame =
+    Search.dsirLogWeights(Tables(spark, dir).documents, dims = 64)
+      .orderBy(col("doc_id"))
 
   def textTokFreq(spark: SparkSession, dir: String): DataFrame =
     Sampling.tokenFrequencyStats(Tables(spark, dir).documents)
@@ -806,11 +788,8 @@ object AnalyticsQueries {
 
   def simPqAdc(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir).embeddings
-    val res = ProductQuantization.adcTopK(emb, emb.filter(col("vec_id") < 5), k = 5)
-    // caller-must-unpersist contract (see semdedupKeepers)
-    val out = res.orderBy(col("query_id"), col("rank")).localCheckpoint(true)
-    res.unpersist()
-    out
+    ProductQuantization.adcTopK(emb, emb.filter(col("vec_id") < 5), k = 5)
+      .orderBy(col("query_id"), col("rank"))
   }
 
   /** Transitive duplicate closure via a RECURSIVE CTE (Spark 4 SQL
@@ -903,28 +882,19 @@ object AnalyticsQueries {
     val emb = Tables(spark, dir).embeddings
     val nprobe = graft.analytics.ProductQuantization.scaledNprobe(
       graft.analytics.ProductQuantization.autoTrainN(emb.count()))
-    val res = ProductQuantization.ivfPqTopK(emb, emb.filter(col("vec_id") < 5), k = 5,
+    ProductQuantization.ivfPqTopK(emb, emb.filter(col("vec_id") < 5), k = 5,
       nprobe = nprobe)
-    // caller-must-unpersist contract (see semdedupKeepers)
-    val out = res.orderBy(col("query_id"), col("rank")).localCheckpoint(true)
-    res.unpersist()
-    out
+      .orderBy(col("query_id"), col("rank"))
   }
 
   /** SemDeDup: k-means-bucketed semantic dedup — near-dup search confined
     * to within-cluster pairs (same seeding/rounds as [[embedKmeans]], same
     * 0.4 cosine threshold as [[embedNearDup]], so the drop set is the
     * co-clustered subset of the exact all-pairs answer). */
-  def semdedupKeepers(spark: SparkSession, dir: String): DataFrame = {
-    val res = Clustering.semdedupKeepers(Tables(spark, dir).embeddings,
+  def semdedupKeepers(spark: SparkSession, dir: String): DataFrame =
+    Clustering.semdedupKeepers(Tables(spark, dir).embeddings,
         centroidStep = 40, rounds = 2, minCos = 0.4)
-    // honor the operator's caller-must-unpersist contract: hand back a
-    // lineage-free materialized copy (localCheckpoint blocks are GC-cleaned
-    // by the ContextCleaner) instead of leaking the cache for the session
-    val out = res.orderBy(col("vec_id")).localCheckpoint(true)
-    res.unpersist()
-    out
-  }
+      .orderBy(col("vec_id"))
 
   /** Temperature mixing over the lang strata (the non-uniform dimension of
     * this corpus — sources are uniform by construction). */
@@ -1137,32 +1107,18 @@ object AnalyticsQueries {
     Search.perceptronTrain(Tables(spark, dir).documents)
       .orderBy(col("bucket"))
 
-  def textLmScore(spark: SparkSession, dir: String): DataFrame = {
-    val res = Search.bigramSurprisal(Tables(spark, dir).documents)
-    // caller-must-unpersist contract (see semdedupKeepers): hand back a
-    // lineage-free copy, release the operator's cache
-    val out = res.orderBy(col("doc_id")).localCheckpoint(true)
-    res.unpersist()
-    out
-  }
+  def textLmScore(spark: SparkSession, dir: String): DataFrame =
+    Search.bigramSurprisal(Tables(spark, dir).documents).orderBy(col("doc_id"))
 
   /** Kneser-Ney-smoothed twin of [[textLmScore]]. */
-  def textKnScore(spark: SparkSession, dir: String): DataFrame = {
-    val res = Search.knSurprisal(Tables(spark, dir).documents)
-    val out = res.orderBy(col("doc_id")).localCheckpoint(true)
-    res.unpersist()
-    out
-  }
+  def textKnScore(spark: SparkSession, dir: String): DataFrame =
+    Search.knSurprisal(Tables(spark, dir).documents).orderBy(col("doc_id"))
 
   /** Held-out KN scoring: LM trained on the hash-bucket < 800 split scores
     * the ≥ 800 docs — every backoff branch (unseen bigram / head / word)
     * fires. */
-  def textKnHeldout(spark: SparkSession, dir: String): DataFrame = {
-    val res = Search.knHeldoutScore(Tables(spark, dir).documents)
-    val out = res.orderBy(col("doc_id")).localCheckpoint(true)
-    res.unpersist()
-    out
-  }
+  def textKnHeldout(spark: SparkSession, dir: String): DataFrame =
+    Search.knHeldoutScore(Tables(spark, dir).documents).orderBy(col("doc_id"))
 
   /** Linear quality-classifier inference: hashed features × broadcast
     * weight table → exact-int logit + keep decision. */

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Sink abstraction for the routed statement batches (SURVEY §2 O14).
@@ -89,82 +89,4 @@ final class ShardedParquetSink(baseDir: String, nShards: Int,
       .option("maxRecordsPerFile", maxRecordsPerFile.toLong)
       .partitionBy("shard")
       .parquet(s"$baseDir/$table")
-}
-
-/** Time-clustered parquet layout: range-partition on the cluster column,
-  * sort within partitions, write. Each output file then covers a TIGHT
-  * range of the cluster key, so parquet min/max statistics let any
-  * key-band predicate skip whole row groups at scan time — the
-  * sort-on-write data-layout optimization (Z-order's 1-D case). At 100 TB
-  * the one range shuffle at write time buys every downstream time-banded
-  * scan a proportional read reduction; `LayoutSpec` measures the pruning
-  * (clustered scan emits a fraction of the shuffled layout's rows for the
-  * same predicate, identical results). */
-final class ClusteredParquetSink(baseDir: String, partitions: Int,
-                                 clusterCol: String = "ts") extends BatchSink {
-  override def write(df: DataFrame, table: String): Unit =
-    df.repartitionByRange(partitions, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-      .write.mode(SaveMode.Append).parquet(s"$baseDir/$table")
-}
-
-/** Z-ORDERED parquet layout: scale two cluster columns onto a 2^bits grid,
-  * interleave their bits (Morton code), range-partition + sort by the
-  * z-value, write. Each output file then covers a tight 2-D TILE of the
-  * (colA, colB) space, so parquet min/max statistics prune row groups for
-  * band predicates on EITHER dimension — the multi-dimensional
-  * generalization of [[ClusteredParquetSink]] (whose sort key buys pruning
-  * on one dimension only; this is the layout move behind Delta/Iceberg
-  * Z-ORDER clustering). Cost at write: one tiny min/max stats pass + one
-  * range shuffle — the same bill as the 1-D sink. LayoutSpec measures the
-  * two-sided pruning against a 1-D control.
-  *
-  * The z-value is computed from SCALED copies of the columns (min/max
-  * normalized to the grid), so arbitrary numeric ranges interleave
-  * meaningfully; the helper columns are dropped before write. */
-final class ZOrderedParquetSink(baseDir: String, partitions: Int,
-                                colA: String, colB: String,
-                                bits: Int = 16) extends BatchSink {
-  override def write(df: DataFrame, table: String): Unit = {
-    val stats = df.agg(
-      min(col(colA)).cast("double"), max(col(colA)).cast("double"),
-      min(col(colB)).cast("double"), max(col(colB)).cast("double")).head()
-    // empty batch (or all-null cluster columns): the agg row is all nulls
-    // and the primitive getters would NPE — honor the BatchSink contract
-    // every other sink keeps (an empty write is a harmless no-op) instead
-    // of burning the caller's retries on a batch with nothing unwritable
-    if (stats.isNullAt(0) || stats.isNullAt(2)) {
-      if (!df.isEmpty)
-        df.write.mode(SaveMode.Append).parquet(s"$baseDir/$table")
-      return
-    }
-    val (minA, maxA, minB, maxB) =
-      (stats.getDouble(0), stats.getDouble(1), stats.getDouble(2), stats.getDouble(3))
-    val maxCell = (1L << bits) - 1
-    def scaled(c: String, lo: Double, hi: Double): Column =
-      if (hi <= lo) lit(0L)
-      else least(lit(maxCell), greatest(lit(0L),
-        round((col(c).cast("double") - lit(lo)) / (lit(hi - lo)) * maxCell).cast("long")))
-    val z = (0 until bits).map { i =>
-      shiftright(col("__za"), i).bitwiseAND(1) * lit(1L << (2 * i)) +
-        shiftright(col("__zb"), i).bitwiseAND(1) * lit(1L << (2 * i + 1))
-    }.reduce(_ + _)
-    df.withColumn("__za", scaled(colA, minA, maxA))
-      .withColumn("__zb", scaled(colB, minB, maxB))
-      .withColumn("__z", z)
-      .repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__za", "__zb", "__z")
-      .write.mode(SaveMode.Append).parquet(s"$baseDir/$table")
-  }
-}
-
-/** Test double: fails the first `failures` writes then delegates —
-  * exercises the O17 retry / O18 DLQ paths deterministically. */
-final class FlakySink(delegate: BatchSink, failures: Int) extends BatchSink {
-  private val remaining = new java.util.concurrent.atomic.AtomicInteger(failures)
-  override def write(df: DataFrame, table: String): Unit =
-    if (remaining.getAndDecrement() > 0)
-      throw new RuntimeException(s"injected sink failure ($table)")
-    else delegate.write(df, table)
 }

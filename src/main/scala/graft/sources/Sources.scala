@@ -21,52 +21,22 @@ import graft.pipeline.TenantConfig
   *
   * The connector jar is deployment-provided; tests and the local corpus use
   * the file-based equivalents below (identical downstream dataflow).
+  *
+  * O16's adaptive admission cap is not a source option here: the Mongo v10
+  * connector exposes no per-trigger row cap (the reference caps rows per
+  * flush at `src/main.rs:405-407`), so `Main.live` logs the suggested cap
+  * at each start. The file-stream analog admits by files and takes a cap
+  * as `maxFilesPerTrigger` (StreamingSpec's O16 test).
   */
 object Sources {
 
-  /** Per-format admission-cap option names — the probe table for O16's
-    * fallback (VERDICT r12 #8). A format absent here exposes no
-    * per-trigger cap in the shipped connector (Mongo v10: the reference
-    * caps rows per flush at `src/main.rs:405-407`, but no v10 read option
-    * matches) — the measured suggestion is then logged, not enforced. The
-    * FILE sources admit by files, not rows (the file-stream analog threads
-    * the cap into `maxFilesPerTrigger` — StreamingSpec). */
-  private val builtinAdmissionOptions: Map[String, String] = Map(
-    "parquet" -> "maxFilesPerTrigger",
-    "orc" -> "maxFilesPerTrigger",
-    "json" -> "maxFilesPerTrigger",
-    "csv" -> "maxFilesPerTrigger",
-    "text" -> "maxFilesPerTrigger")
-
-  /** The admission-cap option name for `format`, if the source supports
-    * one. Probed at SOURCE-BUILD time: the session conf key
-    * `spark.graft.admission.option.<format>` overrides/extends the builtin
-    * table, so a deployment whose connector version DOES expose a
-    * per-trigger cap (a future Mongo connector, a third-party source)
-    * registers it by configuration and the cap starts landing without a
-    * code change. */
-  def admissionOption(spark: SparkSession, format: String): Option[String] =
-    spark.conf.getOption(s"spark.graft.admission.option.$format")
-      .orElse(builtinAdmissionOptions.get(format))
-
-  /** The options map an admission cap resolves to for `format`: one entry
-    * when the source supports a cap, empty when it doesn't (OpsSpec proves
-    * both probe outcomes). */
-  def admissionOptions(spark: SparkSession, format: String, cap: Int): Map[String, String] =
-    admissionOption(spark, format).map(_ -> cap.toString).toMap
-
-  /** O1: unbounded per-tenant change stream. `admissionCap` is the O16
-    * suggestion: applied as a source option when the probe finds one for
-    * this connector, surfaced only in the start log otherwise. */
-  def mongoChangeStream(spark: SparkSession, t: TenantConfig,
-                        admissionCap: Option[Int] = None): DataFrame =
+  /** O1: unbounded per-tenant change stream. */
+  def mongoChangeStream(spark: SparkSession, t: TenantConfig): DataFrame =
     spark.readStream.format("mongodb")
       .option("spark.mongodb.connection.uri", t.mongoUri)
       .option("spark.mongodb.database", t.mongoDb)
       .option("spark.mongodb.collection", t.mongoCollection)
       .option("spark.mongodb.change.stream.publish.full.document.only", "true")
-      .options(admissionCap.fold(Map.empty[String, String])(
-        admissionOptions(spark, "mongodb", _)))
       .load()
 
   /** O2: bounded historical scan; the timestamp predicate is pushed to Mongo. */

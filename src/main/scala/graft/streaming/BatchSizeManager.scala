@@ -15,15 +15,10 @@ package graft.streaming
   * (re)start. Spark fixes source options for a query's lifetime, so the
   * cap takes effect at the next restart — supervision restarts and rolling
   * restarts, NOT mid-query (that niche is covered natively by AQE +
-  * trigger-time backpressure; SURVEY §4). The cap lands in the source's
-  * admission option where one exists (`maxFilesPerTrigger` on the
-  * file-stream analog — asserted end-to-end in StreamingSpec). Whether a
-  * source HAS such an option is probed at source-build time
-  * ([[graft.sources.Sources.admissionOption]]): the Mongo v10 connector as
-  * shipped exposes none, so there the measured suggestion is surfaced
-  * operationally (logged per restart) — a deployment whose connector adds
-  * one registers it via `spark.graft.admission.option.mongodb` and the cap
-  * is applied from the next restart (OpsSpec proves both probe outcomes).
+  * trigger-time backpressure; SURVEY §4). The Mongo v10 connector exposes
+  * no per-trigger row cap, so `Main.live` logs the suggestion at each
+  * restart; the file-stream analog takes a cap as `maxFilesPerTrigger`
+  * (asserted end-to-end in StreamingSpec).
   *
   * Reference defaults: live `(initial, 1, 10000, 5000 rec/s)`; historical
   * `(initial, 5000, 8000, 10000 rec/s)` (`src/main.rs:350-351`,

@@ -16,8 +16,9 @@ import graft.sinks.BatchSink
   *     plus the source's rows-per-trigger cap (O15).
   *   - adaptive batch sizing (O16, `src/main.rs:192-233`): `Main.live`
   *     feeds each tenant query's measured throughput into a
-  *     [[BatchSizeManager]] through an [[AdmissionListener]], and reads its
-  *     suggested cap into the source's admission option at every (re)start.
+  *     [[BatchSizeManager]] through an [[AdmissionListener]], and logs its
+  *     suggested cap at every (re)start (the Mongo v10 connector has no
+  *     per-trigger cap option to apply it to).
   *   - per-batch insert retry ×5 with doubling backoff from 1000 ms (O17,
   *     consts `src/main.rs:40-41`).
   *   - retry exhaustion → DLQ (O18), replayed on a 60 s cadence (O19).

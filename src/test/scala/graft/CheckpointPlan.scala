@@ -1,0 +1,50 @@
+package graft
+
+import java.util.UUID
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** The executed plan of the `localCheckpoint` action that materialized an
+  * operator's result. The returned frame is lineage-free, so the plan that
+  * did the work is only visible to a [[QueryExecutionListener]].
+  *
+  * The operator's input carries a uniquely named column (pruned by the
+  * optimizer, still present in the analyzed plan), so an event from any
+  * other query on the shared session never matches; the result schema
+  * picks the operator's final checkpoint over any intermediate one. */
+object CheckpointPlan {
+
+  def of(input: DataFrame)(op: DataFrame => DataFrame): (DataFrame, SparkPlan) = {
+    val tag = "__plan_" + UUID.randomUUID().toString.replace("-", "")
+    val seen = new LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint" &&
+            qe.analyzed.find(_.output.exists(_.name == tag)).isDefined) seen.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val spark = input.sparkSession
+    spark.listenerManager.register(listener)
+    try {
+      val out = op(input.withColumn(tag, lit(1)))
+      // listener events arrive asynchronously; wait for the final checkpoint
+      var plan: Option[SparkPlan] = None
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+      while (plan.isEmpty && System.nanoTime() < deadline) {
+        Option(seen.poll(1, TimeUnit.SECONDS))
+          .filter(_.analyzed.schema == out.schema)
+          .foreach(qe => plan = Some(qe.executedPlan match {
+            case a: AdaptiveSparkPlanExec => a.executedPlan
+            case p => p
+          }))
+      }
+      assert(plan.isDefined, "no localCheckpoint action over the tagged input was observed")
+      (out, plan.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
+}

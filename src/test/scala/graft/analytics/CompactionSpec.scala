@@ -397,7 +397,6 @@ class CompactionSpec extends SparkSpec {
     SearchIndex.build(docs, siDir)
     val oneShot = Search.bm25TopDocs(docs, terms, k = 20)
     val want = oneShot.orderBy(oneShot.columns.map(col): _*).collect().toSeq.map(_.toSeq)
-    oneShot.unpersist(): Unit
     val si = SearchIndex.query(spark, siDir, terms, k = 20)
     assert(si.orderBy(si.columns.map(col): _*).collect().toSeq.map(_.toSeq) == want)
 
@@ -424,8 +423,7 @@ class CompactionSpec extends SparkSpec {
     val filtered = docs.filter(col("doc_id") =!= victim)
     def want(): Seq[Seq[Any]] = {
       val o = Search.bm25TopDocs(filtered, terms, k = 20)
-      val w = o.orderBy(o.columns.map(col): _*).collect().toSeq.map(_.toSeq)
-      o.unpersist(); w
+      o.orderBy(o.columns.map(col): _*).collect().toSeq.map(_.toSeq)
     }
     def got(): Seq[Seq[Any]] = {
       val q = SearchIndex.query(spark, dir, terms, k = 20)
@@ -443,7 +441,6 @@ class CompactionSpec extends SparkSpec {
     SearchIndex.append(docs.filter(col("doc_id") === victim), dir)
     val o2 = Search.bm25TopDocs(docs, terms, k = 20)
     val full = o2.orderBy(o2.columns.map(col): _*).collect().toSeq.map(_.toSeq)
-    o2.unpersist(): Unit
     assert(got() == full)
   }
 

@@ -178,7 +178,6 @@ class CurationGatesSpec extends SparkSpec {
     assert(dropped.nonEmpty,
       "semdedup found no co-clustered near-dups; the subset assertion is vacuous")
     assert(kept.count() == all.size - dropped.size)
-    kept.unpersist(): Unit
   }
 
   // -------------------------------------------------------------- spans

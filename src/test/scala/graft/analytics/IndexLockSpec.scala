@@ -82,7 +82,6 @@ class IndexLockSpec extends SparkSpec {
     val after = rows(SearchIndex.query(spark, dir, terms, k = 20))
     val oneShot = Search.bm25TopDocs(docs, terms, k = 20)
     val want = rows(oneShot)
-    oneShot.unpersist(): Unit
     assert(after == want)
   }
 

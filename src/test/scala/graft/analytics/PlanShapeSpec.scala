@@ -36,22 +36,17 @@ class PlanShapeSpec extends SparkSpec {
 
   test("bm25 scoring pass is narrow: no explode, no join, one final top-k") {
     val docs = graft.Tables(spark, sf("sf0.001")).documents
-    val df = Search.bm25TopDocs(docs, Seq("data", "fast", "query"), k = 20)
+    // the result comes back checkpointed — the shape under test is the
+    // plan of the localCheckpoint action (the scoring DAG that materialized it)
+    val (df, scoring) = graft.CheckpointPlan.of(docs)(
+      Search.bm25TopDocs(_, Seq("data", "fast", "query"), k = 20))
     assert(df.collect().length == 20)
-    // the result comes back persisted — the shape under test is the plan
-    // INSIDE its InMemoryRelation (the scoring DAG that was materialized)
-    val cached = allNodes(finalPlan(df)).collectFirst {
-      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        s.relation.cachedPlan
-    }
-    assert(cached.isDefined, finalPlan(df).toString)
-    val nodes = allNodes(cached.get)
+    val nodes = allNodes(scoring)
     // scoring never joins or explodes the corpus...
-    assert(!nodes.exists(_.nodeName.contains("Generate")), cached.get.toString)
-    assert(!nodes.exists(_.nodeName.contains("Join")), cached.get.toString)
+    assert(!nodes.exists(_.nodeName.contains("Generate")), scoring.toString)
+    assert(!nodes.exists(_.nodeName.contains("Join")), scoring.toString)
     // ...and the global top-k is TakeOrderedAndProject, not a full sort
-    assert(nodes.exists(_.nodeName.contains("TakeOrderedAndProject")), cached.get.toString)
-    df.unpersist(): Unit
+    assert(nodes.exists(_.nodeName.contains("TakeOrderedAndProject")), scoring.toString)
   }
 
   test("bm25 reads the corpus exactly once (stats + scoring share the cached counters)") {
@@ -68,8 +63,7 @@ class PlanShapeSpec extends SparkSpec {
     val onePass = scans.value
     assert(onePass > 0)
     scans.reset()
-    Search.bm25TopDocs(docs, Seq("data", "fast", "query"), k = 20)
-      .unpersist(): Unit
+    Search.bm25TopDocs(docs, Seq("data", "fast", "query"), k = 20): Unit
     // stats action + scoring scan on an uncached source would be 2× —
     // the persisted per-doc counters make it exactly one pass
     assert(scans.value == onePass,
@@ -90,7 +84,7 @@ class PlanShapeSpec extends SparkSpec {
     val onePass = scans.value
     assert(onePass > 0)
     scans.reset()
-    Search.bigramSurprisal(docs).unpersist(): Unit
+    Search.bigramSurprisal(docs): Unit
     // bigrams (c2/c1/scoring) and the vocabulary all derive from the
     // persisted token frame — an uncached formulation would be 4×
     assert(scans.value == onePass,
@@ -109,7 +103,7 @@ class PlanShapeSpec extends SparkSpec {
     val onePass = scans.value
     assert(onePass > 0)
     scans.reset()
-    Search.knSurprisal(docs).unpersist(): Unit
+    Search.knSurprisal(docs): Unit
     // all five model tables (c2/c1+n1p/n1m/Nt) and the scoring join derive
     // from the persisted token frame — an uncached formulation would be 5×
     assert(scans.value == onePass,
@@ -128,7 +122,7 @@ class PlanShapeSpec extends SparkSpec {
     val onePass = scans.value
     assert(onePass > 0)
     scans.reset()
-    Search.knHeldoutScore(docs).unpersist(): Unit
+    Search.knHeldoutScore(docs): Unit
     // train aggregates (c2/c1+n1p/n1m/Z incl. the vocab leg) AND the
     // held-out scoring stream all derive from the one persisted
     // (doc_id, bkt, tokens) frame — an uncached formulation would be 6×

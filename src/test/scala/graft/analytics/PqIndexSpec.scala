@@ -35,7 +35,6 @@ class PqIndexSpec extends SparkSpec {
     val fromIndex = rows(PqIndex.query(spark, dir, queries, k = 5))
     val oneShot = ProductQuantization.ivfPqTopK(emb, queries, k = 5)
     val want = rows(oneShot)
-    oneShot.unpersist(): Unit
     assert(fromIndex.nonEmpty)
     assert(fromIndex == want)
   }
@@ -319,7 +318,6 @@ class PqIndexSpec extends SparkSpec {
     val oneShot = ProductQuantization.ivfPqTopK(emb, queries, k = 5,
       nprobe = nprobe, trainSampleTarget = target)
     val want = rows(oneShot)
-    oneShot.unpersist(): Unit
     assert(fromIndex.nonEmpty && fromIndex == want)
   }
 }

@@ -48,7 +48,6 @@ class RetrievalSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang")
     val out = Search.dsirLogWeights(docs, dims = 64)
     val rows = out.orderBy("doc_id").collect()
-    out.unpersist()
     assert(rows.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L, 2L, 3L, 4L))
     val keep = rows.map(r => r.getAs[Long]("doc_id") -> r.getAs[Int]("keep")).toMap
     // target-like docs keep; raw-only (never in target) drop
@@ -67,7 +66,6 @@ class RetrievalSpec extends SparkSpec {
     val df = docs.toDF("doc_id", "text")
     val out = Search.collocations(df, minCount = 5, k = 10)
     val rows = out.collect()
-    out.unpersist()
     val pairs = rows.map(r => (r.getAs[String]("w1"), r.getAs[String]("w2"))).toSeq
     // hapax bigrams ("rare gem", "gem new") never surface
     assert(!pairs.exists { case (a, b) => a == "rare" || b == "gem" })
@@ -124,7 +122,7 @@ class RetrievalSpec extends SparkSpec {
     val onePass = scans.value
     assert(onePass > 0)
     scans.reset()
-    Search.collocations(docs).unpersist(): Unit
+    Search.collocations(docs): Unit
     // c2, the unigram table, and both totals all derive from the persisted
     // token frame — an uncached formulation would be 4×
     assert(scans.value == onePass,
@@ -143,7 +141,7 @@ class RetrievalSpec extends SparkSpec {
     val onePass = scans.value
     assert(onePass > 0)
     scans.reset()
-    Search.dsirLogWeights(docs).unpersist(): Unit
+    Search.dsirLogWeights(docs): Unit
     // bucket counts (ct/cr), totals, and per-doc scoring all derive from
     // the persisted feature frame — an uncached formulation would be 3×
     assert(scans.value == onePass,

@@ -34,7 +34,6 @@ class SearchIndexSpec extends SparkSpec {
     val fromIndex = rows(SearchIndex.query(spark, dir, terms, k = 20))
     val oneShot = Search.bm25TopDocs(docs, terms, k = 20)
     val want = rows(oneShot)
-    oneShot.unpersist(): Unit
     assert(fromIndex.nonEmpty)
     assert(fromIndex == want)
   }
@@ -51,7 +50,6 @@ class SearchIndexSpec extends SparkSpec {
     val fromIndex = rows(SearchIndex.query(spark, dir, terms, k = 20))
     val oneShot = Search.bm25TopDocs(docs, terms, k = 20)
     val want = rows(oneShot)
-    oneShot.unpersist(): Unit
     assert(fromIndex.nonEmpty)
     assert(fromIndex == want)
   }
@@ -76,7 +74,6 @@ class SearchIndexSpec extends SparkSpec {
     val got = rows(SearchIndex.query(spark, dir, terms, k = 20))
     val oneShot = Search.bm25TopDocs(docs.filter(col("doc_id") % 5 =!= 2), terms, k = 20)
     val want = rows(oneShot)
-    oneShot.unpersist(): Unit
     assert(got.nonEmpty && got == want,
       "forget must adjust df/n/dl_sum exactly, not just hide postings")
     // idempotence: re-forgetting the same ids (plus unknown ids) must not
@@ -145,7 +142,6 @@ class SearchIndexSpec extends SparkSpec {
     val got = rows(SearchIndex.query(spark, dir, terms, k = 20))
     val oneShot = Search.bm25TopDocs(docs, terms, k = 20)
     val want = rows(oneShot)
-    oneShot.unpersist(): Unit
     assert(got == want)
   }
 
@@ -168,7 +164,6 @@ class SearchIndexSpec extends SparkSpec {
     val got = rows(SearchIndex.query(spark, dir, terms, k = 20))
     val oneShot = Search.bm25TopDocs(docs.filter(col("doc_id") % 5 =!= 2), terms, k = 20)
     val want = rows(oneShot)
-    oneShot.unpersist(): Unit
     assert(got.nonEmpty && got == want,
       "a postings-blind forget must still produce exact df/n/dl_sum deltas")
   }
@@ -325,7 +320,7 @@ class SearchIndexSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/tombstones").exists(),
       "tombstones covering still-present postings must be retained")
     val oneShot1 = Search.bm25TopDocs(docs.filter(col("doc_id") =!= victim), terms, k = 20)
-    val want1 = rows(oneShot1); oneShot1.unpersist(): Unit
+    val want1 = rows(oneShot1)
     assert(rows(SearchIndex.query(spark, dir, terms, k = 20)) == want1)
     // a second, repeated compact must not churn the postings either
     SearchIndex.compact(spark, dir)
@@ -342,7 +337,7 @@ class SearchIndexSpec extends SparkSpec {
       "an above-threshold compact must physically remove the forgotten docs")
     val keep = docs.filter(col("doc_id") % 2 =!= 0 && col("doc_id") =!= victim)
     val oneShot2 = Search.bm25TopDocs(keep, terms, k = 20)
-    val want2 = rows(oneShot2); oneShot2.unpersist(): Unit
+    val want2 = rows(oneShot2)
     assert(rows(SearchIndex.query(spark, dir, terms, k = 20)) == want2)
   }
 
@@ -371,7 +366,7 @@ class SearchIndexSpec extends SparkSpec {
     // a rebuild restores service
     SearchIndex.build(docs, dir)
     val oneShot = Search.bm25TopDocs(docs, terms, k = 20)
-    val want = rows(oneShot); oneShot.unpersist(): Unit
+    val want = rows(oneShot)
     assert(rows(SearchIndex.query(spark, dir, terms, k = 20)) == want)
   }
 
@@ -441,7 +436,7 @@ class SearchIndexSpec extends SparkSpec {
     SearchIndex.forget(spark, dir, victims)
     val terms = Seq("data", "fast", "query")
     val oneShot = Search.bm25TopDocs(docs.filter(col("doc_id") % 5 =!= 2), terms, k = 20)
-    val want = rows(oneShot); oneShot.unpersist(): Unit
+    val want = rows(oneShot)
     assert(rows(SearchIndex.query(spark, dir, terms, k = 20)) == want)
     SearchIndex.compact(spark, dir, minShare = 0.0)
     assert(rows(SearchIndex.query(spark, dir, terms, k = 20)) == want)
@@ -473,7 +468,7 @@ class SearchIndexSpec extends SparkSpec {
     val victims = docs.filter(col("doc_id") % 5 === 2).select("doc_id")
     SearchIndex.forget(spark, dir, victims)
     val oneShot = Search.bm25TopDocs(docs.filter(col("doc_id") % 5 =!= 2), terms, k = 20)
-    val want = rows(oneShot); oneShot.unpersist(): Unit
+    val want = rows(oneShot)
     assert(rows(SearchIndex.query(spark, dir, terms, k = 20)) == want)
     SearchIndex.compact(spark, dir, minShare = 0.0)
     assert(rows(SearchIndex.query(spark, dir, terms, k = 20)) == want)
@@ -710,7 +705,7 @@ class SearchIndexSpec extends SparkSpec {
       "once every residual bucket crossed the threshold the tombstones must clear")
     val keep = docs.filter(col("doc_id") >= 7L)
     val oneShot = Search.bm25TopDocs(keep, Seq(com1), k = 10)
-    val want = rows(oneShot); oneShot.unpersist(): Unit
+    val want = rows(oneShot)
     assert(rows(SearchIndex.query(spark, dir, Seq(com1), k = 10)) == want)
   }
 

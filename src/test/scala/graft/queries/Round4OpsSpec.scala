@@ -73,14 +73,12 @@ class Round4OpsSpec extends SparkSpec {
     val scored = Search.bigramSurprisal(docs)
     val res = scored.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("avg_surprisal")).toMap
-    scored.unpersist(): Unit
     assert(res(1L) < res(99L))
     assert(res.values.forall(_ > 0.0))
     // a one-token doc has no bigrams and no row
     val scored2 = Search.bigramSurprisal(
       (common ++ Seq((100L, "solo"))).toDF("doc_id", "text"))
     val res2 = scored2.collect()
-    scored2.unpersist(): Unit
     assert(!res2.map(_.getAs[Long]("doc_id")).contains(100L))
   }
 
@@ -98,7 +96,6 @@ class Round4OpsSpec extends SparkSpec {
     val scored = Search.knSurprisal(docs)
     val res = scored.collect().map(r => r.getAs[Long]("doc_id") ->
       (r.getAs[Long]("n_bigrams"), r.getAs[Double]("avg_kn_surprisal"))).toMap
-    scored.unpersist(): Unit
     // d1: (405465 + 1163151 + 1568616) / 3 / 1e6 = 1.045744 -> 1.0457
     // d2: (405465 + 693147) / 2 / 1e6 = 0.549306 -> 0.5493
     assert(res == Map(1L -> ((3L, 1.0457)), 2L -> ((2L, 0.5493))))
@@ -115,7 +112,6 @@ class Round4OpsSpec extends SparkSpec {
     val scored2 = Search.knSurprisal((common ++ novel).toDF("doc_id", "text"))
     val res2 = scored2.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("avg_kn_surprisal")).toMap
-    scored2.unpersist(): Unit
     assert(res2(1L) < res2(99L) && res2.values.forall(_ > 0.0))
   }
 
@@ -136,7 +132,6 @@ class Round4OpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val scored = Search.knHeldoutScore(docs)
     val res = scored.collect()
-    scored.unpersist(): Unit
     assert(res.length == 1) // only the held-out doc is scored
     val r = res.head
     assert(r.getAs[Long]("doc_id") == 2L)
@@ -216,31 +211,29 @@ class Round4OpsSpec extends SparkSpec {
   test("ADC/IVF-PQ results are persisted: caller actions don't re-run the subspace Lloyd") {
     import graft.analytics.ProductQuantization
     val emb = graft.Tables(spark, d).embeddings
-    // Deterministic persist gate. A global SparkListener stage count races
-    // concurrent suites on the shared SparkContext (it failed one judge run
-    // and passed the next); the contract itself is plan-visible — the
-    // operator returns an already-materialized cached frame, so a fresh
-    // plan over it bottoms out in InMemoryTableScan leaves ONLY: no parquet
+    // Deterministic materialization gate. A global SparkListener stage
+    // count races concurrent suites on the shared SparkContext (it failed
+    // one run and passed the next); the contract itself is plan-visible —
+    // the operator returns an eager localCheckpoint, so a fresh plan over
+    // it bottoms out in checkpoint RDD-scan leaves ONLY: no parquet
     // re-scan, no Lloyd lineage, regardless of what else the JVM is running.
     def assertCacheOnly(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
-      assert(df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       val plan = df.queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
         case p => p
       }
       val leaves = plan.collectLeaves()
       assert(leaves.nonEmpty && leaves.forall(
-        _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]),
-        s"$what: expected cache-only leaves, got ${leaves.map(_.nodeName).mkString(", ")}\n$plan")
+        _.isInstanceOf[org.apache.spark.sql.execution.RDDScanExec]),
+        s"$what: expected checkpoint-only leaves, got ${leaves.map(_.nodeName).mkString(", ")}\n$plan")
     }
     val out = ProductQuantization.adcTopK(emb, emb.filter(col("vec_id") < 3), k = 3)
     assertCacheOnly(out, "adcTopK")
     assert(out.count() == 9)
-    out.unpersist(): Unit
 
     val ivf = ProductQuantization.ivfPqTopK(emb, emb.filter(col("vec_id") < 3), k = 3)
     assertCacheOnly(ivf, "ivfPqTopK")
-    ivf.unpersist(): Unit
   }
 
   test("q34_interval_merge: spans disjoint and sorted, event mass conserved") {

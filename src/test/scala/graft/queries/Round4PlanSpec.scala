@@ -78,27 +78,32 @@ class Round4PlanSpec extends SparkSpec {
   }
 
   test("PQ assignment is a compiled projection: no join, no shuffle of the corpus for it") {
-    val df = graft.analytics.ProductQuantization
-      .pqCodes(graft.Tables(spark, d).embeddings)
+    // the codes come back checkpointed: the assignment lives in the plan of
+    // the localCheckpoint action that materialized them
+    val (df, codes) = graft.CheckpointPlan.of(graft.Tables(spark, d).embeddings)(
+      graft.analytics.ProductQuantization.pqAssign(_))
     assert(df.collect().nonEmpty)
     // r18: the codebook argmin is graft_nearest_book_code over a broadcast
     // centroid table — the pre-r18 shape was a BroadcastHashJoin exploding
     // |subs| × k rows through a min_by aggregate; now NO join (of any
     // strategy) and NO exchange stands between the slice scan and the codes
-    val nodes = allNodes(finalPlan(df))
-    assert(nodes.exists(_.toString.contains("graft_nearest_book_code")),
-      finalPlan(df).toString)
-    assert(!nodes.exists(_.nodeName.contains("Join")), finalPlan(df).toString)
-    assert(!nodes.exists(_.nodeName.contains("Exchange")), finalPlan(df).toString)
-    assertNoNestedLoop(df)
+    val nodes = allNodes(codes)
+    assert(nodes.exists(_.toString.contains("graft_nearest_book_code")), codes.toString)
+    assert(!nodes.exists(_.nodeName.contains("Join")), codes.toString)
+    assert(!nodes.exists(_.nodeName.contains("Exchange")), codes.toString)
+    assert(!nodes.exists(n => n.nodeName.contains("BroadcastNestedLoop") ||
+      n.nodeName.contains("CartesianProduct")), codes.toString)
   }
 
   test("bigram LM scoring: count-table joins are equi, no shuffled cartesian") {
-    val df = graft.analytics.Search
-      .bigramSurprisal(graft.Tables(spark, d).documents)
+    // the result comes back checkpointed: the scoring joins live in the
+    // plan of the localCheckpoint action that materialized it
+    val (df, scoring) = graft.CheckpointPlan.of(graft.Tables(spark, d).documents)(
+      graft.analytics.Search.bigramSurprisal(_))
     assert(df.collect().nonEmpty)
-    assertNoCartesian(df) // allNodes descends into the persisted result's cachedPlan
-    df.unpersist(): Unit
+    val nodes = allNodes(scoring)
+    assert(nodes.exists(_.nodeName.contains("Join")), scoring.toString)
+    assert(!nodes.exists(_.nodeName.contains("CartesianProduct")), scoring.toString)
   }
 
   test("prefix dedup self-join is hash-keyed on the digest") {

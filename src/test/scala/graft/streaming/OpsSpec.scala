@@ -26,30 +26,6 @@ class OpsSpec extends AnyFunSuite {
     assert(BatchSizeManager.historical(1000).current == 5000) // clamped up to min
   }
 
-  test("admission-cap probe: lands as a source option when supported, stays log-only otherwise (O16)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").getOrCreate()
-    import graft.sources.Sources
-    // file sources admit by files — builtin probe hit
-    assert(Sources.admissionOption(spark, "parquet").contains("maxFilesPerTrigger"))
-    assert(Sources.admissionOptions(spark, "parquet", 7) == Map("maxFilesPerTrigger" -> "7"))
-    // Mongo v10 as shipped: no per-trigger cap option -> empty map, the
-    // suggestion is logged only
-    assert(Sources.admissionOption(spark, "mongodb").isEmpty)
-    assert(Sources.admissionOptions(spark, "mongodb", 512).isEmpty)
-    // a deployment whose connector version adds a cap registers it by conf
-    // and the cap lands without a code change
-    spark.conf.set("spark.graft.admission.option.mongodb", "maxBatchSize")
-    try {
-      assert(Sources.admissionOptions(spark, "mongodb", 512) == Map("maxBatchSize" -> "512"))
-    } finally spark.conf.unset("spark.graft.admission.option.mongodb")
-    // and the conf can also OVERRIDE a builtin mapping
-    spark.conf.set("spark.graft.admission.option.parquet", "maxFilesPerTrigger2")
-    try {
-      assert(Sources.admissionOption(spark, "parquet").contains("maxFilesPerTrigger2"))
-    } finally spark.conf.unset("spark.graft.admission.option.parquet")
-  }
-
   test("InvalidationServer: invalidate command refreshes; unknown rejected (O22)") {
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)
     val srv = new InvalidationServer(0, () => { hits.incrementAndGet(): Unit })
