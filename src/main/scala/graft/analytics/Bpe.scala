@@ -48,7 +48,7 @@ object Bpe {
     * block set (spec-pinned via sc.getPersistentRDDs in BpeSpec). Safe
     * only once nothing will read the frame again -- a later action on a
     * released checkpoint has no lineage to recompute from. */
-  private[analytics] def releaseCheckpoint(df: DataFrame): Unit =
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(false): Unit)

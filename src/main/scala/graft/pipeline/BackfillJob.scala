@@ -55,12 +55,8 @@ object BackfillJob {
                      dim: () => DataFrame,
                      policy: RetryPolicy = RetryPolicy()): Result = {
     validateRange(start, end): Unit
-    statements.persist()
-    try {
-      val transformed = statements.count()
-      val res = StreamingPipeline.processBatch(statements, dim(), sink, tables, dlq, policy)
-      Result(transformed, res.written, 0, res.deadLettered)
-    } finally { statements.unpersist(): Unit }
+    val res = StreamingPipeline.processBatch(statements, dim(), sink, tables, dlq, policy)
+    Result(res.routed, res.written, 0, res.deadLettered)
   }
 
   /** Run the backfill over an EVENTS-schema source DataFrame (ts /
@@ -83,15 +79,12 @@ object BackfillJob {
       .persist()
     try {
       val input = bounded.count() // O3: reference's count_documents progress total
-      val statements = EventStatements.statements(bounded).persist()
-      try {
-        val transformed = statements.count()
-        val res = StreamingPipeline.processBatch(
-          statements, EventStatements.optOutHashes(bounded), sink, tables, dlq, policy)
-        // `written` counts rows the SINK accepted; dead-lettered rows are
-        // reported separately (not silently claimed as written)
-        Result(input, res.written, input - transformed, res.deadLettered)
-      } finally { statements.unpersist(): Unit }
+      // the transformed total comes from processBatch's one routing pass
+      val res = StreamingPipeline.processBatch(EventStatements.statements(bounded),
+        EventStatements.optOutHashes(bounded), sink, tables, dlq, policy)
+      // `written` counts rows the SINK accepted; dead-lettered rows are
+      // reported separately (not silently claimed as written)
+      Result(input, res.written, input - res.routed, res.deadLettered)
     } finally { bounded.unpersist(): Unit }
   }
 }

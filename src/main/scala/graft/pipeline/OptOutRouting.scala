@@ -1,7 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
+import org.apache.spark.sql.catalyst.plans.ExistenceJoin
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, JoinHint}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftBridge
+import org.apache.spark.sql.types.BooleanType
 
 /** Opt-out dimension handling + routing (SURVEY §2 O11/O12/O13).
   *
@@ -14,11 +19,13 @@ import org.apache.spark.sql.functions._
   * Spark-first mapping — the HashSet probe IS a broadcast hash join:
   *   - O12 argmax → `max_by` aggregation (one shuffle over the *dimension*,
   *     which is tiny; never over the fact stream).
-  *   - O11 membership → broadcast LEFT OUTER hash join + null-check flag.
+  *   - O11 membership → a broadcast EXISTENCE join: the dimension is
+  *     broadcast as-is (no `distinct`, so no shuffle) and each record gets
+  *     a boolean `is_opt_out`, like `HashSet::contains`. An existence join
+  *     never fans a record out, so duplicate dimension hashes are harmless.
   *     At 100 TB of facts this stays shuffle-free: the dimension (opted-out
   *     users) broadcasts to every executor; the fact side streams through.
-  *   - O13 split → two filters on the flag (callers should cache/persist the
-  *     routed batch before writing both sinks so the scan isn't recomputed).
+  *   - O13 split → two filters on the flag.
   */
 object OptOutRouting {
 
@@ -35,13 +42,19 @@ object OptOutRouting {
     dim.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** O11 — tag each record with opt-out membership via a broadcast join
-    * against the (already argmax-deduped) opt-out hash set. */
+  /** O11 — the records' columns plus a non-null boolean `is_opt_out`: true
+    * iff the record's hash is in the opt-out set. A null record hash reads
+    * false; null dimension hashes never match. Built as a Catalyst
+    * `ExistenceJoin` with a BROADCAST hint on the dimension, so the probe
+    * costs one broadcast and the records never shuffle. */
   def withOptOutFlag(records: DataFrame, hashCol: String, optOutHashes: DataFrame, optHashCol: String): DataFrame = {
-    val dim = optOutHashes.select(col(optHashCol).as("__opt_out_hash")).distinct()
-    records.join(broadcast(dim), records(hashCol) === col("__opt_out_hash"), "left_outer")
-      .withColumn("is_opt_out", col("__opt_out_hash").isNotNull)
-      .drop("__opt_out_hash")
+    val left = records.queryExecution.analyzed
+    val right = optOutHashes.select(col(optHashCol).as("__opt_out_hash")).queryExecution.analyzed
+    val hash = left.output.find(_.name == hashCol).getOrElse(
+      throw new IllegalArgumentException(s"column $hashCol not found in ${left.output.map(_.name)}"))
+    val isOptOut = AttributeReference("is_opt_out", BooleanType, nullable = false)()
+    GraftBridge.ofRows(records.sparkSession, Join(left, right, ExistenceJoin(isOptOut),
+      Some(EqualTo(hash, right.output.head)), JoinHint(None, Some(HintInfo(strategy = Some(BROADCAST))))))
   }
 
   /** O13 — split by the O11 flag into (main, optOut). */

@@ -1,10 +1,15 @@
 package graft.streaming
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.analytics.Bpe
 import graft.pipeline.{EventStatements, OptOutRouting}
 import graft.sinks.BatchSink
 
@@ -89,37 +94,63 @@ object StreamingPipeline {
     false
   }
 
-  /** Per-micro-batch outcome (feeds backfill reporting + metrics). */
-  final case class BatchResult(written: Long, deadLettered: Long)
+  /** Per-micro-batch outcome (feeds backfill reporting + metrics):
+    * rows the sink accepted, rows dead-lettered, and every routed row. */
+  final case class BatchResult(written: Long, deadLettered: Long, routed: Long)
+
+  /** Rows per writer task: the reference's live max insert batch
+    * (`src/main.rs:39`, SURVEY §O16). */
+  private val RowsPerWriteTask = 10000L
+
+  /** How long the split counts may take to arrive after the routing pass;
+    * they come through the session's listener bus, normally within
+    * milliseconds. Past this, they are counted off the checkpoint. */
+  private val CountsWait = 10.seconds
 
   /** One micro-batch: route against the freshly resolved opt-out dimension,
-    * split, write both tables with retry, dead-letter on exhaustion. The
-    * ROUTED frame is persisted: the broadcast join (and the dimProvider's
-    * dimension query, often a remote read) must run once per batch, not once
-    * per downstream action — and both splits must see the same dimension
-    * snapshot. */
+    * split, write both tables with retry, dead-letter on exhaustion. It
+    * costs one broadcast of the dimension (the O11 existence probe), one
+    * observed routing pass that keeps the routed rows and returns both
+    * split counts, and one write per non-empty split, coalesced to one
+    * writer task per [[RowsPerWriteTask]] rows (`coalesce` only merges
+    * partitions, so a large backfill batch keeps its parallelism).
+    *
+    * The pass is an eager `localCheckpoint`, not `persist` plus an action:
+    * adaptive execution materializes a persisted frame's first scan in a
+    * job of its own, so that would cost two jobs. Keeping the rows means
+    * the dimProvider's dimension query (often a remote read) and the join
+    * run once per batch, and both splits see the same dimension snapshot.
+    * The kept rows have no lineage: if an executor holding them is lost,
+    * the batch fails and replays from its uncommitted source offsets. */
   def processBatch(batch: DataFrame, dim: DataFrame, sink: BatchSink, tables: SinkTables,
                    dlq: Dlq, policy: RetryPolicy): BatchResult = {
-    var written = 0L
-    var dead = 0L
-    // no up-front isEmpty probe: every extra action on the un-persisted
-    // batch re-executes the streaming plan (inflating observe() counters);
-    // the per-split counts below already handle the empty case
-    val routed = OptOutRouting.withOptOutFlag(batch, "hashed_id", dim, "hashed_id").persist()
+    val counts = Seq(count_if(col("is_opt_out")).as("opt_out"), count(lit(1)).as("rows"))
+    // a fresh Observation per batch: one serves exactly one Dataset
+    val obs = Observation()
+    // the one pass over the batch; a failure here throws before any wait
+    val routed = OptOutRouting.withOptOutFlag(batch, "hashed_id", dim, "hashed_id")
+      .observe(obs, counts.head, counts.tail: _*)
+      .localCheckpoint()
     try {
+      val metrics =
+        try Await.result(obs.future, CountsWait)
+        catch { case _: TimeoutException => routed.agg(counts.head, counts.tail: _*).head() }
+      val (nOpt, total) = (metrics.getLong(0), metrics.getLong(1))
       val (main, opt) = OptOutRouting.split(routed)
-      Seq((main, tables.main, false), (opt, tables.optOut, true)).foreach {
-        case (part, table, isOptOut) =>
-          val n = part.count()
+      var written = 0L
+      var dead = 0L
+      Seq((main, total - nOpt, tables.main, false), (opt, nOpt, tables.optOut, true)).foreach {
+        case (part, n, table, isOptOut) =>
           // skip fully-empty splits: nothing to insert, and an empty DLQ
           // batch would carry no routing metadata row to replay
           if (n > 0) {
-            if (writeWithRetry(sink, part, s"${tables.db}.$table", policy)) written += n
-            else { dlq.append(part, tables.tenant, tables.db, table, isOptOut); dead += n }
+            val sized = part.coalesce(((n + RowsPerWriteTask - 1) / RowsPerWriteTask).toInt)
+            if (writeWithRetry(sink, sized, s"${tables.db}.$table", policy)) written += n
+            else { dlq.append(sized, tables.tenant, tables.db, table, isOptOut); dead += n }
           }
       }
-    } finally { routed.unpersist(): Unit }
-    BatchResult(written, dead)
+      BatchResult(written, dead, total)
+    } finally Bpe.releaseCheckpoint(routed)
   }
 
   /** Build and start the per-tenant streaming query: O4–O9 transform chain

@@ -8,10 +8,12 @@ import java.nio.file.{Files, Path}
   *
   * A second argument that is not a query name is an output dir: each plan
   * goes to `<outDir>/<query>.txt` with the JVM-wide counters it prints
-  * blanked (expression ids `#123`/`#123L` as `#`, and the numbers of
-  * `plan_id=`, `RDD[`, `Broadcast(` and lambda class names), so `diff -r`
-  * of two dumps is a plan-identity check. Temp-dir paths and source line
-  * numbers stay. Without an output dir, the plans print to stdout. */
+  * blanked (expression ids `#123`/`#123L` as `#`; the numbers of
+  * `plan_id=`, `RDD[`, `Broadcast(` and lambda class names; the random
+  * suffix of the index queries' `/tmp/<prefix><digits>` scratch dirs; the
+  * source line of a call site such as `localCheckpoint at File.scala:N`),
+  * so `diff -r` of two dumps is a plan-identity check. Without an output
+  * dir, the plans print to stdout. */
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
@@ -41,4 +43,6 @@ object Plans {
     plan.replaceAll("#\\d+L?", "#")
       .replaceAll("(plan_id=|RDD\\[|Broadcast\\()\\d+", "$1")
       .replaceAll("\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+", "\\$Lambda")
+      .replaceAll("(/tmp/[A-Za-z_-]+)\\d+", "$1")
+      .replaceAll("(\\bat \\w+\\.scala):\\d+", "$1")
 }

@@ -158,6 +158,77 @@ class StreamingSpec extends SparkSpec {
     batch.unpersist(): Unit
   }
 
+  /** Jobs `body` submits, counted under a job group of its own. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"batch-cost-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  private def partFiles(dir: String): Int =
+    Option(new java.io.File(dir).listFiles()).fold(0)(_.count(_.getName.startsWith("part-")))
+
+  /** A micro-batch as the live job sees it: statements over a parquet scan
+    * of four drop files (so four input partitions), and the dimension
+    * provider's parquet read. */
+  private def parquetBatch(ev: DataFrame, dimHashes: DataFrame): (DataFrame, () => DataFrame) = {
+    val (srcDir, dimDir) = (tmp("src"), tmp("dim"))
+    ev.repartition(4).write.parquet(s"$srcDir/drop")
+    dimHashes.write.parquet(s"$dimDir/dim")
+    (EventStatements.statements(spark.read.parquet(s"$srcDir/drop")), () => spark.read.parquet(s"$dimDir/dim"))
+  }
+
+  test("one micro-batch costs at most 5 jobs and writes each small split as one file") {
+    val ev = eventsSlice(0, 600)
+    val (batch, dim) = parquetBatch(ev, EventStatements.optOutHashes(ev))
+    val expected = EventStatements.routed(ev)
+    val expOpt = expected.filter(col("is_opt_out")).count()
+    val expMain = expected.count() - expOpt
+    assert(expMain > 0 && expOpt > 0)
+    val sinkDir = tmp("sink")
+    val dlq = new Dlq(spark, tmp("dlq"))
+    var res: StreamingPipeline.BatchResult = null
+    // dim read, dim broadcast, the observed routing pass, one write per split
+    val jobs = jobsIn {
+      res = StreamingPipeline.processBatch(batch, dim(), new ParquetSink(sinkDir), tables, dlq, fastRetry)
+    }
+    assert(jobs <= 5, s"processBatch submitted $jobs jobs")
+    assert(res == StreamingPipeline.BatchResult(expMain + expOpt, 0, expMain + expOpt))
+    assert(sinkCount(sinkDir, "statements") == expMain)
+    assert(sinkCount(sinkDir, "statements_opt_out") == expOpt)
+    assert(partFiles(s"$sinkDir/db.statements") == 1 && partFiles(s"$sinkDir/db.statements_opt_out") == 1)
+    assert(dlq.pending().isEmpty)
+  }
+
+  test("a batch without opt-out rows writes only the main table; an empty batch writes nothing") {
+    import spark.implicits._
+    val ev = eventsSlice(0, 300)
+    val (batch, dim) = parquetBatch(ev, Seq("no-such-hash").toDF("hashed_id"))
+    val n = EventStatements.statements(ev).count()
+    val sinkDir = tmp("sink")
+    val dlq = new Dlq(spark, tmp("dlq"))
+    val res = StreamingPipeline.processBatch(batch, dim(), new ParquetSink(sinkDir), tables, dlq, fastRetry)
+    assert(res == StreamingPipeline.BatchResult(n, 0, n))
+    assert(sinkCount(sinkDir, "statements") == n)
+    assert(!new java.io.File(s"$sinkDir/db.statements_opt_out").exists())
+
+    val emptySink = tmp("sink")
+    var emptyRes: StreamingPipeline.BatchResult = null
+    val pending = scala.concurrent.Future(jobsIn {
+      emptyRes = StreamingPipeline.processBatch(batch.filter(col("id") < 0), dim(),
+        new ParquetSink(emptySink), tables, dlq, fastRetry)
+    })(scala.concurrent.ExecutionContext.global)
+    import scala.concurrent.duration._
+    val emptyJobs = scala.concurrent.Await.result(pending, 60.seconds)
+    assert(emptyRes == StreamingPipeline.BatchResult(0, 0, 0))
+    // dim read, dim broadcast and the routing pass: no recount, no write
+    assert(emptyJobs <= 3, s"an empty batch submitted $emptyJobs jobs")
+    assert(new java.io.File(emptySink).list().isEmpty)
+    assert(dlq.pending().isEmpty)
+  }
+
   test("replay failure keeps the batch queued (no loss)") {
     val dlqDir = tmp("dlq")
     val dlq = new Dlq(spark, dlqDir)
