@@ -1,6 +1,9 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** In-engine BPE (byte-pair-encoding) merge training — the tokenizer
@@ -52,6 +55,41 @@ object Bpe {
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(false): Unit)
+
+  /** How long observed metrics may take to arrive after their pass; they
+    * come through the session's listener bus, normally within
+    * milliseconds. Past this, [[observedCheckpoint]] recomputes them. */
+  private val ObservedWait = 10.seconds
+
+  /** Eager `localCheckpoint` of `df` whose one filling pass also computes
+    * the aggregate `metrics` over `df`'s rows, returned as one Row. This is
+    * the lineage-free replacement for `persist` plus a counting action:
+    * under adaptive execution every scan of a persisted frame is a
+    * table-cache stage job of its own, and a persisted leaf hides the
+    * plan from exchange reuse, while this costs the one filling job. A
+    * fresh Observation serves each call: Spark refuses to reuse one. If
+    * the metrics have not arrived within [[ObservedWait]], they are
+    * recomputed off the checkpoint, so a slow listener bus costs a second
+    * pass, never a blocked run. Release the checkpoint with
+    * [[releaseCheckpoint]] once nothing reads it. The pass's job carries
+    * the caller's call site (`localCheckpoint at Dedup.scala:N`), not this
+    * helper's, so traces attribute it to the operator that asked. */
+  private[graft] def observedCheckpoint(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    val obs = Observation()
+    val sc = df.sparkSession.sparkContext
+    val caller = new Throwable().getStackTrace()(1)
+    val prevSite = sc.getLocalProperty("callSite.short")
+    sc.setCallSite(s"localCheckpoint at ${caller.getFileName}:${caller.getLineNumber}")
+    val cp = try df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint(true)
+      finally sc.setLocalProperty("callSite.short", prevSite)
+    (cp, awaitObserved(obs, cp.agg(metrics.head, metrics.tail: _*).head()))
+  }
+
+  /** The metrics of a fired `obs`, or `fallback` if they have not arrived
+    * within [[ObservedWait]]. */
+  private[graft] def awaitObserved(obs: Observation, fallback: => Row): Row =
+    try Await.result(obs.future, ObservedWait)
+    catch { case _: TimeoutException => fallback }
 
   /** Train `merges` BPE merges on the corpus's word-frequency table. */
   def trainMerges(docs: DataFrame, merges: Int = 4,

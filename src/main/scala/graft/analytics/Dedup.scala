@@ -105,12 +105,13 @@ object Dedup {
     * that many documents from the *index only* (candidate recall knob, not a
     * correctness knob for the verified Jaccard).
     *
-    * EAGER on the capped path (ADVICE r17): the df-capped core runs Spark
-    * jobs at DataFrame-CONSTRUCTION time (the candidate frame is
-    * checkpointed and its recount emptiness probed), so calling this with
-    * `maxDf` executes the inverted-index self-join even if the result is
-    * never acted on, and downstream predicate pushdown into the operator
-    * is unavailable — the repo's established eager-operator contract. */
+    * EAGER on the capped path (ADVICE r17): the df-capped core runs one
+    * Spark job at DataFrame-CONSTRUCTION time (the candidate frame is
+    * checkpointed, and the same pass counts the pairs needing a recount),
+    * so calling this with `maxDf` executes the inverted-index self-join
+    * even if the result is never acted on, and downstream predicate
+    * pushdown into the operator is unavailable — the repo's established
+    * eager-operator contract. */
   def ngramJaccardPairs(docs: DataFrame, minJaccard: Double, n: Int = 3,
                         maxDf: Option[Int] = None,
                         idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -193,32 +194,31 @@ object Dedup {
       .groupBy("doc_id").agg(count(lit(1)).as("n_dropped"))
     val meta = sizes.join(dropped, Seq("doc_id"), "left")
       .select(col("doc_id"), col("nsh"), coalesce(col("n_dropped"), lit(0L)).as("nd"))
-    val bounded = common
+    // Materialized ONCE: the exact and recounted branches below both
+    // fork from here, and that fork used to re-execute the whole
+    // inverted-index self-join + candidate aggregate per branch (under
+    // AQE the two branches run as concurrent stage-jobs — the pair-leg
+    // profile showed the candidate exchanges written up to 8x in the
+    // composed pipelines). The frame is candidate-pair-sized (already
+    // optimistically filtered), far below the exchange it caps. The same
+    // pass counts the recount branch's rows.
+    val (bounded, recount) = Bpe.observedCheckpoint(common
       .join(meta.select(col("doc_id").as("id_a"), col("nsh").as("n_a"), col("nd").as("d_a")), "id_a")
       .join(meta.select(col("doc_id").as("id_b"), col("nsh").as("n_b"), col("nd").as("d_b")), "id_b")
       .withColumn("extra_max", least(col("d_a"), col("d_b")))
       .withColumn("inter_max", (col("common") + col("extra_max")).cast("double"))
       // optimistic score; pairs failing even this can't pass the exact filter
-      .filter(keep(col("inter_max"), col("n_a"), col("n_b")))
-      // materialized ONCE: the exact and recounted branches below both
-      // fork from here, and that fork used to re-execute the whole
-      // inverted-index self-join + candidate aggregate per branch (under
-      // AQE the two branches run as concurrent stage-jobs — the pair-leg
-      // profile showed the candidate exchanges written up to 8x in the
-      // composed pipelines). The frame is candidate-pair-sized (already
-      // optimistically filtered), far below the exchange it caps.
-      .localCheckpoint(true)
+      .filter(keep(col("inter_max"), col("n_a"), col("n_b"))),
+      count_if(col("extra_max") > 0))
     val exact = bounded.filter(col("extra_max") === 0)
       .withColumn("inter", col("common").cast("double"))
       .select(col("id_a"), col("id_b"), col("inter"), col("n_a"), col("n_b"))
-    // the recount branch re-tokenizes the corpus on BOTH join sides; with
-    // `bounded` materialized its emptiness is a free driver check, and on
+    // the recount branch re-tokenizes the corpus on BOTH join sides; on
     // the common path (no candidate shares a hot shingle on both sides —
     // every oracle corpus, and any corpus whose cap exceeds the pair-wise
     // shared dfs) the two corpus passes are skipped outright. Returns the
     // identical frame: an empty recount union is a no-op.
-    val needRecount = !bounded.filter(col("extra_max") > 0).isEmpty
-    if (!needRecount) exact
+    if (recount.getLong(0) == 0) exact
     else {
       val sa = withSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
       val sb = withSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
@@ -620,8 +620,9 @@ object Dedup {
     * it, so the logical plan is ~16× its input's per round — persist caches
     * execution but the ANALYZER still walks the uncut tree, which goes
     * exponential (measured: analyzer OOM by round ~10). Checkpointing makes
-    * each round's plan a constant-size leaf; blocks are ContextCleaner-GC'd
-    * (the [[Clustering.trainedCentroids]] loop discipline). On a real
+    * each round's plan a constant-size leaf, and the same pass counts the
+    * round's edges (an observed metric, no count job); a superseded round
+    * is released once the next one is checkpointed. On a real
     * cluster localCheckpoint trades executor-loss resilience for speed —
     * acceptable for an edge-scale frame that a retry rebuilds.
     *
@@ -642,11 +643,16 @@ object Dedup {
     * Pairs-scale output; see the keeper variant for the algorithm. */
   def starContractionLabels(pairs: DataFrame, maxRounds: Int = 16): DataFrame = {
     // (big, small) ordered unordered-edge layout; pairs arrive id_a < id_b
-    var e = pairs.select(col("id_b").as("big"), col("id_a").as("small"))
-      .distinct().localCheckpoint(true)
-    var eCnt = e.count()
+    // each step's edge count comes from its checkpoint pass (observed)
+    def checkpointed(edges: DataFrame): (DataFrame, Long) = {
+      val (cp, m) = Bpe.observedCheckpoint(edges, count(lit(1)))
+      (cp, m.getLong(0))
+    }
+    var (e, eCnt) = checkpointed(
+      pairs.select(col("id_b").as("big"), col("id_a").as("small")).distinct())
     var round = 0
-    var converged = false
+    // an empty edge set is already the fixpoint: no round runs
+    var converged = eCnt == 0
     def phase(edges: DataFrame, large: Boolean): DataFrame = {
       val sym = edges.select(col("big").as("u"), col("small").as("v"))
         .unionByName(edges.select(col("small").as("u"), col("big").as("v")))
@@ -670,13 +676,12 @@ object Dedup {
       }
     }
     while (round < maxRounds && !converged) {
-      // eager checkpoint = the round's one materialization; count reads the
-      // checkpointed blocks
-      val next = phase(phase(e, large = true), large = false).localCheckpoint(true)
-      val nCnt = next.count()
+      // eager checkpoint = the round's one materialization, and its count
+      val (next, nCnt) = checkpointed(phase(phase(e, large = true), large = false))
       // exact fixpoint test: same cardinality and no edge outside the old
       // set (both sides distinct, so this is set equality)
       converged = nCnt == eCnt && next.exceptAll(e).isEmpty
+      Bpe.releaseCheckpoint(e)
       e = next
       eCnt = nCnt
       round += 1

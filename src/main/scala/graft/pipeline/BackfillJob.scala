@@ -5,6 +5,7 @@ import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.analytics.Bpe
 import graft.sinks.BatchSink
 import graft.streaming.{Dlq, StreamingPipeline}
 import graft.streaming.StreamingPipeline.{RetryPolicy, SinkTables}
@@ -71,20 +72,21 @@ object BackfillJob {
           policy: RetryPolicy = RetryPolicy()): Result = {
     val (startTs, endTs) = tsBounds(start, end)
     val tsType = source.schema("ts").dataType
-    val bounded = source.filter(
-      col("ts") >= lit(startTs).cast(tsType) && col("ts") <= lit(endTs).cast(tsType))
-      // the bounded scan feeds THREE consumers (the O3 progress count, the
-      // transform chain, and the opt-out dimension) — persist it or a
-      // large remote range scan runs three full times
-      .persist()
+    // the bounded scan feeds the transform chain and the opt-out
+    // dimension — checkpoint it or a large remote range scan runs twice;
+    // the filling pass also counts it (O3: the reference's
+    // count_documents progress total)
+    val (bounded, counted) = Bpe.observedCheckpoint(source.filter(
+        col("ts") >= lit(startTs).cast(tsType) && col("ts") <= lit(endTs).cast(tsType)),
+      count(lit(1)))
     try {
-      val input = bounded.count() // O3: reference's count_documents progress total
+      val input = counted.getLong(0)
       // the transformed total comes from processBatch's one routing pass
       val res = StreamingPipeline.processBatch(EventStatements.statements(bounded),
         EventStatements.optOutHashes(bounded), sink, tables, dlq, policy)
       // `written` counts rows the SINK accepted; dead-lettered rows are
       // reported separately (not silently claimed as written)
       Result(input, res.written, input - res.routed, res.deadLettered)
-    } finally { bounded.unpersist(): Unit }
+    } finally Bpe.releaseCheckpoint(bounded)
   }
 }

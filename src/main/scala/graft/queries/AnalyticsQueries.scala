@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.analytics.{Clustering, Dedup, Multimodal, PqIndex, ProductQuantization, Quantization, Sampling, Search, Similarity, TextAnalysis}
+import graft.analytics.{Bpe, Clustering, Dedup, Multimodal, PqIndex, ProductQuantization, Quantization, Sampling, Search, Similarity, TextAnalysis}
 import graft.functions.GraftFunctions
 import graft.obs.Trace
 
@@ -403,32 +403,47 @@ object AnalyticsQueries {
     * the inverted-index join, all on hash/shingle keys. */
   /** The pipeline's language+quality+exact-dedup survivor set (exposed so
     * tests can prove properties — e.g. df-cap recall-neutrality — on the
-    * EXACT frame the pipeline deduplicates). Persisted: it feeds three DAG
-    * branches (pair generation, the anti-join's left side, the output
-    * projection), so the scan + scoring subtree runs once, not per branch. */
-  def curateKept(spark: SparkSession, dir: String): DataFrame = {
-    val scored = Tables(spark, dir).documents
+    * EXACT frame the pipeline deduplicates). An eager, lineage-free
+    * `localCheckpoint` with nothing for the caller to release; see
+    * [[curateKeptCounted]]. */
+  def curateKept(spark: SparkSession, dir: String): DataFrame =
+    curateKeptCounted(spark, dir)._1
+
+  /** [[curateKept]] plus the documents-table row count, read in the same
+    * pass (an observed metric on the documents scan, so the df cap costs
+    * no second corpus scan). The checkpoint feeds three DAG branches (pair
+    * generation, the anti-join's left side, the output projection), so the
+    * scan + scoring subtree runs once; and because its leaf is an RDD scan,
+    * not a cached relation, the pair leg's identical exchanges canonicalize
+    * equal and are reused (SCALING.md § "Lineage-free corpus frames in
+    * the composed pipelines"). */
+  private[graft] def curateKeptCounted(spark: SparkSession, dir: String): (DataFrame, Long) = {
+    // both join sides below scan the whole table, so both copies of this
+    // observation count every row, and Spark reports them as one metric
+    val nDocs = Observation()
+    val docs = Tables(spark, dir).documents.observe(nDocs, count(lit(1)).as("n_docs"))
+    val scored = docs
       .select(col("doc_id"), col("text"),
         GraftFunctions.langIdFast(col("text")).as("lang_pred"),
         GraftFunctions.qualityFast(col("text")).as("quality"))
       .filter(col("lang_pred") === "en" && col("quality") >= 0.55)
     val exactKeepers = scored.groupBy(sha2(col("text"), 256))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    scored.join(exactKeepers, Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val kept = scored.join(exactKeepers, Seq("doc_id"), "left_semi").localCheckpoint(true)
+    val n = Bpe.awaitObserved(nDocs, Tables(spark, dir).documents.agg(count(lit(1))).head())
+    (kept, n.getLong(0))
   }
 
   def pipelineCurate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents
-    val kept = curateKept(spark, dir)
+    val (kept, nDocs) = curateKeptCounted(spark, dir)
     val pairs = Dedup.ngramJaccardPairs(kept.select(col("doc_id"), col("text")),
-      minJaccard = 0.6, maxDf = Some(Dedup.dfCapFor(docs.count())))
-    // materialize the small result, then release curateKept's corpus cache
+      minJaccard = 0.6, maxDf = Some(Dedup.dfCapFor(nDocs)))
+    // materialize the small result, then release the corpus checkpoint
     val out = Dedup.keepAfterNearDup(kept, pairs)
       .select(col("doc_id"), col("lang_pred"), col("quality"))
       .orderBy(col("doc_id"))
       .localCheckpoint(true)
-    kept.unpersist()
+    Bpe.releaseCheckpoint(kept)
     out
   }
 
@@ -669,19 +684,19 @@ object AnalyticsQueries {
     * datasheet a corpus release ships with: size totals, per-language
     * shares, the exact-duplicate rate, quality quartiles read from the
     * DDSketch histogram (no global sort), and the train/val/test split
-    * sizes. Composes the existing aggregate shapes over ONE cached scoring
-    * pass plus the text-hash pass; every output frame is sections-sized,
-    * every ratio is exact-integer rational rounding (HALF_UP micro-units),
-    * so the whole card hash-matches its SQL twin. At 100 TB this is the
-    * cheap release gate: two corpus scans, no joins wider than a broadcast
-    * 1-row total. */
+    * sizes. Composes the existing aggregate shapes over ONE checkpointed
+    * scoring pass plus the text-hash pass; every output frame is
+    * sections-sized, every ratio is exact-integer rational rounding
+    * (HALF_UP micro-units), so the whole card hash-matches its SQL twin.
+    * At 100 TB this is the cheap release gate: two corpus scans, no joins
+    * wider than a broadcast 1-row total. */
   def corpusDatasheet(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
     val scored = docs.select(col("doc_id"), col("lang"), col("text"),
         Sampling.strictTokenCount(col("text")).cast("long").as("n_tok"),
         length(col("text")).cast("long").as("n_chars"),
         round(GraftFunctions.qualityFast(col("text")) * 10000).cast("long").as("q_micro"))
-      .persist()
+      .localCheckpoint(true)
     def entry(section: String, metric: String, value: org.apache.spark.sql.Column) =
       struct(lit(section).as("section"), lit(metric).as("metric"),
         value.cast("double").as("value"))
@@ -719,7 +734,7 @@ object AnalyticsQueries {
       .unionByName(quartiles).unionByName(splits)
       .orderBy(col("section"), col("metric"))
       .localCheckpoint(true)
-    scored.unpersist()
+    Bpe.releaseCheckpoint(scored)
     out
   }
 
@@ -801,17 +816,16 @@ object AnalyticsQueries {
   def dedupClosure(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
     // MATERIALIZE the pair table before recursing: each recursion step
-    // re-executes the referenced view's plan, so an uncached view would
-    // re-run the full shingle inverted-index join once PER STEP (measured
-    // 21 s → 1.5 s at sf0.1). The cached frame makes every step a join
-    // against an in-memory few-hundred-row edge list.
+    // re-executes the referenced view's plan, so an unmaterialized view
+    // would re-run the full shingle inverted-index join once PER STEP
+    // (measured 21 s → 1.5 s at sf0.1). The checkpoint makes every step a
+    // join against an in-memory few-hundred-row edge list.
     val pairs = Dedup.ngramJaccardPairs(docs, minJaccard = 0.6,
         maxDf = Some(Dedup.dfCapFor(docs.count())))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count(): Unit
+      .localCheckpoint(true)
     pairs.createOrReplaceTempView("dup_pairs_v")
-    // localCheckpoint (eager) instead of persist: materializes before the
-    // edge cache is released, and leaves no session-lifetime cache behind
+    // eager: materializes before the edge checkpoint is released, and
+    // leaves nothing of the session's behind
     val out = spark.sql(
       """WITH RECURSIVE reach(src, dst) AS (
         |  SELECT id_a AS src, id_b AS dst FROM dup_pairs_v
@@ -821,7 +835,8 @@ object AnalyticsQueries {
         |  min(dst) AS first_dup, max(dst) AS last_dup
         |FROM reach GROUP BY src ORDER BY src""".stripMargin)
       .localCheckpoint(true)
-    pairs.unpersist()
+    spark.catalog.dropTempView("dup_pairs_v"): Unit
+    Bpe.releaseCheckpoint(pairs)
     out
   }
 
@@ -980,8 +995,7 @@ object AnalyticsQueries {
       .filter(col("quality") >= 0.55)
     val keepers = scored.groupBy(sha2(col("text"), 256))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    val kept = scored.join(keepers, Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val kept = scored.join(keepers, Seq("doc_id"), "left_semi").localCheckpoint(true)
     val mixed = Sampling.materializeMixSelf(kept, "lang_pred",
       carry = Seq("text"))
     val stream = mixed.select(
@@ -994,7 +1008,7 @@ object AnalyticsQueries {
         col("last_window"), col("n_windows"))
       .orderBy(col("mix_id"))
       .localCheckpoint(true)
-    kept.unpersist()
+    Bpe.releaseCheckpoint(kept)
     out
   }
 
@@ -1018,20 +1032,21 @@ object AnalyticsQueries {
     val docs = Tables(spark, dir).documents
     val clean = Dedup.decontaminate(
       docs.filter(col("doc_id") >= 5), docs.filter(col("doc_id") < 5))
-    val spanned = Dedup.spanDedupMaterialize(clean, spanTokens = 16)
-      .select(col("doc_id"), col("kept_text").as("text"))
-      .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the corpus frames shared across branches are eager, lineage-free
+    // checkpoints; spanned's filling pass also counts it for the df cap
+    val (spanned, nSpanned) = Bpe.observedCheckpoint(
+      Dedup.spanDedupMaterialize(clean, spanTokens = 16)
+        .select(col("doc_id"), col("kept_text").as("text"))
+        .join(docs.select(col("doc_id"), col("lang")), "doc_id"),
+      count(lit(1)))
     val pairs = Dedup.ngramJaccardPairs(spanned.select(col("doc_id"), col("text")),
-      minJaccard = 0.6, maxDf = Some(Dedup.dfCapFor(spanned.count())))
+      minJaccard = 0.6, maxDf = Some(Dedup.dfCapFor(nSpanned.getLong(0))))
+    // budget = |kept| derived INSIDE the strata aggregate (no driver
+    // count() job over the kept frame — VERDICT r10 #7)
     val kept = Dedup.qualityKeepers(spanned, pairs,
         GraftFunctions.qualityFast(col("text")))
       .select(col("doc_id"), col("text"), col("lang"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // budget = |kept| derived INSIDE the strata aggregate (one fewer
-    // driver count() job over the persisted frame — VERDICT r10 #7); the
-    // remaining spanned.count() above doubles as cache materialization +
-    // df-cap read, one combined action.
+      .localCheckpoint(true)
     val mixed = Sampling.materializeMixSelf(kept, "lang", carry = Seq("text"))
     val stream = mixed.select(
       (col("doc_id") * 1000 + col("epoch")).as("mix_id"), col("text"))
@@ -1043,8 +1058,8 @@ object AnalyticsQueries {
         col("last_window"), col("n_windows"))
       .orderBy(col("mix_id"))
       .localCheckpoint(true)
-    kept.unpersist()
-    spanned.unpersist()
+    Bpe.releaseCheckpoint(kept)
+    Bpe.releaseCheckpoint(spanned)
     out
   }
 

@@ -38,14 +38,13 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("pipeline_curate's df-cap is recall-neutral on its kept subset (sf0.01)") {
-    val keptFull = graft.queries.AnalyticsQueries.curateKept(spark, sf("sf0.01"))
-    val kept = keptFull.select("doc_id", "text")
+    val kept = graft.queries.AnalyticsQueries.curateKept(spark, sf("sf0.01"))
+      .select("doc_id", "text")
     val cap = Dedup.dfCapFor(graft.Tables(spark, sf("sf0.01")).documents.count())
     def pairs(maxDf: Option[Int]) =
       Dedup.ngramJaccardPairs(kept, 0.6, maxDf = maxDf)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(Some(cap)) == pairs(None))
-    keptFull.unpersist(): Unit
   }
 
   test("ngram df-cap is recall-neutral: capped pairs == uncapped pairs (sf0.01)") {
