@@ -1,9 +1,6 @@
 package graft.analytics
 
-import java.util.concurrent.TimeoutException
-import scala.concurrent.Await
-import scala.concurrent.duration._
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** In-engine BPE (byte-pair-encoding) merge training — the tokenizer
@@ -13,7 +10,7 @@ import org.apache.spark.sql.functions._
   * The distributed formulation is the classic counts-on-words trick: BPE
   * statistics depend only on the WORD-FREQUENCY table, so the corpus
   * collapses in one aggregate (the only corpus-sized operation) and every
-  * merge round runs over the cached vocabulary-sized frame:
+  * merge round runs over the checkpointed vocabulary-sized frame:
   *
   *   round r: count adjacent symbol pairs weighted by word frequency →
   *            take the argmax pair (count desc, pair string asc — the
@@ -31,7 +28,7 @@ import org.apache.spark.sql.functions._
   * tokenizer-sized, never data-sized).
   *
   * Shape at 100 TB: one corpus-sized aggregate builds (word, cnt); rounds
-  * are map-side-combined pair aggregates over the persisted vocab (≤ a few
+  * are map-side-combined pair aggregates over the checkpointed vocab (≤ a few
   * million rows at any corpus size — Heaps' law), each a sub-second job.
   * Training stops early if no pair occurs twice.
   *
@@ -42,61 +39,11 @@ object Bpe {
   private val S = "\u0001" // symbol delimiter
   private val P = "\u0002" // pair-key separator (sorts below any corpus char)
 
-  /** Deterministically free a superseded localCheckpoint's blocks.
-    * `Dataset.unpersist()` is NOT this (r17 review): it only uncaches
-    * CacheManager entries, and a localCheckpoint's blocks are RDD-level
-    * persisted, never registered there -- the r16 unpersist call freed
-    * nothing. The checkpointed RDD itself is reachable through the
-    * LogicalRDD node the checkpoint returns; unpersisting THAT drops the
-    * block set (spec-pinned via sc.getPersistentRDDs in BpeSpec). Safe
-    * only once nothing will read the frame again -- a later action on a
-    * released checkpoint has no lineage to recompute from. */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false): Unit)
-
-  /** How long observed metrics may take to arrive after their pass; they
-    * come through the session's listener bus, normally within
-    * milliseconds. Past this, [[observedCheckpoint]] recomputes them. */
-  private val ObservedWait = 10.seconds
-
-  /** Eager `localCheckpoint` of `df` whose one filling pass also computes
-    * the aggregate `metrics` over `df`'s rows, returned as one Row. This is
-    * the lineage-free replacement for `persist` plus a counting action:
-    * under adaptive execution every scan of a persisted frame is a
-    * table-cache stage job of its own, and a persisted leaf hides the
-    * plan from exchange reuse, while this costs the one filling job. A
-    * fresh Observation serves each call: Spark refuses to reuse one. If
-    * the metrics have not arrived within [[ObservedWait]], they are
-    * recomputed off the checkpoint, so a slow listener bus costs a second
-    * pass, never a blocked run. Release the checkpoint with
-    * [[releaseCheckpoint]] once nothing reads it. The pass's job carries
-    * the caller's call site (`localCheckpoint at Dedup.scala:N`), not this
-    * helper's, so traces attribute it to the operator that asked. */
-  private[graft] def observedCheckpoint(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
-    val obs = Observation()
-    val sc = df.sparkSession.sparkContext
-    val caller = new Throwable().getStackTrace()(1)
-    val prevSite = sc.getLocalProperty("callSite.short")
-    sc.setCallSite(s"localCheckpoint at ${caller.getFileName}:${caller.getLineNumber}")
-    val cp = try df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint(true)
-      finally sc.setLocalProperty("callSite.short", prevSite)
-    (cp, awaitObserved(obs, cp.agg(metrics.head, metrics.tail: _*).head()))
-  }
-
-  /** The metrics of a fired `obs`, or `fallback` if they have not arrived
-    * within [[ObservedWait]]. */
-  private[graft] def awaitObserved(obs: Observation, fallback: => Row): Row =
-    try Await.result(obs.future, ObservedWait)
-    catch { case _: TimeoutException => fallback }
-
   /** Train `merges` BPE merges on the corpus's word-frequency table. */
   def trainMerges(docs: DataFrame, merges: Int = 4,
                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the ONLY corpus-sized step: word frequencies. Words carrying the
     // delimiter sentinels are EXCLUDED (r16 review sweep): a corpus token
     // containing U+0001 would conflate symbol boundaries and one containing
@@ -112,8 +59,7 @@ object Bpe {
           array_join(regexp_extract_all(col("word"), lit("(?s)."), lit(0)), S + S),
           lit(S)).as("w"),
         col("cnt"))
-      .persist(lvl)
-    wf.count(): Unit
+      .localCheckpoint(true)
     var w = wf
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var r = 0
@@ -121,19 +67,18 @@ object Bpe {
     // Truncate the rewrite lineage every K rounds (r16, VERDICT r15 #3):
     // each merge appends one regexp_replace to an otherwise-unpersisted
     // plan, so round r's pair aggregate would recompute all r-1 prior
-    // rewrites from the cached base — O(R^2) vocab passes over a real
+    // rewrites from the checkpointed base — O(R^2) vocab passes over a real
     // tokenizer run (R ~ 30k), and the analyzer chokes on a 30k-deep
     // expression tree long before the data cost matters. A localCheckpoint
     // every K rounds caps lineage depth at K for one extra vocab
     // materialization per K merges (the frame is vocabulary-sized).
     val CheckpointEvery = 16
     var sinceCheckpoint = 0
-    // previous checkpoint's blocks are released once the next one
-    // materializes (ADVICE r16): without the release, a real run
-    // (R ~ 30k) pins ~R/16 vocabulary-sized block sets for the job's
-    // lifetime. See [[releaseCheckpoint]] for why Dataset.unpersist()
-    // is not that release.
-    var prevCheckpoint: Option[org.apache.spark.sql.DataFrame] = None
+    // the previous checkpoint's blocks (the base `wf` first) are released
+    // once the next one materializes (ADVICE r16): without the release, a
+    // real run (R ~ 30k) pins ~R/16 vocabulary-sized block sets for the
+    // job's lifetime.
+    var current = wf
     while (r < merges && !exhausted) {
       val syms = split(col("w").substr(lit(2), length(col("w")) - 2), S + S)
       val best = w.select(explode(
@@ -156,14 +101,13 @@ object Bpe {
         sinceCheckpoint += 1
         if (sinceCheckpoint >= CheckpointEvery && r < merges) {
           w = w.localCheckpoint(true) // eager: materialized before the old blocks go
-          prevCheckpoint.foreach(releaseCheckpoint)
-          prevCheckpoint = Some(w)
+          Checkpoints.releaseCheckpoint(current)
+          current = w
           sinceCheckpoint = 0
         }
       }
     }
-    prevCheckpoint.foreach(releaseCheckpoint)
-    wf.unpersist()
+    Checkpoints.releaseCheckpoint(current)
     learned.toSeq.toDF("merge_rank", "lsym", "rsym", "pair_count")
   }
 

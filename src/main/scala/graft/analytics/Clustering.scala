@@ -28,8 +28,9 @@ import graft.functions.{CentroidTable, GraftFunctions}
   * Seeding is deterministic: vectors with `id % centroidStep == 0` are the
   * initial centroids (same convention as [[Similarity.ivfTopK]]).
   *
-  * Cache lifetime: the [[Search]] rule — each public operator releases its
-  * own caches and returns an eager, lineage-free `localCheckpoint`.
+  * Materialization: the [[Search]] rule — each public operator releases
+  * its own intermediate checkpoints and returns an eager, lineage-free
+  * `localCheckpoint`.
   */
 object Clustering {
 
@@ -111,15 +112,14 @@ object Clustering {
     * [[semdedupKeepers]]. `rounds` assignments run in total, with
     * `rounds − 1` centroid recomputations between them.
     *
-    * The result is persisted (MEMORY_AND_DISK) and MATERIALIZED before the
-    * corpus-sized intermediate cache is released; each caller in this
+    * The result is an eager checkpoint, materialized before the
+    * corpus-sized intermediate checkpoint is released; each caller in this
     * module releases it once its own result is checkpointed. */
   private[analytics] def kmeansAssignments(emb: DataFrame, centroidStep: Int,
                                            rounds: Int = 2, idCol: String = "vec_id",
                                            vecCol: String = "embedding"): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // ONE cached scoring frame carrying qi alongside (qd, nq) — the r18
+    // ONE checkpointed scoring frame carrying qi alongside (qd, nq) — the r18
     // compiled assignment is a projection over it, so neither the final
     // output nor the per-round recompute needs a join back to a separate
     // quantized frame (the pre-r18 shape kept two caches and joined both).
@@ -127,8 +127,7 @@ object Clustering {
       .select(col(idCol).as("vec_id"), quantize(col(vecCol)).as("qi"))
       .withColumn("qd", transform(col("qi"), _.cast("double")))
       .withColumn("nq", sqNorm(col("qd")))
-      .persist(lvl)
-    // seed table collect doubles as the cache-materializing pass
+      .localCheckpoint(true)
     val seed = collectCents(corpus.filter(col("vec_id") % centroidStep === 0)
       .select(col("vec_id").as("cid"), col("qd").as("m"), col("nq").as("nm")))
     var assigned = assignEuclid(corpus, seed)
@@ -139,13 +138,12 @@ object Clustering {
       assigned = assignEuclid(corpus, collectCents(recompute(assigned)))
       r += 1
     }
+    // materialized while corpus is live (the assignment projection reads
+    // it), then the intermediate checkpoint is released
     val out = assigned
       .select(col("vec_id"), col("cid"), col("qd"), col("nq"), col("qi"))
-      .persist(lvl)
-    // Materialize NOW, while corpus is cached (the assignment projection
-    // reads it), then release the intermediate cache.
-    out.count(): Unit
-    corpus.unpersist()
+      .localCheckpoint(true)
+    Checkpoints.releaseCheckpoint(corpus)
     out
   }
 
@@ -190,30 +188,25 @@ object Clustering {
     * training passes. */
   def trainedCentroids(emb: DataFrame, centroidStep: Int, rounds: Int = 3,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val quantized = emb.select(col(idCol).as("vec_id"), quantize(col(vecCol)).as("qi"))
-      .persist(lvl)
-    val out = trainedCentroidsFromQuantized(quantized, centroidStep, rounds)
-    quantized.unpersist()
-    out
+    trainedCentroidsFromQuantized(
+      emb.select(col(idCol).as("vec_id"), quantize(col(vecCol)).as("qi")), centroidStep, rounds)
   }
 
   /** [[trainedCentroids]] from an ALREADY-QUANTIZED (vec_id, qi) frame —
     * lets a composed index build (IVF-PQ) quantize the corpus ONCE and
-    * share the cached frame between coarse training, list assignment, and
-    * subspace-PQ training instead of re-scanning the source per stage.
-    * Callers should persist `quantized`; this adds (and releases) its own
-    * scoring-projection cache. */
+    * share the checkpointed frame between coarse training, list
+    * assignment, and subspace-PQ training instead of re-scanning the
+    * source per stage. `quantized` is read once, by this operator's own
+    * checkpoint of the scoring projection, which it releases. */
   def trainedCentroidsFromQuantized(quantized: DataFrame, centroidStep: Int,
                                     rounds: Int = 3): DataFrame = {
     require(rounds >= 2, s"a trained quantizer needs >= 1 recompute (rounds >= 2), got $rounds")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // qi rides along so each round's recompute reads the assignment row
-    // directly (see [[recompute]]); one cache instead of a join per round
+    // directly (see [[recompute]]); one checkpoint instead of a join per round
     val corpus = quantized
       .select(col("vec_id"), col("qi"), transform(col("qi"), _.cast("double")).as("qd"))
       .withColumn("nq", sqNorm(col("qd")))
-      .persist(lvl)
+      .localCheckpoint(true)
     val seed = collectCents(corpus.filter(col("vec_id") % centroidStep === 0)
       .select(col("vec_id").as("cid"), col("qd").as("m"), col("nq").as("nm")))
     var cents = recompute(assignCos(corpus, seed))
@@ -223,7 +216,7 @@ object Clustering {
       r += 1
     }
     val out = cents.localCheckpoint(true)
-    corpus.unpersist()
+    Checkpoints.releaseCheckpoint(corpus)
     out
   }
 
@@ -238,7 +231,7 @@ object Clustering {
         min(col("vec_id")).as("min_member"),
         round(sum(element_at(col("qi"), 1)).cast("double") / count(lit(1)), 4).as("mean_q0"))
       .localCheckpoint(true)
-    asg.unpersist()
+    Checkpoints.releaseCheckpoint(asg)
     out
   }
 
@@ -266,7 +259,7 @@ object Clustering {
   /** Squared distance of every member to its FINAL cluster's recomputed
     * mean (exact int sums / n, d² rounded to BIGINT — the err2
     * convention): the shared core of [[clusterOutliers]] and
-    * [[clusterPrototypes]]. Input is the persisted assignment frame from
+    * [[clusterPrototypes]]. Input is the checkpointed assignment frame from
     * [[kmeansAssignments]]; centroids broadcast back, so the only shuffle
     * is the (cid, pos) component aggregate. */
   private def memberDistances(asg: DataFrame): DataFrame = {
@@ -282,20 +275,18 @@ object Clustering {
                       factor: Double = 4.0,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val asg = kmeansAssignments(emb, centroidStep, rounds, idCol, vecCol)
-    // d feeds BOTH the per-cluster stats and the verdict join — persist it
-    // so the centroid aggregate + broadcast join run once, not per branch
-    // (r16 review sweep; asg's cache only bounded the recompute, it didn't
-    // prevent it)
-    val d = memberDistances(asg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // d feeds BOTH the per-cluster stats and the verdict join — checkpoint
+    // it so the centroid aggregate + broadcast join run once, not per
+    // branch (r16 review sweep)
+    val d = memberDistances(asg).localCheckpoint(true)
     val stats = d.groupBy("cid").agg(sum(col("d2")).as("sd2"), count(lit(1)).as("n"))
     val out = d.join(broadcast(stats), "cid")
       .withColumn("is_outlier",
         col("d2").cast("double") > lit(factor) * (col("sd2").cast("double") / col("n")))
       .select(col("vec_id"), col("cid"), col("d2"), col("is_outlier"))
       .localCheckpoint(true)
-    d.unpersist()
-    asg.unpersist()
+    Checkpoints.releaseCheckpoint(d)
+    Checkpoints.releaseCheckpoint(asg)
     out
   }
 
@@ -333,7 +324,7 @@ object Clustering {
       .withColumn("keep", col("proto_rank") > expr(s"__n * $dropNum div $dropDen"))
       .select(col("vec_id"), col("cid"), col("d2"), col("proto_rank"), col("keep"))
       .localCheckpoint(true)
-    asg.unpersist()
+    Checkpoints.releaseCheckpoint(asg)
     out
   }
 
@@ -374,7 +365,7 @@ object Clustering {
         col("score_micro"))
       .orderBy(col("cid"), col("rank"))
       .localCheckpoint(true)
-    asg.unpersist()
+    Checkpoints.releaseCheckpoint(asg)
     out
   }
 
@@ -405,8 +396,8 @@ object Clustering {
       .select(col("id_b")).distinct()
     val out = v.join(dropped, col("vec_id") === col("id_b"), "left_anti")
       .select(col("vec_id"), col("cid"))
-      .localCheckpoint(true) // before releasing the assignment cache (out reads v twice)
-    v.unpersist()
+      .localCheckpoint(true) // before releasing the assignment checkpoint (out reads v twice)
+    Checkpoints.releaseCheckpoint(v)
     out
   }
 }

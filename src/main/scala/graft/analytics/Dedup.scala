@@ -202,7 +202,7 @@ object Dedup {
     // composed pipelines). The frame is candidate-pair-sized (already
     // optimistically filtered), far below the exchange it caps. The same
     // pass counts the recount branch's rows.
-    val (bounded, recount) = Bpe.observedCheckpoint(common
+    val (bounded, recount) = Checkpoints.observedCheckpoint(common
       .join(meta.select(col("doc_id").as("id_a"), col("nsh").as("n_a"), col("nd").as("d_a")), "id_a")
       .join(meta.select(col("doc_id").as("id_b"), col("nsh").as("n_b"), col("nd").as("d_b")), "id_b")
       .withColumn("extra_max", least(col("d_a"), col("d_b")))
@@ -284,18 +284,16 @@ object Dedup {
                       maxBucket: Int = BandBucketCap): DataFrame = {
     // tokenize ONCE (r17): the shingle frame feeds five branches (the
     // bucket-population aggregate, the tagged join, the hot-doc full
-    // signatures, and both verify sides) — unpersisted, each branch
-    // re-tokenized the corpus (the DedupIndex sibling already persisted
-    // it). The banded frame (a few fixed-width rows per doc) is eagerly
-    // checkpointed so the signature pass also runs once, not per branch;
-    // the result is materialized before the cache is released (the
-    // operator family's caller-must-not-see-a-cache contract).
-    val withSh = shingleFrame(docs, n, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // signatures, and both verify sides) — unmaterialized, each branch
+    // re-tokenized the corpus. The banded frame (a few fixed-width rows
+    // per doc) is checkpointed too, so the signature pass also runs once,
+    // not per branch; the result is materialized before both are released.
+    val withSh = shingleFrame(docs, n, idCol, textCol).localCheckpoint(true)
     val banded = minhashBanded(withSh, bands, rowsPerBand).localCheckpoint(true)
     val out = jaccardVerify(bandedCandidates(banded, maxBucket), withSh, minJaccard)
       .localCheckpoint(true)
-    withSh.unpersist()
+    Checkpoints.releaseCheckpoint(banded)
+    Checkpoints.releaseCheckpoint(withSh)
     out
   }
 
@@ -530,21 +528,22 @@ object Dedup {
     * propagation join), so an uncut logical plan DOUBLES per round —
     * persist caches execution but the analyzer still walks the whole tree,
     * which goes exponential on deep graphs (measured: analyzer OOM near
-    * round 50 on a long-cycle graph). Checkpoint blocks are
-    * ContextCleaner-GC'd; for diameter-heavy graphs see the O(log²)-round
-    * [[starContractionKeepers]].
+    * round 50 on a long-cycle graph). A superseded round is released once
+    * the next one is checkpointed; for diameter-heavy graphs see the
+    * O(log²)-round [[starContractionKeepers]].
     *
     * Output: `docs` minus every clustered doc that is not its cluster's
     * minimum id. */
   def connectedComponentKeepers(docs: DataFrame, pairs: DataFrame,
                                 maxRounds: Int = 10, idCol: String = "doc_id"): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // persist the pair set BEFORE the symmetric union: edges scans it twice,
-    // and the pair query upstream (inverted-index join) is the expensive part
-    val pr = pairs.select(col("id_a"), col("id_b")).persist(lvl)
+    // checkpoint the pair set BEFORE the symmetric union: edges scans it
+    // twice, and the pair query upstream (inverted-index join) is the
+    // expensive part; once edges is materialized nothing reads it again
+    val pr = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
     val edges = pr.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pr.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(lvl)
+      .localCheckpoint(true)
+    Checkpoints.releaseCheckpoint(pr)
     // seed with the first propagation step applied: label₀(v) = min(v,
     // neighbors(v)) — one aggregate (same shuffle the distinct() would
     // cost) that saves an entire loop round on shallow clusters
@@ -576,6 +575,7 @@ object Dedup {
       val s = labelSum(next) // reads the checkpointed blocks
       converged = s == prevSum
       prevSum = s
+      Checkpoints.releaseCheckpoint(labels)
       labels = next
       round += 1
     }
@@ -586,8 +586,7 @@ object Dedup {
         "before convergence — components with diameter > cap keep extra representatives")
     val dropped = labels.filter(col("label") =!= col("id")).select(col("id").as("__drop_id"))
     val out = docs.join(dropped, docs(idCol) === col("__drop_id"), "left_anti")
-    pr.unpersist()
-    edges.unpersist()
+    Checkpoints.releaseCheckpoint(edges)
     out
   }
 
@@ -645,7 +644,7 @@ object Dedup {
     // (big, small) ordered unordered-edge layout; pairs arrive id_a < id_b
     // each step's edge count comes from its checkpoint pass (observed)
     def checkpointed(edges: DataFrame): (DataFrame, Long) = {
-      val (cp, m) = Bpe.observedCheckpoint(edges, count(lit(1)))
+      val (cp, m) = Checkpoints.observedCheckpoint(edges, count(lit(1)))
       (cp, m.getLong(0))
     }
     var (e, eCnt) = checkpointed(
@@ -681,7 +680,7 @@ object Dedup {
       // exact fixpoint test: same cardinality and no edge outside the old
       // set (both sides distinct, so this is set equality)
       converged = nCnt == eCnt && next.exceptAll(e).isEmpty
-      Bpe.releaseCheckpoint(e)
+      Checkpoints.releaseCheckpoint(e)
       e = next
       eCnt = nCnt
       round += 1

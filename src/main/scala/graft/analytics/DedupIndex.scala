@@ -148,16 +148,14 @@ object DedupIndex {
                          bands: Int, rowsPerBand: Int, n: Int,
                          idCol: String, textCol: String, mode: String,
                          docBuckets0: Int): Int = {
-    val withSh = Dedup.shingleFrame(docs, n, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // count() materializes the cache on BOTH paths (the append path used to
-    // leave it cold until the first write) and sizes the width on the build
-    // path
-    val shRows = withSh.count()
+    // the pass that checkpoints the shingle frame also counts it, which
+    // sizes the width on the build path
+    val (withSh, counted) = Checkpoints.observedCheckpoint(
+      Dedup.shingleFrame(docs, n, idCol, textCol), count(lit(1)))
     val docBuckets =
-      if (docBuckets0 > 0) docBuckets0 else IndexMeta.bucketPolicy(shRows)
-    // bands and shingles are independent writes over the one cached shingle
-    // frame — overlap the two job+commit latencies (r18, guide §2.6)
+      if (docBuckets0 > 0) docBuckets0 else IndexMeta.bucketPolicy(counted.getLong(0))
+    // bands and shingles are independent writes over the one checkpointed
+    // shingle frame — overlap the two job+commit latencies (r18, guide §2.6)
     Par.run(
       () => IndexMeta.writeStore(
         Dedup.minhashBanded(withSh, bands, rowsPerBand)
@@ -165,7 +163,7 @@ object DedupIndex {
         s"$dir/bands", mode, Seq("band", "dbucket")),
       () => IndexMeta.writeStore(withSh.withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets)),
         s"$dir/shingles", mode, Seq("dbucket")))
-    withSh.unpersist()
+    Checkpoints.releaseCheckpoint(withSh)
     docBuckets
   }
 
@@ -188,8 +186,7 @@ object DedupIndex {
                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val prs = dedupDelta(spark, dir, delta, minJaccard, bands, rowsPerBand, n,
       idCol, textCol)
-    val dIds = delta.select(col(idCol).as("__did")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dIds = delta.select(col(idCol).as("__did")).distinct().localCheckpoint(true)
     val flagged = prs
       .join(dIds.select(col("__did").as("id_a"), lit(true).as("__a_d")), Seq("id_a"), "left")
       .join(dIds.select(col("__did").as("id_b"), lit(true).as("__b_d")), Seq("id_b"), "left")
@@ -204,7 +201,8 @@ object DedupIndex {
       .distinct()
     val out = delta.join(dropIds, delta(idCol) === col("id"), "left_anti")
       .localCheckpoint(true)
-    dIds.unpersist()
+    Checkpoints.releaseCheckpoint(dIds)
+    Checkpoints.releaseCheckpoint(prs)
     out
   }
 
@@ -285,8 +283,7 @@ object DedupIndex {
     // geometry must match the stored index: a delta banded differently
     // would probe foreign buckets and silently miss every pair (r15)
     checkGeometry(spark, dir, bands, rowsPerBand, n): Unit
-    val dSh = Dedup.shingleFrame(delta, n, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dSh = Dedup.shingleFrame(delta, n, idCol, textCol).localCheckpoint(true)
     val dBand = Dedup.minhashBanded(dSh, bands, rowsPerBand)
     // tombstoned history docs ([[forget]]) never reach the probe join
     val iBand = IndexMeta.live(spark, dir,
@@ -304,7 +301,7 @@ object DedupIndex {
     val shin = readShingles(spark, dir).select("doc_id", "sh").union(dSh.select("doc_id", "sh"))
     val out = Dedup.jaccardVerify(cand, shin, minJaccard)
       .localCheckpoint(true)
-    dSh.unpersist()
+    Checkpoints.releaseCheckpoint(dSh)
     out
   }
 }

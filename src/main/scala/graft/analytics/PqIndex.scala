@@ -232,15 +232,13 @@ object PqIndex {
         col("__best.score").as("best_ccos"))
   }
 
-  /** Write codes + the `vlists/` sidecar. Persists and RETURNS the
-    * assignment frame (vec_id, centroid_id, best_ccos) so the caller can
-    * derive the drift numbers from the same pass; the caller unpersists. */
-  private def writeCodes(codes: DataFrame, assigned0: DataFrame, dir: String,
-                         mode: String, vbuckets: Int): DataFrame = {
-    val assigned = assigned0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** Write codes + the `vlists/` sidecar. Both writes read the assignment
+    * frame (vec_id, centroid_id, best_ccos), so the caller passes it
+    * checkpointed (and derives the drift numbers from the same frame). */
+  private def writeCodes(codes: DataFrame, assigned: DataFrame, dir: String,
+                         mode: String, vbuckets: Int): Unit = {
     // The codes store and the vlists sidecar are independent writes over
-    // the same persisted assignment — run them CONCURRENTLY from driver
+    // the same checkpointed assignment — run them CONCURRENTLY from driver
     // threads (r18, guide §2.6) so the two job+commit latencies overlap.
     // Per-store notes:
     //   - codes cluster by list before the partitioned write: without
@@ -263,11 +261,11 @@ object PqIndex {
       () => IndexMeta.writeStore(assigned.select(col("vec_id"), col("centroid_id"))
         .withColumn("vbucket", vbucketOf(col("vec_id"), vbuckets)),
         s"$dir/vlists", mode, Seq("vbucket")))
-    assigned
   }
 
   /** Build and write the index. One source scan: the quantized frame is
-    * shared by coarse training, list assignment, and PQ training.
+    * shared by coarse training, list assignment, and PQ training, and the
+    * pass that checkpoints it also counts the corpus.
     *
     * Training is BOUNDED by default (r13, the measured r12 remedy made
     * default — [[ProductQuantization.TrainSampleTarget]]): above the
@@ -291,26 +289,23 @@ object PqIndex {
             trainOn: Option[DataFrame] = None, fullTrain: Boolean = false,
             trainSampleTarget: Long = ProductQuantization.TrainSampleTarget): Unit =
     IndexLock.withLock(emb.sparkSession, dir) {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val quantized = emb
-      .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
-      .persist(lvl)
+    val (quantized, counted) = Checkpoints.observedCheckpoint(
+      emb.select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi")),
+      count(lit(1)))
+    val nCorpus = counted.getLong(0)
     val quantizedTrain = ProductQuantization.resolveTrain(
       quantized, trainOn, fullTrain, trainSampleTarget, idCol, vecCol)
     val subsetTrain = !(quantizedTrain eq quantized)
     val cent = Clustering.trainedCentroidsFromQuantized(quantizedTrain, coarseStep)
-    // the coarse-centroid store write (checkpointed k rows), the corpus
-    // count (sizes the vlists sidecar width below), and the subspace-PQ
-    // training are mutually independent — overlap them (r18, guide §2.6)
-    var trained: (DataFrame, DataFrame, DataFrame) = null
-    var nCorpus = 0L
+    // the coarse-centroid store write (checkpointed k rows) and the
+    // subspace-PQ training are independent — overlap them (r18, guide §2.6)
+    var trained: (DataFrame, DataFrame) = null
     Par.run(
       () => cent.write.mode("overwrite").parquet(s"$dir/coarse"),
-      () => nCorpus = quantized.count(),
       () => trained =
         ProductQuantization.trainAndCodesQ(quantizedTrain, m, subDim, centroidStep))
-    val assigned = assignCoarse(quantized, cent)
-    val (subs, cents1, codesTrain) = trained
+    val assigned = assignCoarse(quantized, cent).localCheckpoint(true)
+    val (cents1, codesTrain) = trained
     cents1.write.mode("overwrite").parquet(s"$dir/codebooks")
     // encode the FULL corpus under the trained codebooks (identical to the
     // training codes when training was full — same slices, same assign rule)
@@ -320,9 +315,9 @@ object PqIndex {
         ProductQuantization.subSlices(quantized, m, subDim), cents1, m)
     // sidecar width by corpus size (r15, VERDICT r14 #4), recorded in meta
     // and read back by [[compact]] — never recomputed from a constant;
-    // nCorpus was counted inside the overlap group above
+    // nCorpus was counted by the pass that checkpointed the corpus
     val vbuckets = IndexMeta.bucketPolicy(nCorpus)
-    val assignedP = writeCodes(codes, assigned, dir, "overwrite", vbuckets)
+    writeCodes(codes, assigned, dir, "overwrite", vbuckets)
     // drift baseline (r14, VERDICT r13 #8): the train-time p5 of the
     // corpus's best coarse cosine — [[append]] counts arrivals below it.
     // r15 (VERDICT r14 #6) also records the POST-BUILD baseline fraction:
@@ -331,13 +326,13 @@ object PqIndex {
     // for a sampled-train build, where most of the corpus was never
     // trained on) — [[driftAdvisory]] compares append-time fractions
     // against it.
-    val driftRow = assignedP.agg(
+    val driftRow = assigned.agg(
         percentile_approx(col("best_ccos"), lit(0.05), lit(10000)),
         count(lit(1))).head()
     val p5Micro = Option(driftRow.get(0))
       .map(v => math.round(v.asInstanceOf[Double] * 1e6))
     val baseMicro = p5Micro.map { p5 =>
-      val below = assignedP.filter(col("best_ccos") * 1e6 < p5).count()
+      val below = assigned.filter(col("best_ccos") * 1e6 < p5).count()
       val n = driftRow.getLong(1)
       if (n > 0) math.round(below.toDouble / n * 1e6) else 0L
     }
@@ -346,10 +341,8 @@ object PqIndex {
                 else if (subsetTrain) "sampled" else "full",
       ccosP5Micro = p5Micro, driftBaseMicro = baseMicro, vbuckets = vbuckets)
     IndexMeta.clearTombstones(emb.sparkSession, dir)
-    assignedP.unpersist()
-    subs.unpersist(); cents1.unpersist(); codesTrain.unpersist()
-    if (subsetTrain) quantizedTrain.unpersist()
-    quantized.unpersist(): Unit
+    Seq(assigned, cent, cents1, codesTrain, quantizedTrain, quantized)
+      .foreach(Checkpoints.releaseCheckpoint)
     }
 
   /** Append a delta to the index: encode the new vectors under the STORED
@@ -371,19 +364,19 @@ object PqIndex {
     checkMeta(spark, dir, m, subDim)
     val quantized = delta
       .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
     val cent = spark.read.parquet(s"$dir/coarse")
     val books = spark.read.parquet(s"$dir/codebooks")
-    val assigned = assignCoarse(quantized, cent)
+    val assigned = assignCoarse(quantized, cent).localCheckpoint(true)
     val codes = ProductQuantization.assignToBooks(
       ProductQuantization.subSlices(quantized, m, subDim), books, m)
     // append under the STORED sidecar width (the bucket rule is a pure
     // function of the id only at constant width)
     val vbuckets = vbucketsOf(spark, dir)
-    val assignedP = writeCodes(codes, assigned, dir, "append", vbuckets)
+    writeCodes(codes, assigned, dir, "append", vbuckets)
     val prior = driftStats(spark, dir)
     prior.trainCcosP5Micro.foreach { p5 =>
-      val st = assignedP.agg(count(lit(1)),
+      val st = assigned.agg(count(lit(1)),
         sum(when(col("best_ccos") * 1e6 < p5, 1L).otherwise(0L))).head()
       val (n, out) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
       // this append's OWN fraction: the first one calibrates the
@@ -399,8 +392,8 @@ object PqIndex {
         driftLastMicro = fracMicro.orElse(prior.lastMicro),
         vbuckets = vbuckets)
     }
-    assignedP.unpersist()
-    quantized.unpersist(): Unit
+    Checkpoints.releaseCheckpoint(assigned)
+    Checkpoints.releaseCheckpoint(quantized)
     }
   }
 

@@ -42,8 +42,9 @@ import graft.functions.GraftFunctions
   * Seeding mirrors [[Clustering.kmeansStats]]: vectors with
   * `vec_id % centroidStep == 0` seed every subspace's codebook.
   *
-  * Cache lifetime: the [[Search]] rule — each public operator releases its
-  * training caches and returns an eager, lineage-free `localCheckpoint`.
+  * Materialization: the [[Search]] rule — each public operator releases
+  * its training checkpoints and returns an eager, lineage-free
+  * `localCheckpoint`.
   */
 object ProductQuantization {
 
@@ -122,17 +123,16 @@ object ProductQuantization {
   def pqAssign(emb: DataFrame, m: Int = 32, subDim: Int = 2,
                centroidStep: Int = 40,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val (subs, cents1, codes) = trainAndCodes(emb, m, subDim, centroidStep, idCol, vecCol)
-    val out = codes.localCheckpoint(true)
-    subs.unpersist(); cents1.unpersist(); codes.unpersist()
-    out
+    val (cents1, codes) = trainAndCodes(emb, m, subDim, centroidStep, idCol, vecCol)
+    Checkpoints.releaseCheckpoint(cents1)
+    codes
   }
 
-  /** Shared training pipeline: subspace frame, trained codebooks
-    * (sub, cid, m, nm), and the final code assignment — all persisted,
-    * codes materialized. Callers unpersist what they don't return. */
+  /** Shared training pipeline: the trained codebooks (sub, cid, m, nm) and
+    * the final code assignment, both eager checkpoints the caller
+    * releases. */
   private def trainAndCodes(emb: DataFrame, m: Int, subDim: Int, centroidStep: Int,
-                            idCol: String, vecCol: String): (DataFrame, DataFrame, DataFrame) =
+                            idCol: String, vecCol: String): (DataFrame, DataFrame) =
     trainAndCodesQ(
       emb.select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi")),
       m, subDim, centroidStep)
@@ -140,7 +140,7 @@ object ProductQuantization {
   /** [[trainAndCodes]] from an already-quantized (vec_id, qi) frame — the
     * shared-scan path for composed index builds (see
     * [[Clustering.trainedCentroidsFromQuantized]]). Catalyst collapses the
-    * unpersisted delegation above into the same single-projection scan, so
+    * unmaterialized delegation above into the same single-projection scan, so
     * the two entry points plan identically for plain callers. */
   /** Per-(vec, subspace) slice frame — the shared head of PQ training and
     * of encoding a new frame under a stored codebook. */
@@ -209,9 +209,8 @@ object ProductQuantization {
   }
 
   private[analytics] def trainAndCodesQ(quantized: DataFrame, m: Int, subDim: Int,
-                                        centroidStep: Int): (DataFrame, DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val subs = subSlices(quantized, m, subDim).persist(lvl)
+                                        centroidStep: Int): (DataFrame, DataFrame) = {
+    val subs = subSlices(quantized, m, subDim).localCheckpoint(true)
     def assign(cents: DataFrame): DataFrame = assignToBooks(subs, cents, m)
     val seeds = subs.filter(col("vec_id") % centroidStep === 0)
       .select(col("sub"), col("vec_id").as("cid"), col("sqd").as("m"), col("nq").as("nm"))
@@ -246,10 +245,10 @@ object ProductQuantization {
       .select(col("sub"), col("cid"),
         transform(array_sort(col("ps")), x => x.getField("s").cast("double") / col("n")).as("m"))
       .withColumn("nm", dot(col("m"), col("m")))
-      .persist(lvl)
-    val codes = assign(cents1).persist(lvl)
-    codes.count(): Unit
-    (subs, cents1, codes)
+      .localCheckpoint(true)
+    val codes = assign(cents1).localCheckpoint(true)
+    Checkpoints.releaseCheckpoint(subs)
+    (cents1, codes)
   }
 
   /** ADC top-k: exact queries against the PQ-coded corpus. Distance tables
@@ -265,14 +264,13 @@ object ProductQuantization {
               idCol: String = "vec_id", vecCol: String = "embedding",
               trainOn: Option[DataFrame] = None, fullTrain: Boolean = false,
               trainSampleTarget: Long = TrainSampleTarget): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val quantized = emb
       .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
-      .persist(lvl)
+      .localCheckpoint(true)
     val quantizedTrain = resolveTrain(quantized, trainOn, fullTrain, trainSampleTarget,
       idCol, vecCol)
     val subsetTrain = !(quantizedTrain eq quantized)
-    val (subs, cents1, codesTrain) = trainAndCodesQ(quantizedTrain, m, subDim, centroidStep)
+    val (cents1, codesTrain) = trainAndCodesQ(quantizedTrain, m, subDim, centroidStep)
     val codes =
       if (!subsetTrain) codesTrain
       else assignToBooks(subSlices(quantized, m, subDim), cents1, m)
@@ -280,34 +278,30 @@ object ProductQuantization {
       .crossJoin(broadcast(packDt(
         dtForQueries(quantized, queries, cents1, m, subDim, idCol), m)))
     val out = rankPacked(pairs, m, k).localCheckpoint(true)
-    subs.unpersist(); cents1.unpersist(); codesTrain.unpersist()
-    if (subsetTrain) quantizedTrain.unpersist()
-    quantized.unpersist()
+    Seq(cents1, codesTrain, quantizedTrain, quantized).foreach(Checkpoints.releaseCheckpoint)
     out
   }
 
   /** The policy-selected training frame over an already-quantized corpus:
-    * an explicit `trainOn` (quantized and persisted), the corpus itself
+    * an explicit `trainOn` (quantized and checkpointed), the corpus itself
     * when `fullTrain` or at/below the sample target, else the
-    * deterministic bounded sample ([[autoTrainSample]]), persisted. The
+    * deterministic bounded sample ([[autoTrainSample]]), checkpointed. The
     * over-target decision is a BOUNDED `limit(target+1).count()` probe,
     * not a full corpus count — it stops as soon as target+1 rows exist,
     * so small corpora pay one short job and 100 TB corpora never pay a
-    * counting pass. The caller unpersists the result iff it is not
-    * reference-equal to `quantized`. */
+    * counting pass. The caller releases the result alongside `quantized`
+    * (release is idempotent, so it need not tell the two apart). */
   private[analytics] def resolveTrain(quantized: DataFrame, trainOn: Option[DataFrame],
                            fullTrain: Boolean, target: Long,
-                           idCol: String, vecCol: String): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+                           idCol: String, vecCol: String): DataFrame =
     trainOn match {
       case Some(t) => t
         .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
-        .persist(lvl)
+        .localCheckpoint(true)
       case None if fullTrain => quantized
       case None if !overTarget(quantized, target) => quantized
-      case None => autoTrainSample(quantized, target).persist(lvl)
+      case None => autoTrainSample(quantized, target).localCheckpoint(true)
     }
-  }
 
   /** True iff `df` has more than `target` rows — evaluated with a bounded
     * limit, never a full count. */
@@ -425,14 +419,13 @@ object ProductQuantization {
                 idCol: String = "vec_id", vecCol: String = "embedding",
                 trainOn: Option[DataFrame] = None, fullTrain: Boolean = false,
                 trainSampleTarget: Long = TrainSampleTarget): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Quantize the corpus ONCE: coarse training, list assignment, and the
-    // subspace-PQ training all read this cached frame — at 100 TB the
-    // composed index build is one source scan plus cache passes, not three
-    // independent scans of the raw vectors.
+    // subspace-PQ training all read this checkpoint — at 100 TB the
+    // composed index build is one source scan plus checkpoint passes, not
+    // three independent scans of the raw vectors.
     val quantized = emb
       .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
-      .persist(lvl)
+      .localCheckpoint(true)
     val quantizedTrain =
       resolveTrain(quantized, trainOn, fullTrain, trainSampleTarget, idCol, vecCol)
     val sampledTrain = !(quantizedTrain eq quantized)
@@ -476,7 +469,7 @@ object ProductQuantization {
     val cand = probes.join(assigned, "centroid_id")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
-    val (subs, cents1, codesTrain) = trainAndCodesQ(quantizedTrain, m, subDim, centroidStep)
+    val (cents1, codesTrain) = trainAndCodesQ(quantizedTrain, m, subDim, centroidStep)
     // encode the FULL corpus under the trained codebooks (identical to the
     // training codes when training was full — same slices, same rule)
     val codes =
@@ -485,11 +478,10 @@ object ProductQuantization {
     val pairs = cand.join(packCodes(codes), "vec_id")
       .join(broadcast(packDt(
         dtForQueries(quantized, queries, cents1, m, subDim, idCol), m)), "query_id")
-    // materialize the result before releasing the training caches
+    // materialize the result before releasing the training checkpoints
     val out = rankPacked(pairs, m, k).localCheckpoint(true)
-    subs.unpersist(); cents1.unpersist(); codesTrain.unpersist()
-    if (sampledTrain || trainOn.nonEmpty) quantizedTrain.unpersist()
-    quantized.unpersist()
+    Seq(cent, cents1, codesTrain, quantizedTrain, quantized)
+      .foreach(Checkpoints.releaseCheckpoint)
     out
   }
 

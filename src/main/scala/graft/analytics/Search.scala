@@ -18,13 +18,13 @@ import org.apache.spark.sql.functions._
   * product lands within ~1e-9 of a .5 boundary — vanishing, and confined
   * to a single df value if it ever happens.
   *
-  * Cache lifetime (the rule every `graft.analytics` operator follows): an
-  * operator releases the intermediate caches it makes before it returns,
-  * and a result whose lineage must not re-run comes back as an eager
-  * `localCheckpoint` — materialized, lineage-free, with no CacheManager
-  * entry (`storageLevel` is NONE). A caller has nothing to unpersist; the
-  * checkpoint blocks are freed by the ContextCleaner once the frame is
-  * unreachable.
+  * Materialization (the rule every `graft.analytics` operator follows):
+  * an intermediate read more than once and a result whose lineage must not
+  * re-run are both eager `localCheckpoint`s ([[Checkpoints]]) —
+  * materialized, lineage-free, with no CacheManager entry (`storageLevel`
+  * is NONE). An operator releases every intermediate checkpoint it makes
+  * before it returns. A caller has nothing to release; a result's blocks
+  * are freed by the ContextCleaner once the frame is unreachable.
   */
 object Search {
 
@@ -86,7 +86,6 @@ object Search {
     // the dots as struct-field access and fail to resolve — whitespace
     // tokenization makes dotted terms ordinary input, not an edge case
     def tfCol(t: String): Column = col("`tf_" + t.replace("`", "``") + "`")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // tokenize ONCE per doc (r17): `toks` is referenced |terms|+1 times
     // below — as a single-select form each reference instantiates the
     // tokenizer expression, i.e. |terms|+1 regex passes per row. A
@@ -100,7 +99,7 @@ object Search {
         (Seq(col("doc_id"), size(col("__toks")).cast("long").as("dl")) ++
           queryTerms.map(t =>
             size(filter(col("__toks"), x => x === t)).cast("long").as(s"tf_$t"))): _*)
-      .persist(lvl)
+      .localCheckpoint(true)
     // one tiny aggregate: N, total token mass, per-term document frequencies
     val statsRow = perDoc.agg(
       count(lit(1)).as("n"),
@@ -121,8 +120,8 @@ object Search {
       .limit(k)
       .select((Seq(col("doc_id"), col("dl")) ++
         queryTerms.map(tfCol) ++ Seq(col("score"))): _*)
-      .localCheckpoint(true) // scoring scan reads the cached counters, not parquet
-    perDoc.unpersist()
+      .localCheckpoint(true) // scoring scan reads the checkpointed counters, not parquet
+    Checkpoints.releaseCheckpoint(perDoc)
     out
   }
 
@@ -145,17 +144,15 @@ object Search {
     * and V the same over heads/tokens — so the scoring joins broadcast
     * under AQE for any real vocabulary (≤ millions of types), and the only
     * corpus-sized shuffle is the final doc_id aggregation. The corpus is
-    * read and TOKENIZED exactly once: a (doc_id, tokens) frame is persisted
-    * and materialized up front, and bigrams, heads, and the vocabulary all
-    * derive from the cached arrays. Documents with fewer than two tokens
+    * read and TOKENIZED exactly once: a (doc_id, tokens) frame is
+    * checkpointed up front, and bigrams, heads, and the vocabulary all
+    * derive from the checkpointed arrays. Documents with fewer than two tokens
     * have no bigrams and no score (absent rows, not NULL — same
     * construction in the oracle). */
   def bigramSurprisal(docs: DataFrame, textCol: String = "text",
                       idCol: String = "doc_id"): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val toks = docs.select(col(idCol).as("doc_id"),
-      TextAnalysis.tokens(col(textCol)).as("toks")).persist(lvl)
-    toks.count(): Unit // materialize BEFORE the fan-out: one source scan
+      TextAnalysis.tokens(col(textCol)).as("toks")).localCheckpoint(true)
     val bg = toks.select(col("doc_id"),
         explode(TextAnalysis.bigramsOfTokens(col("toks"))).as("bg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
@@ -173,8 +170,8 @@ object Search {
       .select(col("doc_id"), col("n_bigrams"),
         round(col("sum_micro").cast("double") / col("n_bigrams") / 1e6, 4)
           .as("avg_surprisal"))
-      .localCheckpoint(true) // score from the token cache, then release it
-    toks.unpersist()
+      .localCheckpoint(true) // score from the token checkpoint, then release it
+    Checkpoints.releaseCheckpoint(toks)
     out
   }
 
@@ -205,15 +202,13 @@ object Search {
     *
     * Shape at 100 TB: identical to [[bigramSurprisal]] — all five model
     * tables (c2, c1, n1p, n1m, Nt) are VOCABULARY-sized aggregates of one
-    * persisted (doc_id, tokens) frame (single corpus scan + tokenize,
+    * checkpointed (doc_id, tokens) frame (single corpus scan + tokenize,
     * plan-asserted), the scoring joins broadcast under AQE, and the only
     * corpus-sized shuffle is the final doc_id aggregation. */
   def knSurprisal(docs: DataFrame, textCol: String = "text",
                   idCol: String = "doc_id"): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val toks = docs.select(col(idCol).as("doc_id"),
-      TextAnalysis.tokens(col(textCol)).as("toks")).persist(lvl)
-    toks.count(): Unit // materialize BEFORE the fan-out: one source scan
+      TextAnalysis.tokens(col(textCol)).as("toks")).localCheckpoint(true)
     val bg = toks.select(col("doc_id"),
         explode(TextAnalysis.bigramsOfTokens(col("toks"))).as("bg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
@@ -244,8 +239,8 @@ object Search {
       .select(col("doc_id"), col("n_bigrams"),
         round(col("sum_micro").cast("double") / col("n_bigrams") / 1e6, 4)
           .as("avg_kn_surprisal"))
-      .localCheckpoint(true) // score from the token cache, then release it
-    toks.unpersist()
+      .localCheckpoint(true) // score from the token checkpoint, then release it
+    Checkpoints.releaseCheckpoint(toks)
     out
   }
 
@@ -272,7 +267,7 @@ object Search {
     * numerator is ≥ 3, an unseen head's is ≥ 1. −ln P is quantized to
     * integer micro-nats exactly like [[knSurprisal]].
     *
-    * Shape at 100 TB: identical to [[knSurprisal]] — one persisted
+    * Shape at 100 TB: identical to [[knSurprisal]] — one checkpointed
     * (doc_id, bucket, tokens) frame feeds both the training aggregates and
     * the scoring stream (single corpus scan + tokenize); the five model
     * tables are vocabulary-sized and broadcast under AQE; the only
@@ -281,11 +276,9 @@ object Search {
     * curation pipeline thresholds alongside the surprisal itself. */
   def knHeldoutScore(docs: DataFrame, textCol: String = "text",
                      idCol: String = "doc_id", trainPerMille: Int = 800): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val toks = docs.select(col(idCol).as("doc_id"),
       Sampling.hashBucket(col(idCol)).as("bkt"),
-      TextAnalysis.tokens(col(textCol)).as("toks")).persist(lvl)
-    toks.count(): Unit // materialize BEFORE the fan-out: one source scan
+      TextAnalysis.tokens(col(textCol)).as("toks")).localCheckpoint(true)
     val bgAll = toks.select(col("doc_id"), col("bkt"),
         explode(TextAnalysis.bigramsOfTokens(col("toks"))).as("bg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
@@ -328,8 +321,8 @@ object Search {
       .select(col("doc_id"), col("n_bigrams"), col("n_unseen"),
         round(col("sum_micro").cast("double") / col("n_bigrams") / 1e6, 4)
           .as("avg_kn_surprisal"))
-      .localCheckpoint(true) // score from the token cache, then release it
-    toks.unpersist()
+      .localCheckpoint(true) // score from the token checkpoint, then release it
+    Checkpoints.releaseCheckpoint(toks)
     out
   }
 
@@ -371,7 +364,7 @@ object Search {
     *
     * Shape at 100 TB: the feature frame (doc_id, bucket, cnt — dims ints
     * per doc, tiny next to the text it summarizes) is built ONCE
-    * ([[graft.analytics.Sampling.hashingVectorize]]) and cached; each round
+    * ([[graft.analytics.Sampling.hashingVectorize]]) and checkpointed; each round
     * is two aggregates over it — a doc_id-keyed margin and a bucket-keyed
     * delta — with the dims-row weight table broadcast out and collected
     * back (model state is driver-sized by the hashing trick, never
@@ -402,8 +395,7 @@ object Search {
         .otherwise(-1L).as("y"))
     val fl = Sampling.hashingVectorize(docs, dims, textCol, idCol)
       .join(labels, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fl.count(): Unit
+      .localCheckpoint(true)
     var w: Map[Long, Long] =
       (0L until dims.toLong).map(_ -> 0L).toMap
     for (_ <- 1 to iters) {
@@ -420,7 +412,7 @@ object Search {
         .collect().map(r => r.getAs[Long]("bucket") -> r.getAs[Long]("d")).toMap
       w = w.map { case (b, v) => b -> (v + delta.getOrElse(b, 0L)) }
     }
-    fl.unpersist()
+    Checkpoints.releaseCheckpoint(fl)
     import spark.implicits._
     w.toSeq.sortBy(_._1).toDF("bucket", "w")
   }
@@ -537,7 +529,7 @@ object Search {
     * to integer micro-nats ([[idfMicro]] argument); ties break on the
     * bigram string.
     *
-    * Shape at 100 TB: the corpus is read and tokenized ONCE (cached token
+    * Shape at 100 TB: the corpus is read and tokenized ONCE (checkpointed token
     * frame, the [[bigramSurprisal]] pattern); c2 and the unigram table are
     * map-side-combined aggregates of the bigram/token streams (both
     * vocabulary-sized outputs); totals are one tiny row broadcast back; the
@@ -545,10 +537,8 @@ object Search {
     * is TakeOrderedAndProject. No corpus-sized shuffle at all. */
   def collocations(docs: DataFrame, minCount: Long = 5, k: Int = 50,
                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val toks = docs.select(col(idCol).as("doc_id"),
-      TextAnalysis.tokens(col(textCol)).as("toks")).persist(lvl)
-    toks.count(): Unit // one source scan feeds bigrams AND unigrams
+      TextAnalysis.tokens(col(textCol)).as("toks")).localCheckpoint(true)
     val bg = toks.select(explode(TextAnalysis.bigramsOfTokens(col("toks"))).as("bg"))
     val c2 = bg.groupBy("bg").agg(count(lit(1)).as("c2"))
     val uni = toks.select(explode(col("toks")).as("tok"))
@@ -568,7 +558,7 @@ object Search {
       .orderBy(col("pmi_micro").desc, col("w1"), col("w2"))
       .limit(k)
       .localCheckpoint(true)
-    toks.unpersist()
+    Checkpoints.releaseCheckpoint(toks)
     out
   }
 
@@ -625,26 +615,24 @@ object Search {
     *
     * Shape at 100 TB: the feature frame is built in ONE corpus pass
     * (explode → map-side-combined (doc, bucket) counts, the
-    * [[graft.analytics.Sampling.hashingVectorize]] shape) and persisted;
+    * [[graft.analytics.Sampling.hashingVectorize]] shape) and checkpointed;
     * the λ table is `dims` rows — two tiny bucket-keyed aggregates off the
-    * cached features, broadcast back — and the only corpus-sized shuffle is
+    * checkpointed features, broadcast back — and the only corpus-sized shuffle is
     * the final doc_id aggregation. The target set here is an in-corpus
     * predicate (docs the language gate already marked); swapping in an
     * external target corpus only changes where the `ct` aggregate reads. */
   def dsirLogWeights(docs: DataFrame, dims: Int = 64,
                      textCol: String = "text", idCol: String = "doc_id",
                      targetPred: Column = col("lang") === "en"): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val feat = docs.select(col(idCol).as("doc_id"),
         targetPred.cast("long").as("is_target"),
         explode(TextAnalysis.bigramsOfTokens(TextAnalysis.tokens(col(textCol)))).as("bg"))
       .groupBy(col("doc_id"), col("is_target"),
         (Dedup.hash60(col("bg")) % dims).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
-      .persist(lvl)
-    feat.count(): Unit // one corpus scan feeds both the λ table and scoring
+      .localCheckpoint(true) // one corpus scan feeds both the λ table and scoring
     // dims-row frame, materialized once (r17): `tot` and `lam` both fork
-    // from it, and each fork re-aggregated the cached feature frame
+    // from it, and each fork re-aggregated the feature frame
     val counts = feat.groupBy("bucket").agg(
       sum(when(col("is_target") === 1, col("cnt")).otherwise(0L)).as("ct"),
       sum(col("cnt")).as("cr"))
@@ -661,8 +649,9 @@ object Search {
         sum(col("cnt") * col("lam_micro")).as("logw_micro"))
       .select(col("doc_id"), col("n_bigrams"), col("logw_micro"),
         (col("logw_micro") > 0).cast("int").as("keep"))
-      .localCheckpoint(true) // score from the cached features, then release them
-    feat.unpersist()
+      .localCheckpoint(true) // score from the checkpointed features, then release them
+    Checkpoints.releaseCheckpoint(feat)
+    Checkpoints.releaseCheckpoint(counts)
     out
   }
 

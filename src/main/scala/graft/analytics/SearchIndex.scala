@@ -198,7 +198,7 @@ object SearchIndex {
                          mode: String, idCol: String, textCol: String): (Int, Int) = {
     val toks = TextAnalysis.tokens(col(textCol))
     // ONE corpus pass (r17): tokenize once and let the census derive from
-    // the same persisted aggregate. The pre-r17 shape tokenized the raw
+    // the same checkpointed aggregate. The pre-r17 shape tokenized the raw
     // text a SECOND time just to compute (doc_id, dl) for the census — at
     // 100 TB that is a whole extra corpus read + regex pass per
     // build/append. explode_outer keeps blank/null-token docs as a single
@@ -211,30 +211,32 @@ object SearchIndex {
     // above the projection) — two regex passes per row. As a referenced-
     // twice non-cheap alias it survives CollapseProject, so the tokenizer
     // runs once per doc.
-    val base = docs
-      .select(col(idCol).as("doc_id"), toks.as("toks"))
-      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        explode_outer(col("toks")).as("token"))
-      .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val postings0 = base.filter(length(col("token")) > 0)
+    // The pass that checkpoints it also counts the postings rows, which
+    // size the token width on the build path.
+    val isPosting = length(col("token")) > 0
+    val (base, counted) = Checkpoints.observedCheckpoint(docs
+        .select(col(idCol).as("doc_id"), toks.as("toks"))
+        .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+          explode_outer(col("toks")).as("token"))
+        .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf")),
+      count_if(isPosting))
     val buckets =
-      if (buckets0 > 0) buckets0 else IndexMeta.tokenBucketPolicy(postings0.count())
-    val postings = postings0
+      if (buckets0 > 0) buckets0 else IndexMeta.tokenBucketPolicy(counted.getLong(0))
+    val postings = base.filter(isPosting)
       .withColumn("bucket", Dedup.hash60(col("token")) % buckets)
     // census covers ALL docs (a blank doc has no postings but still counts
     // toward n and dl_sum — explode_outer carried it into `base` as a
     // null-token row); stats derive from it — same census bm25TopDocs
-    // takes. Derived from the cached aggregate, NOT from a second pass
-    // over the raw text (r17). distinct() collapses the per-token rows
+    // takes. Derived from the checkpointed aggregate, NOT from a second
+    // pass over the raw text (r17). distinct() collapses the per-token rows
     // back to one (doc_id, dl) row per doc; map-side partial distinct
     // collapses each doc's token rows before the exchange, so the shuffle
-    // is ~doc-count-sized. Persisted BEFORE the doc-bucketed writes so
+    // is ~doc-count-sized. Checkpointed BEFORE the doc-bucketed writes so
     // the build can size docBuckets from the actual corpus row count.
     val census0 = base
       .select(col("doc_id").cast("long").as("doc_id"), col("dl"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
     // unique-id contract, fail-fast on the catchable class (r17 review):
     // the same id carried with two different texts (a dirty append batch,
     // or string ids cast-colliding onto one long) used to double-count n
@@ -243,7 +245,7 @@ object SearchIndex {
     // duplicate rows are NOT detectable here (the token aggregate already
     // absorbed them) — unique (id, text) input rows are the documented
     // build contract. Row count and distinct-id count come from ONE
-    // aggregate job over the cached census (they were two driver actions).
+    // aggregate job over the checkpointed census (they were two driver actions).
     val censusCounts = census0.agg(count(lit(1)), count_distinct(col("doc_id"))).head()
     val censusRows = censusCounts.getLong(0)
     val distinctIds = censusCounts.getLong(1)
@@ -253,11 +255,10 @@ object SearchIndex {
         "(duplicate-id input rows, or string ids cast-colliding to the same long)")
     val docBuckets =
       if (docBuckets0 > 0) docBuckets0 else IndexMeta.bucketPolicy(censusRows)
-    // The five stores are mutually independent writes over the two cached
-    // frames (base via postings, census0) — both materialized above by the
-    // width-policy counts — so they run CONCURRENTLY from driver threads
-    // (r18, guide §2.6): five serial job+commit latencies collapse to the
-    // slowest one. Per-store notes:
+    // The five stores are mutually independent writes over the two
+    // checkpointed frames (base via postings, census0), so they run
+    // CONCURRENTLY from driver threads (r18, guide §2.6): five serial
+    // job+commit latencies collapse to the slowest one. Per-store notes:
     //   - postings are sorted by [[PostingsOrder]] INSIDE each bucket (r13, VERDICT
     //     r12 #4): the probe prunes to |terms| bucket directories, but
     //     inside a bucket it still row-filters `token IN (...)` — with
@@ -283,7 +284,8 @@ object SearchIndex {
         s"$dir/census", mode, Seq("dbucket")),
       () => census0.agg(count(lit(1)).as("n"), sum(col("dl")).as("dl_sum"))
         .write.mode(mode).parquet(s"$dir/stats"))
-    census0.unpersist(); base.unpersist()
+    Checkpoints.releaseCheckpoint(census0)
+    Checkpoints.releaseCheckpoint(base)
     (buckets, docBuckets)
   }
 

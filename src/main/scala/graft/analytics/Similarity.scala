@@ -266,10 +266,9 @@ object Similarity {
                            planes: Int = 4, dims: Int = 64,
                            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // normalize ONCE (r17): `e` feeds the bucket index and both verify
-    // sides — unpersisted, each branch re-ran the scan + norm pass. The
-    // result is eagerly materialized before the cache is released.
-    val e = withNorm(emb, idCol, vecCol, "vec_id", "v", "n")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // sides — unmaterialized, each branch re-ran the scan + norm pass. The
+    // result is eagerly materialized before `e` is released.
+    val e = withNorm(emb, idCol, vecCol, "vec_id", "v", "n").localCheckpoint(true)
     val bucketed = e.select(col("vec_id"),
         posexplode(array((0 until reps).map(r =>
           lshBucketAt(col("v"), r * planes, planes, dims)): _*)))
@@ -286,7 +285,7 @@ object Similarity {
       .filter(col("cos") >= minCos)
       .select(col("id_a"), col("id_b"), col("cos"))
       .localCheckpoint(true)
-    e.unpersist()
+    Checkpoints.releaseCheckpoint(e)
     out
   }
 

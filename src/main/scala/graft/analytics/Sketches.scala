@@ -28,17 +28,17 @@ object Sketches {
     * The probe is driver-side over the k ranked tokens only (the sketch
     * is a broadcast-sized opaque state, the model-to-driver pattern of
     * [[Search.perceptronTrain]]); the token stream itself is read once
-    * into a cached frame feeding both the exact aggregate and the sketch
-    * aggregate. */
+    * into a checkpoint whose filling pass also counts it, feeding both the
+    * exact aggregate and the sketch aggregate. */
   def cmsTopTokens(docs: DataFrame, k: Int = 20, eps: Double = 0.0001,
                    confidence: Double = 0.99, seed: Int = 42,
                    textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val toks = docs.select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .persist(lvl)
-    val total = toks.count()
+    val (toks, n) = Checkpoints.observedCheckpoint(
+      docs.select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
+        .filter(length(col("tok")) > 0),
+      count(lit(1)))
+    val total = n.getLong(0)
     val exact = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("tok"))
       .limit(k)
@@ -46,7 +46,7 @@ object Sketches {
     val skBin = toks
       .agg(expr(s"count_min_sketch(tok, ${eps}d, ${confidence}d, $seed)").as("sk"))
       .head().getAs[Array[Byte]]("sk")
-    toks.unpersist()
+    Checkpoints.releaseCheckpoint(toks)
     val cms = CountMinSketch.readFrom(new java.io.ByteArrayInputStream(skBin))
     val bound = math.ceil(eps * total).toLong
     val rows = exact.zipWithIndex.map { case (r, i) =>

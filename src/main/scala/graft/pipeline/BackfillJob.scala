@@ -5,7 +5,7 @@ import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.analytics.Bpe
+import graft.analytics.Checkpoints
 import graft.sinks.BatchSink
 import graft.streaming.{Dlq, StreamingPipeline}
 import graft.streaming.StreamingPipeline.{RetryPolicy, SinkTables}
@@ -76,7 +76,7 @@ object BackfillJob {
     // dimension — checkpoint it or a large remote range scan runs twice;
     // the filling pass also counts it (O3: the reference's
     // count_documents progress total)
-    val (bounded, counted) = Bpe.observedCheckpoint(source.filter(
+    val (bounded, counted) = Checkpoints.observedCheckpoint(source.filter(
         col("ts") >= lit(startTs).cast(tsType) && col("ts") <= lit(endTs).cast(tsType)),
       count(lit(1)))
     try {
@@ -87,6 +87,6 @@ object BackfillJob {
       // `written` counts rows the SINK accepted; dead-lettered rows are
       // reported separately (not silently claimed as written)
       Result(input, res.written, input - res.routed, res.deadLettered)
-    } finally Bpe.releaseCheckpoint(bounded)
+    } finally Checkpoints.releaseCheckpoint(bounded)
   }
 }

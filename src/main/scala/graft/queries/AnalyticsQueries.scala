@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.analytics.{Bpe, Clustering, Dedup, Multimodal, PqIndex, ProductQuantization, Quantization, Sampling, Search, Similarity, TextAnalysis}
+import graft.analytics.{Checkpoints, Clustering, Dedup, Multimodal, PqIndex, ProductQuantization, Quantization, Sampling, Search, Similarity, TextAnalysis}
 import graft.functions.GraftFunctions
 import graft.obs.Trace
 
@@ -430,7 +430,7 @@ object AnalyticsQueries {
     val exactKeepers = scored.groupBy(sha2(col("text"), 256))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
     val kept = scored.join(exactKeepers, Seq("doc_id"), "left_semi").localCheckpoint(true)
-    val n = Bpe.awaitObserved(nDocs, Tables(spark, dir).documents.agg(count(lit(1))).head())
+    val n = Checkpoints.awaitObserved(nDocs, Tables(spark, dir).documents.agg(count(lit(1))).head())
     (kept, n.getLong(0))
   }
 
@@ -443,7 +443,7 @@ object AnalyticsQueries {
       .select(col("doc_id"), col("lang_pred"), col("quality"))
       .orderBy(col("doc_id"))
       .localCheckpoint(true)
-    Bpe.releaseCheckpoint(kept)
+    Checkpoints.releaseCheckpoint(kept)
     out
   }
 
@@ -734,7 +734,7 @@ object AnalyticsQueries {
       .unionByName(quartiles).unionByName(splits)
       .orderBy(col("section"), col("metric"))
       .localCheckpoint(true)
-    Bpe.releaseCheckpoint(scored)
+    Checkpoints.releaseCheckpoint(scored)
     out
   }
 
@@ -836,7 +836,7 @@ object AnalyticsQueries {
         |FROM reach GROUP BY src ORDER BY src""".stripMargin)
       .localCheckpoint(true)
     spark.catalog.dropTempView("dup_pairs_v"): Unit
-    Bpe.releaseCheckpoint(pairs)
+    Checkpoints.releaseCheckpoint(pairs)
     out
   }
 
@@ -996,11 +996,20 @@ object AnalyticsQueries {
     val keepers = scored.groupBy(sha2(col("text"), 256))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
     val kept = scored.join(keepers, Seq("doc_id"), "left_semi").localCheckpoint(true)
-    val mixed = Sampling.materializeMixSelf(kept, "lang_pred",
-      carry = Seq("text"))
+    val out = mixAndPack(kept, "lang_pred")
+    Checkpoints.releaseCheckpoint(kept)
+    out
+  }
+
+  /** The mix-and-pack tail of [[pipelinePack]] and [[pipelineFull]]: the
+    * temperature mix of `kept` over `stratum` with text carried, then
+    * sequence packing (1024-token windows, 8 shards) keyed by
+    * `mix_id = doc_id*1000 + epoch`, returned as an eager checkpoint. */
+  private def mixAndPack(kept: DataFrame, stratum: String): DataFrame = {
+    val mixed = Sampling.materializeMixSelf(kept, stratum, carry = Seq("text"))
     val stream = mixed.select(
       (col("doc_id") * 1000 + col("epoch")).as("mix_id"), col("text"))
-    val out = Sampling.packSequences(stream, windowTokens = 1024, nShards = 8,
+    Sampling.packSequences(stream, windowTokens = 1024, nShards = 8,
         idCol = "mix_id")
       .select(col("mix_id"), expr("mix_id div 1000").as("doc_id"),
         (col("mix_id") % 1000).as("epoch"), col("shard"), col("n_tok"),
@@ -1008,8 +1017,6 @@ object AnalyticsQueries {
         col("last_window"), col("n_windows"))
       .orderBy(col("mix_id"))
       .localCheckpoint(true)
-    Bpe.releaseCheckpoint(kept)
-    out
   }
 
   /** THE full production curation DAG in one query — what a training-data
@@ -1034,7 +1041,7 @@ object AnalyticsQueries {
       docs.filter(col("doc_id") >= 5), docs.filter(col("doc_id") < 5))
     // the corpus frames shared across branches are eager, lineage-free
     // checkpoints; spanned's filling pass also counts it for the df cap
-    val (spanned, nSpanned) = Bpe.observedCheckpoint(
+    val (spanned, nSpanned) = Checkpoints.observedCheckpoint(
       Dedup.spanDedupMaterialize(clean, spanTokens = 16)
         .select(col("doc_id"), col("kept_text").as("text"))
         .join(docs.select(col("doc_id"), col("lang")), "doc_id"),
@@ -1047,19 +1054,9 @@ object AnalyticsQueries {
         GraftFunctions.qualityFast(col("text")))
       .select(col("doc_id"), col("text"), col("lang"))
       .localCheckpoint(true)
-    val mixed = Sampling.materializeMixSelf(kept, "lang", carry = Seq("text"))
-    val stream = mixed.select(
-      (col("doc_id") * 1000 + col("epoch")).as("mix_id"), col("text"))
-    val out = Sampling.packSequences(stream, windowTokens = 1024, nShards = 8,
-        idCol = "mix_id")
-      .select(col("mix_id"), expr("mix_id div 1000").as("doc_id"),
-        (col("mix_id") % 1000).as("epoch"), col("shard"), col("n_tok"),
-        col("tok_start"), col("tok_end"), col("first_window"),
-        col("last_window"), col("n_windows"))
-      .orderBy(col("mix_id"))
-      .localCheckpoint(true)
-    Bpe.releaseCheckpoint(kept)
-    Bpe.releaseCheckpoint(spanned)
+    val out = mixAndPack(kept, "lang")
+    Checkpoints.releaseCheckpoint(kept)
+    Checkpoints.releaseCheckpoint(spanned)
     out
   }
 

@@ -1,15 +1,11 @@
 package graft.streaming
 
-import java.util.concurrent.TimeoutException
-
-import scala.concurrent.Await
-import scala.concurrent.duration._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.analytics.Bpe
+import graft.analytics.Checkpoints
 import graft.pipeline.{EventStatements, OptOutRouting}
 import graft.sinks.BatchSink
 
@@ -102,11 +98,6 @@ object StreamingPipeline {
     * (`src/main.rs:39`, SURVEY §O16). */
   private val RowsPerWriteTask = 10000L
 
-  /** How long the split counts may take to arrive after the routing pass;
-    * they come through the session's listener bus, normally within
-    * milliseconds. Past this, they are counted off the checkpoint. */
-  private val CountsWait = 10.seconds
-
   /** One micro-batch: route against the freshly resolved opt-out dimension,
     * split, write both tables with retry, dead-letter on exhaustion. It
     * costs one broadcast of the dimension (the O11 existence probe), one
@@ -115,26 +106,23 @@ object StreamingPipeline {
     * writer task per [[RowsPerWriteTask]] rows (`coalesce` only merges
     * partitions, so a large backfill batch keeps its parallelism).
     *
-    * The pass is an eager `localCheckpoint`, not `persist` plus an action:
-    * adaptive execution materializes a persisted frame's first scan in a
-    * job of its own, so that would cost two jobs. Keeping the rows means
-    * the dimProvider's dimension query (often a remote read) and the join
-    * run once per batch, and both splits see the same dimension snapshot.
+    * The pass is an observed eager checkpoint
+    * ([[graft.analytics.Checkpoints.observedCheckpoint]]), not `persist`
+    * plus an action: adaptive execution materializes a persisted frame's
+    * first scan in a job of its own, so that would cost two jobs. The
+    * split counts are read only once that pass has succeeded. Keeping the
+    * rows means the dimProvider's dimension query (often a remote read) and
+    * the join run once per batch, and both splits see the same dimension
+    * snapshot.
     * The kept rows have no lineage: if an executor holding them is lost,
     * the batch fails and replays from its uncommitted source offsets. */
   def processBatch(batch: DataFrame, dim: DataFrame, sink: BatchSink, tables: SinkTables,
                    dlq: Dlq, policy: RetryPolicy): BatchResult = {
-    val counts = Seq(count_if(col("is_opt_out")).as("opt_out"), count(lit(1)).as("rows"))
-    // a fresh Observation per batch: one serves exactly one Dataset
-    val obs = Observation()
     // the one pass over the batch; a failure here throws before any wait
-    val routed = OptOutRouting.withOptOutFlag(batch, "hashed_id", dim, "hashed_id")
-      .observe(obs, counts.head, counts.tail: _*)
-      .localCheckpoint()
+    val (routed, metrics) = Checkpoints.observedCheckpoint(
+      OptOutRouting.withOptOutFlag(batch, "hashed_id", dim, "hashed_id"),
+      count_if(col("is_opt_out")).as("opt_out"), count(lit(1)).as("rows"))
     try {
-      val metrics =
-        try Await.result(obs.future, CountsWait)
-        catch { case _: TimeoutException => routed.agg(counts.head, counts.tail: _*).head() }
       val (nOpt, total) = (metrics.getLong(0), metrics.getLong(1))
       val (main, opt) = OptOutRouting.split(routed)
       var written = 0L
@@ -150,7 +138,7 @@ object StreamingPipeline {
           }
       }
       BatchResult(written, dead, total)
-    } finally Bpe.releaseCheckpoint(routed)
+    } finally Checkpoints.releaseCheckpoint(routed)
   }
 
   /** Build and start the per-tenant streaming query: O4–O9 transform chain

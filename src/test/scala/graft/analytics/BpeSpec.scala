@@ -90,27 +90,6 @@ class BpeSpec extends SparkSpec {
     assert((m(0).getAs[String]("lsym"), m(0).getAs[String]("rsym")) == ("a", "b"))
   }
 
-  test("releaseCheckpoint frees a localCheckpoint's blocks (Dataset.unpersist does not)") {
-    // r17 review: Dataset.unpersist only uncaches CacheManager entries; a
-    // localCheckpoint's blocks are RDD-level persisted and survive it —
-    // the r16 "release" was a no-op. Assertions are id-specific (the
-    // suite-shared context may host concurrent suites' RDDs).
-    val df = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text").localCheckpoint(true)
-    val sc = spark.sparkContext
-    val rddId = df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.get
-    assert(sc.getPersistentRDDs.contains(rddId),
-      "a localCheckpoint'd frame must hold RDD-level persisted blocks")
-    df.unpersist()
-    assert(sc.getPersistentRDDs.contains(rddId),
-      "Dataset.unpersist must NOT free checkpoint blocks (CacheManager path only) — " +
-        "if this starts failing, Spark changed and releaseCheckpoint can be retired")
-    Bpe.releaseCheckpoint(df)
-    assert(!sc.getPersistentRDDs.contains(rddId),
-      "releaseCheckpoint must deterministically drop the checkpointed RDD's blocks")
-  }
-
   test("merges=0 oracle SQL is structurally valid (no dangling comma, empty merge table)") {
     // r17 review: the old merges=0 splice emitted `w0 AS (...),` followed
     // by nothing (train side) and `SELECT * FROM ()` — invalid SQL even

@@ -13,7 +13,12 @@ import org.apache.spark.storage.StorageLevel
   *   - its rows are the ones the operator returned when it handed back a
   *     persisted frame (row count and a digest of the sorted rows);
   *   - a second action over it reads no source partition (PlanShapeSpec's
-  *     partition-scan counter, scoped to this test's own source). */
+  *     partition-scan counter, scoped to this test's own source);
+  *   - the only persistent RDD the call leaves behind is the result's own
+  *     checkpoint: every intermediate checkpoint was released (a census of
+  *     `sc.getPersistentRDDs` ids before and after the call).
+  * The index builds and appends, which return nothing, leave no persistent
+  * RDD behind at all. */
 class CacheLifetimeSpec extends SparkSpec {
   private val d = sf("sf0.001")
 
@@ -30,13 +35,25 @@ class CacheLifetimeSpec extends SparkSpec {
     md.digest().take(8).map("%02x".format(_)).mkString
   }
 
+  private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Ids of the checkpoints `df`'s plan reads. */
+  private def checkpointIds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+
   private def lifetime(name: String, source: => DataFrame, rows: Long, sha: String)
                       (op: DataFrame => DataFrame): Unit =
     test(s"$name returns a lineage-free checkpoint: no cache entry, same rows, no source re-read") {
       val (src, scans) = counted(source)
+      val before = persistentIds
       val out = op(src)
+      val left = persistentIds -- before
       assert(scans.value > 0)
       assert(out.storageLevel == StorageLevel.NONE, s"$name left its result cached")
+      assert(left.size == 1 && left == checkpointIds(out),
+        s"$name left persistent RDDs $left; its result reads ${checkpointIds(out)}")
       scans.reset()
       val got = out.collect()
       assert(scans.value == 0, s"$name: a second action re-read ${scans.value} source partitions")
@@ -63,4 +80,56 @@ class CacheLifetimeSpec extends SparkSpec {
     ProductQuantization.adcTopK(e, e.filter(col("vec_id") < 5), k = 5))
   lifetime("ivfPqTopK", emb, 25, "5f258efb76339827")(e =>
     ProductQuantization.ivfPqTopK(e, e.filter(col("vec_id") < 5), k = 5))
+
+  /** The census alone, for the other operators that make checkpoints: the
+    * call leaves behind at most the one checkpoint its result reads. */
+  private def census(name: String)(op: => DataFrame): Unit =
+    test(s"$name releases every intermediate checkpoint") {
+      val before = persistentIds
+      val out = op
+      val left = persistentIds -- before
+      assert(left.size <= 1 && left.subsetOf(checkpointIds(out)),
+        s"$name left persistent RDDs $left; its result reads ${checkpointIds(out)}")
+    }
+
+  census("clusterOutliers")(Clustering.clusterOutliers(emb, centroidStep = 40))
+  census("clusterPrototypes")(Clustering.clusterPrototypes(emb, centroidStep = 40))
+  census("clusterTopics")(Clustering.clusterTopics(emb, docs))
+  census("trainedCentroids")(Clustering.trainedCentroids(emb, centroidStep = 40))
+  census("lshBucketPairsBanded")(Similarity.lshBucketPairsBanded(emb, minCos = 0.5))
+  census("minhashLshPairs")(Dedup.minhashLshPairs(docs, minJaccard = 0.5))
+  census("connectedComponentKeepers")(
+    Dedup.connectedComponentKeepers(docs, Dedup.ngramJaccardPairs(docs, minJaccard = 0.3)))
+  census("cmsTopTokens")(Sketches.cmsTopTokens(docs))
+  census("perceptronTrain")(Search.perceptronTrain(docs))
+  census("trainMerges")(Bpe.trainMerges(docs, merges = 20))
+
+  /** `call` leaves no persistent RDD behind. */
+  private def leavesNothing(name: String)(call: => Unit): Unit =
+    test(s"$name releases every checkpoint it makes") {
+      val before = persistentIds
+      call
+      val left = persistentIds -- before
+      assert(left.isEmpty, s"$name left persistent RDDs $left")
+    }
+
+  private def scratch(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
+
+  leavesNothing("PqIndex.build (full and sampled training) and append") {
+    val dir = scratch("census-pq")
+    PqIndex.build(emb.filter(col("vec_id") < 400), dir)
+    PqIndex.build(emb.filter(col("vec_id") < 400), scratch("census-pq-s"), trainSampleTarget = 100)
+    PqIndex.append(emb.filter(col("vec_id") >= 400), dir)
+  }
+  leavesNothing("SearchIndex.build and append") {
+    val dir = scratch("census-search")
+    SearchIndex.build(docs.filter(col("doc_id") < 400), dir)
+    SearchIndex.append(docs.filter(col("doc_id") >= 400), dir)
+  }
+  leavesNothing("DedupIndex.build and append") {
+    val dir = scratch("census-dedup")
+    DedupIndex.build(docs.filter(col("doc_id") < 400), dir)
+    DedupIndex.append(docs.filter(col("doc_id") >= 400), dir)
+  }
 }

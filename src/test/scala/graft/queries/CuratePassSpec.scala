@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.RDDScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.storage.StorageLevel
 import graft.{SparkSpec, Tables}
-import graft.analytics.{Bpe, Dedup}
+import graft.analytics.{Checkpoints, Dedup}
 
 /** The composed curation pipelines share lineage-free corpus frames: eager
   * checkpoints whose filling pass also returns the counts the df cap needs,
@@ -37,7 +37,7 @@ class CuratePassSpec extends SparkSpec {
     test(s"the curate pass's observed documents count is the table's count ($scale)") {
       val (kept, nDocs) = AnalyticsQueries.curateKeptCounted(spark, sf(scale))
       assert(nDocs == Tables(spark, sf(scale)).documents.count())
-      Bpe.releaseCheckpoint(kept)
+      Checkpoints.releaseCheckpoint(kept)
     }
 
   test("one pipeline_curate and one pipeline_full call on sf0.001 stay under their job bounds") {
