@@ -54,25 +54,22 @@ object CdcIndex {
   /** Layout/chunking record (r15, completing the family contract of
     * VERDICT r14 #1): the CDC window `w` and rolling-hash `modulus` are
     * properties of the BUILD — chunk boundaries are a pure function of
-    * (text, w, modulus), so an [[append]] or [[screenDelta]] under
-    * different values produces different chunk hashes and silently misses
-    * every duplicate. Recorded at build, validated on every later
-    * operation; an index without the record fails loudly ([[IndexMeta]]).
-    * `buckets` is recorded for cross-version safety (the partition rule
-    * must match what is on disk). */
-  private def writeMeta(spark: SparkSession, dir: String, w: Int, modulus: Int): Unit =
-    IndexMeta.write(spark, dir,
-      s"""{"layout":1,"w":$w,"modulus":$modulus,"buckets":$Buckets}""")
+    * (text, w, modulus), so every later operation chunks under the recorded
+    * values ([[IndexMeta]]). `buckets` is recorded for cross-version safety
+    * (the partition rule must match what is on disk). */
+  private final case class Meta(w: Int, modulus: Int)
 
-  private def checkGeometry(spark: SparkSession, dir: String, w: Int, modulus: Int): Unit = {
+  private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit =
+    IndexMeta.write(spark, dir,
+      s"""{"layout":1,"w":${m.w},"modulus":${m.modulus},"buckets":$Buckets}""")
+
+  private def readMeta(spark: SparkSession, dir: String): Meta = {
     val txt = IndexMeta.required(spark, dir, "CdcIndex.build")
-    def field(k: String): Long = IndexMeta.field(txt, k, dir)
-    if (field("w") != w || field("modulus") != modulus || field("buckets") != Buckets)
-      throw new IllegalStateException(
-        s"CDC index at $dir was built with w=${field("w")} modulus=${field("modulus")} " +
-          s"buckets=${field("buckets")}; caller asked for w=$w modulus=$modulus " +
-          s"buckets=$Buckets - mismatched chunking cannot compose; pass the build " +
-          "parameters or rebuild the index")
+    def field(k: String): Int = IndexMeta.field(txt, k, dir).toInt
+    if (field("buckets") != Buckets)
+      throw new IllegalStateException(s"CDC index at $dir was written with " +
+        s"buckets=${field("buckets")}, this code partitions by $Buckets - rebuild the index")
+    Meta(field("w"), field("modulus"))
   }
 
   private[analytics] val ChunksSchema = StructType(Seq(StructField("doc_id", LongType),
@@ -81,9 +78,8 @@ object CdcIndex {
   private def readChunks(spark: SparkSession, dir: String): DataFrame =
     IndexMeta.readStore(spark, s"$dir/chunks", ChunksSchema)
 
-  private def hashes(docs: DataFrame, w: Int, modulus: Int,
-                     idCol: String, textCol: String): DataFrame =
-    Dedup.cdcChunks(docs, w, modulus, idCol, textCol)
+  private def hashes(docs: DataFrame, m: Meta, idCol: String, textCol: String): DataFrame =
+    Dedup.cdcChunks(docs, m.w, m.modulus, idCol, textCol)
       .select(col("doc_id"), Dedup.hash60(col("chunk")).as("chunk_hash"))
       .distinct()
       .withColumn("bucket", col("chunk_hash") % Buckets)
@@ -92,26 +88,25 @@ object CdcIndex {
   def build(docs: DataFrame, dir: String, w: Int = 4, modulus: Int = 16,
             idCol: String = "doc_id", textCol: String = "text"): Unit =
     IndexLock.withLock(docs.sparkSession, dir) {
-      IndexMeta.writeStore(hashes(docs, w, modulus, idCol, textCol), s"$dir/chunks",
+      val m = Meta(w, modulus)
+      IndexMeta.writeStore(hashes(docs, m, idCol, textCol), s"$dir/chunks",
         "overwrite", Seq("bucket"))
-      writeMeta(docs.sparkSession, dir, w, modulus)
+      writeMeta(docs.sparkSession, dir, m)
       IndexMeta.clearTombstones(docs.sparkSession, dir)
     }
 
-  private def appendUnlocked(delta: DataFrame, dir: String, w: Int, modulus: Int,
-                             idCol: String, textCol: String): Unit = {
-    checkGeometry(delta.sparkSession, dir, w, modulus)
-    IndexMeta.writeStore(hashes(delta, w, modulus, idCol, textCol), s"$dir/chunks",
+  private def appendUnlocked(delta: DataFrame, dir: String, m: Meta,
+                             idCol: String, textCol: String): Unit =
+    IndexMeta.writeStore(hashes(delta, m, idCol, textCol), s"$dir/chunks",
       "append", Seq("bucket"))
-  }
 
-  /** Append a shard's chunk hashes (blind — screen first via
-    * [[screenDelta]] when admission should gate the append, or use
-    * [[ingest]] which does both under one lock). */
-  def append(delta: DataFrame, dir: String, w: Int = 4, modulus: Int = 16,
+  /** Append a shard's chunk hashes under the recorded chunking (blind —
+    * screen first via [[screenDelta]] when admission should gate the
+    * append, or use [[ingest]] which does both under one lock). */
+  def append(delta: DataFrame, dir: String,
              idCol: String = "doc_id", textCol: String = "text"): Unit =
     IndexLock.withLock(delta.sparkSession, dir) {
-      appendUnlocked(delta, dir, w, modulus, idCol, textCol)
+      appendUnlocked(delta, dir, readMeta(delta.sparkSession, dir), idCol, textCol)
     }
 
   /** Delete history docs from the screening set without rewriting the
@@ -121,7 +116,7 @@ object CdcIndex {
   def forget(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String = "doc_id"): Unit =
     IndexLock.withLock(spark, dir) {
-      IndexMeta.required(spark, dir, "CdcIndex.build"): Unit
+      readMeta(spark, dir): Unit
       IndexMeta.forget(dir, IndexMeta.idFrame(ids, idCol, "doc_id"))
     }
 
@@ -132,7 +127,7 @@ object CdcIndex {
     * and after return identical verdicts (CdcIndexSpec). */
   def compact(spark: SparkSession, dir: String): Unit =
     IndexLock.withLock(spark, dir) {
-      IndexMeta.required(spark, dir, "CdcIndex.build"): Unit
+      readMeta(spark, dir): Unit
       IndexMeta.tombstones(spark, dir).foreach { tomb =>
         val affected = readChunks(spark, dir)
           .join(broadcast(tomb), Seq("doc_id"), "left_semi")
@@ -154,15 +149,14 @@ object CdcIndex {
     * BEFORE the append so the screen can never observe its own write.
     * Returns the verdicts. */
   def ingest(spark: SparkSession, dir: String, delta: DataFrame,
-             maxDupPerMille: Int = 500, w: Int = 4, modulus: Int = 16,
+             maxDupPerMille: Int = 500,
              idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     IndexLock.withLock(spark, dir) {
-      val verdicts = screenDelta(spark, dir, delta, maxDupPerMille, w, modulus,
-          idCol, textCol)
+      val m = readMeta(spark, dir)
+      val verdicts = screen(spark, dir, m, delta, maxDupPerMille, idCol, textCol)
         .localCheckpoint(true)
       val keep = verdicts.filter(col("admit")).select(col("doc_id").as(idCol))
-      appendUnlocked(delta.join(keep, Seq(idCol), "left_semi"), dir, w, modulus,
-        idCol, textCol)
+      appendUnlocked(delta.join(keep, Seq(idCol), "left_semi"), dir, m, idCol, textCol)
       verdicts
     }
 
@@ -170,18 +164,22 @@ object CdcIndex {
     * the chunk count, the count of chunk OCCURRENCES whose hash exists in
     * (non-forgotten) history, integer duplicate-mass per-mille, and the
     * admission verdict (`dup_permille <= maxDupPerMille`). Every delta doc
-    * gets a verdict row — the routable-admission contract. */
+    * gets a verdict row — the routable-admission contract. The delta is
+    * chunked under the recorded geometry. */
   def screenDelta(spark: SparkSession, dir: String, delta: DataFrame,
-                  maxDupPerMille: Int = 500, w: Int = 4, modulus: Int = 16,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    checkGeometry(spark, dir, w, modulus)
+                  maxDupPerMille: Int = 500,
+                  idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    screen(spark, dir, readMeta(spark, dir), delta, maxDupPerMille, idCol, textCol)
+
+  private def screen(spark: SparkSession, dir: String, m: Meta, delta: DataFrame,
+                     maxDupPerMille: Int, idCol: String, textCol: String): DataFrame = {
     // tombstoned docs' rows leave the reachable set ([[forget]]; lock-free
     // — see [[IndexMeta.tombstones]])
     val hist = IndexMeta.live(spark, dir, readChunks(spark, dir), "doc_id")
       .select(col("chunk_hash"))
     // the chunk stream feeds both the total and the hit count — materialize
     // once (the multi-reference rule)
-    val chunks = Dedup.cdcChunks(delta, w, modulus, idCol, textCol)
+    val chunks = Dedup.cdcChunks(delta, m.w, m.modulus, idCol, textCol)
       .select(col("doc_id"), Dedup.hash60(col("chunk")).as("chunk_hash"))
       .localCheckpoint(true)
     val tot = chunks.groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))

@@ -35,14 +35,17 @@ private[graft] object Checkpoints {
     * so it frees nothing. The checkpointed RDD itself is reachable through
     * the LogicalRDD node the checkpoint returns; unpersisting THAT drops
     * the block set (spec-pinned via sc.getPersistentRDDs in
-    * CheckpointsSpec). Idempotent, and a no-op on a frame that is not a
-    * checkpoint. Safe only once nothing will read the frame again: a later
-    * action on a released checkpoint has no lineage to recompute from. */
+    * CheckpointsSpec). The blocks are freed through the SparkContext
+    * ([[org.apache.spark.sql.graft.GraftBridge.unpersistRDD]]), not
+    * `RDD.unpersist`, which would log a lineage-truncated WARN per release.
+    * Idempotent, and a no-op on a frame that is not a checkpoint. Safe only
+    * once nothing will read the frame again: a later action on a released
+    * checkpoint has no lineage to recompute from. */
   def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.filter(rdd => rdd.sparkContext.getPersistentRDDs.contains(rdd.id))
-      .foreach(_.unpersist(false): Unit)
+      .foreach(org.apache.spark.sql.graft.GraftBridge.unpersistRDD)
 
   /** How long observed metrics may take to arrive after their pass; they
     * come through the session's listener bus, normally within

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   *   - `bands/`    (doc_id, band, bucket) PARTITIONED BY (band, dbucket) —
   *     the LSH probe structure; a few fixed-width rows per doc. The
   *     doc-hash second level exists for partition-scoped compaction
-  *     (see [[DocBuckets]]).
+  *     (see [[Meta]]).
   *   - `shingles/` (doc_id, sh) PARTITIONED BY dbucket — the shingle sets
   *     the verify stage intersects. This is the corpus-sized half;
   *     production systems either store it (as here) or re-read source text
@@ -39,12 +39,17 @@ import org.apache.spark.sql.types._
   */
 object DedupIndex {
 
-  /** Doc-hash sub-partitioning of the stored layout (r13, VERDICT r12 #2):
+  /** The stored banding/layout record: MinHash banding geometry (appends
+    * and probes band under it — different bands/rowsPerBand/ngram would
+    * write or compare incompatible band buckets) plus the doc-hash width.
+    *
+    * Doc-hash sub-partitioning of the stored layout (r13, VERDICT r12 #2):
     * `bands/` is partitioned by (band, dbucket) and `shingles/` by dbucket,
-    * where dbucket = pmod(xxhash64(doc_id), docBuckets) — a pure function
-    * of the id, so incremental appends land in the same directories and
-    * compose. Probes are unchanged (they read whole bands; dbucket is a
-    * second-level directory). What the extra level buys is PARTITION-SCOPED
+    * where dbucket = [[IndexMeta.bucketOf]](doc_id, docBuckets) — a pure
+    * function of the id, so incremental appends land in the same
+    * directories and compose. Probes are unchanged (they read whole bands;
+    * dbucket is a second-level directory). What the extra level buys is
+    * PARTITION-SCOPED
     * COMPACTION: a doc appears in every band, so band-only partitioning
     * would force a full rewrite for ANY tombstone — with the doc-hash
     * level, [[compact]] rewrites only the (band, dbucket) / (dbucket)
@@ -57,12 +62,6 @@ object DedupIndex {
     * so the width is a property of the BUILD: [[IndexMeta.bucketPolicy]]
     * over the corpus size, persisted in `_graft_meta.json` and read back by
     * every later operation (r15, VERDICT r14 #1). */
-  private def dbucketOf(c: org.apache.spark.sql.Column, docBuckets: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(c), lit(docBuckets)).cast("int")
-
-  /** The stored banding/layout record: MinHash banding geometry (an append
-    * or probe under different bands/rowsPerBand/ngram would write or
-    * compare incompatible band buckets) plus the doc-hash width. */
   private final case class Meta(docBuckets: Int, bands: Int, rowsPerBand: Int, ngram: Int)
 
   private def writeMeta(spark: SparkSession, dir: String, m: Meta): Unit =
@@ -73,22 +72,6 @@ object DedupIndex {
     val txt = IndexMeta.required(spark, dir, "DedupIndex.build")
     def field(k: String): Int = IndexMeta.field(txt, k, dir).toInt
     Meta(field("docBuckets"), field("bands"), field("rowsPerBand"), field("ngram"))
-  }
-
-  /** Fail-fast geometry check for every post-build operation: a mismatched
-    * banding geometry would compose incompatible minhash rows (appends) or
-    * probe with foreign buckets (dedupDelta) — silently missing pairs.
-    * Returns the stored doc-hash width. */
-  private def checkGeometry(spark: SparkSession, dir: String,
-                            bands: Int, rowsPerBand: Int, n: Int): Int = {
-    val m = readMeta(spark, dir)
-    if (m.bands != bands || m.rowsPerBand != rowsPerBand || m.ngram != n)
-      throw new IllegalStateException(
-        s"dedup index at $dir was built with bands=${m.bands} rowsPerBand=" +
-          s"${m.rowsPerBand} ngram=${m.ngram}; caller asked for bands=$bands " +
-          s"rowsPerBand=$rowsPerBand ngram=$n - mismatched banding cannot compose; " +
-          "pass the build geometry or rebuild the index")
-    m.docBuckets
   }
 
   private[analytics] val BandsSchema = StructType(Seq(StructField("doc_id", LongType),
@@ -106,65 +89,52 @@ object DedupIndex {
 
   /** Build and write the index from corpus history; the doc-hash width
     * ([[IndexMeta.bucketPolicy]] over the corpus size) and the banding
-    * geometry are recorded in `_graft_meta.json` and validated by every
-    * later operation (r15). */
+    * geometry are recorded in `_graft_meta.json`, and every later operation
+    * reads them back (r15). */
   def build(docs: DataFrame, dir: String,
             bands: Int = 4, rowsPerBand: Int = 4, n: Int = 3,
             idCol: String = "doc_id", textCol: String = "text"): Unit =
     IndexLock.withLock(docs.sparkSession, dir) {
-      val db = writeIndex(docs, dir, bands, rowsPerBand, n, idCol, textCol,
-        "overwrite", docBuckets0 = 0)
-      writeMeta(docs.sparkSession, dir, Meta(db, bands, rowsPerBand, n))
+      val m = writeIndex(docs, dir, Meta(0, bands, rowsPerBand, n), idCol, textCol,
+        "overwrite")
+      writeMeta(docs.sparkSession, dir, m)
       IndexMeta.clearTombstones(docs.sparkSession, dir)
     }
 
-  /** Append a shard to the index (no dedup — compose with [[dedupDelta]]
-    * first when the shard should be screened before admission). The stored
-    * geometry wins: a mismatching explicit (bands, rowsPerBand, n) throws
-    * (r15 — it would write incompatible minhash rows). */
+  /** Append a shard to the index under the recorded geometry (no dedup —
+    * compose with [[dedupDelta]] first when the shard should be screened
+    * before admission). */
   def append(delta: DataFrame, dir: String,
-             bands: Int = 4, rowsPerBand: Int = 4, n: Int = 3,
              idCol: String = "doc_id", textCol: String = "text"): Unit =
     IndexLock.withLock(delta.sparkSession, dir) {
-      appendUnlocked(delta, dir, bands, rowsPerBand, n, idCol, textCol)
+      writeIndex(delta, dir, readMeta(delta.sparkSession, dir), idCol, textCol, "append"): Unit
     }
 
-  /** The append body without lock acquisition — for callers ([[ingest]])
-    * that already hold the index lock across a wider read-check-append
-    * critical section (the lock is non-reentrant). */
-  private def appendUnlocked(delta: DataFrame, dir: String,
-                             bands: Int, rowsPerBand: Int, n: Int,
-                             idCol: String, textCol: String): Unit = {
-    val db = checkGeometry(delta.sparkSession, dir, bands, rowsPerBand, n)
-    writeIndex(delta, dir, bands, rowsPerBand, n, idCol, textCol, "append",
-      docBuckets0 = db): Unit
-  }
-
-  /** Shared write body of [[build]]/[[appendUnlocked]]: shingle once, write
+  /** Shared write body of [[build]]/[[append]]/[[ingest]], without lock
+    * acquisition (the lock is non-reentrant): shingle once, write
     * bands partitioned by (band, dbucket) and shingles by dbucket.
-    * `docBuckets0 > 0` pins the width (appends); `0` derives it from the
-    * corpus (build — [[IndexMeta.bucketPolicy]]). Returns the width used. */
-  private def writeIndex(docs: DataFrame, dir: String,
-                         bands: Int, rowsPerBand: Int, n: Int,
-                         idCol: String, textCol: String, mode: String,
-                         docBuckets0: Int): Int = {
+    * `m.docBuckets > 0` pins the width (appends); `0` derives it from the
+    * corpus (build — [[IndexMeta.bucketPolicy]]). Returns `m` with the
+    * width used. */
+  private def writeIndex(docs: DataFrame, dir: String, m: Meta,
+                         idCol: String, textCol: String, mode: String): Meta = {
     // the pass that checkpoints the shingle frame also counts it, which
     // sizes the width on the build path
     val (withSh, counted) = Checkpoints.observedCheckpoint(
-      Dedup.shingleFrame(docs, n, idCol, textCol), count(lit(1)))
+      Dedup.shingleFrame(docs, m.ngram, idCol, textCol), count(lit(1)))
     val docBuckets =
-      if (docBuckets0 > 0) docBuckets0 else IndexMeta.bucketPolicy(counted.getLong(0))
+      if (m.docBuckets > 0) m.docBuckets else IndexMeta.bucketPolicy(counted.getLong(0))
     // bands and shingles are independent writes over the one checkpointed
     // shingle frame — overlap the two job+commit latencies (r18, guide §2.6)
+    val dbucket = IndexMeta.bucketOf(col("doc_id"), docBuckets)
     Par.run(
       () => IndexMeta.writeStore(
-        Dedup.minhashBanded(withSh, bands, rowsPerBand)
-          .withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets)),
+        Dedup.minhashBanded(withSh, m.bands, m.rowsPerBand).withColumn("dbucket", dbucket),
         s"$dir/bands", mode, Seq("band", "dbucket")),
-      () => IndexMeta.writeStore(withSh.withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets)),
+      () => IndexMeta.writeStore(withSh.withColumn("dbucket", dbucket),
         s"$dir/shingles", mode, Seq("dbucket")))
     Checkpoints.releaseCheckpoint(withSh)
-    docBuckets
+    m.copy(docBuckets = docBuckets)
   }
 
   /** Admission pass for an arriving shard — the decision layer over
@@ -182,10 +152,12 @@ object DedupIndex {
     * pair (DedupIndexIngestSpec proves both properties). */
   def admitDelta(spark: SparkSession, dir: String, delta: DataFrame,
                  minJaccard: Double,
-                 bands: Int = 4, rowsPerBand: Int = 4, n: Int = 3,
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val prs = dedupDelta(spark, dir, delta, minJaccard, bands, rowsPerBand, n,
-      idCol, textCol)
+                 idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    admit(spark, dir, readMeta(spark, dir), delta, minJaccard, idCol, textCol)
+
+  private def admit(spark: SparkSession, dir: String, m: Meta, delta: DataFrame,
+                    minJaccard: Double, idCol: String, textCol: String): DataFrame = {
+    val prs = pairs(spark, dir, m, delta, minJaccard, idCol, textCol)
     val dIds = delta.select(col(idCol).as("__did")).distinct().localCheckpoint(true)
     val flagged = prs
       .join(dIds.select(col("__did").as("id_a"), lit(true).as("__a_d")), Seq("id_a"), "left")
@@ -217,12 +189,11 @@ object DedupIndex {
     * ingest (one batch per shard). */
   def ingest(spark: SparkSession, dir: String, delta: DataFrame,
              minJaccard: Double,
-             bands: Int = 4, rowsPerBand: Int = 4, n: Int = 3,
              idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     IndexLock.withLock(spark, dir) {
-      val admitted = admitDelta(spark, dir, delta, minJaccard, bands, rowsPerBand,
-        n, idCol, textCol)
-      appendUnlocked(admitted, dir, bands, rowsPerBand, n, idCol, textCol)
+      val m = readMeta(spark, dir)
+      val admitted = admit(spark, dir, m, delta, minJaccard, idCol, textCol)
+      writeIndex(admitted, dir, m, idCol, textCol, "append"): Unit
       admitted
     }
 
@@ -254,7 +225,7 @@ object DedupIndex {
     IndexLock.withLock(spark, dir) {
       val db = readMeta(spark, dir).docBuckets
       IndexMeta.tombstones(spark, dir).foreach { tomb =>
-        val tb = tomb.select(dbucketOf(col("doc_id"), db).as("b"))
+        val tb = tomb.select(IndexMeta.bucketOf(col("doc_id"), db).as("b"))
           .distinct().collect().map(_.getInt(0)).toSeq
         IndexMeta.rewritePartitions(readBands(spark, dir), s"$dir/bands",
           Seq("band", "dbucket"), "dbucket", tb, tomb, "doc_id")
@@ -271,20 +242,24 @@ object DedupIndex {
     * new (disjoint from the index).
     *
     * The verify stage's shingle read is deliberately NOT dbucket-pruned:
-    * with [[DocBuckets]] = 16 buckets any realistic candidate set touches
-    * most of them (the expected distinct-bucket count saturates after a
-    * few dozen candidates), so the pruning filter would buy nothing while
-    * costing an extra candidate materialization pass. The partition level
-    * exists for [[compact]] scoping, not probe pruning. */
+    * with 16 doc-hash buckets (the small-corpus width) any realistic
+    * candidate set touches most of them (the expected distinct-bucket count
+    * saturates after a few dozen candidates), so the pruning filter would
+    * buy nothing while costing an extra candidate materialization pass.
+    * The partition level exists for [[compact]] scoping, not probe
+    * pruning.
+    *
+    * The delta is shingled and banded under the recorded geometry: banded
+    * any other way it would probe foreign buckets and miss every pair. */
   def dedupDelta(spark: SparkSession, dir: String, delta: DataFrame,
                  minJaccard: Double,
-                 bands: Int = 4, rowsPerBand: Int = 4, n: Int = 3,
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // geometry must match the stored index: a delta banded differently
-    // would probe foreign buckets and silently miss every pair (r15)
-    checkGeometry(spark, dir, bands, rowsPerBand, n): Unit
-    val dSh = Dedup.shingleFrame(delta, n, idCol, textCol).localCheckpoint(true)
-    val dBand = Dedup.minhashBanded(dSh, bands, rowsPerBand)
+                 idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    pairs(spark, dir, readMeta(spark, dir), delta, minJaccard, idCol, textCol)
+
+  private def pairs(spark: SparkSession, dir: String, m: Meta, delta: DataFrame,
+                    minJaccard: Double, idCol: String, textCol: String): DataFrame = {
+    val dSh = Dedup.shingleFrame(delta, m.ngram, idCol, textCol).localCheckpoint(true)
+    val dBand = Dedup.minhashBanded(dSh, m.bands, m.rowsPerBand)
     // tombstoned history docs ([[forget]]) never reach the probe join
     val iBand = IndexMeta.live(spark, dir,
       readBands(spark, dir).select(col("doc_id"), col("band"), col("bucket")), "doc_id")

@@ -1,7 +1,7 @@
 package graft.analytics
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -10,18 +10,20 @@ import org.apache.spark.sql.types.StructType
   * files). Every index keeps the same storage protocol, and this is its
   * only copy:
   *
-  *   - the `_graft_meta.json` LAYOUT RECORD (r15, VERDICT r14 #1). Every
-  *     store derives its partition directories from a hash-bucket rule
-  *     whose WIDTH is a build-time constant — `hash % buckets` — and probes
-  *     recompute that rule driver-side into literal partition filters, so
-  *     a different width against an existing index would prune to the
-  *     WRONG directories and silently return incomplete rows. The build
-  *     records its layout constants here after its data, every later
-  *     operation reads them back ([[required]]), and an explicit caller value
-  *     that disagrees FAILS FAST. An index without the record fails loudly
-  *     and must be rebuilt: it was written before the record existed, or
-  *     its first build never finished. A rebuild that crashed after its data
-  *     writes keeps serving under its prior record;
+  *   - the `_graft_meta.json` LAYOUT RECORD (r15, VERDICT r14 #1), the
+  *     one source of an index's GEOMETRY after build. Every store derives
+  *     its partition directories from a hash-bucket rule whose WIDTH is a
+  *     build-time constant ([[bucketOf]]) and probes recompute that rule
+  *     driver-side into literal partition filters; banding, chunking and
+  *     code-slicing parameters decide what the stored rows mean. So the
+  *     geometry is decided once: `build` takes it and records it here after
+  *     its data, and every later entry point reads it back ([[required]])
+  *     and takes none from its caller — no caller can probe, append or
+  *     slice under a geometry the store was not written with. An index
+  *     without the record fails loudly and must be rebuilt: it was written
+  *     before the record existed, or its first build never finished. A
+  *     rebuild that crashed after its data writes keeps serving under its
+  *     prior record;
   *   - atomic small files ([[writeBytes]]/[[readBytes]]): the meta and
   *     [[BloomIndex]]'s filter are replaced whole, never truncated under a
   *     lock-free reader;
@@ -110,6 +112,12 @@ private[analytics] object IndexMeta {
     long(txt, k).getOrElse(throw new IllegalStateException(
       s"index meta at $dir has no \"$k\" field: $txt - rebuild the index"))
 
+  /** The hash-bucket rule of every id- or key-bucketed store:
+    * `pmod(xxhash64(c), width)` as an int. A pure function of the key only
+    * at a constant width, which is why the width is recorded at build. */
+  def bucketOf(c: Column, width: Int): Column =
+    pmod(xxhash64(c), lit(width)).cast("int")
+
   /** Doc/vec-hash bucket width by corpus size (r15, VERDICT r14 #4): the
     * 16-bucket constants of r13/r14 bound RTBF pruning at min(|ids|,16)/16
     * of the store and fix compact granularity forever — at 100 TB that is
@@ -133,7 +141,7 @@ private[analytics] object IndexMeta {
     * the corpus grows; clamped to [64, 4096] so every oracle corpus lands
     * on the historical 64 (existing indexes byte-stable) and directory
     * count stays bounded. Recorded in the index meta at build; probes and
-    * mutators read it back ([[SearchIndex.resolveBuckets]] fail-fast). */
+    * mutators read it back ([[required]]). */
   def tokenBucketPolicy(postingsRows: Long): Int =
     math.min(4096L, math.max(64L, (postingsRows + (1L << 20) - 1) >> 20)).toInt
 

@@ -44,16 +44,35 @@ object PqIndex {
     * BUILD — querying or appending a packed index with a different
     * geometry would silently read wrong array slots (or throw under ANSI
     * array indexing), so [[build]] records them in `_graft_meta.json` and
-    * [[query]]/[[append]] validate before touching the codes. */
+    * [[query]]/[[append]] read them back before touching the codes. */
   private val LayoutVersion = 2
+
+  /** The PQ geometry the stored codes were packed under. */
+  private final case class Meta(m: Int, subDim: Int)
+
+  /** The geometry of a stored meta record `txt`; a record of another
+    * layout version fails loudly. */
+  private def geometry(txt: String, dir: String): Meta = {
+    def field(k: String): Int = IndexMeta.field(txt, k, dir).toInt
+    if (field("layout") != LayoutVersion)
+      throw new IllegalStateException(s"PQ index at $dir was written as layout=" +
+        s"${field("layout")}, this code reads layout=$LayoutVersion - rebuild the index")
+    Meta(field("m"), field("subDim"))
+  }
+
+  private def required(spark: SparkSession, dir: String): String =
+    IndexMeta.required(spark, dir, "PqIndex.build")
+
+  private def readMeta(spark: SparkSession, dir: String): Meta =
+    geometry(required(spark, dir), dir)
 
   /** The `vlists/` sidecar's vec-hash width: chosen by corpus size at
     * build ([[IndexMeta.bucketPolicy]], r15 — VERDICT r14 #4), recorded in
     * `_graft_meta.json` and read back by every later operation. The width
     * bounds the share of the sidecar a [[compact]] discovery reads (same
     * role as `SearchIndex`'s docBuckets). */
-  private def vbucketOf(c: org.apache.spark.sql.Column, vbuckets: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(c), lit(vbuckets)).cast("int")
+  private def vbucketsOf(txt: String, dir: String): Int =
+    IndexMeta.field(txt, "vbuckets", dir).toInt
 
   private def writeMeta(spark: SparkSession, dir: String, m: Int, subDim: Int,
                         trained: String = "full",
@@ -79,9 +98,6 @@ object PqIndex {
       s""""trained":"$trained"$driftFields$layoutFields}""")
   }
 
-  private def vbucketsOf(spark: SparkSession, dir: String): Int =
-    IndexMeta.field(IndexMeta.required(spark, dir, "PqIndex.build"), "vbuckets", dir).toInt
-
   /** The recorded training mode ("full" / "sampled" / "explicit") of a
     * stored index — observability for the default-policy branch (PqIndexSpec
     * asserts the engaged branch per corpus size). Indexes written before
@@ -89,9 +105,10 @@ object PqIndex {
     * (the only mode that existed; ADVICE r13: a missing file must not
     * throw from an observability probe). */
   def trainedMode(spark: SparkSession, dir: String): String =
-    IndexMeta.readText(spark, dir)
-      .flatMap(t => """"trained":"(\w+)"""".r.findFirstMatchIn(t).map(_.group(1)))
-      .getOrElse("full")
+    IndexMeta.readText(spark, dir).fold("full")(trainedOf)
+
+  private def trainedOf(txt: String): String =
+    """"trained":"(\w+)"""".r.findFirstMatchIn(txt).fold("full")(_.group(1))
 
   /** Quantizer-drift observability (r14, VERDICT r13 #8). `trainCcosP5Micro`
     * is the 5th percentile of the corpus's best coarse-centroid cosine at
@@ -137,15 +154,15 @@ object PqIndex {
   /** Read the [[DriftStats]] recorded in `_graft_meta.json`; all-zero for
     * indexes predating the drift signal. */
   def driftStats(spark: SparkSession, dir: String): DriftStats =
-    IndexMeta.readText(spark, dir) match {
-      case None => DriftStats(None, 0L, 0L)
-      case Some(txt) => DriftStats(IndexMeta.long(txt, "ccos_p5_micro"),
-        IndexMeta.long(txt, "drift_appended").getOrElse(0L),
-        IndexMeta.long(txt, "drift_outliers").getOrElse(0L),
-        IndexMeta.long(txt, "drift_base_micro"),
-        IndexMeta.long(txt, "drift_calib_micro"),
-        IndexMeta.long(txt, "drift_last_micro"))
-    }
+    IndexMeta.readText(spark, dir).fold(DriftStats(None, 0L, 0L))(driftOf)
+
+  private def driftOf(txt: String): DriftStats =
+    DriftStats(IndexMeta.long(txt, "ccos_p5_micro"),
+      IndexMeta.long(txt, "drift_appended").getOrElse(0L),
+      IndexMeta.long(txt, "drift_outliers").getOrElse(0L),
+      IndexMeta.long(txt, "drift_base_micro"),
+      IndexMeta.long(txt, "drift_calib_micro"),
+      IndexMeta.long(txt, "drift_last_micro"))
 
   /** Actionable rebuild signal (r15, VERDICT r14 #6): true when the LATEST
     * append's outlier fraction exceeds `factor ×` the deployment's own
@@ -172,19 +189,6 @@ object PqIndex {
       case (Some(l), Some(c)) => l > factor * math.max(c, 1000L)
       case _ => false
     }
-  }
-
-  /** Fail-fast geometry check (see [[LayoutVersion]]): a missing meta file
-    * fails loudly ([[IndexMeta.required]]); a mismatch means the caller's
-    * (m, subDim) is not what the codes were packed under. */
-  private def checkMeta(spark: SparkSession, dir: String, m: Int, subDim: Int): Unit = {
-    val txt = IndexMeta.required(spark, dir, "PqIndex.build")
-    def field(k: String): Long = IndexMeta.field(txt, k, dir)
-    if (field("layout") != LayoutVersion || field("m") != m || field("subDim") != subDim)
-      throw new IllegalStateException(
-        s"PQ index at $dir was built as layout=${field("layout")} m=${field("m")} " +
-          s"subDim=${field("subDim")}; caller asked for layout=$LayoutVersion m=$m " +
-          s"subDim=$subDim - rebuild the index or pass its build geometry")
   }
 
   private[analytics] val CodesSchema = StructType(Seq(StructField("vec_id", LongType),
@@ -259,7 +263,7 @@ object PqIndex {
         .select(col("vec_id"), col("pcodes"), col("centroid_id")),
         s"$dir/codes", mode, Seq("centroid_id")),
       () => IndexMeta.writeStore(assigned.select(col("vec_id"), col("centroid_id"))
-        .withColumn("vbucket", vbucketOf(col("vec_id"), vbuckets)),
+        .withColumn("vbucket", IndexMeta.bucketOf(col("vec_id"), vbuckets)),
         s"$dir/vlists", mode, Seq("vbucket")))
   }
 
@@ -355,13 +359,14 @@ object PqIndex {
     * Each append also updates the DRIFT signal in `_graft_meta.json`
     * ([[driftStats]]): the count of appended vectors whose best coarse
     * cosine falls below the build-time p5 accumulates, making "when to
-    * rebuild" a data-driven read instead of a guess. */
+    * rebuild" a data-driven read instead of a guess. The delta is sliced
+    * under the recorded (m, subDim). */
   def append(delta: DataFrame, dir: String,
-             m: Int = 32, subDim: Int = 2,
              idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = delta.sparkSession
     IndexLock.withLock(spark, dir) {
-    checkMeta(spark, dir, m, subDim)
+    val txt = required(spark, dir)
+    val g = geometry(txt, dir)
     val quantized = delta
       .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
       .localCheckpoint(true)
@@ -369,12 +374,12 @@ object PqIndex {
     val books = spark.read.parquet(s"$dir/codebooks")
     val assigned = assignCoarse(quantized, cent).localCheckpoint(true)
     val codes = ProductQuantization.assignToBooks(
-      ProductQuantization.subSlices(quantized, m, subDim), books, m)
+      ProductQuantization.subSlices(quantized, g.m, g.subDim), books, g.m)
     // append under the STORED sidecar width (the bucket rule is a pure
     // function of the id only at constant width)
-    val vbuckets = vbucketsOf(spark, dir)
+    val vbuckets = vbucketsOf(txt, dir)
     writeCodes(codes, assigned, dir, "append", vbuckets)
-    val prior = driftStats(spark, dir)
+    val prior = driftOf(txt)
     prior.trainCcosP5Micro.foreach { p5 =>
       val st = assigned.agg(count(lit(1)),
         sum(when(col("best_ccos") * 1e6 < p5, 1L).otherwise(0L))).head()
@@ -383,7 +388,7 @@ object PqIndex {
       // deployment's post-build baseline, the latest one is what
       // [[driftAdvisory]] judges against it (an empty delta changes nothing)
       val fracMicro = if (n > 0) Some(math.round(out.toDouble / n * 1e6)) else None
-      writeMeta(spark, dir, m, subDim, trained = trainedMode(spark, dir),
+      writeMeta(spark, dir, g.m, g.subDim, trained = trainedOf(txt),
         ccosP5Micro = Some(p5),
         driftAppended = prior.appended + n,
         driftOutliers = prior.outliers + out,
@@ -412,7 +417,7 @@ object PqIndex {
   def forget(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String = "vec_id"): Unit =
     IndexLock.withLock(spark, dir) {
-      vbucketsOf(spark, dir): Unit
+      vbucketsOf(required(spark, dir), dir): Unit
       IndexMeta.forget(dir, IndexMeta.idFrame(ids, idCol, "vec_id"))
     }
 
@@ -430,9 +435,9 @@ object PqIndex {
     * drops the tombstoned ids from THEIR vbuckets the same way. */
   def compact(spark: SparkSession, dir: String): Unit =
     IndexLock.withLock(spark, dir) {
-      val vbuckets = vbucketsOf(spark, dir)
+      val vbuckets = vbucketsOf(required(spark, dir), dir)
       IndexMeta.tombstones(spark, dir).foreach { tomb =>
-        val vb = tomb.select(vbucketOf(col("vec_id"), vbuckets).as("b"))
+        val vb = tomb.select(IndexMeta.bucketOf(col("vec_id"), vbuckets).as("b"))
           .distinct().collect().map(_.getInt(0)).toSeq
         val affected = readVlists(spark, dir)
           .filter(col("vbucket").isin(vb: _*))
@@ -457,10 +462,12 @@ object PqIndex {
     * directories. Output schema and values match
     * [[ProductQuantization.ivfPqTopK]] exactly. */
   def query(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
-            nprobe: Int = 6, m: Int = 32, subDim: Int = 2,
-            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+            nprobe: Int = 6,
+            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val g = readMeta(spark, dir)
     ProductQuantization.rankPacked(
-      adcJoined(spark, dir, queries, nprobe, m, subDim, idCol, vecCol), m, k)
+      adcJoined(spark, dir, g, queries, nprobe, idCol, vecCol), g.m, k)
+  }
 
   /** Two-stage serving: ADC ranks the probed lists, the top `depth`
     * survivors per query are re-scored by EXACT cosine against their raw
@@ -476,11 +483,11 @@ object PqIndex {
     * scan; cost scales with depth, not corpus size. Output:
     * (query_id, rank, vec_id, cos) — same shape as the exact operators. */
   def queryRescored(spark: SparkSession, dir: String, queries: DataFrame,
-                    corpus: DataFrame, k: Int, depth: Int = 20,
-                    nprobe: Int = 6, m: Int = 32, subDim: Int = 2,
+                    corpus: DataFrame, k: Int, depth: Int = 20, nprobe: Int = 6,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val g = readMeta(spark, dir)
     val cand = ProductQuantization.rankPacked(
-        adcJoined(spark, dir, queries, nprobe, m, subDim, idCol, vecCol), m, depth)
+        adcJoined(spark, dir, g, queries, nprobe, idCol, vecCol), g.m, depth)
       .select(col("query_id"), col("vec_id"))
     val c = Similarity.withNorm(corpus, idCol, vecCol, "vec_id", "v", "nv")
     val q = Similarity.withNorm(queries, idCol, vecCol, "query_id", "qv", "nqv")
@@ -496,11 +503,10 @@ object PqIndex {
 
   /** Shared probe + ADC-score leg of [[query]]/[[queryRescored]]: probe
     * `nprobe` lists per query (literal partition filter on the codes scan),
-    * join stored codes to the query distance tables. */
-  private def adcJoined(spark: SparkSession, dir: String, queries: DataFrame,
-                        nprobe: Int, m: Int, subDim: Int,
-                        idCol: String, vecCol: String): DataFrame = {
-    checkMeta(spark, dir, m, subDim)
+    * join stored codes to the query distance tables, sliced under the
+    * stored geometry `g`. */
+  private def adcJoined(spark: SparkSession, dir: String, g: Meta, queries: DataFrame,
+                        nprobe: Int, idCol: String, vecCol: String): DataFrame = {
     val cent = broadcast(spark.read.parquet(s"$dir/coarse")
       .select(col("cid").as("centroid_id"), col("m").as("cm"), col("nm").as("cnm")))
     val q = queries.select(col(idCol).as("query_id"),
@@ -523,9 +529,9 @@ object PqIndex {
     // query stays exact (asymmetric), same construction as the one-shot op
     val books = broadcast(spark.read.parquet(s"$dir/codebooks"))
     val qsubs = q
-      .select(col("query_id"), explode(sequence(lit(0), lit(m - 1))).as("sub"), col("qi"))
+      .select(col("query_id"), explode(sequence(lit(0), lit(g.m - 1))).as("sub"), col("qi"))
       .select(col("query_id"), col("sub"),
-        slice(col("qi"), col("sub") * subDim + 1, lit(subDim)).as("sqi"))
+        slice(col("qi"), col("sub") * g.subDim + 1, lit(g.subDim)).as("sqi"))
       .withColumn("sqd", transform(col("sqi"), _.cast("double")))
       .withColumn("nq", GraftFunctions.arrayDot(col("sqd"), col("sqd")))
     val dt = qsubs.join(books, "sub")
@@ -538,6 +544,6 @@ object PqIndex {
     // stream BEFORE ranking, so ranks fill with survivors.
     val cand = IndexMeta.live(spark, dir,
       probes.join(codes, "centroid_id").filter(col("vec_id") =!= col("query_id")), "vec_id")
-    cand.join(broadcast(ProductQuantization.packDt(dt, m)), "query_id")
+    cand.join(broadcast(ProductQuantization.packDt(dt, g.m)), "query_id")
   }
 }

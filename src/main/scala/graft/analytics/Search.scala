@@ -32,6 +32,21 @@ object Search {
   def idfMicro(df: Column, nDocs: Long): Column =
     round(log((lit(nDocs + 1).cast("double")) / (df + lit(1))) * 1e6).cast("long")
 
+  /** BM25's k1 and b: the standard Robertson defaults, used by every scorer. */
+  private val K1 = 1.2
+  private val B = 0.75
+
+  /** One query term's BM25 contribution on a frame with a `dl` column:
+    *   idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
+    * where `idf` is the quantized idf in integer micro-units ([[idfMicro]])
+    * and `tf` the term's count in the doc. The one copy of the expression
+    * behind [[bm25TopDocs]] and every [[SearchIndex]] ranking. */
+  private[analytics] def bm25Term(idf: Column, tf: Column, avgdl: Double): Column = {
+    val t = tf.cast("double")
+    (idf.cast("double") / 1e6) *
+      (t * (K1 + 1)) / (t + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / avgdl))
+  }
+
   /** Per-doc top-k terms by tf·idf.
     *
     * Shape at scale: the token stream aggregates to (doc, token, tf) with
@@ -60,22 +75,19 @@ object Search {
 
   /** BM25 ranking of the corpus against a small fixed query-term set.
     *
-    * k1/b are the standard Robertson defaults. Per query term the score
-    * contribution is
-    *   idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
-    * with idf quantized (see [[idfMicro]]) and the sum over query terms
-    * taken in FIXED term order (explicit `+` chain, not an aggregate), so
-    * the double arithmetic is the same IEEE chain on both engines.
+    * Per query term the score contribution is [[bm25Term]], with idf
+    * quantized (see [[idfMicro]]) and the sum over query terms taken in
+    * FIXED term order (explicit `+` chain, not an aggregate), so the double
+    * arithmetic is the same IEEE chain on both engines.
     *
     * Shape at scale: one narrow pass computes per-doc tf for each query
     * term (a handful of `size(filter(tokens))` counters — no explode, no
     * shuffle); N, avgdl, and per-term dfs are one tiny corpus aggregate
     * broadcast back as literals; ranking is a global top-k =
-    * TakeOrderedAndProject. The tokenized per-doc counters are PERSISTED
-    * across the stats action and the scoring scan, so the corpus parquet is
-    * read (and tokenized) exactly ONCE. */
+    * TakeOrderedAndProject. The tokenized per-doc counters are an eager
+    * checkpoint read by both the stats action and the scoring scan, so the
+    * corpus parquet is read (and tokenized) exactly ONCE. */
   def bm25TopDocs(docs: DataFrame, queryTerms: Seq[String], k: Int,
-                  k1: Double = 1.2, b: Double = 0.75,
                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(queryTerms.nonEmpty && queryTerms == queryTerms.sorted,
       "queryTerms must be non-empty and sorted (fixed summation order is the determinism contract)")
@@ -109,10 +121,7 @@ object Search {
     val n = statsRow.getAs[Long]("n")
     val avgdl = statsRow.getAs[Long]("dl_sum").toDouble / n
     val score = queryTerms.map { t =>
-      val df = statsRow.getAs[Long](s"df_$t")
-      val tf = tfCol(t).cast("double")
-      (idfMicro(lit(df), n).cast("double") / 1e6) *
-        (tf * (k1 + 1)) / (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl))
+      bm25Term(idfMicro(lit(statsRow.getAs[Long](s"df_$t")), n), tfCol(t), avgdl)
     }.reduce(_ + _) // fixed left-to-right term order == the oracle's chain
     val out = perDoc.withColumn("score", round(score, 4))
       .filter(col("score") > 0)

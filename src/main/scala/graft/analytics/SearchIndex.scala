@@ -35,11 +35,10 @@ import org.apache.spark.sql.types._
   *     [[IndexMeta.tokenBucketPolicy]]) and `docBuckets` (doc-hash width of
   *     census/ + forward/, chosen by [[IndexMeta.bucketPolicy]] from corpus
   *     size at build — VERDICT r14 #4). Probes recompute the bucket rules
-  *     driver-side, so these constants are properties of the BUILD: a
-  *     caller passing a different `buckets` would statically prune to the
-  *     wrong directories and silently miss postings — every later operation
-  *     therefore reads the stored values and FAILS FAST on an explicit
-  *     mismatch, and an index without the record fails loudly
+  *     driver-side, so these constants are properties of the BUILD: every
+  *     later operation reads the stored values (any other width would
+  *     statically prune to the wrong directories and silently miss
+  *     postings), and an index without the record fails loudly
   *     ([[IndexMeta]]).
   *
   * A query probes only its terms' buckets: the term list is hashed
@@ -86,20 +85,6 @@ object SearchIndex {
     Meta(IndexMeta.field(txt, "buckets", dir).toInt, IndexMeta.field(txt, "docBuckets", dir).toInt)
   }
 
-  /** Fail-fast width resolution (r15, VERDICT r14 #1): the stored value
-    * wins; an EXPLICIT caller value that disagrees throws — it would prune
-    * the probe to the wrong partition directories and silently drop
-    * postings. `caller <= 0` means "use the stored width" (the default on
-    * every read/mutate path). */
-  private def resolveBuckets(m: Meta, caller: Int, dir: String): Int = {
-    if (caller > 0 && caller != m.buckets)
-      throw new IllegalStateException(
-        s"BM25 index at $dir was built with buckets=${m.buckets}; caller asked for " +
-          s"buckets=$caller - a mismatched width prunes probes to the wrong partition " +
-          "directories. Pass the build value or omit the parameter.")
-    m.buckets
-  }
-
   private[analytics] val PostingsSchema = StructType(Seq(StructField("doc_id", LongType),
     StructField("dl", LongType), StructField("token", StringType),
     StructField("tf", LongType), StructField("bucket", IntegerType)))
@@ -120,13 +105,20 @@ object SearchIndex {
   private def readForward(spark: SparkSession, dir: String): DataFrame =
     IndexMeta.readStore(spark, s"$dir/forward", ForwardSchema)
 
-  private def dbucketOf(c: org.apache.spark.sql.Column, docBuckets: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(c), lit(docBuckets)).cast("int")
+  /** Corpus size `n` and mean doc length `avgdl` from the merge-on-read
+    * stats store: one (n, dl_sum) row per build or append, a negative one
+    * per forget, summed here. */
+  private def corpusStats(spark: SparkSession, dir: String): (Long, Double) = {
+    val st = readSumStore(spark, dir, "stats")
+      .agg(sum(col("n")).as("n"), sum(col("dl_sum")).as("dl_sum")).head()
+    val n = st.getAs[Long]("n")
+    (n, st.getAs[Long]("dl_sum").toDouble / n)
+  }
 
   /** The distinct doc-buckets of an id frame — a pure function of the ids,
     * pushed as a literal partition filter on census and forward. */
   private def dbucketsOf(ids: DataFrame, docBuckets: Int): Seq[Int] =
-    ids.select(dbucketOf(col("doc_id"), docBuckets).as("b"))
+    ids.select(IndexMeta.bucketOf(col("doc_id"), docBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
 
   // ---------------- df/stats merge-on-read stores ----------------
@@ -255,6 +247,7 @@ object SearchIndex {
         "(duplicate-id input rows, or string ids cast-colliding to the same long)")
     val docBuckets =
       if (docBuckets0 > 0) docBuckets0 else IndexMeta.bucketPolicy(censusRows)
+    val dbucket = IndexMeta.bucketOf(col("doc_id"), docBuckets)
     // The five stores are mutually independent writes over the two
     // checkpointed frames (base via postings, census0), so they run
     // CONCURRENTLY from driver threads (r18, guide §2.6): five serial
@@ -278,9 +271,9 @@ object SearchIndex {
         .write.mode(mode).parquet(s"$dir/df"),
       () => IndexMeta.writeStore(postings
         .select(col("doc_id"), col("token"), col("tf"))
-        .withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets)),
+        .withColumn("dbucket", dbucket),
         s"$dir/forward", mode, Seq("dbucket")),
-      () => IndexMeta.writeStore(census0.withColumn("dbucket", dbucketOf(col("doc_id"), docBuckets)),
+      () => IndexMeta.writeStore(census0.withColumn("dbucket", dbucket),
         s"$dir/census", mode, Seq("dbucket")),
       () => census0.agg(count(lit(1)).as("n"), sum(col("dl")).as("dl_sum"))
         .write.mode(mode).parquet(s"$dir/stats"))
@@ -314,18 +307,15 @@ object SearchIndex {
     * trained state — unlike [[PqIndex.append]] there is nothing to go
     * stale, so after any append sequence a query is EXACTLY a one-shot
     * build of the union (SearchIndexSpec proves it against
-    * [[Search.bm25TopDocs]]). The layout widths come from the stored meta
-    * (an explicit mismatching `buckets` throws — VERDICT r14 #1). Tombstoned
-    * ids in the delta are DROPPED
-    * (not suppressed-but-counted — see the body comment); compact first to
-    * re-admit a forgotten id. */
-  def append(delta: DataFrame, dir: String, buckets: Int = 0,
+    * [[Search.bm25TopDocs]]). The layout widths come from the stored meta.
+    * Tombstoned ids in the delta are DROPPED (not suppressed-but-counted —
+    * see the body comment); compact first to re-admit a forgotten id. */
+  def append(delta: DataFrame, dir: String,
              idCol: String = "doc_id", textCol: String = "text"): Unit =
     IndexLock.withLock(delta.sparkSession, dir) {
       val spark = delta.sparkSession
       repairFoldSwap(spark, dir)
       val meta = readMeta(spark, dir)
-      val b = resolveBuckets(meta, buckets, dir)
       // a TOMBSTONED id in the delta is dropped, not written: unlike the
       // twins (where suppressed rows are harmless), its postings would be
       // anti-joined away while its df/n/dl_sum additions skewed every
@@ -334,7 +324,7 @@ object SearchIndex {
       val cleaned = IndexMeta.tombstones(spark, dir).fold(delta)(t =>
         delta.join(broadcast(t.withColumnRenamed("doc_id", "__tomb_id")),
           delta(idCol).cast("long") === col("__tomb_id"), "left_anti"))
-      writeIndex(cleaned, dir, b, meta.docBuckets, "append", idCol, textCol): Unit
+      writeIndex(cleaned, dir, meta.buckets, meta.docBuckets, "append", idCol, textCol): Unit
     }
 
   /** Delete docs from the index without rewriting it. Appends (a) the ids
@@ -555,19 +545,15 @@ object SearchIndex {
 
   /** BM25 top-k from the stored index — output schema and values match
     * [[Search.bm25TopDocs]] exactly for the same terms and k (over the
-    * corpus minus any [[forget]]-tombstoned docs). `buckets` defaults to
-    * the stored layout; an explicit mismatching value throws (r15, VERDICT
-    * r14 #1 — it would prune the probe to the wrong directories). */
-  def query(spark: SparkSession, dir: String, queryTerms: Seq[String], k: Int,
-            buckets: Int = 0, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    * corpus minus any [[forget]]-tombstoned docs). The probe prunes by the
+    * stored token-hash width. */
+  def query(spark: SparkSession, dir: String, queryTerms: Seq[String], k: Int): DataFrame = {
     require(queryTerms.nonEmpty && queryTerms == queryTerms.sorted,
       "queryTerms must be non-empty and sorted (fixed summation order is the determinism contract)")
-    val bk = resolveBuckets(readMeta(spark, dir), buckets, dir)
+    val bk = readMeta(spark, dir).buckets
     // merge-on-read across appended parts: one stats row / df row per
     // build-or-append (negative ones per forget), summed here
-    val st = readSumStore(spark, dir, "stats")
-      .agg(sum(col("n")).as("n"), sum(col("dl_sum")).as("dl_sum")).head()
-    val n = st.getAs[Long]("n")
+    val (n, avgdl) = corpusStats(spark, dir)
     if (n <= 0L) {
       // every doc forgotten: nothing can rank (avgdl is undefined)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -575,7 +561,6 @@ object SearchIndex {
           queryTerms.map(t => StructField(s"tf_$t", LongType)) :+
           StructField("score", DoubleType)))
     }
-    val avgdl = st.getAs[Long]("dl_sum").toDouble / n
     val dfMap = readSumStore(spark, dir, "df")
       .filter(col("token").isin(queryTerms: _*))
       .groupBy("token").agg(sum(col("df")).as("df"))
@@ -589,10 +574,7 @@ object SearchIndex {
       coalesce(max(when(col("token") === t, col("tf"))), lit(0L)).as(s"tf_$t"))
     val pivoted = post.groupBy("doc_id", "dl").agg(tfCols.head, tfCols.tail: _*)
     val score = queryTerms.map { t =>
-      val df = dfMap.getOrElse(t, 0L)
-      val tf = col(s"tf_$t").cast("double")
-      (Search.idfMicro(lit(df), n).cast("double") / 1e6) *
-        (tf * (k1 + 1)) / (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl))
+      Search.bm25Term(Search.idfMicro(lit(dfMap.getOrElse(t, 0L)), n), col(s"tf_$t"), avgdl)
     }.reduce(_ + _) // same fixed left-to-right chain as bm25TopDocs
     pivoted.withColumn("score", round(score, 4))
       .filter(col("score") > 0)
@@ -632,26 +614,20 @@ object SearchIndex {
     * statically prunes to |terms| of `buckets` postings directories — a
     * MLT query costs a few directory reads, never a corpus pass. */
   def moreLikeThis(spark: SparkSession, dir: String, docId: Long, k: Int,
-                   topTerms: Int = 10, buckets: Int = 0,
-                   k1: Double = 1.2, b: Double = 0.75,
-                   maxDfShare: Double = 0.9): DataFrame = {
+                   topTerms: Int = 10, maxDfShare: Double = 0.9): DataFrame = {
     val meta = readMeta(spark, dir)
-    val bk = resolveBuckets(meta, buckets, dir)
     val tombs = IndexMeta.tombstones(spark, dir)
     tombs.foreach { t =>
       if (!t.filter(col("doc_id") === docId).isEmpty)
         throw new IllegalArgumentException(s"doc $docId at $dir is forgotten: " +
           "more-like-this must not serve recommendations derived from forgotten content")
     }
-    val st = readSumStore(spark, dir, "stats")
-      .agg(sum(col("n")).as("n"), sum(col("dl_sum")).as("dl_sum")).head()
-    val n = st.getAs[Long]("n")
+    val (n, avgdl) = corpusStats(spark, dir)
     require(n > 0, s"BM25 index at $dir is empty")
-    val avgdl = st.getAs[Long]("dl_sum").toDouble / n
     val maxDf = math.floor(maxDfShare * n).toLong
     // the seed's dbucket is a pure function of its id — one tiny job
     val db = spark.range(1)
-      .select(dbucketOf(lit(docId), meta.docBuckets)).head().getInt(0)
+      .select(IndexMeta.bucketOf(lit(docId), meta.docBuckets)).head().getInt(0)
     val seed = readForward(spark, dir)
       .filter(col("dbucket") === db && col("doc_id") === docId)
       .select(col("token"), col("tf"))
@@ -679,7 +655,7 @@ object SearchIndex {
       .filter(col("token").isin(terms: _*))
       .groupBy("token").agg(sum(col("df")).as("df"))
       .collect().map(r => r.getAs[String]("token") -> r.getAs[Long]("df")).toMap
-    val probed = terms.map(t => Dedup.hash60Local(t) % bk).distinct
+    val probed = terms.map(t => Dedup.hash60Local(t) % meta.buckets).distinct
     val post = IndexMeta.live(spark, dir, readPostings(spark, dir)
       .filter(col("bucket").isin(probed: _*) && col("token").isin(terms: _*)), "doc_id")
     // per-(doc, term) contribution in micro-units: BIGINT, so the per-doc
@@ -687,11 +663,8 @@ object SearchIndex {
     val idfByTerm = typedLit(dfMap.map { case (t, df) =>
       t -> math.round(math.log((n + 1).toDouble / (df + 1)) * 1e6)
     })
-    val tf = col("tf").cast("double")
     val sMicro = round(
-      (element_at(idfByTerm, col("token")).cast("double") / 1e6) *
-        (tf * (k1 + 1)) / (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl)) *
-        1e6).cast("long")
+      Search.bm25Term(element_at(idfByTerm, col("token")), col("tf"), avgdl) * 1e6).cast("long")
     post.withColumn("s_micro", sMicro)
       .filter(col("doc_id") =!= docId)
       .groupBy("doc_id", "dl")
@@ -723,14 +696,10 @@ object SearchIndex {
     * by (score_micro desc, doc_id); seed and tombstoned docs excluded. */
   def moreLikeThisBatch(spark: SparkSession, dir: String, seeds: DataFrame, k: Int,
                         topTerms: Int = 10, seedCol: String = "doc_id",
-                        k1: Double = 1.2, b: Double = 0.75,
                         maxDfShare: Double = 0.9): DataFrame = {
     val docBuckets = readMeta(spark, dir).docBuckets
-    val st = readSumStore(spark, dir, "stats")
-      .agg(sum(col("n")).as("n"), sum(col("dl_sum")).as("dl_sum")).head()
-    val n = st.getAs[Long]("n")
+    val (n, avgdl) = corpusStats(spark, dir)
     require(n > 0, s"BM25 index at $dir is empty")
-    val avgdl = st.getAs[Long]("dl_sum").toDouble / n
     val maxDf = math.floor(maxDfShare * n).toLong
     val tombs = IndexMeta.tombstones(spark, dir)
     val seedIds0 = seeds.select(col(seedCol).cast("long").as("seed_id")).distinct()
@@ -770,11 +739,8 @@ object SearchIndex {
       .select(col("seed_id"), col("token"), col("idf_micro"))
     val post = IndexMeta.live(spark, dir, readPostings(spark, dir)
       .select(col("doc_id"), col("dl"), col("token"), col("tf")), "doc_id")
-    val tf = col("tf").cast("double")
     val sMicro = round(
-      (col("idf_micro").cast("double") / 1e6) *
-        (tf * (k1 + 1)) / (tf + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl)) *
-        1e6).cast("long")
+      Search.bm25Term(col("idf_micro"), col("tf"), avgdl) * 1e6).cast("long")
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy(col("seed_id")).orderBy(col("score_micro").desc, col("doc_id"))
     post.join(terms, "token")

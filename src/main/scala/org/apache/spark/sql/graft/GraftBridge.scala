@@ -4,14 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
-/** The `private[sql]` seam this library needs: constructing a DataFrame
-  * from a custom [[LogicalPlan]] node, and converting between Columns and
-  * Catalyst expressions. `Dataset.ofRows` is the canonical
-  * entry (it runs the analyzer and wires a QueryExecution) but is
-  * `private[sql]`, so this shim lives under `org.apache.spark.sql` — the
-  * standard technique for Spark extension libraries that add whole-plan
-  * operators. Nothing else in graft reaches into Spark internals' private
-  * scope.
+/** The two private seams this library needs, both reachable only from
+  * inside `org.apache.spark`, which is why this shim lives under
+  * `org.apache.spark.sql` — the standard technique for Spark extension
+  * libraries that add whole-plan operators:
+  *   - `private[sql]`: constructing a DataFrame from a custom
+  *     [[LogicalPlan]] node (`Dataset.ofRows` is the canonical entry: it
+  *     runs the analyzer and wires a QueryExecution), and converting
+  *     between Columns and Catalyst expressions;
+  *   - `private[spark]`: `SparkContext.unpersistRDD`, which frees an RDD's
+  *     blocks without `RDD.unpersist`'s per-call WARN about a locally
+  *     checkpointed RDD (see [[unpersistRDD]]).
+  * Nothing else in graft reaches into Spark internals' private scope.
   */
 object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -27,4 +31,11 @@ object GraftBridge {
   /** The inverse — unwrap a Column to its Catalyst expression. */
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** Free `rdd`'s persisted blocks without blocking: what `RDD.unpersist`
+    * does, minus its WARN that a locally checkpointed RDD's lineage is
+    * truncated — for a checkpoint released once nothing reads it again
+    * that WARN is the expected case, logged once per release. */
+  def unpersistRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

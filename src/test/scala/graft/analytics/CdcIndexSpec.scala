@@ -227,26 +227,28 @@ class CdcIndexSpec extends SparkSpec {
     assert(spark.read.parquet(outDir).count() == docs.filter(col("doc_id") > t1).count())
   }
 
-  test("chunking geometry is persisted and a mismatch fails fast (r15)") {
+  test("chunking geometry is persisted and every later operation chunks under it (r15)") {
     val docs = graft.Tables(spark, sf("sf0.001")).documents
     val dir = tmp("cdc-geom")
-    CdcIndex.build(docs, dir) // w=4, modulus=16 recorded in meta
-    val meta = new String(java.nio.file.Files.readAllBytes(
+    CdcIndex.build(docs, dir, w = 8, modulus = 32)
+    def meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/_graft_meta.json")), "UTF-8")
-    assert(meta.contains("\"w\":4") && meta.contains("\"modulus\":16"), meta)
-    val delta = docs.limit(3).select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    // different chunking params would produce disjoint chunk hashes and
-    // silently miss every duplicate - both paths must throw instead
-    val e1 = intercept[IllegalStateException] {
-      CdcIndex.screenDelta(spark, dir, delta, w = 8, modulus = 32).collect()
-    }
-    assert(e1.getMessage.contains("w=4"))
-    val e2 = intercept[IllegalStateException] {
-      CdcIndex.append(delta, dir, w = 8)
-    }
-    assert(e2.getMessage.contains("modulus=16"))
-    // the matching explicit values still work
-    assert(CdcIndex.screenDelta(spark, dir, delta, w = 4, modulus = 16).count() == 3)
+    assert(meta.contains("\"w\":8") && meta.contains("\"modulus\":32"), meta)
+    val delta = docs.filter(col("doc_id") % 100 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+    // the screen chunks the delta at the recorded (8, 32), not the build
+    // defaults (4, 16): its chunk counts are the (8, 32) ones, and every
+    // history copy is all duplicate mass
+    val want = Dedup.cdcChunks(delta, 8, 32, "doc_id", "text").groupBy("doc_id").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = CdcIndex.screenDelta(spark, dir, delta).collect()
+    assert(got.map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_chunks")).toMap == want)
+    assert(want.nonEmpty && got.forall(_.getAs[Long]("dup_permille") == 1000L))
+    // a record written under another partition width is refused: the
+    // chunk-hash bucket rule is a code constant
+    IndexMeta.write(spark, dir, meta.replace("\"buckets\":64", "\"buckets\":32"))
+    val e = intercept[IllegalStateException](CdcIndex.append(delta, dir))
+    assert(e.getMessage.contains("rebuild"), e.getMessage)
   }
 
   test("a meta-less index fails loudly on every entry point and says to rebuild") {
@@ -263,14 +265,14 @@ class CdcIndexSpec extends SparkSpec {
       val e = intercept[IllegalStateException](op)
       assert(e.getMessage.contains("rebuild"), e.getMessage)
     }
-    failsLoudly(CdcIndex.append(delta, dir, w = 8, modulus = 32))
-    failsLoudly(CdcIndex.screenDelta(spark, dir, delta, w = 8, modulus = 32))
-    failsLoudly(CdcIndex.ingest(spark, dir, delta, w = 8, modulus = 32))
+    failsLoudly(CdcIndex.append(delta, dir))
+    failsLoudly(CdcIndex.screenDelta(spark, dir, delta))
+    failsLoudly(CdcIndex.ingest(spark, dir, delta))
     failsLoudly(CdcIndex.forget(spark, dir, Seq(1L).toDF("doc_id")))
     failsLoudly(CdcIndex.compact(spark, dir))
     // a rebuild restores service under the recorded geometry
     CdcIndex.build(Seq((1L, shared)).toDF("doc_id", "text"), dir, w = 8, modulus = 32)
-    assert(CdcIndex.screenDelta(spark, dir, delta, w = 8, modulus = 32)
+    assert(CdcIndex.screenDelta(spark, dir, delta)
       .head().getAs[Long]("dup_permille") > 0L)
   }
 }

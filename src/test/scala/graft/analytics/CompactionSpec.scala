@@ -346,19 +346,26 @@ class CompactionSpec extends SparkSpec {
       s"appends must keep the stored 16-wide layout, saw ${widths.sorted.toSeq}")
   }
 
-  test("DedupIndex: a mismatched banding geometry fails fast instead of missing pairs") {
+  test("DedupIndex: probes and appends band under the recorded geometry") {
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val idx = Files.createTempDirectory("dedup-meta-geom").toString
-    DedupIndex.build(docs, idx) // bands=4, rowsPerBand=4, n=3
-    val delta = docs.limit(5).select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    val e1 = intercept[IllegalStateException] {
-      DedupIndex.dedupDelta(spark, idx, delta, minJaccard = 0.6, bands = 8, rowsPerBand = 2)
-    }
-    assert(e1.getMessage.contains("bands=4"))
-    val e2 = intercept[IllegalStateException] {
-      DedupIndex.append(delta, idx, n = 5)
-    }
-    assert(e2.getMessage.contains("ngram=3"))
+    DedupIndex.build(docs, idx, bands = 8, rowsPerBand = 2, n = 5)
+    val meta = IndexMeta.readText(spark, idx).get
+    assert(Seq("\"bands\":8", "\"rowsPerBand\":2", "\"ngram\":5").forall(meta.contains), meta)
+    def copies(off: Long) = docs.filter(col("doc_id") % 100 === 0)
+      .select((col("doc_id") + off).as("doc_id"), col("text"))
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val orig = copies(0L).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(orig.nonEmpty)
+    // every history copy finds its original: the delta is banded like the
+    // stored bands
+    val p1 = pairs(DedupIndex.dedupDelta(spark, idx, copies(1000000L), minJaccard = 0.6))
+    assert(orig.forall(id => p1((id, id + 1000000L))), p1)
+    // appended copies are banded the same way: a second copy finds both
+    DedupIndex.append(copies(1000000L), idx)
+    val p2 = pairs(DedupIndex.dedupDelta(spark, idx, copies(2000000L), minJaccard = 0.6))
+    assert(orig.forall(id => p2((id, id + 2000000L)) && p2((id + 1000000L, id + 2000000L))), p2)
   }
 
   test("a REBUILD clears stale tombstones in every persisted index") {
@@ -450,13 +457,17 @@ class CompactionSpec extends SparkSpec {
     val idx = Files.createTempDirectory("compact-pq-meta").toString
     PqIndex.build(emb, idx) // default 32x2
     val queries = emb.filter(col("vec_id") < 2)
-    // wrong geometry: fail loudly instead of reading wrong array slots
+    val meta = IndexMeta.readText(spark, idx).get
+    assert(meta.contains("\"m\":32") && meta.contains("\"subDim\":2"), meta)
+    // a record of another stored layout: fail loudly instead of reading
+    // wrong array slots
+    IndexMeta.write(spark, idx, meta.replace("\"layout\":2", "\"layout\":1"))
     val e1 = intercept[IllegalStateException] {
-      PqIndex.query(spark, idx, queries, k = 5, nprobe = 2, m = 8, subDim = 8).collect()
+      PqIndex.query(spark, idx, queries, k = 5, nprobe = 2).collect()
     }
     assert(e1.getMessage.contains("rebuild"))
     val e2 = intercept[IllegalStateException] {
-      PqIndex.append(emb, idx, m = 8, subDim = 8)
+      PqIndex.append(emb, idx)
     }
     assert(e2.getMessage.contains("rebuild"))
     // missing meta (an index predating the packed layout): same loud failure
