@@ -1,17 +1,19 @@
 package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{CentroidTable, GraftFunctions}
+import org.apache.spark.sql.graft.GraftBridge
+import graft.functions.{CentroidTable, GraftFunctions, NearestCentroidCos, NearestCentroidEuclid}
 
 /** Distributed k-means (Lloyd iterations) over the embedding corpus — the
   * classic Spark clustering workload, shaped for 100 TB:
   *
   *   - centroids BROADCAST every round (they are the only global state,
   *     k × dims doubles);
-  *   - assignment is a map-side-combined argmin: the crossJoin scores
-  *     corpus×k rows, but `min_by` partial aggregation collapses them to
-  *     ONE row per vector before the shuffle;
+  *   - assignment is one compiled per-row argmin against the broadcast
+  *     centroid table ([[assignNearest]]): corpus rows in and out, no
+  *     exchange;
   *   - centroid recomputation is a per-dimension sum (posexplode →
   *     groupBy(cid, pos) with map-side combine → k·dims partials per
   *     partition), never a collect;
@@ -40,36 +42,71 @@ object Clustering {
 
   private def sqNorm(v: Column): Column = GraftFunctions.arrayDot(v, v)
 
-  /** One Lloyd assignment: nearest centroid per vector (ties → lowest
-    * centroid id), as a compiled per-row argmin over the driver-collected
-    * centroid table (r18 — see [[graft.functions.NearestCentroidEuclid]]:
-    * the old crossJoin + min_by hash aggregate materialized corpus × k rows
-    * per round; scores, tie-breaks and degenerate-row semantics are
-    * replicated exactly). Adds `cid` to `corpus`'s columns; rows survive
-    * iff the centroid table is non-empty (the replaced join's inner
-    * semantics). Input `corpus`: (vec_id, qd: array<double>, nq, ...). */
-  private def assignEuclid(corpus: DataFrame, cents: CentroidTable): DataFrame = {
-    // empty centroid table = the replaced crossJoin's empty result, decided
-    // DRIVER-side (a runtime isNotNull filter would be pushed below the
-    // projection by alias substitution and evaluate the argmin twice per
-    // row — guide §4.4's duplication); non-empty tables never return null
-    if (cents.isEmpty)
-      return corpus.filter(lit(false)).withColumn("cid", lit(0L))
-    val bc = corpus.sparkSession.sparkContext.broadcast(cents)
-    corpus
-      .withColumn("__best", org.apache.spark.sql.graft.GraftBridge.column(
-        graft.functions.NearestCentroidEuclid(
-          org.apache.spark.sql.graft.GraftBridge.expression(col("qd")),
-          org.apache.spark.sql.graft.GraftBridge.expression(col("nq")),
-          bc)))
+  /** The quantized scoring projection: adds `qd` (the micro-unit `qi` as
+    * doubles — exact integers, identical in any engine) and `nqd`, its
+    * squared norm, to `df`'s columns. Every centroid assignment and probe
+    * of the vector layer scores a vector through these two columns. */
+  private[analytics] def withScoring(df: DataFrame): DataFrame =
+    df.withColumn("qd", transform(col("qi"), _.cast("double")))
+      .withColumn("nqd", sqNorm(col("qd")))
+
+  /** Coarse score of a quantized vector against a centroid mean: cosine in
+    * integer-micro space — `round(dot(qd, m) / (sqrt(nq) · sqrt(nm)), 6)`
+    * with the exact parenthesization the oracle mirrors. */
+  private[analytics] def coarseCos(qd: Column, m: Column, nq: Column, nm: Column): Column =
+    round(GraftFunctions.arrayDot(qd, m) / (sqrt(nq) * sqrt(nm)), 6)
+
+  /** Nearest-centroid assignment, the one rule behind every Lloyd round,
+    * every IVF inverted list and every [[PqIndex]] build and append: adds
+    * `cid`, the best centroid of `cents` (cid, m, nm) for each row of
+    * `scored` (which carries [[withScoring]]'s columns), and `score`, its
+    * score, to the caller's columns. `cosine` picks the metric: highest
+    * [[coarseCos]], else lowest squared Euclidean distance. Ties keep the
+    * lowest cid.
+    *
+    * The centroid table is collected to the driver (k rows — the model
+    * state, bounded by construction) and broadcast into one compiled
+    * per-row argmax ([[graft.functions.NearestCentroidCos]] /
+    * [[graft.functions.NearestCentroidEuclid]]). It replaced a crossJoin of
+    * the broadcast centroids collapsed through a max_by/min_by hash
+    * aggregate, which materialized rows × k scored rows; scores, ties and
+    * degenerate-row semantics are that aggregate's exactly. An empty table
+    * is the aggregate's empty result, decided driver-side: a runtime
+    * isNotNull filter would be pushed below the projection by alias
+    * substitution and evaluate the argmax twice per row (guide §4.4), and
+    * a non-empty table never returns null. */
+  private[analytics] def assignNearest(scored: DataFrame, cents: DataFrame,
+                                       cosine: Boolean): DataFrame = {
+    val table = CentroidTable.collect(cents)
+    if (table.isEmpty)
+      return scored.filter(lit(false))
+        .withColumn("cid", lit(0L)).withColumn("score", lit(null).cast("double"))
+    val bc = scored.sparkSession.sparkContext.broadcast(table)
+    val (qd, nqd) = (GraftBridge.expression(col("qd")), GraftBridge.expression(col("nqd")))
+    scored
+      .withColumn("__best", GraftBridge.column(
+        if (cosine) NearestCentroidCos(qd, nqd, bc) else NearestCentroidEuclid(qd, nqd, bc)))
       .withColumn("cid", col("__best.cid"))
+      .withColumn("score", col("__best.score"))
       .drop("__best")
   }
 
-  /** Driver-collected (cid, m, nm) centroid table — bounded by construction
-    * (k = trainN / centroidStep rows, the training loop's model state). */
-  private def collectCents(cents: DataFrame): CentroidTable =
-    CentroidTable.collect(cents)
+  /** The nprobe probe, the one rule behind every IVF query path: each row
+    * of `queries` (query_id, qi, ...) meets the broadcast centroids `cents`
+    * (cid, m, nm) in a crossJoin, is scored by [[coarseCos]], and keeps
+    * the `nprobe` best (ties → lowest id) as `centroid_id`, one row per
+    * probed list; callers select what they keep of their own columns.
+    * Queries are few, so the window over |queries| × k rows is tiny. */
+  private[analytics] def probeLists(queries: DataFrame, cents: DataFrame,
+                                    nprobe: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("centroid_id"))
+    withScoring(queries)
+      .crossJoin(broadcast(cents.select(col("cid").as("centroid_id"),
+        col("m").as("cm"), col("nm").as("cnm"))))
+      .withColumn("ccos", coarseCos(col("qd"), col("cm"), col("nqd"), col("cnm")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= nprobe)
+  }
 
   /** Per-cluster component means over (cid, qi) member rows — exact
     * integer sums, one IEEE division per component, squared norm attached.
@@ -108,7 +145,7 @@ object Clustering {
     centroidMeans(assigned.select(col("cid"), col("qi")))
 
   /** Fixed-round Lloyd assignment joined with the scoring vectors:
-    * `(vec_id, cid, qd, nq, qi)` — the shared core under [[kmeansStats]] and
+    * `(vec_id, cid, qd, nqd, qi)` — the shared core under [[kmeansStats]] and
     * [[semdedupKeepers]]. `rounds` assignments run in total, with
     * `rounds − 1` centroid recomputations between them.
     *
@@ -119,57 +156,34 @@ object Clustering {
                                            rounds: Int = 2, idCol: String = "vec_id",
                                            vecCol: String = "embedding"): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    // ONE checkpointed scoring frame carrying qi alongside (qd, nq) — the r18
-    // compiled assignment is a projection over it, so neither the final
-    // output nor the per-round recompute needs a join back to a separate
-    // quantized frame (the pre-r18 shape kept two caches and joined both).
-    val corpus = emb
-      .select(col(idCol).as("vec_id"), quantize(col(vecCol)).as("qi"))
-      .withColumn("qd", transform(col("qi"), _.cast("double")))
-      .withColumn("nq", sqNorm(col("qd")))
+    // ONE checkpointed scoring frame carrying qi alongside (qd, nqd): the
+    // assignment is a projection over it, so neither the final output nor
+    // the per-round recompute needs a join back to a quantized frame
+    val corpus = withScoring(
+        emb.select(col(idCol).as("vec_id"), quantize(col(vecCol)).as("qi")))
       .localCheckpoint(true)
-    val seed = collectCents(corpus.filter(col("vec_id") % centroidStep === 0)
-      .select(col("vec_id").as("cid"), col("qd").as("m"), col("nq").as("nm")))
-    var assigned = assignEuclid(corpus, seed)
+    var assigned = assignNearest(corpus, seeds(corpus, centroidStep), cosine = false)
     var r = 1
     while (r < rounds) {
       // per-round centroid means come back to the driver as the next
       // round's broadcast table (k rows — the model-to-driver pattern)
-      assigned = assignEuclid(corpus, collectCents(recompute(assigned)))
+      assigned = assignNearest(corpus, recompute(assigned), cosine = false)
       r += 1
     }
     // materialized while corpus is live (the assignment projection reads
     // it), then the intermediate checkpoint is released
     val out = assigned
-      .select(col("vec_id"), col("cid"), col("qd"), col("nq"), col("qi"))
+      .select(col("vec_id"), col("cid"), col("qd"), col("nqd"), col("qi"))
       .localCheckpoint(true)
     Checkpoints.releaseCheckpoint(corpus)
     out
   }
 
-  /** One SPHERICAL Lloyd assignment: highest-cosine centroid per vector
-    * (ties → lowest centroid id) — the training twin of IVF's serve-time
-    * assignment, so the trained lists are balanced under the SAME metric
-    * that probes them (a Euclidean-trained/cosine-served mismatch measurably
-    * costs recall — see IvfRecallSpec). Compiled per-row argmax since r18
-    * ([[graft.functions.NearestCentroidCos]] — exact replacement of the
-    * crossJoin + max_by(cid, struct(ccos, -cid)) aggregate, same scores,
-    * ties, and degenerate-row semantics). Adds `cid` to `corpus`'s columns. */
-  private def assignCos(corpus: DataFrame, cents: CentroidTable): DataFrame = {
-    // driver-side empty guard — see [[assignEuclid]]'s note on why a
-    // runtime isNotNull filter is the wrong tool here
-    if (cents.isEmpty)
-      return corpus.filter(lit(false)).withColumn("cid", lit(0L))
-    val bc = corpus.sparkSession.sparkContext.broadcast(cents)
-    corpus
-      .withColumn("__best", org.apache.spark.sql.graft.GraftBridge.column(
-        graft.functions.NearestCentroidCos(
-          org.apache.spark.sql.graft.GraftBridge.expression(col("qd")),
-          org.apache.spark.sql.graft.GraftBridge.expression(col("nq")),
-          bc)))
-      .withColumn("cid", col("__best.cid"))
-      .drop("__best")
-  }
+  /** The deterministic seed centroids of a scoring frame: its vectors with
+    * `vec_id % centroidStep == 0`, as (cid, m, nm). */
+  private def seeds(corpus: DataFrame, centroidStep: Int): DataFrame =
+    corpus.filter(col("vec_id") % centroidStep === 0)
+      .select(col("vec_id").as("cid"), col("qd").as("m"), col("nqd").as("nm"))
 
   /** TRAINED centroids: the spherical-k-means means after `rounds − 1`
     * exact-integer recomputations (default two — measured on sf0.01 ground
@@ -181,7 +195,11 @@ object Clustering {
     * [[ProductQuantization.ivfPqTopK]] — trained means instead of an
     * every-Nth corpus pick, which costs recall at real scale (untrained
     * centroids don't track the data distribution, so inverted lists are
-    * unbalanced and nprobe misses grow with skew).
+    * unbalanced and nprobe misses grow with skew). Training is spherical:
+    * each round assigns by the same cosine [[assignNearest]] that serves
+    * IVF lists, so the trained lists are balanced under the metric that
+    * probes them (a Euclidean-trained/cosine-served mismatch measurably
+    * costs recall — see IvfRecallSpec).
     *
     * The returned frame is k-row-small: callers broadcast it into
     * assignment / probe scoring without re-running the corpus-sized
@@ -203,16 +221,11 @@ object Clustering {
     require(rounds >= 2, s"a trained quantizer needs >= 1 recompute (rounds >= 2), got $rounds")
     // qi rides along so each round's recompute reads the assignment row
     // directly (see [[recompute]]); one checkpoint instead of a join per round
-    val corpus = quantized
-      .select(col("vec_id"), col("qi"), transform(col("qi"), _.cast("double")).as("qd"))
-      .withColumn("nq", sqNorm(col("qd")))
-      .localCheckpoint(true)
-    val seed = collectCents(corpus.filter(col("vec_id") % centroidStep === 0)
-      .select(col("vec_id").as("cid"), col("qd").as("m"), col("nq").as("nm")))
-    var cents = recompute(assignCos(corpus, seed))
+    val corpus = withScoring(quantized.select(col("vec_id"), col("qi"))).localCheckpoint(true)
+    var cents = recompute(assignNearest(corpus, seeds(corpus, centroidStep), cosine = true))
     var r = 2
     while (r < rounds) {
-      cents = recompute(assignCos(corpus, collectCents(cents)))
+      cents = recompute(assignNearest(corpus, cents, cosine = true))
       r += 1
     }
     val out = cents.localCheckpoint(true)
@@ -266,7 +279,7 @@ object Clustering {
     val cents = centroidMeans(asg)
     asg.join(broadcast(cents), "cid")
       .withColumn("d2",
-        round(col("nq") + col("nm") -
+        round(col("nqd") + col("nm") -
           lit(2.0) * GraftFunctions.arrayDot(col("qd"), col("m"))).cast("long"))
       .select(col("vec_id"), col("cid"), col("d2"))
   }
@@ -313,7 +326,6 @@ object Clustering {
                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(dropNum >= 0 && dropDen >= 1 && dropNum < dropDen,
       s"drop fraction must be in [0,1): got $dropNum/$dropDen")
-    import org.apache.spark.sql.expressions.Window
     val asg = kmeansAssignments(emb, centroidStep, rounds, idCol, vecCol)
     val d = memberDistances(asg)
     val byCid = Window.partitionBy("cid")
@@ -345,7 +357,6 @@ object Clustering {
     * ranking a k-partition window with the two-stage group-limit. */
   def clusterTopics(emb: DataFrame, docs: DataFrame, centroidStep: Int = 40,
                     rounds: Int = 2, topK: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val asg = kmeansAssignments(emb, centroidStep, rounds)
     val assign = asg.select(col("vec_id").as("doc_id"), col("cid"))
     val tf = docs
@@ -386,9 +397,9 @@ object Clustering {
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val v = kmeansAssignments(emb, centroidStep, rounds, idCol, vecCol)
     val a = v.select(col("vec_id").as("id_a"), col("cid"),
-      col("qd").as("qda"), col("nq").as("nqa"))
+      col("qd").as("qda"), col("nqd").as("nqa"))
     val b = v.select(col("vec_id").as("id_b"), col("cid").as("cidb"),
-      col("qd").as("qdb"), col("nq").as("nqb"))
+      col("qd").as("qdb"), col("nqd").as("nqb"))
     val dropped = a.join(b, col("cid") === col("cidb") && col("id_a") < col("id_b"))
       .filter(round(
         GraftFunctions.arrayDot(col("qda"), col("qdb")) /

@@ -264,9 +264,11 @@ object Dedup {
   /** MinHash signature: k min-hash slots over the shingle set. One sha256
     * per shingle (the expensive part) then k cheap affine rehashes
     * `(h·A_j + B_j) mod M` — the classic universal-hash family; 16× fewer
-    * cryptographic hashes than hashing per (slot, shingle). */
+    * cryptographic hashes than hashing per (slot, shingle). An empty (or
+    * null) shingle set has no signature: NULL, as in its native twin
+    * [[graft.functions.MinhashSignatureExpr]] — not k null slots. */
   def minhashSignature(sh: Column, k: Int): Column =
-    minhashSlots(transform(sh, s => hash60(s) % MinhashM), k)
+    when(size(sh) > 0, minhashSlots(transform(sh, s => hash60(s) % MinhashM), k))
 
   /** Slots from an already sha-hashed base array (callers materialize the
     * base as its own column so the sha pass runs once, not k times). */

@@ -32,8 +32,9 @@ import org.apache.spark.sql.types.StructType
   *     anti-join them out, compaction reclaims the space later;
   *   - partition-scoped compaction ([[rewritePartitions]]) and the EMPTY
   *     STORE state ([[readStore]]): a partitioned store whose every
-  *     partition was compacted away holds a `_graft_empty` marker instead
-  *     of an unreadable partition-less directory.
+  *     partition was compacted away, or that was written with no rows,
+  *     holds a `_graft_empty` marker instead of an unreadable
+  *     partition-less directory.
   *
   * The meta format is a single flat JSON object, small enough that a regex
   * field-reader is simpler and dependency-free. */
@@ -223,10 +224,11 @@ private[analytics] object IndexMeta {
 
   /** Write `rows` into the store at `root`, one task per partition value
     * (each partition lands as one file instead of tasks × partitions small
-    * files), sorted by `sortCols` inside each partition when given. A
-    * pending empty marker is cleared once the written data has landed —
-    * and only if a partition directory now exists, since an all-empty
-    * frame writes none and the store is still empty. */
+    * files), sorted by `sortCols` inside each partition when given. After
+    * the write the empty marker stands iff no partition directory exists:
+    * a pending marker is cleared once written data has landed, and a write
+    * that leaves none (an all-empty frame writes no directory — a build of
+    * an empty corpus, say) sets it, so the store reads back empty. */
   def writeStore(rows: DataFrame, root: String, mode: String, partCols: Seq[String],
                  sortCols: Seq[String] = Nil, dynamic: Boolean = false): Unit = {
     val byPart = rows.repartition(partCols.map(col): _*)
@@ -235,8 +237,9 @@ private[analytics] object IndexMeta {
     (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
       .partitionBy(partCols: _*).parquet(root)
     val f = fs(rows.sparkSession, emptyMarker(root))
-    if (f.exists(emptyMarker(root)) && partitionDirs(f, new Path(root), partCols.take(1)).nonEmpty)
-      f.delete(emptyMarker(root), false): Unit
+    val empty = partitionDirs(f, new Path(root), partCols.take(1)).isEmpty
+    if (empty && !f.exists(emptyMarker(root))) f.create(emptyMarker(root), true).close()
+    else if (!empty && f.exists(emptyMarker(root))) f.delete(emptyMarker(root), false): Unit
   }
 
   /** Partition-scoped compaction of one store: drop the rows of `stored`

@@ -1,10 +1,8 @@
 package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.GraftFunctions
 
 /** PERSISTED IVF-PQ index: build once, query many — the production ANN
   * serving shape ([[ProductQuantization.ivfPqTopK]] retrains per call,
@@ -31,11 +29,10 @@ import graft.functions.GraftFunctions
   * smaller than the raw vectors, and the inverted-list partitioning turns
   * every query batch into a static-pruned scan of a few directories.
   *
-  * Determinism: build reuses the exact training pipeline of
-  * [[ProductQuantization.ivfPqTopK]] (shared-quantized coarse Lloyd +
-  * subspace Lloyd), and query reuses its exact scoring arithmetic — so
-  * querying a freshly built index returns bit-identical rows to the
-  * one-shot operator (the `sim_pqindex_topk` oracle row IS
+  * Determinism: build and query call the same rule functions as
+  * [[ProductQuantization.ivfPqTopK]] (listed there) — so querying a
+  * freshly built index returns bit-identical rows to the one-shot operator
+  * by construction (the `sim_pqindex_topk` oracle row IS
   * `sim_ivfpq_topk`'s SQL). */
 object PqIndex {
 
@@ -203,38 +200,15 @@ object PqIndex {
   private def readVlists(spark: SparkSession, dir: String): DataFrame =
     IndexMeta.readStore(spark, s"$dir/vlists", VlistsSchema)
 
-  /** Coarse-list assignment of a quantized frame under a (cid, m, nm)
-    * centroid table — the same rule at build time and when the centroids
-    * are read back from the stored index (append path). Returns
-    * (vec_id, centroid_id, best_ccos); the winning cosine feeds the drift
-    * signal ([[driftStats]]) and is dropped before anything is stored. */
-  private def assignCoarse(quantized: DataFrame, cent: DataFrame): DataFrame = {
-    // compiled per-row argmax over the driver-collected centroid table
-    // (r18 — graft.functions.NearestCentroidCos): replaces the crossJoin +
-    // max_by hash aggregate over |vecs| × k scored rows; winner AND its
-    // ccos (the old max(ccos) — the winner's score by construction) come
-    // off one projection. Ties, null/ragged vectors, and the empty-table
-    // case reproduce the aggregate exactly (see the expression scaladoc).
-    val centT = graft.functions.CentroidTable.collect(cent)
-    if (centT.isEmpty)
-      // the replaced aggregate emitted nothing on an empty centroid side —
-      // decided driver-side (a runtime isNotNull filter would push below
-      // the projection and evaluate the argmax twice per row, guide §4.4)
-      return quantized.filter(lit(false))
-        .select(col("vec_id"), lit(0L).as("centroid_id"),
-          lit(null).cast("double").as("best_ccos"))
-    val centB = quantized.sparkSession.sparkContext.broadcast(centT)
-    quantized
-      .select(col("vec_id"), transform(col("qi"), _.cast("double")).as("qd"))
-      .withColumn("nqd", GraftFunctions.arrayDot(col("qd"), col("qd")))
-      .withColumn("__best", org.apache.spark.sql.graft.GraftBridge.column(
-        graft.functions.NearestCentroidCos(
-          org.apache.spark.sql.graft.GraftBridge.expression(col("qd")),
-          org.apache.spark.sql.graft.GraftBridge.expression(col("nqd")),
-          centB)))
-      .select(col("vec_id"), col("__best.cid").as("centroid_id"),
-        col("__best.score").as("best_ccos"))
-  }
+  /** The inverted list of every row of a quantized (vec_id, qi) frame
+    * under a (cid, m, nm) centroid table — [[Clustering.assignNearest]], at
+    * build time and when the centroids are read back from the stored index
+    * (append path). Returns (vec_id, centroid_id, best_ccos); the winning
+    * cosine feeds the drift signal ([[driftStats]]) and is dropped before
+    * anything is stored. */
+  private def coarseLists(quantized: DataFrame, cent: DataFrame): DataFrame =
+    Clustering.assignNearest(Clustering.withScoring(quantized), cent, cosine = true)
+      .select(col("vec_id"), col("cid").as("centroid_id"), col("score").as("best_ccos"))
 
   /** Write codes + the `vlists/` sidecar. Both writes read the assignment
     * frame (vec_id, centroid_id, best_ccos), so the caller passes it
@@ -308,15 +282,14 @@ object PqIndex {
       () => cent.write.mode("overwrite").parquet(s"$dir/coarse"),
       () => trained =
         ProductQuantization.trainAndCodesQ(quantizedTrain, m, subDim, centroidStep))
-    val assigned = assignCoarse(quantized, cent).localCheckpoint(true)
+    val assigned = coarseLists(quantized, cent).localCheckpoint(true)
     val (cents1, codesTrain) = trained
     cents1.write.mode("overwrite").parquet(s"$dir/codebooks")
     // encode the FULL corpus under the trained codebooks (identical to the
     // training codes when training was full — same slices, same assign rule)
     val codes =
       if (!subsetTrain) codesTrain
-      else ProductQuantization.assignToBooks(
-        ProductQuantization.subSlices(quantized, m, subDim), cents1, m)
+      else ProductQuantization.encode(quantized, cents1, m, subDim)
     // sidecar width by corpus size (r15, VERDICT r14 #4), recorded in meta
     // and read back by [[compact]] — never recomputed from a constant;
     // nCorpus was counted by the pass that checkpointed the corpus
@@ -372,9 +345,8 @@ object PqIndex {
       .localCheckpoint(true)
     val cent = spark.read.parquet(s"$dir/coarse")
     val books = spark.read.parquet(s"$dir/codebooks")
-    val assigned = assignCoarse(quantized, cent).localCheckpoint(true)
-    val codes = ProductQuantization.assignToBooks(
-      ProductQuantization.subSlices(quantized, g.m, g.subDim), books, g.m)
+    val assigned = coarseLists(quantized, cent).localCheckpoint(true)
+    val codes = ProductQuantization.encode(quantized, books, g.m, g.subDim)
     // append under the STORED sidecar width (the bucket rule is a pure
     // function of the id only at constant width)
     val vbuckets = vbucketsOf(txt, dir)
@@ -460,7 +432,11 @@ object PqIndex {
     * collected (≤ |queries|·nprobe longs) and pushed as a LITERAL partition
     * filter, so the codes scan statically prunes to the probed
     * directories. Output schema and values match
-    * [[ProductQuantization.ivfPqTopK]] exactly. */
+    * [[ProductQuantization.ivfPqTopK]] exactly: both call the same rule
+    * functions — the probe ([[Clustering.probeLists]]), the query distance
+    * tables ([[ProductQuantization.queryTables]]) and the ranking
+    * ([[ProductQuantization.rankPacked]]) here, the training sample, list
+    * assignment and encoding at [[build]]. */
   def query(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
             nprobe: Int = 6,
             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -489,54 +465,24 @@ object PqIndex {
     val cand = ProductQuantization.rankPacked(
         adcJoined(spark, dir, g, queries, nprobe, idCol, vecCol), g.m, depth)
       .select(col("query_id"), col("vec_id"))
-    val c = Similarity.withNorm(corpus, idCol, vecCol, "vec_id", "v", "nv")
-    val q = Similarity.withNorm(queries, idCol, vecCol, "query_id", "qv", "nqv")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    c.join(broadcast(cand), "vec_id") // candidate ids broadcast: pruned fetch, no corpus shuffle
-      .join(broadcast(q), "query_id")
-      .withColumn("cos", round(Similarity.cosPre(col("qv"), col("v"), col("nqv"), col("nv")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("cos"))
+    Similarity.rescoreTopK(cand, corpus, queries, k, idCol, vecCol)
   }
 
   /** Shared probe + ADC-score leg of [[query]]/[[queryRescored]]: probe
-    * `nprobe` lists per query (literal partition filter on the codes scan),
-    * join stored codes to the query distance tables, sliced under the
-    * stored geometry `g`. */
+    * `nprobe` lists per query against the stored coarse centroids (literal
+    * partition filter on the codes scan), join stored codes to the query
+    * distance tables of the stored codebooks, sliced under the stored
+    * geometry `g`. */
   private def adcJoined(spark: SparkSession, dir: String, g: Meta, queries: DataFrame,
                         nprobe: Int, idCol: String, vecCol: String): DataFrame = {
-    val cent = broadcast(spark.read.parquet(s"$dir/coarse")
-      .select(col("cid").as("centroid_id"), col("m").as("cm"), col("nm").as("cnm")))
-    val q = queries.select(col(idCol).as("query_id"),
-      Clustering.quantize(col(vecCol)).as("qi"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("centroid_id"))
-    val probes = q
-      .select(col("query_id"), transform(col("qi"), _.cast("double")).as("qd"))
-      .withColumn("nqd", GraftFunctions.arrayDot(col("qd"), col("qd")))
-      .crossJoin(cent)
-      .withColumn("ccos", Similarity.coarseCos(col("qd"), col("cm"), col("nqd"), col("cnm")))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
+    val q = queries.select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
+    val probes = Clustering.probeLists(q.withColumnRenamed("vec_id", "query_id"),
+        spark.read.parquet(s"$dir/coarse"), nprobe)
       .select(col("query_id"), col("centroid_id"))
     val probedLists = probes.select("centroid_id").distinct()
       .collect().map(_.getLong(0)).sorted
     val codes = readCodes(spark, dir)
       .filter(col("centroid_id").isin(probedLists: _*))
-    // query-side subspace distance tables vs the stored codebooks — the
-    // query stays exact (asymmetric), same construction as the one-shot op
-    val books = broadcast(spark.read.parquet(s"$dir/codebooks"))
-    val qsubs = q
-      .select(col("query_id"), explode(sequence(lit(0), lit(g.m - 1))).as("sub"), col("qi"))
-      .select(col("query_id"), col("sub"),
-        slice(col("qi"), col("sub") * g.subDim + 1, lit(g.subDim)).as("sqi"))
-      .withColumn("sqd", transform(col("sqi"), _.cast("double")))
-      .withColumn("nq", GraftFunctions.arrayDot(col("sqd"), col("sqd")))
-    val dt = qsubs.join(books, "sub")
-      .select(col("query_id"), col("sub"), col("cid"),
-        (col("nq") + col("nm") - lit(2.0) * GraftFunctions.arrayDot(col("sqd"), col("m"))).as("d2"))
     // stored codes are packed (one pcodes row per vector); the per-query
     // tables broadcast packed too, so the scored stream is one row per
     // (query, candidate) — see [[ProductQuantization.rankPacked]].
@@ -544,6 +490,7 @@ object PqIndex {
     // stream BEFORE ranking, so ranks fill with survivors.
     val cand = IndexMeta.live(spark, dir,
       probes.join(codes, "centroid_id").filter(col("vec_id") =!= col("query_id")), "vec_id")
-    cand.join(broadcast(ProductQuantization.packDt(dt, g.m)), "query_id")
+    cand.join(broadcast(ProductQuantization.queryTables(
+      q, spark.read.parquet(s"$dir/codebooks"), g.m, g.subDim)), "query_id")
   }
 }

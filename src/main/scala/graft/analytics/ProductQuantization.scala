@@ -137,14 +137,10 @@ object ProductQuantization {
       emb.select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi")),
       m, subDim, centroidStep)
 
-  /** [[trainAndCodes]] from an already-quantized (vec_id, qi) frame — the
-    * shared-scan path for composed index builds (see
-    * [[Clustering.trainedCentroidsFromQuantized]]). Catalyst collapses the
-    * unmaterialized delegation above into the same single-projection scan, so
-    * the two entry points plan identically for plain callers. */
-  /** Per-(vec, subspace) slice frame — the shared head of PQ training and
-    * of encoding a new frame under a stored codebook. */
-  private[analytics] def subSlices(quantized: DataFrame, m: Int, subDim: Int): DataFrame =
+  /** Per-(vec, subspace) slice frame — the shared head of PQ training, of
+    * encoding a new frame under a stored codebook, and of the query
+    * distance tables ([[queryTables]]). */
+  private def subSlices(quantized: DataFrame, m: Int, subDim: Int): DataFrame =
     quantized
       .select(col("vec_id"), explode(sequence(lit(0), lit(m - 1))).as("sub"), col("qi"))
       .select(col("vec_id"), col("sub"),
@@ -165,11 +161,17 @@ object ProductQuantization {
     * dropped-sub semantics are replicated exactly (see the expression's
     * scaladoc); results are bit-identical (PqIndexSpec parity
     * + the full oracle gate). */
-  private[analytics] def assignToBooks(subs: DataFrame, cents: DataFrame,
-                                       m: Int): DataFrame =
+  private def assignToBooks(subs: DataFrame, cents: DataFrame, m: Int): DataFrame =
     withBookAssignment(subs, cents, m)
       .select(col("vec_id"), col("sub"),
         col("__best.cid").as("cid"), col("__best.score").as("dist"))
+
+  /** Encode a quantized (vec_id, qi) frame under a (sub, cid, m, nm)
+    * codebook, as (vec_id, sub, cid, dist): the full-corpus encode of a
+    * sampled-train build and of every [[PqIndex.append]]. */
+  private[analytics] def encode(quantized: DataFrame, books: DataFrame,
+                                m: Int, subDim: Int): DataFrame =
+    assignToBooks(subSlices(quantized, m, subDim), books, m)
 
   /** [[assignToBooks]] keeping the caller's columns: `subs` plus the
     * winning (cid, dist) as `__best` — lets training read the slice
@@ -208,6 +210,11 @@ object ProductQuantization {
     }
   }
 
+  /** [[trainAndCodes]] from an already-quantized (vec_id, qi) frame — the
+    * shared-scan path for composed index builds (see
+    * [[Clustering.trainedCentroidsFromQuantized]]). Catalyst collapses the
+    * unmaterialized delegation above into the same single-projection scan, so
+    * the two entry points plan identically for plain callers. */
   private[analytics] def trainAndCodesQ(quantized: DataFrame, m: Int, subDim: Int,
                                         centroidStep: Int): (DataFrame, DataFrame) = {
     val subs = subSlices(quantized, m, subDim).localCheckpoint(true)
@@ -261,39 +268,39 @@ object ProductQuantization {
     * the m-fold row blowup while producing bit-identical sums). */
   def adcTopK(emb: DataFrame, queries: DataFrame, k: Int,
               m: Int = 32, subDim: Int = 2, centroidStep: Int = 40,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              trainOn: Option[DataFrame] = None, fullTrain: Boolean = false,
-              trainSampleTarget: Long = TrainSampleTarget): DataFrame = {
+              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val quantized = emb
       .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
       .localCheckpoint(true)
-    val quantizedTrain = resolveTrain(quantized, trainOn, fullTrain, trainSampleTarget,
-      idCol, vecCol)
-    val subsetTrain = !(quantizedTrain eq quantized)
+    val quantizedTrain = resolveTrain(quantized)
     val (cents1, codesTrain) = trainAndCodesQ(quantizedTrain, m, subDim, centroidStep)
     val codes =
-      if (!subsetTrain) codesTrain
-      else assignToBooks(subSlices(quantized, m, subDim), cents1, m)
+      if (quantizedTrain eq quantized) codesTrain
+      else encode(quantized, cents1, m, subDim)
     val pairs = packCodes(codes)
-      .crossJoin(broadcast(packDt(
-        dtForQueries(quantized, queries, cents1, m, subDim, idCol), m)))
+      .crossJoin(broadcast(queryTables(queryRows(quantized, queries, idCol), cents1, m, subDim)))
     val out = rankPacked(pairs, m, k).localCheckpoint(true)
     Seq(cents1, codesTrain, quantizedTrain, quantized).foreach(Checkpoints.releaseCheckpoint)
     out
   }
 
-  /** The policy-selected training frame over an already-quantized corpus:
-    * an explicit `trainOn` (quantized and checkpointed), the corpus itself
-    * when `fullTrain` or at/below the sample target, else the
+  /** The training-sample policy, the one rule every trained quantizer
+    * follows ([[Similarity.ivfTopK]], [[adcTopK]], [[ivfPqTopK]],
+    * [[PqIndex.build]]): the training frame over an already-quantized
+    * corpus is an explicit `trainOn` (quantized and checkpointed), the
+    * corpus itself when `fullTrain` or at/below the sample target, else the
     * deterministic bounded sample ([[autoTrainSample]]), checkpointed. The
     * over-target decision is a BOUNDED `limit(target+1).count()` probe,
     * not a full corpus count — it stops as soon as target+1 rows exist,
     * so small corpora pay one short job and 100 TB corpora never pay a
-    * counting pass. The caller releases the result alongside `quantized`
-    * (release is idempotent, so it need not tell the two apart). */
-  private[analytics] def resolveTrain(quantized: DataFrame, trainOn: Option[DataFrame],
-                           fullTrain: Boolean, target: Long,
-                           idCol: String, vecCol: String): DataFrame =
+    * counting pass. A result other than `quantized` itself is a
+    * checkpoint the caller releases. */
+  private[analytics] def resolveTrain(quantized: DataFrame,
+                                      trainOn: Option[DataFrame] = None,
+                                      fullTrain: Boolean = false,
+                                      target: Long = TrainSampleTarget,
+                                      idCol: String = "vec_id",
+                                      vecCol: String = "embedding"): DataFrame =
     trainOn match {
       case Some(t) => t
         .select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
@@ -305,25 +312,28 @@ object ProductQuantization {
 
   /** True iff `df` has more than `target` rows — evaluated with a bounded
     * limit, never a full count. */
-  private[analytics] def overTarget(df: DataFrame, target: Long): Boolean = {
+  private def overTarget(df: DataFrame, target: Long): Boolean = {
     val probe = math.min(target + 1, Int.MaxValue.toLong - 1).toInt
     df.limit(probe).count() > target
   }
 
-  /** Query-side subspace distance tables from a query-restricted slice of
-    * the FULL quantized corpus (the training subs may not contain the
-    * query ids under sampled training). Same slicing and distance
-    * arithmetic as the training assignment, so full-train values are
-    * bit-identical to the historical subs-derived tables. */
-  private def dtForQueries(quantized: DataFrame, queries: DataFrame,
-                           cents1: DataFrame, m: Int, subDim: Int,
-                           idCol: String): DataFrame = {
-    val qIds = queries.select(col(idCol).as("vec_id")).distinct()
-    subSlices(quantized.join(broadcast(qIds), "vec_id"), m, subDim)
-      .join(broadcast(cents1), "sub")
+  /** The query vectors' rows of the FULL quantized corpus (the training
+    * frame may not contain the query ids under sampled training). */
+  private def queryRows(quantized: DataFrame, queries: DataFrame, idCol: String): DataFrame =
+    quantized.join(broadcast(queries.select(col(idCol).as("vec_id")).distinct()), "vec_id")
+
+  /** Per-query subspace distance tables, the one query-side ADC rule of
+    * the one-shot operators and the stored [[PqIndex]]: each query of the
+    * quantized (vec_id, qi) frame `queries` is sliced like the corpus
+    * ([[subSlices]]), scored against every codeword of `books` (sub, cid,
+    * m, nm) in the training assignment's d² arithmetic, and packed
+    * ([[packDt]]) to (query_id, dts). The query stays exact (asymmetric). */
+  private[analytics] def queryTables(queries: DataFrame, books: DataFrame,
+                                     m: Int, subDim: Int): DataFrame =
+    packDt(subSlices(queries, m, subDim)
+      .join(broadcast(books), "sub")
       .select(col("vec_id").as("query_id"), col("sub"), col("cid"),
-        (col("nq") + col("nm") - lit(2.0) * dot(col("sqd"), col("m"))).as("d2"))
-  }
+        (col("nq") + col("nm") - lit(2.0) * dot(col("sqd"), col("m"))).as("d2")), m)
 
   /** Pack per-(vec, subspace) code rows to one row per vector:
     * (vec_id, pcodes) with `pcodes[s]` = the subspace-s codeword. The
@@ -341,7 +351,7 @@ object ProductQuantization {
     * carried, reshaped for O(1) per-candidate lookup. (Built as m
     * conditional map aggregates: structs containing maps are not
     * orderable in Spark, so a sort-then-project pivot is unavailable.) */
-  private[analytics] def packDt(dt: DataFrame, m: Int): DataFrame = {
+  private def packDt(dt: DataFrame, m: Int): DataFrame = {
     val subMaps = (0 until m).map(s =>
       map_from_entries(collect_list(when(col("sub") === s,
         struct(col("cid"), col("d2"))))).as(s"dm$s"))
@@ -400,12 +410,19 @@ object ProductQuantization {
     math.max(20L, nVecs / coarseStep).toInt
 
   /** IVF-PQ: the composed production shape — IVF coarse lists prune the
-    * candidate set ([[Similarity.ivfTopK]]'s exact rules: TRAINED coarse
-    * centroids ([[Clustering.trainedCentroids]]), highest-coarse-cosine
-    * assignment, `nprobe` probe lists), PQ ADC scores only the survivors.
-    * At 100 TB the scan touches codes for ~nprobe/|lists| of the corpus
-    * instead of every raw vector — the two knobs (nprobe for recall, m×k
-    * for precision) move independently.
+    * candidate set, PQ ADC scores only the survivors. At 100 TB the scan
+    * touches codes for ~nprobe/|lists| of the corpus instead of every raw
+    * vector — the two knobs (nprobe for recall, m×k for precision) move
+    * independently.
+    *
+    * This operator and the stored [[PqIndex]] call the same rule
+    * functions, so a freshly built index answers exactly what this
+    * returns: the training sample ([[resolveTrain]]), TRAINED coarse
+    * centroids ([[Clustering.trainedCentroidsFromQuantized]]), list
+    * assignment ([[Clustering.assignNearest]]), the probe
+    * ([[Clustering.probeLists]]), subspace training and encoding
+    * ([[trainAndCodesQ]], [[encode]]), the query distance tables
+    * ([[queryTables]]) and the ranking ([[rankPacked]]).
     *
     * Training defaults to a BOUNDED sample above [[TrainSampleTarget]]
     * vectors (see there: the measured O(n²)→linear fix); the full corpus is
@@ -428,43 +445,12 @@ object ProductQuantization {
       .localCheckpoint(true)
     val quantizedTrain =
       resolveTrain(quantized, trainOn, fullTrain, trainSampleTarget, idCol, vecCol)
-    val sampledTrain = !(quantizedTrain eq quantized)
     val cent = Clustering.trainedCentroidsFromQuantized(quantizedTrain, coarseStep)
-      .select(col("cid").as("centroid_id"), col("m").as("cm"), col("nm").as("cnm"))
-    def quantSide(df: DataFrame, idAs: String): DataFrame =
-      df.select(col(idAs), transform(col("qi"), _.cast("double")).as("qd"))
-        .withColumn("nqd", dot(col("qd"), col("qd")))
-    val ccos = Similarity.coarseCos(col("qd"), col("cm"), col("nqd"), col("cnm"))
-    // inverted lists: compiled per-row argmax over the driver-collected
-    // centroid table (r18 — graft.functions.NearestCentroidCos; replaces
-    // the crossJoin + max_by aggregate over |vecs| × k scored rows with
-    // one projection, exact to the old ordering/tie/degenerate semantics)
-    val centT = graft.functions.CentroidTable.collect(
-      cent, cidCol = "centroid_id", mCol = "cm", nmCol = "cnm")
-    val centB = emb.sparkSession.sparkContext.broadcast(centT)
-    // empty-table guard driver-side; non-empty tables never return null
-    // (a runtime isNotNull filter would re-evaluate the argmax per row —
-    // guide §4.4)
-    val assigned =
-      if (centT.isEmpty)
-        quantSide(quantized, "vec_id").filter(lit(false))
-          .select(col("vec_id"), lit(0L).as("centroid_id"))
-      else quantSide(quantized, "vec_id")
-        .withColumn("__best", org.apache.spark.sql.graft.GraftBridge.column(
-          graft.functions.NearestCentroidCos(
-            org.apache.spark.sql.graft.GraftBridge.expression(col("qd")),
-            org.apache.spark.sql.graft.GraftBridge.expression(col("nqd")),
-            centB)))
-        .select(col("vec_id"), col("__best.cid").as("centroid_id"))
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("ccos").desc, col("centroid_id"))
-    val probes = quantSide(
+    val assigned = Clustering.assignNearest(Clustering.withScoring(quantized), cent, cosine = true)
+      .select(col("vec_id"), col("cid").as("centroid_id"))
+    val probes = Clustering.probeLists(
         queries.select(col(idCol).as("query_id"), Clustering.quantize(col(vecCol)).as("qi")),
-        "query_id")
-      .crossJoin(broadcast(cent))
-      .withColumn("ccos", ccos)
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
+        cent, nprobe)
       .select(col("query_id"), col("centroid_id"))
     val cand = probes.join(assigned, "centroid_id")
       .filter(col("vec_id") =!= col("query_id"))
@@ -473,11 +459,11 @@ object ProductQuantization {
     // encode the FULL corpus under the trained codebooks (identical to the
     // training codes when training was full — same slices, same rule)
     val codes =
-      if (!sampledTrain) codesTrain
-      else assignToBooks(subSlices(quantized, m, subDim), cents1, m)
+      if (quantizedTrain eq quantized) codesTrain
+      else encode(quantized, cents1, m, subDim)
     val pairs = cand.join(packCodes(codes), "vec_id")
-      .join(broadcast(packDt(
-        dtForQueries(quantized, queries, cents1, m, subDim, idCol), m)), "query_id")
+      .join(broadcast(queryTables(queryRows(quantized, queries, idCol), cents1, m, subDim)),
+        "query_id")
     // materialize the result before releasing the training checkpoints
     val out = rankPacked(pairs, m, k).localCheckpoint(true)
     Seq(cent, cents1, codesTrain, quantizedTrain, quantized)

@@ -135,25 +135,6 @@ object Similarity {
         lit(s"lshBucket: expected $dims-dim vector, got "), size(vec).cast("string"))))
   }
 
-  /** Per-vector LSH bucket assignment (the scale-path index structure). */
-  def withLshBucket(emb: DataFrame, planes: Int = 12, dims: Int = 64,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    emb.select(col(idCol).as("vec_id"),
-      col(vecCol).cast("array<double>").as("v"))
-      .withColumn("bucket", lshBucket(col("v"), planes, dims))
-
-  /** Coarse score of a quantized vector against a TRAINED centroid mean:
-    * cosine in integer-micro space — `round(dot(qd, m) / (sqrt(nq) ·
-    * sqrt(nm)), 6)` with the exact parenthesization the oracle mirrors. */
-  private[analytics] def coarseCos(qd: Column, m: Column, nq: Column, nm: Column): Column =
-    round(graft.functions.GraftFunctions.arrayDot(qd, m) / (sqrt(nq) * sqrt(nm)), 6)
-
-  /** Adds (qd, nqd) — the quantized scoring projection used against trained
-    * centroids: micro-unit integers in doubles, exact cross-engine. */
-  private[analytics] def addQuant(df: DataFrame, vCol: String): DataFrame =
-    df.withColumn("qd", transform(Clustering.quantize(col(vCol)), _.cast("double")))
-      .withColumn("nqd", graft.functions.GraftFunctions.arrayDot(col("qd"), col("qd")))
-
   /** IVF (inverted-file) approximate top-k — the second scale path beside
     * hyperplane LSH. Coarse centroids are TRAINED ([[Clustering
     * .trainedCentroids]]: seeded quantized-integer Lloyd, one exact-int
@@ -161,6 +142,12 @@ object Similarity {
     * vectors are assigned to their highest-coarse-cosine centroid (inverted
     * lists), and each query searches only its `nprobe` nearest centroids'
     * lists. Final candidate scoring is exact cosine on the raw vectors.
+    *
+    * The coarse rules are the ones every IVF path calls: the training
+    * sample of [[ProductQuantization.resolveTrain]] (bounded above
+    * [[ProductQuantization.TrainSampleTarget]] vectors, full training at
+    * or below it), list assignment by [[Clustering.assignNearest]] and the
+    * probe by [[Clustering.probeLists]].
     *
     * At 100 TB: centroids broadcast (they are the index's only global
     * structure — training them costs two extra corpus passes ONCE at index
@@ -172,61 +159,22 @@ object Similarity {
     * every-Nth pick (measured at sf0.01: see SCALING.md). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               centroidStep: Int, nprobe: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              trainOn: Option[DataFrame] = None, fullTrain: Boolean = false,
-              trainSampleTarget: Long = ProductQuantization.TrainSampleTarget): DataFrame = {
-    // Coarse training is BOUNDED by default above TrainSampleTarget (see
-    // ProductQuantization.TrainSampleTarget — the same n × (n/centroidStep)
-    // assignment quadratic as the PQ family, same measured fix): train the
-    // centroids on a deterministic hash-ordered sample, assign the FULL
-    // corpus under them. At or below the target (every oracle/bench
-    // corpus) the path is byte-identical full training.
-    val trainSrc = trainOn.getOrElse {
-      if (fullTrain || !ProductQuantization.overTarget(corpus, trainSampleTarget)) corpus
-      else ProductQuantization.hashHeadSample(corpus, idCol, trainSampleTarget)
-    }
-    val cent = Clustering.trainedCentroids(trainSrc, centroidStep, idCol = idCol, vecCol = vecCol)
-      .select(col("cid").as("centroid_id"), col("m"), col("nm"))
+              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val quantized = corpus.select(col(idCol).as("vec_id"), Clustering.quantize(col(vecCol)).as("qi"))
+    val train = ProductQuantization.resolveTrain(quantized)
+    val cent = Clustering.trainedCentroidsFromQuantized(train, centroidStep)
+    if (!(train eq quantized)) Checkpoints.releaseCheckpoint(train)
 
-    // inverted lists: every vector → its highest-coarse-cosine centroid,
-    // as a compiled per-row argmax over the driver-collected centroid
-    // table (r18 — graft.functions.NearestCentroidCos; the pre-r18 shape
-    // crossJoined the broadcast centroids and collapsed corpus × k scored
-    // rows through a max_by hash aggregate that ALSO shuffled each
-    // vector's raw v/nv payload through the ordering struct). Tie-break
-    // identical to ORDER BY ccos DESC, centroid_id; rows survive iff the
-    // table is non-empty (the replaced aggregate emitted nothing on an
-    // empty centroid side). Raw v/nv stay on the projected row for the
-    // exact final scoring — they no longer cross any exchange here.
-    val c = addQuant(withNorm(corpus, idCol, vecCol, "vec_id", "v", "nv"), "v")
-    val centT = graft.functions.CentroidTable.collect(
-      cent, cidCol = "centroid_id", mCol = "m", nmCol = "nm")
-    val centB = corpus.sparkSession.sparkContext.broadcast(centT)
-    // empty-table guard driver-side (the replaced aggregate emitted nothing
-    // there); non-empty tables never return null, so no runtime filter —
-    // one that pushed below the projection would re-evaluate the argmax
-    // per row (guide §4.4)
-    val assigned =
-      if (centT.isEmpty)
-        c.filter(lit(false)).select(col("vec_id"), col("v"), col("nv"),
-          lit(0L).as("centroid_id"))
-      else c
-        .withColumn("__best", org.apache.spark.sql.graft.GraftBridge.column(
-          graft.functions.NearestCentroidCos(
-            org.apache.spark.sql.graft.GraftBridge.expression(col("qd")),
-            org.apache.spark.sql.graft.GraftBridge.expression(col("nqd")),
-            centB)))
-        .select(col("vec_id"), col("v"), col("nv"),
-          col("__best.cid").as("centroid_id"))
-
-    // probe lists: every query → its nprobe nearest centroids (queries are
-    // few — the window over |queries|×|centroids| rows is already tiny)
-    val q = addQuant(withNorm(queries, idCol, vecCol, "query_id", "qv", "nq"), "qv")
-    val wProbe = Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("centroid_id"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("ccos", coarseCos(col("qd"), col("m"), col("nqd"), col("nm")))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
+    // inverted lists: every vector → its highest-coarse-cosine centroid;
+    // raw v/nv stay on the projected row for the exact final scoring
+    val assigned = Clustering.assignNearest(Clustering.withScoring(
+        withNorm(corpus, idCol, vecCol, "vec_id", "v", "nv")
+          .withColumn("qi", Clustering.quantize(col("v")))), cent, cosine = true)
+      .select(col("vec_id"), col("v"), col("nv"), col("cid").as("centroid_id"))
+    // probe lists: every query → its nprobe nearest centroids
+    val probes = Clustering.probeLists(
+        withNorm(queries, idCol, vecCol, "query_id", "qv", "nq")
+          .withColumn("qi", Clustering.quantize(col("qv"))), cent, nprobe)
       .select(col("query_id"), col("qv"), col("nq"), col("centroid_id"))
 
     // final ranking through the bounded heap (same two-stage shape as
@@ -239,6 +187,25 @@ object Similarity {
       .select(col("query_id"), posexplode(col("topk")))
       .select(col("query_id"), (col("pos") + 1).as("rank"),
         col("col.id").as("vec_id"), col("col.score").as("cos"))
+  }
+
+  /** Exact-cosine rescoring of a (query_id, vec_id) candidate frame: each
+    * candidate's raw vector is fetched from `corpus` (the candidate ids
+    * broadcast — a pruned fetch, no corpus shuffle), scored against its
+    * query's raw vector, and the top `k` per query by exact cosine (ties →
+    * lowest vec_id) come back as (query_id, rank, vec_id, cos). */
+  private[analytics] def rescoreTopK(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+                                     k: Int, idCol: String, vecCol: String): DataFrame = {
+    val c = withNorm(corpus, idCol, vecCol, "vec_id", "v", "nv")
+    val q = withNorm(queries, idCol, vecCol, "query_id", "qv", "nqv")
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
+    c.join(broadcast(cand), "vec_id")
+      .join(broadcast(q), "query_id")
+      .withColumn("cos", round(cosPre(col("qv"), col("v"), col("nqv"), col("nv")), 6))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank").cast("long").as("rank"),
+        col("vec_id"), col("cos"))
   }
 
   /** LSH-pruned near-dup pairs: only same-bucket pairs are scored; exact

@@ -250,7 +250,7 @@ object AnalyticsOracles {
   private val depthSql = "(SELECT greatest(20, count(*) // 25) FROM embeddings)"
 
   /** Coarse cosine of a quantized vector against a trained mean — the exact
-    * parenthesization of `Similarity.coarseCos`. */
+    * parenthesization of `Clustering.coarseCos`. */
   private val coarseCosSql =
     """round(list_reduce(list_prepend(0.0,
       |      [qdv[i] * m[i] for i in generate_series(1, len(qdv))]), (a,b) -> a+b) /

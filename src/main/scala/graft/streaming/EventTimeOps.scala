@@ -678,7 +678,10 @@ object EventTimeOps {
     * so unbounded key spaces can't grow state forever. Null payloads are
     * ignored entirely — they can't be emitted (null is the internal
     * suppression sentinel) and they don't mark the key seen, so the key's
-    * first NON-null payload is the one emitted. */
+    * first NON-null payload is the one emitted. The processing-time
+    * timeout makes Spark run another (no-data) batch after every batch, so
+    * a query over this never ends on its own, not even under
+    * `Trigger.AvailableNow`: stop it once its input is processed. */
   def firstSeen(events: Dataset[Keyed], ttlMs: Long)
                (implicit spark: SparkSession): Dataset[Keyed] = {
     import spark.implicits._

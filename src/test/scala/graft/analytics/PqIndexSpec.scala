@@ -307,6 +307,24 @@ class PqIndexSpec extends SparkSpec {
       s"an uncorrelated append must advise a rebuild: ${PqIndex.driftStats(spark, dir)}")
   }
 
+  test("a corpus with no seed id trains an empty coarse quantizer: every IVF path answers empty") {
+    // ids 1-24: no multiple of the coarse step (25) or the codebook step
+    // (40), so every centroid table is empty and each path meets the
+    // empty-table guard of the one nearest-centroid assignment
+    val emb = graft.Tables(spark, sf("sf0.01")).embeddings.filter(col("vec_id").between(1, 24))
+    val queries = emb.filter(col("vec_id") < 3)
+    val dir = Files.createTempDirectory("pq-noseed").toString
+    val paths: Seq[(String, () => DataFrame)] = Seq(
+      "ivfTopK" -> (() => Similarity.ivfTopK(emb, queries, k = 5, centroidStep = 25, nprobe = 6)),
+      "ivfPqTopK" -> (() => ProductQuantization.ivfPqTopK(emb, queries, k = 5,
+        coarseStep = 25, centroidStep = 40)),
+      "PqIndex" -> { () =>
+        PqIndex.build(emb, dir, coarseStep = 25, centroidStep = 40)
+        PqIndex.query(spark, dir, queries, k = 5)
+      })
+    paths.foreach { case (name, run) => assert(run().count() == 0, name) }
+  }
+
   test("one-shot ivfPqTopK follows the same training policy as the stored index") {
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings
     val queries = emb.filter(col("vec_id") < 3)

@@ -37,6 +37,25 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(!got(3).isNullAt(1) && got(3).getDouble(1) == 0.0)
   }
 
+  test("graft_minhash_signature matches its declarative twin, including the empty and null shingle sets") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val words = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    val sets: Seq[(Long, Seq[String])] = (0 until 60).map { i =>
+      i.toLong -> Seq.fill(1 + rnd.nextInt(12))(Seq.fill(3)(words(rnd.nextInt(words.size))).mkString(" "))
+    } ++ Seq(60L -> Seq.empty[String], 61L -> null)
+    val got = sets.toDF("id", "sh")
+      .select(col("id"), GraftFunctions.minhashSigFast(col("sh"), 16).as("native"),
+        graft.analytics.Dedup.minhashSignature(col("sh"), 16).as("declarative"))
+      .orderBy("id").collect()
+    assert(got.length == 62)
+    got.foreach { r =>
+      assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"id ${r.getLong(0)}: $r")
+    }
+    assert(got(60).isNullAt(1) && got(60).isNullAt(2), "an empty shingle set has no signature")
+    assert(got(61).isNullAt(1) && got(61).isNullAt(2))
+  }
+
   test("graft_minhash_signature rejects k < 1 instead of emitting empty signatures") {
     // SQL text: register on a session of its own, not the shared one
     val session = spark.newSession()

@@ -5,11 +5,36 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 class EventTimeSpec extends SparkSpec {
 
   private def tmp(p: String): String = Files.createTempDirectory(p).toString
+
+  /** Waits for a started query to end on its own, fails the test if it
+    * has not within `ms`, and stops it either way: a query that overruns
+    * must not keep running (and reporting) after its test. */
+  private def finish(q: StreamingQuery, ms: Long,
+                     clue: String = "streaming query did not finish in time"): Unit =
+    try assert(q.awaitTermination(ms), clue)
+    finally q.stop()
+
+  /** Stops a query that never ends on its own once its batches have read
+    * all `rows` input rows, and fails the test if that takes over `ms`: a
+    * processing-time state timeout makes Spark run another (no-data) batch
+    * after every batch, under AvailableNow too, so neither termination nor
+    * `processAllAvailable` (which waits for a trigger with no batch) comes.
+    * A batch's progress is reported after its sink write commits. */
+  private def drain(q: StreamingQuery, rows: Long, ms: Long = 120000): Unit = {
+    val read = scala.collection.mutable.Map[Long, Long]()
+    val deadline = System.currentTimeMillis() + ms
+    def total = { q.recentProgress.foreach(p => read(p.batchId) = p.numInputRows); read.values.sum }
+    try {
+      while (total < rows && q.isActive && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(total == rows && q.exception.isEmpty, s"read $total of $rows rows: ${q.exception}")
+    } finally q.stop()
+    assert(!q.isActive)
+  }
 
   test("windowed counts with watermark match the batch equivalent for in-order data") {
     val (srcDir, outDir, ckpt) = (tmp("src"), tmp("out"), tmp("ckpt"))
@@ -25,7 +50,7 @@ class EventTimeSpec extends SparkSpec {
       .trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir)
       .start()
-    q.awaitTermination(120000)
+    finish(q, 120000)
 
     // append mode only emits watermark-closed windows; compare those
     val got = spark.read.parquet(outDir)
@@ -51,7 +76,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    q.awaitTermination(120000)
+    finish(q, 120000)
 
     // append emits watermark-closed sessions; the batch run over the same
     // data restricted to those sessions must agree exactly
@@ -107,7 +132,7 @@ class EventTimeSpec extends SparkSpec {
     val q = sJoined.writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    q.awaitTermination(120000)
+    finish(q, 120000)
 
     val got = spark.read.parquet(outDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -156,7 +181,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    q.awaitTermination(180000)
+    finish(q, 180000)
 
     def pair(r: org.apache.spark.sql.Row): (Long, Option[Long]) =
       (r.getLong(0), if (r.isNullAt(2)) None else Some(r.getLong(2)))
@@ -189,7 +214,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    assert(q.awaitTermination(180000), "streaming dedup query did not finish in time")
+    finish(q, 180000, "streaming dedup query did not finish in time")
 
     // at-least-once per pair (multi-band emits) → compare as sets
     val got = spark.read.parquet(outDir)
@@ -220,7 +245,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    assert(q.awaitTermination(180000), "streaming span dedup did not finish in time")
+    finish(q, 180000, "streaming span dedup did not finish in time")
 
     // per-span verdicts aggregate to the batch operator's per-doc stats
     val got = spark.read.parquet(outDir)
@@ -263,7 +288,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    assert(q.awaitTermination(180000), "streaming pack did not finish in time")
+    finish(q, 180000, "streaming pack did not finish in time")
 
     val got = spark.read.parquet(outDir)
       .select("shard", "doc_id", "n_tok", "tok_start", "tok_end",
@@ -310,7 +335,7 @@ class EventTimeSpec extends SparkSpec {
         b.write.mode("append").parquet(outDir)
       }
       .start()
-    q.awaitTermination(120000)
+    drain(q, rows = 6)
 
     val out = spark.read.parquet(outDir).as[EventTimeOps.Keyed].collect()
     assert(out.map(_.key).sorted.toSeq == Seq(1L, 2L, 3L))
@@ -345,7 +370,7 @@ class EventTimeSpec extends SparkSpec {
         b.write.mode("append").parquet(outDir)
       }
       .start()
-    q.awaitTermination(120000)
+    drain(q, rows = 4)
     val out = spark.read.parquet(outDir).as[EventTimeOps.Keyed].collect()
     assert(out.map(_.key).sorted.toSeq == Seq(1L, 2L))
     assert(out.find(_.key == 1L).get.payload == "real",
@@ -375,7 +400,7 @@ class EventTimeSpec extends SparkSpec {
       .trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir)
       .start()
-    q.awaitTermination(120000)
+    finish(q, 120000)
 
     val got = spark.read.parquet(outDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -405,7 +430,7 @@ class EventTimeSpec extends SparkSpec {
         b.write.mode("append").parquet(outDir)
       }
       .start()
-    q.awaitTermination(120000)
+    finish(q, 120000)
 
     val ids = spark.read.parquet(outDir).select("event_id")
       .collect().map(_.getLong(0)).sorted.toSeq
@@ -432,7 +457,7 @@ class EventTimeSpec extends SparkSpec {
       .trigger(Trigger.AvailableNow())
       .format("memory").queryName(sinkName)
       .start()
-    q.awaitTermination(120000)
+    finish(q, 120000)
 
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("bucket"),
@@ -472,7 +497,7 @@ class EventTimeSpec extends SparkSpec {
       .trigger(Trigger.AvailableNow())
       .format("memory").queryName(sinkName)
       .start()
-    q.awaitTermination(120000)
+    finish(q, 120000)
 
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("bucket"),
@@ -531,7 +556,7 @@ class EventTimeSpec extends SparkSpec {
         b.write.mode("overwrite").parquet(s"$hllCube/src=stream")
       }
       .start()
-    qh.awaitTermination(120000)
+    finish(qh, 120000)
     val qq = EventTimeOps.streamingQuantileHistogram(
         Sources.fileStream(spark, s"$srcDir/live", schema),
         Seq("event_type"), col("cents"))
@@ -542,7 +567,7 @@ class EventTimeSpec extends SparkSpec {
         b.write.mode("overwrite").parquet(s"$qCube/src=stream")
       }
       .start()
-    qq.awaitTermination(120000)
+    finish(qq, 120000)
 
     // merged read over the mixed dir vs the batch-only cube on the union
     val estMixed = HllSketch.estimate(
@@ -591,7 +616,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    assert(q.awaitTermination(180000), "streaming funnel did not finish in time")
+    finish(q, 180000, "streaming funnel did not finish in time")
 
     // read rule: last emission (max seq) per user — levels may legitimately
     // move down when a late earlier view shrinks the window
@@ -635,7 +660,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    assert(q.awaitTermination(180000), "streaming retention did not finish in time")
+    finish(q, 180000, "streaming retention did not finish in time")
 
     // read rule: the latest snapshot (max seq) per user IS their activity
     // frame; the batch matrix over the exploded frames is the answer
@@ -683,7 +708,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    assert(q.awaitTermination(180000), "streaming transitions did not finish in time")
+    finish(q, 180000, "streaming transitions did not finish in time")
 
     val emitted = spark.read.parquet(outDir)
     // the retraction path really fired: some pair's earlier count came back
@@ -716,7 +741,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    assert(q.awaitTermination(180000), "bounded streaming transitions did not finish in time")
+    finish(q, 180000, "bounded streaming transitions did not finish in time")
 
     // the kept history per user is its EARLIEST `cap` events by
     // (us, event_id) — sequential truncation composes to the global prefix
@@ -758,7 +783,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    assert(q.awaitTermination(180000), "streaming dau did not finish in time")
+    finish(q, 180000, "streaming dau did not finish in time")
 
     val got = spark.read.parquet(outDir).collect()
       .map(r => r.getAs[Long]("day") -> r.getAs[Long]("dau")).toMap
@@ -791,7 +816,7 @@ class EventTimeSpec extends SparkSpec {
       .writeStream.option("checkpointLocation", ckpt)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .format("parquet").option("path", outDir).start()
-    assert(q.awaitTermination(180000), "streaming quota did not finish in time")
+    finish(q, 180000, "streaming quota did not finish in time")
 
     val got = spark.read.parquet(outDir)
     // every doc got exactly one verdict
